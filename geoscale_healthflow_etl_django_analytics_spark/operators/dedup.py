@@ -38,7 +38,7 @@ CONSTRUCTING those DataFrames runs the upstream pipeline as Spark
 jobs (ADVICE r5 #2 — documented contract). This is deliberate: the
 checkpointed table feeds both sides of the expansion self-join plus
 the verify stage, and a lazy cache() would race its first use between
-them. Build on the *_signatures / *_band_hashes / with_simhash*
+them. Build on the *_band_hashes / with_simhash*
 primitives directly when only the plan shape is needed; benchmark
 harnesses must time builder + action together (scale_bench.py does).
 """
@@ -126,9 +126,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-_INT_MAX = 2147483647
 
 
 def _tokens_sql_lower(text_col: str) -> str:
@@ -293,29 +290,6 @@ def remove_repeated_spans(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_perm: int = 64, k: int = 3
-) -> DataFrame:
-    """Tier 3a — num_perm-wide MinHash signature per doc: the i-th
-    component is min over shingles of murmur3(shingle, salt=i).
-
-    Shape matters for speed: ONE aggregate pass over the shingle
-    array, folding an element-wise min of the per-shingle hash vector
-    (num_perm separate transform()s would re-inline — and recompute —
-    the shingling expression once per permutation; this form computes
-    shingles exactly once per row)."""
-    sig = F.aggregate(
-        word_shingles(F.col(text_col), k),
-        F.array_repeat(F.lit(_INT_MAX), num_perm),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[F.hash(t, F.lit(i)) for i in range(num_perm)]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-    return docs.select("doc_id", sig.alias("sig"))
-
-
 def minhash_perm_band_hashes(
     docs: DataFrame,
     text_col: str = "text",
@@ -323,7 +297,7 @@ def minhash_perm_band_hashes(
     bands: int = 16,
     k: int = 3,
 ) -> DataFrame:
-    """Tier 3b candidate-generation front half, TRUE-PERMUTATION form
+    """Tier 3 candidate-generation front half, TRUE-PERMUTATION form
     (the default since r6): (doc_id, band, bh) rows — a classic
     ``num_perm``-wise MinHash signature sliced into ``bands`` band
     hashes.
@@ -516,6 +490,46 @@ def lsh_band_hashes(
     )
 
 
+def _verify_candidates(
+    docs: DataFrame,
+    candidates: DataFrame,
+    text_col: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact-verify stage of the MinHash pair operators:
+    ``(doc_a, doc_b, jaccard, *extra)`` for the candidate pairs whose
+    k-shingle Jaccard is >= ``threshold``. Candidate columns beyond
+    the pair ids (``link_type``) pass through after ``jaccard``.
+    ``candidates`` should be materialized: its two id projections and
+    the verify join all read it."""
+    from ..functions.text import word_shingles_sql
+
+    # shingle ONLY candidate docs: a left-semi against the (tiny)
+    # candidate set first means the verify stage re-tokenizes
+    # ~|candidates| docs, not the corpus.
+    cand_docs = docs.join(
+        candidates.select(F.col("doc_a").alias("doc_id"))
+        .union(candidates.select(F.col("doc_b").alias("doc_id")))
+        .distinct(),
+        "doc_id",
+        "left_semi",
+    )
+    s = cand_docs.selectExpr(
+        "doc_id", f"{word_shingles_sql(text_col, k)} AS sh"
+    )
+    sa = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
+    jac = inter.cast("double") / union
+    extra = [c for c in candidates.columns if c not in ("doc_a", "doc_b")]
+    return verified.select(
+        "doc_a", "doc_b", fround(jac, 4).alias("jaccard"), *extra
+    ).filter(F.col("jaccard") >= threshold)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -523,31 +537,28 @@ def minhash_lsh_pairs(
     bands: int = 16,
     k: int = 3,
     threshold: float = 0.8,
-    bucket_salts: int | None = None,
     band_table: DataFrame | None = None,
 ) -> DataFrame:
-    """Tier 3b — LSH banding: TRUE-PERMUTATION MinHash signature
+    """Tier 3 — LSH banding: TRUE-PERMUTATION MinHash signature
     (:func:`minhash_perm_band_hashes`) sliced into ``bands`` bands of
     ``num_perm/bands`` rows; docs sharing any band-hash become
     candidate pairs; candidates are exact-verified with shingle
     Jaccard >= threshold. (bands=16, rows=4 → P(candidate | j) =
     1-(1-j^4)^16: j=0.8 → 99.98%, j=0.3 → 12% — and with true
-    permutations those are the ACTUAL per-pair rates; the previous
-    OPH front half under-delivered r on short docs, with a measured
-    quadratic candidate floor at deep scale, see the band-hash
-    docstrings.)
+    permutations those are the ACTUAL per-pair rates.)
 
-    Scale: explode → shuffle on (band, band_hash) → per-bucket pairs;
-    no quadratic blow-up as long as buckets stay small. A corpus with
-    MEGA-CLUSTERS (thousands of near-identical docs → one giant
-    bucket → quadratic pair expansion in one task) engages the
-    ``bucket_salts`` escape hatch: the band key is salted by a
-    deterministic per-doc hash, splitting each bucket into ≤ salts
-    sub-buckets of bounded size. Pair expansion then runs per
-    sub-bucket; the cluster still links up transitively (every band
-    re-partitions the cluster differently), which is what the
-    downstream connected-components step consumes. Proven by
+    Scale: explode → shuffle on (band, band_hash, salt) → per-bucket
+    pairs. A band bucket above ``_SALT_CAP`` docs (a MEGA-CLUSTER of
+    near-identical docs) is split into ``ceil(size/_SALT_TARGET)``
+    sub-buckets by an md5-derived per-doc salt, so no single task
+    expands a quadratic bucket; the cluster still links up
+    transitively (every band re-partitions it differently), which is
+    what the downstream connected-components step consumes. Proven by
     tests/test_skew.py::test_lsh_mega_cluster_salted_buckets.
+
+    ``band_table``: a caller that also persists the
+    ``(doc_id, band, bh)`` table passes its already-materialized frame
+    so the band derivation runs once per corpus.
     """
     # CONSTRUCTION-TIME EXECUTION CONTRACT: the band-hash table is
     # eagerly checkpointed HERE — building this DataFrame runs the
@@ -558,14 +569,6 @@ def minhash_lsh_pairs(
     # re-deriving the pipeline, and lazy cache() would race its
     # first-use between them. Callers that only want the plan shape
     # should build on minhash_perm_band_hashes directly (ADVICE r5 #2).
-    # ``band_table`` (r13, guide §1.2): a caller that ALSO persists
-    # the (doc_id, band, bh) table (write_cluster_table stores it as
-    # the incremental-ingest index) passes its already-materialized
-    # frame, so the shingle -> 64-min -> band derivation — the
-    # expensive corpus pass of this operator — runs once per corpus,
-    # not once per consumer.  Must be localCheckpoint()ed (or
-    # otherwise materialized) by the caller; values identical by
-    # construction (it is this very derivation).
     exploded = (
         band_table
         if band_table is not None
@@ -573,75 +576,56 @@ def minhash_lsh_pairs(
             docs, text_col, num_perm, bands, k
         ).localCheckpoint()
     )
-    if bucket_salts is not None:
-        # fixed salt count (test/benchmark knob): same doc → same
-        # sub-bucket within a band, different docs spread uniformly.
-        exploded = exploded.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("doc_id"), F.col("band")), F.lit(bucket_salts))
+    # ADAPTIVE bucket-cap salting, oracle-replayable (md5-derived
+    # salt, data-dependent but deterministic). Buckets at or under
+    # _SALT_CAP keep salt 0, so at gate corpus sizes the pair set is
+    # byte-identical to the unsalted form. Why: one universally-shared
+    # rare shingle can pin a slot-min across a whole document family —
+    # the round-5 x50 corpus put 3,045 docs in ONE bucket, 9.3M of the
+    # query's 10.8M candidate pairs, virtually all false positives. A
+    # true near-dup pair split apart here still meets in any of its
+    # other 15 bands, so recall loss is confined to pairs whose ONLY
+    # collision was the pathological bucket.
+    #
+    # The census of over-cap buckets runs over the CHECKPOINTED band
+    # table and is collected under a hard cap (ADVICE r6 #2):
+    #   * empty census (every gate corpus): salt is a LITERAL 0 — no
+    #     join stage at all;
+    #   * <= _CENSUS_COLLECT_CAP rows: the collected census is
+    #     re-parallelized as a local relation and broadcast;
+    #   * larger (degenerate corpus): no driver collect; the full
+    #     census joins under a pinned shuffle_hash hint.
+    census = (
+        exploded.groupBy("band", "bh")
+        .agg(F.count("*").alias("__bsz"))
+        .filter(F.col("__bsz") > _SALT_CAP)
+    )
+    census_rows = census.limit(_CENSUS_COLLECT_CAP + 1).collect()
+    n_salts = F.ceil(F.col("__bsz") / F.lit(_SALT_TARGET)).cast("bigint")
+    salted = F.when(
+        F.col("__bsz").isNotNull(),
+        md5_int32(F.concat_ws(":", F.col("doc_id"), F.col("band")))
+        % n_salts,
+    ).otherwise(F.lit(0).cast("bigint"))
+    if not census_rows:
+        exploded = exploded.withColumn("salt", F.lit(0).cast("bigint"))
+    elif len(census_rows) <= _CENSUS_COLLECT_CAP:
+        overcap = docs.sparkSession.createDataFrame(
+            census_rows, census.schema
+        )
+        exploded = (
+            exploded.join(F.broadcast(overcap), ["band", "bh"], "left")
+            .withColumn("salt", salted)
+            .drop("__bsz")
         )
     else:
-        # ADAPTIVE bucket-cap salting, oracle-replayable (md5-derived
-        # salt, data-dependent but deterministic). A band bucket larger
-        # than _SALT_CAP is split into ceil(size/_SALT_TARGET)
-        # sub-buckets; everything else keeps salt 0, so at gate corpus
-        # sizes (no bucket near the cap) the pair set is byte-identical
-        # to the unsalted form. Why: one universally-shared rare
-        # shingle can pin a slot-min across a whole document family —
-        # the round-5 x50 corpus put 3,045 docs in ONE bucket, 9.3M of
-        # the query's 10.8M candidate pairs, virtually all false
-        # positives (their true Jaccard is far below threshold). A
-        # true near-dup pair split apart here still meets in any of
-        # its other 15 bands, so recall loss is confined to pairs
-        # whose ONLY collision was the pathological bucket — exactly
-        # the pairs the verify stage would discard anyway.
-        #
-        # Only the OVER-CAP buckets (a handful of rows even at x50,
-        # zero at gate scale) matter. The census runs over the
-        # CHECKPOINTED band table and is collected under a hard cap
-        # (r7, ADVICE r6 #2: the former unconditional
-        # F.broadcast(census) was driver-unbounded on adversarial
-        # corpora — worst case ~band_rows/_SALT_CAP entries):
-        #   * empty census (every gate corpus): salt is a LITERAL 0 —
-        #     no join stage at all, output provably identical and the
-        #     sf0.1 plan drops the whole broadcast-join stage;
-        #   * <= _CENSUS_COLLECT_CAP rows: the collected census is
-        #     re-parallelized as a local relation and broadcast —
-        #     bounded by construction;
-        #   * larger (degenerate corpus): no driver collect; the full
-        #     census joins under a pinned shuffle_hash hint (the same
-        #     never-broadcast-the-data-dependent-side rule the
-        #     substring-spans dup join pins).
-        census = (
-            exploded.groupBy("band", "bh")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") > _SALT_CAP)
+        exploded = (
+            exploded.join(
+                census.hint("shuffle_hash"), ["band", "bh"], "left"
+            )
+            .withColumn("salt", salted)
+            .drop("__bsz")
         )
-        census_rows = census.limit(_CENSUS_COLLECT_CAP + 1).collect()
-        n_salts = F.ceil(F.col("__bsz") / F.lit(_SALT_TARGET)).cast("bigint")
-        salted = F.when(
-            F.col("__bsz").isNotNull(),
-            md5_int32(F.concat_ws(":", F.col("doc_id"), F.col("band")))
-            % n_salts,
-        ).otherwise(F.lit(0).cast("bigint"))
-        if not census_rows:
-            exploded = exploded.withColumn("salt", F.lit(0).cast("bigint"))
-        elif len(census_rows) <= _CENSUS_COLLECT_CAP:
-            overcap = docs.sparkSession.createDataFrame(
-                census_rows, census.schema
-            )
-            exploded = (
-                exploded.join(F.broadcast(overcap), ["band", "bh"], "left")
-                .withColumn("salt", salted)
-                .drop("__bsz")
-            )
-        else:
-            exploded = (
-                exploded.join(
-                    census.hint("shuffle_hash"), ["band", "bh"], "left"
-                )
-                .withColumn("salt", salted)
-                .drop("__bsz")
-            )
     bucket_key = ["band", "bh", "salt"]
     # Candidate expansion as a CODEGEN SELF-JOIN on the bucket key over
     # the eagerly-materialized band-hash table (the signature pipeline
@@ -652,8 +636,8 @@ def minhash_lsh_pairs(
     # walker inside ONE post-agg task per bucket — the round-5 x50
     # scale point stalled for minutes on a single straggler exactly
     # that way (same lesson as simhash_pairs). The pinned repartition
-    # keeps the expansion spread at any corpus size; a bucket too hot
-    # even for that engages the ``bucket_salts`` escape hatch.
+    # keeps the expansion spread at any corpus size; the salting above
+    # bounds a bucket too hot even for that.
     n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     banded = exploded.repartition(n_part, *bucket_key)
     a_side = banded.select(*bucket_key, F.col("doc_id").alias("doc_a"))
@@ -664,41 +648,20 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
         # tiny by construction; eagerly materialized (lineage cut) so
-        # its three consumers below — two id semi-joins and the verify
-        # join — read blocks instead of re-running the signature
-        # pipeline. localCheckpoint beats cache() here: no lazy-first-
-        # use race between the consumers, no growing cache registry
-        # across repeated builder invocations.
+        # the verify stage's consumers read blocks instead of re-running
+        # the signature pipeline. localCheckpoint beats cache() here: no
+        # lazy-first-use race between the consumers, no growing cache
+        # registry across repeated builder invocations.
         .localCheckpoint()
     )
-    # exact-verify candidates only — and shingle ONLY candidate docs:
-    # a left-semi against the (cached, tiny) candidate set first means
-    # the verify stage re-tokenizes ~|candidates| docs, not the corpus.
-    cand_docs = docs.join(
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .union(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct(),
-        "doc_id",
-        "left_semi",
-    )
-    s = _with_shingles(cand_docs, text_col, k)
-    sa = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = inter.cast("double") / union
-    return (
-        verified.select("doc_a", "doc_b", fround(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify_candidates(docs, candidates, text_col, k, threshold)
 
 
 # Bit i of the sketch is the sign of Σ_tokens(±1 by bit i of the
 # token hash). 60 bits (not 64): the token hash is a 15-hex-char md5
 # prefix — the widest md5 slice that stays inside signed-64 for the
 # SQL-oracle replay.
-# Adaptive LSH bucket-cap salting (minhash_lsh_pairs default path):
+# Adaptive LSH bucket-cap salting (minhash_lsh_pairs):
 # buckets above _SALT_CAP split into ceil(size/_SALT_TARGET) salted
 # sub-buckets. Cap chosen above any bucket the gate corpora produce
 # (sf0.1 max band bucket is well under 512) so gate outputs are
@@ -868,89 +831,71 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 25,
     local_threshold: int = 200_000,
-    input_cheap: bool = False,
 ) -> DataFrame:
-    """Duplicate-CLUSTER formation: connected components over a
-    near-dup pair graph by alternating large-star/small-star
-    contraction — the recognized shuffle-efficient CC shape for
-    MapReduce-style engines, converging in O(log n) rounds versus
-    O(diameter) for plain min-label propagation (a 1000-node chain
-    converges in ~10 rounds, not 1000). This is the step that turns
+    """Duplicate-CLUSTER formation: ``(doc_id, component)`` for every
+    endpoint of a near-dup pair graph, ``component`` being the minimum
+    id of the node's connected component. This is the step that turns
     pairwise near-dup hits into keep-one-per-cluster decisions in a
     training pipeline.
 
-    Per round: LARGE-STAR connects every neighbor larger than u to
-    the minimum of u's closed neighborhood; SMALL-STAR re-points u
-    and its not-larger neighbors at that minimum. Both only ever
-    replace an endpoint by a smaller node id, so the edge set
-    monotonically contracts onto stars rooted at each component's
-    minimum id — the same fixpoint as the recursive-CTE oracle.
-
-    Iterative-by-nature (not a single SQL expression): the driver
-    loops small Spark jobs, checkpointing each round to keep lineage
-    flat. Edge tables at corpus scale are the LSH output — orders of
-    magnitude smaller than the corpus.
-
     TWO-LEVEL EXECUTION (the standard large-graph CC refinement, cf.
     Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): the per-round convergence signature already returns the
-    exact contracted edge count for free, so once the edge set fits
-    comfortably in the driver (``local_threshold`` rows — each row is
-    two ids, default caps driver transfer at a few MB) the remaining
-    O(log n) rounds of cluster scheduling are replaced by ONE collect
-    + a path-compressed union-find + a broadcast label join. At corpus
-    scale the early rounds stay fully distributed (billions of LSH
-    pairs never trip the threshold); the switch only fires when the
-    graph has genuinely contracted — which is exactly when per-round
-    fixed costs (4 shuffle boundaries + an AQE re-plan per stage)
-    dominate the actual work. The label mapping produced locally is
-    dimension-sized (one row per non-singleton node *after*
-    contraction), so the final join broadcasts.
+    SoCC'14). The distinct edge set is checkpointed once, then at most
+    ``local_threshold + 1`` of its rows are collected (each row is two
+    ids, so the default caps driver transfer at a few MB). If the cap
+    is not hit, those rows ARE the graph: a path-compressed union-find
+    finishes on the driver and the result is a driver-built table, with
+    no further Spark job. Only a graph above the cap runs the
+    distributed loop.
 
-    ``input_cheap`` (r13, guide §5 driver/job count): set it when
-    re-running the ``edges`` plan costs ~nothing (the caller already
-    materialized it — e.g. the split family's checkpointed pair set).
-    The bounded fast-path collect then runs DIRECTLY on the lazy
-    distinct — one Spark job instead of checkpoint-then-collect — and
-    a fast-path hit finishes fully local (the result is a
-    driver-built label table, bounded by ``local_threshold`` rows of
-    two ids, so no label join remains in the plan).  On a fast-path
-    MISS the edge set is checkpointed and the distributed loop
-    proceeds exactly as before — re-running the (cheap) input plan
-    once.  Default False keeps the materialize-first shape for
-    callers whose edge pipeline is expensive (whole-corpus LSH).
+    The loop alternates large-star/small-star contraction — the
+    shuffle-efficient CC shape for MapReduce-style engines, converging
+    in O(log n) rounds versus O(diameter) for plain min-label
+    propagation. Per round: LARGE-STAR connects every neighbor larger
+    than u to the minimum of u's closed neighborhood; SMALL-STAR
+    re-points u and its not-larger neighbors at that minimum. Both
+    only ever replace an endpoint by a smaller node id, so the edge
+    set monotonically contracts onto stars rooted at each component's
+    minimum id — the same fixpoint as the recursive-CTE oracle. Each
+    round is checkpointed to keep lineage flat, and its convergence
+    signature returns the exact contracted edge count, so once the
+    graph has contracted under ``local_threshold`` edges the remaining
+    rounds are replaced by one collect + union-find + a broadcast
+    label join.
     """
     from pyspark.sql import Window
-    # materialize the upstream pipeline exactly ONCE; the node
-    # universe and the iteration's edge set both read these blocks.
-    # Nodes come from the UNFILTERED set so a node appearing only in
-    # a self-loop still gets a (singleton) component.
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
-    if input_cheap:
-        rows = raw.limit(local_threshold + 1).collect()
-        if len(rows) <= local_threshold:
-            # rows IS the complete distinct edge set: finish with no
-            # further Spark work at all (self-loops only contribute
-            # their node; duplicates are impossible after distinct)
-            from pyspark.sql import types as T
+    from pyspark.sql import types as T
 
-            comp_map = _local_union_find(
-                [(r["a"], r["b"]) for r in rows if r["a"] != r["b"]]
-            )
-            node_set = sorted(
-                {r["a"] for r in rows} | {r["b"] for r in rows}
-            )
-            id_type = raw.schema["a"].dataType
-            return edges.sparkSession.createDataFrame(
-                [(n, comp_map.get(n, n)) for n in node_set],
-                T.StructType(
-                    [
-                        T.StructField("doc_id", id_type),
-                        T.StructField("component", id_type),
-                    ]
-                ),
-            )
-    raw = raw.localCheckpoint()
+    # materialize the upstream pipeline exactly ONCE; the fast-path
+    # probe, the node universe and the iteration's edge set all read
+    # these blocks. Self-loops stay in, so a node appearing only in a
+    # self-loop still gets a (singleton) component.
+    raw = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+    id_type = raw.schema["a"].dataType
+
+    def _label_table(comp_map: dict, key: str) -> DataFrame:
+        return raw.sparkSession.createDataFrame(
+            list(comp_map.items()),
+            T.StructType(
+                [
+                    T.StructField(key, id_type),
+                    T.StructField("component", id_type),
+                ]
+            ),
+        )
+
+    # Fast path, ONE bounded job: if the cap is not hit, the collected
+    # rows are the complete distinct edge set, and the union-find labels
+    # every endpoint (a self-loop only contributes its node).
+    rows = raw.limit(local_threshold + 1).collect()
+    if len(rows) <= local_threshold:
+        return _label_table(
+            _local_union_find([(r["a"], r["b"]) for r in rows]), "doc_id"
+        )
     # no checkpoint: consumed once by the final label join, reading
     # raw's cached blocks
     nodes = (
@@ -958,10 +903,7 @@ def connected_components(
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
     )
-    # lazy: a filter over raw's checkpointed blocks — its own eager
-    # checkpoint bought nothing but one more materialization job
-    # (guide §1.2: remove passes before tuning inside them)
-    cur = raw.filter(F.col("a") != F.col("b"))
+    cur = raw.filter(F.col("a") != F.col("b")).localCheckpoint()
 
     def _sig(df: DataFrame) -> tuple:
         """Order-insensitive multiset signature of an edge set — one
@@ -987,20 +929,8 @@ def connected_components(
         mapping is total over non-singletons; singletons label
         themselves via the coalesce.
         """
-        from pyspark.sql import types as T
-
-        comp_map = _local_union_find(
-            [(r["a"], r["b"]) for r in edge_rows]
-        )
-        id_type = raw.schema["a"].dataType
-        comp_df = raw.sparkSession.createDataFrame(
-            list(comp_map.items()),
-            T.StructType(
-                [
-                    T.StructField("a", id_type),
-                    T.StructField("component", id_type),
-                ]
-            ),
+        comp_df = _label_table(
+            _local_union_find([(r["a"], r["b"]) for r in edge_rows]), "a"
         )
         return nodes.join(
             F.broadcast(comp_df), nodes.node == comp_df.a, "left"
@@ -1016,18 +946,6 @@ def connected_components(
     # once edge volume stops being the bottleneck).
     w_min = F.least(F.col("a"), F.min("b").over(Window.partitionBy("a")))
 
-    # Fast path, ONE bounded job: instead of a signature agg (count)
-    # followed by a second full collect, pull at most threshold+1 edge
-    # rows directly — if the cap is not hit, those rows ARE the edge
-    # set and the local finish proceeds with no further Spark job.
-    # Driver transfer stays bounded by construction (threshold rows of
-    # two ids); corpora whose contracted graph exceeds the cap fall
-    # through to the distributed loop having paid one truncated scan
-    # of the checkpointed blocks.
-    fast_rows = cur.limit(local_threshold + 1).collect()
-    if len(fast_rows) <= local_threshold:
-        return _finish_local(fast_rows)
-    cur = cur.localCheckpoint()
     cur_sig = _sig(cur)
     for _ in range(max_iter):
         sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))

@@ -44,9 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import fround
-from ..functions.text import word_shingles
-from .dedup import minhash_perm_band_hashes
+from .dedup import _verify_candidates, minhash_perm_band_hashes
 
 
 def incremental_minhash_pairs(
@@ -59,7 +57,6 @@ def incremental_minhash_pairs(
     threshold: float = 0.8,
     new_pred=None,
     tagged: DataFrame | None = None,
-    prescreened: bool = False,
 ) -> DataFrame:
     """Near-dup pairs touching at least one NEW document.
 
@@ -76,28 +73,17 @@ def incremental_minhash_pairs(
     ``'batch_index'`` (a new doc duplicating an indexed one — the
     batch doc is the one to drop).
 
-    THIRD form (r10): pass ``tagged`` — a pre-built
+    THIRD form: pass ``tagged`` — a pre-built
     ``(doc_id, band, bh, __new)`` table — and both derivations are
-    skipped entirely.  This is the TRUE persisted-index shape the
-    docstring has always promised: the index side's band table is a
-    stored artifact read back from disk, only the arriving batch is
-    band-hashed fresh, so signature derivation is batch-proportional
-    (see ``operators/splitting.py::incremental_pairs_vs_index`` for
-    the read-union-checkpoint construction).  ``new_col``/``new_pred``
-    are ignored when ``tagged`` is given; the caller owns the flag.
-
-    ``prescreened`` (r13, guide §2.4 — remove shuffles outright):
-    a ``tagged`` table that is ALREADY restricted to batch-touched
-    buckets (``incremental_pairs_vs_index`` builds exactly that: index
-    rows semi-joined against the batch's distinct keys, unioned with
-    the batch rows, whose own keys are trivially batch keys) makes the
-    bucket-selection semi-join below an identity — every row of such a
-    table sits in a bucket containing at least one ``__new`` key, and
-    the key set used here (the ``__new`` rows' distinct (band, bh)) is
-    the same set the caller screened with.  Passing True skips the
-    redundant distinct + shuffle_hash semi-join exchange; the pair set
-    is byte-identical by the argument above (pinned in
-    tests/test_incremental.py).
+    skipped.  This is the persisted-index shape: the index side's band
+    table is a stored artifact read back from disk and only the
+    arriving batch is band-hashed fresh (see
+    ``operators/splitting.py::incremental_pairs_vs_index``).
+    ``new_col``/``new_pred`` are ignored; the caller owns the flag.
+    A caller-supplied ``tagged`` is used as-is: restricting it to the
+    buckets a batch key touches is the caller's job.  An unscreened
+    table gives the same pairs (the candidate filter needs a batch doc
+    on one side), only at the cost of expanding untouched buckets.
     """
     # Never a flag JOIN (a docs(doc_id, is_new) projection looks
     # broadcast-cheap at gate SF, but it is corpus-sized: the exact
@@ -121,49 +107,46 @@ def incremental_minhash_pairs(
     # Construction-time execution contract mirrors minhash_lsh_pairs:
     # the tagged band table materializes once; the key-distinct, both
     # expansion sides and the verify semi-join all read its blocks.
-    if tagged is not None:
-        pass  # caller-supplied (persisted-index form) — use as-is
-    elif new_pred is not None:
-        tagged = (
-            minhash_perm_band_hashes(docs, text_col, num_perm, bands, k)
-            .withColumn("__new", new_pred(F.col("doc_id")))
-            .localCheckpoint()
-        )
-    else:
-        # NULL-flag semantics (ADVICE r8): a raw boolean filter on a
-        # nullable column excludes NULL rows from BOTH sides (neither
-        # ``is_new`` nor ``~is_new`` is true), silently dropping an
-        # unflagged doc from dedup entirely.  Coalesce NULL to False —
-        # "not marked new" means "already in the index", the
-        # conservative reading (an indexed doc can still be matched
-        # against, whereas a vanished doc escapes dedup).  Documented
-        # here as THE contract for the two-pass form.
-        is_new = F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
-        tagged = (
-            minhash_perm_band_hashes(
-                docs.filter(is_new), text_col, num_perm, bands, k
+    if tagged is None:
+        if new_pred is not None:
+            tagged = (
+                minhash_perm_band_hashes(docs, text_col, num_perm, bands, k)
+                .withColumn("__new", new_pred(F.col("doc_id")))
+                .localCheckpoint()
             )
-            .withColumn("__new", F.lit(True))
-            .unionByName(
+        else:
+            # NULL-flag semantics (ADVICE r8): a raw boolean filter on a
+            # nullable column excludes NULL rows from BOTH sides (neither
+            # ``is_new`` nor ``~is_new`` is true), silently dropping an
+            # unflagged doc from dedup entirely.  Coalesce NULL to False
+            # — "not marked new" means "already in the index", the
+            # conservative reading (an indexed doc can still be matched
+            # against, whereas a vanished doc escapes dedup).  Documented
+            # here as THE contract for the two-pass form.
+            is_new = F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
+            tagged = (
                 minhash_perm_band_hashes(
-                    docs.filter(~is_new), text_col, num_perm, bands, k
-                ).withColumn("__new", F.lit(False))
+                    docs.filter(is_new), text_col, num_perm, bands, k
+                )
+                .withColumn("__new", F.lit(True))
+                .unionByName(
+                    minhash_perm_band_hashes(
+                        docs.filter(~is_new), text_col, num_perm, bands, k
+                    ).withColumn("__new", F.lit(False))
+                )
+                .localCheckpoint()
             )
-            .localCheckpoint()
-        )
-    if prescreened:
-        touched = tagged
-    else:
+        # bucket screen: keep only buckets a batch key touches
         new_keys = (
             tagged.filter(F.col("__new")).select("band", "bh").distinct()
         )
-        touched = tagged.join(
+        tagged = tagged.join(
             new_keys.hint("shuffle_hash"), ["band", "bh"], "left_semi"
         )
     n_part = int(
         docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    banded = touched.repartition(n_part, "band", "bh")
+    banded = tagged.repartition(n_part, "band", "bh")
     a_side = banded.select(
         "band",
         "bh",
@@ -192,24 +175,4 @@ def incremental_minhash_pairs(
         .distinct()
         .localCheckpoint()
     )
-    cand_docs = docs.join(
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .union(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct(),
-        "doc_id",
-        "left_semi",
-    )
-    from ..functions.text import word_shingles_sql
-
-    s = cand_docs.selectExpr(
-        "doc_id", f"{word_shingles_sql(text_col, k)} AS sh"
-    )
-    sa = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = inter.cast("double") / union
-    return verified.select(
-        "doc_a", "doc_b", fround(jac, 4).alias("jaccard"), "link_type"
-    ).filter(F.col("jaccard") >= threshold)
+    return _verify_candidates(docs, candidates, text_col, k, threshold)

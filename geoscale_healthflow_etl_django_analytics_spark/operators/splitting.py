@@ -67,9 +67,9 @@ def split_of_cluster(
     val_pct: int = 10,
     salt: str = "split-",
 ) -> Column:
-    """The deterministic cluster -> split bucket (the
-    ``leakage_safe_split`` arithmetic, factored so the incremental
-    form cannot drift from it)."""
+    """The deterministic cluster -> split bucket, shared by
+    ``subdoc.leakage_safe_split`` and the incremental form so the two
+    cannot drift apart."""
     bucket = md5_int32(F.concat(F.lit(salt), cluster.cast("string"))) % 100
     return (
         F.when(bucket < train_pct, F.lit("train"))
@@ -219,22 +219,16 @@ def incremental_pairs_vs_index(
     index_touched = index_bands.join(
         new_keys.hint("shuffle_hash"), ["band", "bh"], "left_semi"
     )
-    # r13 second pass (guide §2.4/§5): the union is handed over LAZY
-    # with ``prescreened=True`` — the pair logic's own bucket screen
-    # is an identity over this table (every row sits in a batch-touched
-    # bucket by construction), so its distinct + semi-join exchange is
-    # skipped, and the union's only remaining consumers are the two
-    # sides of the expansion self-join, whose pinned repartition
-    # exchanges canonicalize identically and are computed once via
-    # exchange reuse.  Dropping the eager checkpoint removes one
-    # serialized materialization job + a batch-proportional block-store
-    # write per query; the index band rows still cross the cluster
-    # exactly once (the semi-join exchange feeds the repartition
-    # directly instead of round-tripping through checkpoint blocks).
+    # The union is handed over LAZY and already screened: the pair
+    # logic uses a caller-supplied table as-is, and the union's only
+    # consumers are the two sides of the expansion self-join, whose
+    # pinned repartition exchanges canonicalize identically and are
+    # computed once via exchange reuse.  The index band rows cross the
+    # cluster exactly once (the semi-join exchange feeds the
+    # repartition directly).
     tagged = index_touched.unionByName(batch_bands)
     return incremental_minhash_pairs(
-        docs, text_col=text_col, threshold=threshold, tagged=tagged,
-        prescreened=True,
+        docs, text_col=text_col, threshold=threshold, tagged=tagged
     )
 
 
@@ -279,8 +273,7 @@ def incremental_leakage_safe_split(
     # exact-verify join pipeline it ends in used to execute twice per
     # query.  Materialize the verified pair set once (pair-graph-
     # sized, the same bound as every other checkpoint in this family);
-    # both consumers now read blocks, and the batch CC's own probe
-    # becomes a trivial re-read (input_cheap below).
+    # both consumers now read blocks.
     pairs = pairs.localCheckpoint()
     ids = docs.select(F.col(doc_id_col).alias("doc_id"))
     # stored-split support (r11, the fold lifecycle): a clusters table
@@ -323,7 +316,7 @@ def incremental_leakage_safe_split(
     bb = pairs.filter(F.col("link_type") == "batch_batch").select(
         "doc_a", "doc_b"
     )
-    comp_b = connected_components(bb, input_cheap=True).select(
+    comp_b = connected_components(bb).select(
         F.col("doc_id").alias("__b_doc"), F.col("component")
     )
     bcomp = (

@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_int32
 from ..functions.text import fingerprint
+from .splitting import split_of_cluster
 
 
 def segment_dedup_apply(
@@ -130,14 +130,8 @@ def leakage_safe_split(
         comp, F.col("doc_id") == F.col("__cid_doc"), "left"
     )
     cluster = F.coalesce(F.col("component"), F.col("doc_id"))
-    bucket = md5_int32(
-        F.concat(F.lit(salt), cluster.cast("string"))
-    ) % 100
     return out.select(
         "doc_id",
         cluster.alias("cluster_id"),
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
+        split_of_cluster(cluster, train_pct, val_pct, salt).alias("split"),
     )

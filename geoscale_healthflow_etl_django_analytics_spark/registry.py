@@ -8782,7 +8782,7 @@ def dedup_select_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round 8 additions: Bloom-prescreened decontamination, incremental
+# Round 8 additions: Bloom-screened decontamination, incremental
 # MinHash ingest, Count-Min heavy hitters, product-quantization ANN
 # ===========================================================================
 

@@ -145,11 +145,15 @@ def test_connected_components_long_chain(spark):
 @pytest.mark.parametrize("local_threshold", [0, 200_000])
 def test_connected_components_mixed_graph(spark, local_threshold):
     """Several components of different shapes resolve to their min ids:
-    a triangle {0,1,2}, a chain {10..13}, a pair {20,21}, and the
+    a triangle {0,1,2}, a chain {10..13}, a pair {20,21} given twice,
+    and a node {30} seen only in a self-loop, which labels itself. The
     star fixpoint labels every member (including roots) — on both the
-    distributed loop (threshold 0) and the local union-find finish."""
+    distributed loop (threshold 0) and the driver-side fast path."""
     edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (12, 13), (21, 20)],
+        [
+            (0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (12, 13),
+            (21, 20), (21, 20), (30, 30),
+        ],
         "doc_a long, doc_b long",
     )
     got = {
@@ -162,6 +166,7 @@ def test_connected_components_mixed_graph(spark, local_threshold):
         0: 0, 1: 0, 2: 0,
         10: 10, 11: 10, 12: 10, 13: 10,
         20: 20, 21: 20,
+        30: 30,
     }
 
 

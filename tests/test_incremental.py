@@ -521,12 +521,12 @@ def test_lifecycle_ledger_refuses_replay_and_matches_fold_chain(
     assert read(auto) == before
 
 
-def test_prescreened_pairs_identical(spark, tmp_path):
-    """r13 prescreen skip: handing incremental_minhash_pairs a tagged
-    table already restricted to batch-touched buckets with
-    prescreened=True yields the byte-identical pair set to running the
-    operator's own bucket screen over the same table — the screen is
-    an identity on a pre-screened table, never a value change."""
+def test_screened_and_unscreened_tagged_pairs_identical(spark, tmp_path):
+    """A caller-supplied tagged table is used as-is. The caller-screened
+    table (index rows restricted to batch-touched buckets) and the
+    unscreened index ∪ batch table give the same pair set: the
+    candidate filter needs a batch doc on one side, so rows in buckets
+    with no batch key never reach the output."""
     import os
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import splitting
@@ -546,19 +546,20 @@ def test_prescreened_pairs_identical(spark, tmp_path):
         .select("doc_id", "band", "bh", F.lit(True).alias("__new"))
     )
     new_keys = batch_bands.select("band", "bh").distinct()
-    tagged = index_bands.join(
+    screened_tagged = index_bands.join(
         new_keys.hint("shuffle_hash"), ["band", "bh"], "left_semi"
     ).unionByName(batch_bands)
-    fast = {
-        tuple(r)
-        for r in incremental_minhash_pairs(
-            docs, threshold=0.8, tagged=tagged, prescreened=True
-        ).collect()
-    }
     screened = {
         tuple(r)
         for r in incremental_minhash_pairs(
-            docs, threshold=0.8, tagged=tagged.localCheckpoint()
+            docs, threshold=0.8, tagged=screened_tagged
         ).collect()
     }
-    assert fast == screened
+    unscreened = {
+        tuple(r)
+        for r in incremental_minhash_pairs(
+            docs, threshold=0.8, tagged=index_bands.unionByName(batch_bands)
+        ).collect()
+    }
+    assert screened
+    assert screened == unscreened

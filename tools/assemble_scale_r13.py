@@ -3,7 +3,7 @@
 
 Round 12 ran no scale cells (optimization round 1 was bench-focused),
 so this bases directly off BENCH_scale_r11.json with the same
-mechanisms as tools/assemble_scale_r12.py: per-cell layout tags
+mechanisms as the earlier per-round assemblers: per-cell layout tags
 (v1 = retired coalesce(1) single-file layout, v2 = current), carried
 cells hash-keyed and dropped when the live query_hash no longer
 matches (an edited query's old cells can never survive as if they
