@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import re
 import sys
 import time
@@ -23,6 +24,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from geoscale_healthflow_etl_django_analytics_spark.registry import REGISTRY  # noqa: E402
 from geoscale_healthflow_etl_django_analytics_spark.session import get_spark  # noqa: E402
+
+# Seed of the timed passes' query order. Each pass walks the sorted
+# query list rotated by its own offset drawn from this seed, so no query
+# sits at the end of every pass, where late-session JVM slowdowns land.
+ORDER_SEED = 42
 
 
 def main() -> None:
@@ -55,9 +61,12 @@ def main() -> None:
     # min of two passes is the steady-state cost the plan actually has.
     passes: dict[str, int] = {}
     samples: dict[str, list[float]] = {}
+    order_rng = random.Random(ORDER_SEED)
 
     def _pass(names) -> None:
-        for name in names:
+        names = sorted(names)
+        k = order_rng.randrange(len(names)) if names else 0
+        for name in names[k:] + names[:k]:
             spec = bench_queries[name]
             t0 = time.perf_counter()
             spec.builder(spark, sf_dir).write.format("noop").mode(
@@ -69,13 +78,13 @@ def main() -> None:
             samples.setdefault(name, []).append(dt)
 
     for _ in range(2):
-        _pass(sorted(bench_queries))
+        _pass(bench_queries)
     # Sub-1.5s queries get a THIRD pass (VERDICT r5 "Next round" #6):
     # their per-pass jitter on a shared box is a large FRACTION of the
     # reading (r5 saw ±1.4x swings on unchanged plans), so one more
     # min-sample keeps cross-round ratio tracking meaningful while
     # adding only ~seconds to the whole run.
-    _pass(sorted(n for n, t in timings.items() if t < 1.5))
+    _pass(n for n, t in timings.items() if t < 1.5)
     # VARIANCE GUARD (r12, measurement fix documented in
     # OPTIMIZATION_r12.md): event-log profiling showed sporadic
     # multi-second driver stalls hitting random passes on this shared
@@ -86,11 +95,9 @@ def main() -> None:
     # parquet inputs.  Old methodology's numbers are unchanged for
     # stable queries (the guard only ADDS samples).
     _pass(
-        sorted(
-            n
-            for n, ts in samples.items()
-            if len(ts) >= 2 and max(ts) > 1.4 * min(ts) and min(ts) >= 1.5
-        )
+        n
+        for n, ts in samples.items()
+        if len(ts) >= 2 and max(ts) > 1.4 * min(ts) and min(ts) >= 1.5
     )
 
     # Box-calibration stamp (VERDICT r11 next-round #3): fixed-work
@@ -147,7 +154,7 @@ def main() -> None:
                 # field matches; r1-r3 artifacts were single-pass cold.
                 "method": (
                     "warmup+min-of-2+third-pass-under-1.5s"
-                    "+variance-guard-1.4x"
+                    f"+variance-guard-1.4x+rotated-order-s{ORDER_SEED}"
                 ),
                 "timed_passes": min(passes.values()) if passes else 0,
                 "queries": {

@@ -15,7 +15,7 @@ sized → Catalyst broadcast-joins them (verified in .explain).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import (
@@ -66,11 +66,13 @@ def api_by_nation_year(
     )
 
 
-def api_summary(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
-    """A11 — the response summary block (:719-750): totals, overall
-    api, avg/max/min of positive apis, burden/elimination counts."""
-    df = api_by_nation_year(orders, customer, nation)
-    return df.agg(
+def api_summary_cols() -> list[Column]:
+    """A11 — the response summary block (:719-750) as aggregate
+    columns over :func:`api_by_nation_year`: totals, overall api,
+    avg/max/min of positive apis, burden/elimination counts. No
+    DISTINCT aggregate, so the list can also be observed while the
+    per-(nation, year) table is written."""
+    return [
         F.sum("cases").cast("long").alias("total_cases"),
         F.sum("population").cast("long").alias("total_population"),
         fround(
@@ -91,7 +93,12 @@ def api_summary(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> Da
         F.sum(F.when(F.col("elimination_target"), 1).otherwise(0))
         .cast("long")
         .alias("elimination_target_count"),
-    )
+    ]
+
+
+def api_summary(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
+    """A11 — the one-row summary block over the per-(nation, year) table."""
+    return api_by_nation_year(orders, customer, nation).agg(*api_summary_cols())
 
 
 def risk_histogram(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:

@@ -7,18 +7,30 @@ prunable filters) → clean (C-layer expressions) → analytics (A-layer
 groupBys) → staging write (S7, filter-context partitioned). Stages
 2-6 of the reference's imperative flow collapse into Catalyst's
 single optimized plan — see SURVEY.md §3 'Spark shape'.
+
+Each plan runs once. The response summary is taken from the staged
+write, never from a second execution of the analytics plan:
+
+- ``api_calculator_etl`` and ``weather_etl`` observe their summary
+  aggregates while the staged table is written (``DataFrame.observe``)
+  and read them from the ``Observation`` afterwards. ``observe`` takes
+  no DISTINCT aggregate, so a distinct count is written as
+  ``size(collect_set(...))``.
+- ``health_center_etl``'s summary needs DISTINCT aggregates and cross
+  joins, which cannot be observed. It is one of the staged outputs, so
+  the pipeline reads back that one staged row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.params import parse_year_spec
 from .operators import health_analytics as ha
 from .operators import staging
 from .operators import weather as wx
-from .operators.api_calc import api_by_nation_year, api_summary
+from .operators.api_calc import api_by_nation_year, api_summary_cols
 from .sources import catalog
 from .sources.semantic import lab_records, precip_readings, temp_readings
 
@@ -34,7 +46,12 @@ def health_center_etl(
     """Entry point 1 — the flagship lab ETL
     (`health_center_lab_view.py:79-365`): validate params → discover
     filters → extract → transform → A1-A5 analytics → staged writes →
-    response summary."""
+    response summary.
+
+    The summary is the staged ``total_summary`` row, read back after
+    the writes. ``total_summary`` uses DISTINCT aggregates and cross
+    joins, which ``observe`` does not take, and reading one staged row
+    is cheaper than running the A5 plan over ``events`` again."""
     lab = lab_records(catalog.load_table(spark, sf_dir, "events"))
 
     available_years = [r.year for r in lab.select("year").distinct().collect()]
@@ -64,7 +81,12 @@ def health_center_etl(
         )
         for name, df in outputs.items()
     }
-    summary = outputs["total_summary"].collect()[0].asDict()
+    summary = (
+        spark.read.parquet(paths["total_summary"])
+        .select(*outputs["total_summary"].columns)
+        .collect()[0]
+        .asDict()
+    )
     return {
         "status": "success",
         "years": selected_years,
@@ -79,14 +101,25 @@ def weather_etl(
     """Entry point 3 — weather monthly merge
     (`weather_data_prec_temp_etl_view.py:710-919`): per-station
     monthly aggregates → full merge + fill ladder → staged write →
-    A12 summary."""
+    A12 summary.
+
+    ``n_rows`` and ``n_stations`` are observed while the merged table
+    is written. ``observe`` takes no DISTINCT aggregate, so the station
+    count is ``size(collect_set("station"))``; it drops nulls as
+    ``countDistinct`` does."""
     ev = catalog.load_table(spark, sf_dir, "events")
     merged = wx.merge_precip_temp(precip_readings(ev), temp_readings(ev))
-    path = staging.write_staging(merged, output_dir, "weather_monthly_merged")
-    stats = merged.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("station").alias("n_stations"),
-    ).collect()[0]
+    obs = Observation("weather_summary")
+    path = staging.write_staging(
+        merged.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.size(F.collect_set("station")).alias("n_stations"),
+        ),
+        output_dir,
+        "weather_monthly_merged",
+    )
+    stats = obs.get
     return {
         "status": "success",
         "table": path,
@@ -100,9 +133,16 @@ def api_calculator_etl(
 ) -> dict:
     """Entry point 2 — malaria API calculator
     (`malaria_api_calculator_etl_view.py:515-784`): derive per-
-    (nation, year) incidence + risk → staged write → A11 summary."""
+    (nation, year) incidence + risk → staged write → A11 summary.
+
+    The A11 aggregates (``api_summary_cols``) are observed while the
+    per-(nation, year) table is written, so the summary costs no second
+    execution. They hold no DISTINCT aggregate, which ``observe`` would
+    reject."""
     t = {n: catalog.load_table(spark, sf_dir, n) for n in ("orders", "customer", "nation")}
     api = api_by_nation_year(t["orders"], t["customer"], t["nation"])
-    path = staging.write_staging(api, output_dir, "malaria_api")
-    summ = api_summary(t["orders"], t["customer"], t["nation"]).collect()[0].asDict()
-    return {"status": "success", "table": path, "summary": summ}
+    obs = Observation("api_summary")
+    path = staging.write_staging(
+        api.observe(obs, *api_summary_cols()), output_dir, "malaria_api"
+    )
+    return {"status": "success", "table": path, "summary": obs.get}
