@@ -1,10 +1,15 @@
 """Vector math over array<float|double> embedding columns.
 
-All pure Column expressions (`zip_with`/`aggregate` run inside
-codegen) — no UDF, no driver collect; suitable for billion-row
-embedding tables. Cast to double FIRST so both Spark and the DuckDB
-oracle do identical double-precision arithmetic in identical
-(sequential) order.
+All pure expressions (`zip_with`/`aggregate` run inside codegen) — no
+UDF, no driver collect; suitable for billion-row embedding tables.
+Cast to double FIRST so both Spark and the DuckDB oracle do identical
+double-precision arithmetic in identical (sequential) order.
+
+One spelling: each ``*_sql`` function composes its tree as SQL text
+over column names (or any SQL expression, e.g. an ``array(...)``
+literal), and the Column form is ``F.expr`` of that text — one JVM
+parse per subtree instead of one py4j round trip per node (r12,
+guide §5), and no second hand-kept tree that could drift.
 """
 
 from __future__ import annotations
@@ -13,58 +18,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double(vec: Column) -> Column:
-    return vec.cast("array<double>")
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def normalized(vec: Column) -> Column:
-    """Unit-normalize once per ROW so pairwise cosine degrades to a
-    single dot fold — the pre-shuffle step that makes bucketed
-    similarity self-joins 3× cheaper per pair (norms computed n times,
-    not n² times; the join exchange materializes the normalized
-    arrays). The norm is BOUND via the 1-element-array trick:
-    referencing norm(vec) directly inside the transform lambda would
-    get re-inlined per element by projection collapse (O(d²)/row)."""
-    d = as_double(vec)
-    return F.element_at(
-        F.transform(
-            F.array(norm(d)), lambda n: F.transform(d, lambda x: x / n)
-        ),
-        1,
-    )
-
-
-# --- SQL-string twins (r12, guide §5): identical trees composed as
-# text so hot builders parse whole subtrees in one expr() call
-# instead of one py4j round trip per node.  Kept adjacent to their
-# Column forms so the two spellings cannot drift silently; value
-# oracles (same rows) and plan pins (same plan) hold for both.
-
-
 def as_double_sql(expr: str) -> str:
     return f"CAST({expr} AS ARRAY<DOUBLE>)"
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`dot`."""
     return (
         f"aggregate(zip_with({as_double_sql(a)}, {as_double_sql(b)}, "
         f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
@@ -72,20 +30,48 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """SQL twin of :func:`norm`."""
     return (
         f"sqrt(aggregate({as_double_sql(a)}, 0.0D, "
         f"(acc, x) -> acc + x * x))"
     )
 
 
+def cosine_sql(a: str, b: str) -> str:
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
+
+
 def normalized_sql(vec: str) -> str:
-    """SQL twin of :func:`normalized` (same bound-norm trick)."""
-    d = as_double_sql(vec)
+    """Unit-normalize once per ROW so pairwise cosine degrades to a
+    single dot fold — the pre-shuffle step that makes bucketed
+    similarity self-joins 3× cheaper per pair (norms computed n times,
+    not n² times; the join exchange materializes the normalized
+    arrays). The norm is BOUND via the 1-element-array trick:
+    referencing norm(vec) directly inside the transform lambda would
+    get re-inlined per element by projection collapse (O(d²)/row)."""
     return (
         f"element_at(transform(array({norm_sql(vec)}), "
-        f"n -> transform({d}, x -> x / n)), 1)"
+        f"n -> transform({as_double_sql(vec)}, x -> x / n)), 1)"
     )
+
+
+def as_double(vec: str) -> Column:
+    return F.expr(as_double_sql(vec))
+
+
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
+    return F.expr(norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(cosine_sql(a, b))
+
+
+def normalized(vec: str) -> Column:
+    return F.expr(normalized_sql(vec))
 
 
 def sign_bucket(vec: Column, n_dims: int = 8) -> Column:
@@ -93,7 +79,7 @@ def sign_bucket(vec: Column, n_dims: int = 8) -> Column:
     first ``n_dims`` components. Turns O(n^2) similarity self-joins
     into per-bucket joins (the scale path for near-dup detection).
     """
-    d = as_double(vec)
+    d = vec.cast("array<double>")
     bucket = F.lit(0)
     for i in range(n_dims):
         bucket = bucket + F.when(F.element_at(d, i + 1) >= 0, F.lit(1 << i)).otherwise(

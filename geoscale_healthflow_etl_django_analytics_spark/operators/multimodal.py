@@ -8,8 +8,7 @@ Design for 100 TB of media:
   ``mapInPandas`` (Arrow-batched, one Python worker per partition —
   the only sanctioned Python hot path in this engine);
 - the actual codec step is STUBBED: the image/audio libraries are
-  not in this container, so ``decode_media`` raises
-  NotImplementedError unless ``fake=True``, which derives a
+  not in this container, so ``extract_features`` derives a
   deterministic pseudo-decode from the payload's md5 (the Spark-side
   plumbing — schema, batching, partitioning — is real and tested).
 
@@ -82,18 +81,13 @@ def _fake_decode_features(payload: bytes) -> list[float]:
     return out
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over payload bytes.
 
     ``mapInPandas`` processes each partition as an iterator of pandas
     batches — constant memory per worker regardless of corpus size;
     partitioning (and thus parallelism) is inherited from the input.
     """
-    if not fake:
-        raise NotImplementedError(
-            "real media decode requires PIL/torchaudio/ffmpeg, not in "
-            "this environment; pass fake=True for the deterministic stub"
-        )
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
@@ -158,7 +152,7 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
 # ---------------------------------------------------------------------------
 # REAL image path (round 4): BMP is fully public and stdlib-decodable,
 # so decode -> resize -> stats runs on actual pixel bytes (the other
-# codecs stay stubbed behind fake=True until their libraries exist).
+# codecs stay stubbed until their libraries exist).
 # ---------------------------------------------------------------------------
 
 BMP_STATS_SCHEMA = (

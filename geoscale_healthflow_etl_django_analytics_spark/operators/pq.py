@@ -37,8 +37,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.exact import fround
-from ..functions.vectors import dot, normalized
+from ..functions.exact import DECIMAL_TYPE, fround, fround_sql
+from ..functions.vectors import dot_sql
+from .similarity import (
+    _lloyd_rounds,
+    _probe,
+    _query_nv,
+    _seed_centroids,
+    _sim,
+    _topk,
+    _unit_vectors,
+    ivf_assignments,
+)
 
 PQ_M = 4  # subspaces
 PQ_KS = 16  # codebook entries per subspace
@@ -75,16 +85,14 @@ def pq_subvectors(
     per PQ query (codebooks, codes, query slices) and its normalize +
     slice + explode tree was measured costing ~1 s of py4j round
     trips PER BUILD; the string form parses in two expr() calls."""
-    from ..functions.vectors import normalized_sql
-
     sub = dim // m
     cells = ", ".join(
         f"named_struct('s', {s}, 'sv', slice(nv, {s * sub + 1}, {sub}))"
         for s in range(m)
     )
-    return embeddings.selectExpr(
-        "vec_id", "label", f"{normalized_sql('embedding')} AS nv"
-    ).selectExpr("vec_id", "label", f"inline(array({cells}))")
+    return _unit_vectors(embeddings, "label").selectExpr(
+        "vec_id", "label", f"inline(array({cells}))"
+    )
 
 
 def pq_codebooks(
@@ -136,8 +144,6 @@ def _query_lut(cb: DataFrame, qsub: DataFrame) -> DataFrame:
     (F.round rounds the shortest decimal repr — diverges from
     DuckDB); the integer is built directly, never via a
     reconstructed double that could truncate on cast."""
-    from ..functions.vectors import dot_sql
-
     d = dot_sql("qs", "cv")
     return (
         cb.join(F.broadcast(qsub), "s")
@@ -168,20 +174,53 @@ def pq_topk(
     micro-unit adds), shortlist top ``rerank`` by approx score, exact
     cosine rerank, emit top ``k`` (query excluded).  ``codebooks``
     overrides the seed codebooks (e.g. Lloyd-trained)."""
-    from ..functions.exact import fround_sql
-    from ..functions.vectors import dot_sql, normalized_sql
-
-    b = embeddings.selectExpr(
-        "vec_id", "label", f"{normalized_sql('embedding')} AS nv"
+    b = _unit_vectors(embeddings, "label")
+    lut, codes = _query_codes(embeddings, query_vec_id, dim, m, ks, codebooks)
+    return _adc_topk(
+        codes.filter(F.col("vec_id") != query_vec_id),
+        lut,
+        b,
+        _query_nv(b, query_vec_id),
+        k,
+        rerank,
     )
+
+
+def _query_codes(
+    embeddings: DataFrame,
+    query_vec_id: int,
+    dim: int,
+    m: int,
+    ks: int,
+    codebooks: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(lut, codes): the stored query vector's ADC lookup table and the
+    corpus codes, both over ``codebooks`` (default: the seed
+    codebooks)."""
     cb = codebooks if codebooks is not None else pq_codebooks(
         embeddings, dim, m, ks
     )
     qsub = pq_subvectors(
         embeddings.filter(F.col("vec_id") == query_vec_id), dim, m
     ).select("s", F.col("sv").alias("qs"))
-    lut = _query_lut(cb, qsub)
-    codes = pq_codes(embeddings, dim, m, ks, codebooks=cb)
+    return _query_lut(cb, qsub), pq_codes(embeddings, dim, m, ks, codebooks=cb)
+
+
+def _adc_topk(
+    codes: DataFrame,
+    lut: DataFrame,
+    vectors: DataFrame,
+    q: DataFrame,
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """The ADC scorer and exact-cosine rerank of every PQ query path:
+    each (vec_id, s, code) row looks up its LUT cell, the per-vector
+    sum runs in integer micro-units (exact, hence independent of both
+    engines' aggregation order), the top ``rerank`` approx scores
+    (vec_id tiebreak) are re-scored with the true cosine against
+    ``vectors`` (vec_id, label, nv) and the one-row query ``q`` (qv),
+    and the top ``k`` come out."""
     approx = (
         codes.crossJoin(F.broadcast(lut))
         .selectExpr(
@@ -191,29 +230,23 @@ def pq_topk(
         )
         .groupBy("vec_id")
         .agg(
-            F.expr(
-                fround_sql(f"sum(ip_u) / {float(_MICRO)!r}D", 6)
-            ).alias("approx_score")
+            fround(F.sum("ip_u") / F.lit(float(_MICRO)), 6).alias(
+                "approx_score"
+            )
         )
-        .filter(F.col("vec_id") != query_vec_id)
-    )
-    short = approx.orderBy(
-        F.desc("approx_score"), F.asc("vec_id")
-    ).limit(rerank)
-    q = b.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("nv").alias("qv")
     )
     reranked = (
-        short.join(b, "vec_id")
+        _topk(approx, "approx_score", "vec_id", rerank)
+        .join(vectors, "vec_id")
         .crossJoin(F.broadcast(q))
-        .selectExpr(
+        .select(
             "vec_id",
             "label",
             "approx_score",
-            f"{fround_sql(dot_sql('nv', 'qv'), 6)} AS cosine_sim",
+            _sim("nv", "qv").alias("cosine_sim"),
         )
     )
-    return reranked.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _topk(reranked, "cosine_sim", "vec_id", k)
 
 
 def ivfpq_topk(
@@ -244,27 +277,9 @@ def ivfpq_topk(
     rounded-argmax), codes/LUT/ADC are this module's (integer
     micro-unit sums), so the full chain replays in DuckDB like both
     parents."""
-    from ..functions.exact import fround_sql
-    from ..functions.vectors import dot_sql
-    from .similarity import ivf_assignments
-
     assign = ivf_assignments(embeddings, n_centroids)
-    q = assign.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("nv").alias("qv")
-    )
-    cent = assign.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid_c"), F.col("nv").alias("cv_c")
-    )
-    probed = (
-        cent.crossJoin(F.broadcast(q))
-        .selectExpr(
-            "cid_c",
-            f"{fround_sql(dot_sql('cv_c', 'qv'), 6)} AS c_sim",
-        )
-        .orderBy(F.desc("c_sim"), F.asc("cid_c"))
-        .limit(nprobe)
-        .select(F.col("cid_c").alias("cid"))
-    )
+    q = _query_nv(assign, query_vec_id)
+    probed = _probe(_seed_centroids(assign, n_centroids), q, nprobe)
     # the probed lists' members — at scale this is partition pruning,
     # here a broadcast semi-join against the nprobe-row list ids
     members = assign.join(F.broadcast(probed), "cid").select(
@@ -273,45 +288,11 @@ def ivfpq_topk(
     # ADC over member codes only (global, non-residual codebooks);
     # ``codebooks`` overrides the seed codebooks — the trained
     # quantizer from pq_train_codebooks plugs straight in (ADVICE r8)
-    cb = codebooks if codebooks is not None else pq_codebooks(
-        embeddings, dim, m, ks
+    lut, codes = _query_codes(embeddings, query_vec_id, dim, m, ks, codebooks)
+    codes = codes.join(members.select("vec_id"), "vec_id", "left_semi").filter(
+        F.col("vec_id") != query_vec_id
     )
-    qsub = pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id), dim, m
-    ).select("s", F.col("sv").alias("qs"))
-    lut = _query_lut(cb, qsub)
-    codes = pq_codes(embeddings, dim, m, ks, codebooks=cb).join(
-        members.select("vec_id"), "vec_id", "left_semi"
-    )
-    approx = (
-        codes.crossJoin(F.broadcast(lut))
-        .selectExpr(
-            "vec_id",
-            f"element_at(lut, CAST(s AS BIGINT) * {_CELL_STRIDE} + code) "
-            "AS ip_u",
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.expr(
-                fround_sql(f"sum(ip_u) / {float(_MICRO)!r}D", 6)
-            ).alias("approx_score")
-        )
-        .filter(F.col("vec_id") != query_vec_id)
-    )
-    short = approx.orderBy(
-        F.desc("approx_score"), F.asc("vec_id")
-    ).limit(rerank)
-    reranked = (
-        short.join(members, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            "label",
-            "approx_score",
-            f"{fround_sql(dot_sql('nv', 'qv'), 6)} AS cosine_sim",
-        )
-    )
-    return reranked.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _adc_topk(codes, lut, members, q, k, rerank)
 
 
 def pq_lloyd_codebooks(
@@ -337,8 +318,6 @@ def pq_lloyd_codebooks(
     Output: one row per surviving (s, cid) — membership count and
     exact-mean quantization distance after refinement, the training
     summary a codebook registry would record."""
-    from ..functions.exact import DECIMAL_TYPE
-
     sub = pq_subvectors(embeddings, dim, m)
     cur = pq_train_codebooks(embeddings, dim, m, ks, iters)
     final = _assign_subvectors(sub, cur, with_sv=False)
@@ -366,9 +345,6 @@ def _assign_subvectors(
     consumers that only need (code, d) (the compact index, the
     training summary) should not drag ~d/m doubles per row through
     the groupBy exchange."""
-    from ..functions.exact import fround_sql
-    from ..functions.vectors import dot_sql
-
     l2 = F.expr(
         fround_sql(
             f"{dot_sql('sv', 'sv')} - 2 * {dot_sql('sv', 'cv')} "
@@ -402,33 +378,11 @@ def pq_train_codebooks(
     """(s, cid, cv): the Lloyd-trained codebooks — ``iters`` rounds of
     assign + exact-decimal 8-dp component means from the seed
     codebooks (see pq_lloyd_codebooks for the full contract)."""
-    from ..functions.exact import DECIMAL_TYPE
-
     sub = pq_subvectors(embeddings, dim, m)
-    cur = pq_codebooks(embeddings, dim, m, ks)
-    for _ in range(iters):
-        a = _assign_subvectors(sub, cur)
-        comp = a.select(
-            "s", F.col("code").alias("cid"), F.posexplode("sv").alias("pos", "x")
-        )
-        means = comp.groupBy("s", "cid", "pos").agg(
-            fround(
-                F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
-                / F.count("*"),
-                8,
-            ).alias("mv")
-        )
-        # m*ks rows — per-round localCheckpoint flattens lineage so
-        # the next round's broadcast never re-executes this round's
-        # corpus pass (the sim_semantic_dedup r7 lesson)
-        cur = (
-            means.groupBy("s", "cid")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "mv"))),
-                    lambda t: t["mv"],
-                ).alias("cv")
-            )
-            .localCheckpoint()
-        )
-    return cur
+    return _lloyd_rounds(
+        pq_codebooks(embeddings, dim, m, ks),
+        lambda cb: _assign_subvectors(sub, cb).withColumnRenamed("code", "cid"),
+        iters,
+        keys=("s", "cid"),
+        vec="sv",
+    )

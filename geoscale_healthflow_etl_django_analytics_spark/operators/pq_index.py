@@ -48,10 +48,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import fround
-from ..functions.vectors import dot, normalized
-from .pq import PQ_KS, PQ_M, _CELL_STRIDE, _MICRO, _query_lut, _subspaces
-from .similarity import ivf_assignments
+from ..functions.vectors import normalized
+from .pq import PQ_KS, PQ_M, _adc_topk, _query_lut, _subspaces
+from .similarity import (
+    _nearest_centroid,
+    _probe,
+    _seed_centroids,
+    _unit_vectors,
+    ivf_assignments,
+)
 
 
 def write_ivfpq_index(
@@ -84,9 +89,9 @@ def write_ivfpq_index(
     codes = pq_codes(embeddings, dim, m, ks, codebooks=trained).join(
         lists.select("vec_id", "list_id"), "vec_id"
     )
-    assign.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    _seed_centroids(assign, n_centroids).write.mode("overwrite").parquet(
+        os.path.join(path, "centroids")
+    )
     trained.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
     # static overwrite pinned at the write site (ADVICE r11 #3): a
     # REBUILD over an existing index path must drop every old list_id
@@ -174,8 +179,6 @@ def add_to_ivfpq_index(
     to (codes derive from codebooks/, vectors from the batch alone),
     so no self-read checkpoint is needed — unlike the cluster-table
     fold, whose assignment reads the table it extends."""
-    from pyspark.sql import Window
-
     from .pq import pq_codes
 
     spark = new_vectors.sparkSession
@@ -184,26 +187,12 @@ def add_to_ivfpq_index(
     m, ks = meta["m"], meta["ks"]
     cent = spark.read.parquet(os.path.join(path, "centroids"))
     cb = spark.read.parquet(os.path.join(path, "codebooks"))
-    b = new_vectors.select(
-        "vec_id", "label", normalized(F.col("embedding")).alias("nv")
-    )
-    # routing against the PERSISTED centroids — same rounded-argmax
-    # contract as similarity.ivf_assignments, which must NOT be reused
-    # here: it derives centroids from its input, and the add path's
-    # whole point is that the quantizer is frozen
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("cid"))
-    lists = (
-        b.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "label",
-            "nv",
-            "cid",
-            fround(dot(F.col("nv"), F.col("cv")), 6).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "nv", F.col("cid").alias("list_id"))
+    # routing against the PERSISTED centroids — the nearest-centroid
+    # step of similarity.ivf_assignments, fed the frozen table instead
+    # of seeds derived from the input: the add path's whole point is
+    # that the quantizer is frozen
+    lists = _nearest_centroid(_unit_vectors(new_vectors, "label"), cent).select(
+        "vec_id", "label", "nv", F.col("cid").alias("list_id")
     )
     codes = pq_codes(new_vectors, dim, m, ks, codebooks=cb).join(
         lists.select("vec_id", "list_id"), "vec_id"
@@ -353,62 +342,20 @@ def query_ivfpq_index(
     lists' full vectors, top ``k``.
     """
     cent = spark.read.parquet(os.path.join(path, "centroids"))
-    probed = [
-        r["cid"]
-        for r in (
-            cent.crossJoin(F.broadcast(query))
-            .select(
-                "cid",
-                fround(dot(F.col("cv"), F.col("qv")), 6).alias("c_sim"),
-            )
-            .orderBy(F.desc("c_sim"), F.asc("cid"))
-            .limit(nprobe)
-            .collect()
-        )
-    ]
+    probed = [r["cid"] for r in _probe(cent, query, nprobe).collect()]
     cb = spark.read.parquet(os.path.join(path, "codebooks"))
     qsub = query.select(
         F.explode(_subspaces(F.col("qv"), dim, m)).alias("p")
     ).select(F.col("p.s").alias("s"), F.col("p.sv").alias("qs"))
-    lut = _query_lut(cb, qsub)
     codes = spark.read.parquet(os.path.join(path, "codes")).filter(
         F.col("list_id").isin(probed)
     )
     if exclude_vec_id is not None:
         codes = codes.filter(F.col("vec_id") != exclude_vec_id)
-    approx = (
-        codes.crossJoin(F.broadcast(lut))
-        .select(
-            "vec_id",
-            F.element_at(
-                F.col("lut"),
-                F.col("s").cast("long") * _CELL_STRIDE + F.col("code"),
-            ).alias("ip_u"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            fround(F.sum("ip_u") / F.lit(float(_MICRO)), 6).alias(
-                "approx_score"
-            )
-        )
-    )
-    short = approx.orderBy(
-        F.desc("approx_score"), F.asc("vec_id")
-    ).limit(rerank)
     vectors = spark.read.parquet(os.path.join(path, "vectors")).filter(
         F.col("list_id").isin(probed)
     )
-    reranked = (
-        short.join(vectors, "vec_id")
-        .crossJoin(F.broadcast(query))
-        .select(
-            "vec_id",
-            "label",
-            "approx_score",
-            fround(dot(F.col("nv"), F.col("qv")), 6).alias("cosine_sim"),
-        )
-    )
-    return reranked.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _adc_topk(codes, _query_lut(cb, qsub), vectors, query, k, rerank)
 
 
 def query_row(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -416,5 +363,5 @@ def query_row(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
     with the SAME JVM expression the build used, so query-side
     arithmetic is bit-identical to the in-plan chain's."""
     return embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        normalized(F.col("embedding")).alias("qv")
+        normalized("embedding").alias("qv")
     )

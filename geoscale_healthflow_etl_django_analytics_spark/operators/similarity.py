@@ -2,28 +2,124 @@
 
 Baseline: brute-force cosine top-k — a single broadcast of the query
 vector against a full scan; exact, and the right answer up to ~10^8
-vectors per executor-hour. Scale path: sign-bucket LSH (bit-packed
-hyperplane signs) cuts candidates by ~2^bits; an IVF variant would
-slot in the same shape (bucket id ← nearest centroid).
+vectors per executor-hour. Scale paths: sign-bucket LSH (bit-packed
+hyperplane signs) cuts candidates by ~2^bits; the IVF probe
+(:func:`ivf_topk`) searches the ``nprobe`` inverted lists nearest the
+query; Lloyd-refined quantizers (flat, pruned, probe tiers) feed
+SemDeDup; ``operators/pq.py`` and ``operators/pq_index.py`` compose
+the same probe with product-quantized scoring.
 
-All vector math is `zip_with`/`aggregate` Column expressions (see
+All vector math is `zip_with`/`aggregate` expressions (see
 functions/vectors.py) — double precision, sequential fold, so the
 DuckDB oracle (list_inner_product with the same formula shape)
-produces bit-identical values.
+produces bit-identical values. Every rank in the stack cuts on the
+same contract — the 6-dp-rounded dot (:func:`_sim`) with an ascending
+id tiebreak — through one window (:func:`_rank`) or one global top-k
+(:func:`_topk`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine, sign_bucket
-from ..functions.exact import fround
+from ..functions.exact import DECIMAL_TYPE, fround
+from ..functions.vectors import as_double, cosine, dot, normalized, sign_bucket
+
+
+def _sim(u: str, v: str) -> Column:
+    """The ranking score of the stack: the dot of two (pre-normalized)
+    vector columns, half-away rounded to 6 dp so every rank cut is
+    engine-deterministic."""
+    return fround(dot(u, v), 6)
+
+
+def _rank(part: str, *order: Column) -> Column:
+    """row_number over ``part`` — the one rank window of the stack."""
+    return F.row_number().over(Window.partitionBy(part).orderBy(*order))
+
+
+def _top_sim(
+    pairs: DataFrame,
+    keep: list[str],
+    part: str,
+    cand: str,
+    u: str,
+    v: str,
+    score: str,
+    n: int = 1,
+) -> DataFrame:
+    """The top-``n`` ``cand`` per ``part`` by ``_sim(u, v)`` (``cand``
+    ascending breaks ties): ``keep`` plus the score as ``score``. An
+    argmax (``n == 1``) filters ``rn = 1``."""
+    rn = F.col("rn")
+    return (
+        pairs.select(*keep, _sim(u, v).alias(score))
+        .withColumn("rn", _rank(part, F.desc(score), F.asc(cand)))
+        .filter(rn == 1 if n == 1 else rn <= n)
+        .drop("rn")
+    )
+
+
+def _topk(df: DataFrame, score: str, tie: str, k: int) -> DataFrame:
+    """Global top-``k`` by ``score`` descending, ``tie`` ascending —
+    a TakeOrderedAndProject, no full sort."""
+    return df.orderBy(F.desc(score), F.asc(tie)).limit(k)
+
+
+def _unit_vectors(embeddings: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, *cols, nv): the corpus unit-normalized once per row."""
+    return embeddings.select("vec_id", *cols, normalized("embedding").alias("nv"))
+
+
+def _seed_centroids(b: DataFrame, n_centroids: int) -> DataFrame:
+    """(cid, cv): the first ``n_centroids`` vectors by id — the
+    deterministic seed rule every quantizer here starts from."""
+    return b.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
+    )
+
+
+def _nearest_centroid(
+    vecs: DataFrame, cent: DataFrame, score: str = "c_sim"
+) -> DataFrame:
+    """(vecs columns, cid, score): each vector's nearest centroid of
+    ``cent`` (cid, cv) — a broadcast nested-loop against the (tiny)
+    centroid table, n x k dot folds over pre-normalized vectors."""
+    return _top_sim(
+        vecs.crossJoin(F.broadcast(cent)),
+        [*vecs.columns, "cid"],
+        "vec_id",
+        "cid",
+        "nv",
+        "cv",
+        score,
+    )
+
+
+def _query_nv(b: DataFrame, query_vec_id: int) -> DataFrame:
+    """The one-row (qv) frame of a stored vector's normalized form."""
+    return b.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("nv").alias("qv")
+    )
+
+
+def _probe(cent: DataFrame, q: DataFrame, nprobe: int, *carry: str) -> DataFrame:
+    """(cid, *carry): the ``nprobe`` centroids of ``cent`` (cid, cv)
+    nearest the one-row query ``q`` (qv) — the inverted lists an IVF
+    probe reads."""
+    scored = cent.crossJoin(F.broadcast(q)).select(
+        "cid", *carry, _sim("cv", "qv").alias("c_sim")
+    )
+    return _topk(scored, "c_sim", "cid", nprobe).select("cid", *carry)
 
 
 def _query_vector(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
     return embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("vec_id").alias("q_id"), as_double(F.col("embedding")).alias("q_vec")
+        F.col("vec_id").alias("q_id"), as_double("embedding").alias("q_vec")
     )
 
 
@@ -40,10 +136,10 @@ def cosine_topk(
         .select(
             "vec_id",
             "label",
-            fround(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("cosine_sim"),
+            fround(cosine("embedding", "q_vec"), 6).alias("cosine_sim"),
         )
     )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _topk(scored, "cosine_sim", "vec_id", k)
 
 
 def ann_bucketed_topk(
@@ -66,10 +162,10 @@ def ann_bucketed_topk(
             "vec_id",
             "label",
             F.col("bucket"),
-            fround(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("cosine_sim"),
+            fround(cosine("embedding", "q_vec"), 6).alias("cosine_sim"),
         )
     )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _topk(scored, "cosine_sim", "vec_id", k)
 
 
 def embedding_near_dup_pairs(
@@ -103,7 +199,7 @@ def embedding_near_dup_pairs(
             "bucket",
             "vec_a",
             "vec_b",
-            fround(cosine(F.col("emb_a"), F.col("emb_b")), 4).alias("cosine_sim"),
+            fround(cosine("emb_a", "emb_b"), 4).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -125,32 +221,9 @@ def ivf_assignments(
     the argmax is engine-deterministic. Assignment is a broadcast
     nested-loop against the (tiny) centroid set — n × n_centroids dot
     folds over pre-normalized vectors."""
-    from pyspark.sql import Window
-
-    from ..functions.exact import fround_sql
-    from ..functions.vectors import dot_sql, normalized_sql
-
-    # SQL-string construction (r12, guide §5): the normalize + dot
-    # trees are this module's hottest builder cost; see
-    # pq.pq_subvectors for the measured numbers.
-    b = embeddings.selectExpr(
-        "vec_id", "label", f"{normalized_sql('embedding')} AS nv"
-    )
-    cent = b.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
-    )
-    scored = b.crossJoin(F.broadcast(cent)).selectExpr(
-        "vec_id",
-        "label",
-        "nv",
-        "cid",
-        f"{fround_sql(dot_sql('nv', 'cv'), 6)} AS c_sim",
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("cid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", "nv", "cid")
+    b = _unit_vectors(embeddings, "label")
+    return _nearest_centroid(b, _seed_centroids(b, n_centroids)).select(
+        "vec_id", "label", "nv", "cid"
     )
 
 
@@ -167,35 +240,15 @@ def ivf_topk(
     — the standard IVF recall knob. At 100 TB the lists are partition
     directories (cf. write_bucketed_index) and a probe reads nprobe of
     them, not the corpus."""
-    from ..functions.vectors import dot
-
     assign = ivf_assignments(embeddings, n_centroids)
-    q = assign.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("nv").alias("qv")
-    )
-    cent = assign.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
-    )
-    probed = (
-        cent.crossJoin(F.broadcast(q))
-        .select(
-            "cid", "qv", fround(dot(F.col("cv"), F.col("qv")), 6).alias("c_sim")
-        )
-        .orderBy(F.desc("c_sim"), F.asc("cid"))
-        .limit(nprobe)
-        .select("cid", "qv")
-    )
+    q = _query_nv(assign, query_vec_id)
+    probed = _probe(_seed_centroids(assign, n_centroids), q, nprobe, "qv")
     hits = (
         assign.join(F.broadcast(probed), "cid")
         .filter(F.col("vec_id") != query_vec_id)
-        .select(
-            "vec_id",
-            "label",
-            "cid",
-            fround(dot(F.col("nv"), F.col("qv")), 6).alias("cosine_sim"),
-        )
+        .select("vec_id", "label", "cid", _sim("nv", "qv").alias("cosine_sim"))
     )
-    return hits.orderBy(F.desc("cosine_sim"), F.asc("vec_id")).limit(k)
+    return _topk(hits, "cosine_sim", "vec_id", k)
 
 
 def write_bucketed_index(
@@ -223,18 +276,12 @@ def query_bucketed_index(
     for i in range(n_bits):
         if query_vec[i] >= 0:
             bucket |= 1 << i
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = "array(" + ", ".join(f"{float(x)!r}D" for x in query_vec) + ")"
     part = spark.read.parquet(path).filter(F.col("bucket") == bucket)
-    from ..functions.exact import fround
-
-    return (
-        part.select(
-            "vec_id",
-            fround(cosine(F.col("embedding"), q), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(k)
+    scored = part.select(
+        "vec_id", fround(cosine("embedding", q), 6).alias("cosine_sim")
     )
+    return _topk(scored, "cosine_sim", "vec_id", k)
 
 
 def adaptive_sign_bits(
@@ -296,10 +343,6 @@ def knn_join_adaptive(
     lose to the fold's tight interpreted loop), so the scale lever is
     partitioning, not expression form.
     """
-    from pyspark.sql import Window
-
-    from ..functions.vectors import dot, normalized
-
     nbits = adaptive_sign_bits(embeddings, target_bucket, min_bits, max_bits)
     from ..sources.catalog import ensure_parallelism
 
@@ -309,7 +352,7 @@ def knn_join_adaptive(
     b = (
         embeddings.select(
             "vec_id",
-            normalized(F.col("embedding")).alias("nemb"),
+            normalized("embedding").alias("nemb"),
             sign_bucket(F.col("embedding"), max_bits).alias("__full"),
         )
         .crossJoin(F.broadcast(nbits))
@@ -339,22 +382,113 @@ def knn_join_adaptive(
     right = b.select(
         F.col("vec_id").alias("vec_b"), F.col("nemb").alias("emb_b"), "bucket"
     )
-    pairs = (
-        left.join(right, "bucket")
-        .filter(F.col("vec_a") != F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            fround(dot(F.col("emb_a"), F.col("emb_b")), 6).alias("cosine_sim"),
+    pairs = left.join(right, "bucket").filter(F.col("vec_a") != F.col("vec_b"))
+    return _top_sim(
+        pairs, ["vec_a", "vec_b"], "vec_a", "vec_b", "emb_a", "emb_b", "cosine_sim", k
+    )
+
+
+def _centroid_means(
+    a: DataFrame, keys: tuple[str, ...], vec: str, out: str
+) -> DataFrame:
+    """The centroid-mean step of every Lloyd loop in the stack: per
+    ``keys`` group, the EXACT decimal mean of each ``vec`` component
+    quantized to 8 dp (the exact_sum discipline), reassembled in
+    position order as ``out`` — so both engines enter every round
+    with bit-identical centroids. One map-side-combinable
+    (keys, pos) aggregate, then one k-row collect per key."""
+    means = (
+        a.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            fround(
+                F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
+                / F.count("*"),
+                8,
+            ).alias("m")
         )
     )
-    w = Window.partitionBy("vec_a").orderBy(
-        F.desc("cosine_sim"), F.asc("vec_b")
+    return means.groupBy(*keys).agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("pos", "m"))),
+            lambda s: s["m"],
+        ).alias(out)
     )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_a", "vec_b", "cosine_sim")
+
+
+def _lloyd_rounds(
+    cent: DataFrame,
+    assign: Callable[[DataFrame], DataFrame],
+    iters: int,
+    keys: tuple[str, ...] = ("cid",),
+    vec: str = "nv",
+) -> DataFrame:
+    """The Lloyd loop: ``iters`` rounds of ``assign`` then the
+    centroid-mean step from the seed table ``cent``; returns the final
+    centroid table (keys, cv).
+
+    Each round's table (k rows) is localCheckpoint-ed: it flattens the
+    lineage so the next round's broadcast does not RE-EXECUTE this
+    round's full corpus pass — each round's table is consumed 2+ times
+    downstream (the pruned assign three times: sup filter, members
+    crossJoin, broadcast), so unchecked evaluation cost compounds per
+    round, measured 2.6x on the pruned tier (PLANS.md r7). No value
+    oracle sees a dropped checkpoint; tests/test_lloyd_checkpoints.py
+    pins the build-time job counts instead."""
+    for _ in range(iters):
+        cent = _centroid_means(assign(cent), keys, vec, "cv").localCheckpoint()
+    return cent
+
+
+def _n_super(n_centroids: int, n_super: int | None) -> int:
+    return max(2, math.ceil(math.sqrt(n_centroids))) if n_super is None else n_super
+
+
+def _supers(cent: DataFrame, n_super: int) -> DataFrame:
+    """(sid, sv): the first ``n_super`` centroids as super-centroids."""
+    return cent.filter(F.col("cid") < n_super).select(
+        F.col("cid").alias("sid"), F.col("cv").alias("sv")
+    )
+
+
+def _member_argmax(cent: DataFrame, sup: DataFrame) -> DataFrame:
+    """(cid, cv, sid): each centroid's nearest super (k x s)."""
+    return _top_sim(
+        cent.crossJoin(F.broadcast(sup)),
+        ["cid", "cv", "sid"],
+        "cid",
+        "sid",
+        "cv",
+        "sv",
+        "c_sup",
+    ).drop("c_sup")
+
+
+def _probe_argmax(
+    b: DataFrame, sup: DataFrame, members: DataFrame, n_probe: int
+) -> DataFrame:
+    """(vec_id, nv, cid, sim): the two-level tail shared by the pruned
+    and probe tiers — each vector routes to its top-``n_probe`` supers
+    (n x s dot folds, rank with sid tiebreak), then exact-argmaxes only
+    the routed supers' member centroids (cid tiebreak)."""
+    routed = _top_sim(
+        b.crossJoin(F.broadcast(sup)),
+        ["vec_id", "nv", "sid"],
+        "vec_id",
+        "sid",
+        "nv",
+        "sv",
+        "v_sup",
+        n_probe,
+    ).drop("v_sup")
+    return _top_sim(
+        routed.join(F.broadcast(members), "sid"),
+        ["vec_id", "nv", "cid"],
+        "vec_id",
+        "cid",
+        "nv",
+        "cv",
+        "sim",
     )
 
 
@@ -380,58 +514,12 @@ def lloyd_assignments(
     unit-normalized inputs (centroids NOT re-normalized — the
     dot-product argmax is the standard IVF coarse quantizer
     objective, cf. faiss IndexIVFFlat's k-means)."""
-    from ..functions.exact import DECIMAL_TYPE, fround
-    from ..functions.vectors import dot, normalized
-    from pyspark.sql import Window
+    b = _unit_vectors(embeddings)
 
-    b = embeddings.select(
-        "vec_id", normalized(F.col("embedding")).alias("nv")
-    )
-    cent = b.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
-    )
+    def assign(cent: DataFrame) -> DataFrame:
+        return _nearest_centroid(b, cent, "sim")
 
-    def assign(cent_df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("vec_id").orderBy(
-            F.desc("sim"), F.asc("cid")
-        )
-        return (
-            b.crossJoin(F.broadcast(cent_df))
-            .select(
-                "vec_id",
-                "nv",
-                "cid",
-                fround(dot(F.col("nv"), F.col("cv")), 6).alias("sim"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    for _ in range(iters):
-        a = assign(cent)
-        comp = a.select(
-            "cid", F.posexplode("nv").alias("pos", "x")
-        )
-        means = comp.groupBy("cid", "pos").agg(
-            fround(
-                F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
-                / F.count("*"),
-                8,
-            ).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
-        # k rows — checkpointing per round flattens the lineage so the
-        # next round's broadcast does not RE-EXECUTE this round's full
-        # corpus pass (each round's cent is consumed 2+ times
-        # downstream; unchecked, evaluation cost compounds per round —
-        # measured 2.6x on the pruned tier, PLANS.md r7)
-        ).localCheckpoint()
-    return assign(cent)
+    return assign(_lloyd_rounds(_seed_centroids(b, n_centroids), assign, iters))
 
 
 def lloyd_assignments_pruned(
@@ -476,99 +564,21 @@ def lloyd_assignments_pruned(
     a full cross-engine value oracle, not a rows-only estimate.
 
     Output: (vec_id, nv, cid, sim), like the flat tier."""
-    import math
+    n_super = _n_super(n_centroids, n_super)
+    b = _unit_vectors(embeddings)
 
-    from ..functions.exact import DECIMAL_TYPE, fround
-    from ..functions.vectors import dot, normalized
-    from pyspark.sql import Window
+    def assign(cent: DataFrame) -> DataFrame:
+        sup = _supers(cent, n_super)
+        members = _member_argmax(cent, sup).select(
+            "cid",
+            "cv",
+            F.when(F.col("cid") < n_super, F.col("cid"))
+            .otherwise(F.col("sid"))
+            .alias("sid"),
+        )
+        return _probe_argmax(b, sup, members, n_probe)
 
-    if n_super is None:
-        n_super = max(2, math.ceil(math.sqrt(n_centroids)))
-
-    b = embeddings.select(
-        "vec_id", normalized(F.col("embedding")).alias("nv")
-    )
-    cent = b.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("nv").alias("cv")
-    )
-
-    def assign(cent_df: DataFrame) -> DataFrame:
-        sup = cent_df.filter(F.col("cid") < n_super).select(
-            F.col("cid").alias("sid"), F.col("cv").alias("sv")
-        )
-        # centroid -> super (k x s; supers pinned to themselves)
-        wc = Window.partitionBy("cid").orderBy(F.desc("c_sup"), F.asc("sid"))
-        members = (
-            cent_df.crossJoin(F.broadcast(sup))
-            .select(
-                "cid",
-                "cv",
-                "sid",
-                fround(dot(F.col("cv"), F.col("sv")), 6).alias("c_sup"),
-            )
-            .withColumn("rn", F.row_number().over(wc))
-            .filter(F.col("rn") == 1)
-            .select(
-                "cid",
-                "cv",
-                F.when(F.col("cid") < n_super, F.col("cid"))
-                .otherwise(F.col("sid"))
-                .alias("sid"),
-            )
-        )
-        # vector -> super (n x s)
-        wv = Window.partitionBy("vec_id").orderBy(
-            F.desc("v_sup"), F.asc("sid")
-        )
-        routed = (
-            b.crossJoin(F.broadcast(sup))
-            .select(
-                "vec_id",
-                "nv",
-                "sid",
-                fround(dot(F.col("nv"), F.col("sv")), 6).alias("v_sup"),
-            )
-            .withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") <= n_probe)
-            .select("vec_id", "nv", "sid")
-        )
-        # exact argmax among the chosen super's member centroids only
-        wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-        return (
-            routed.join(F.broadcast(members), "sid")
-            .select(
-                "vec_id",
-                "nv",
-                "cid",
-                fround(dot(F.col("nv"), F.col("cv")), 6).alias("sim"),
-            )
-            .withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    for _ in range(iters):
-        a = assign(cent)
-        comp = a.select("cid", F.posexplode("nv").alias("pos", "x"))
-        means = comp.groupBy("cid", "pos").agg(
-            fround(
-                F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
-                / F.count("*"),
-                8,
-            ).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
-        # k rows; same per-round lineage flattening as the flat tier —
-        # the pruned assign consumes cent THREE times per round (sup
-        # filter, members crossJoin, broadcast), so unchecked lineage
-        # re-execution compounds ~3x per round (the measured 2.6x
-        # x50 inversion, PLANS.md r7)
-        ).localCheckpoint()
-    return assign(cent)
+    return assign(_lloyd_rounds(_seed_centroids(b, n_centroids), assign, iters))
 
 
 def lloyd_assignments_probe(
@@ -623,118 +633,24 @@ def lloyd_assignments_probe(
     — value-exactly.
 
     Output: (vec_id, nv, cid, sim), like the flat tier."""
-    import math
+    n_super = _n_super(n_centroids, n_super)
+    b = _unit_vectors(embeddings)
 
-    from ..functions.exact import DECIMAL_TYPE, fround
-    from ..functions.vectors import dot, normalized
-    from pyspark.sql import Window
+    def assign(cent: DataFrame) -> DataFrame:
+        # router training over the k centroids (all frames <= k rows);
+        # inverted lists over the exact centroid set, and only the
+        # non-empty trained supers are probe targets
+        sup = _supers(cent, n_super)
+        for _ in range(router_iters):
+            sup = _centroid_means(_member_argmax(cent, sup), ("sid",), "cv", "sv")
+        members = _member_argmax(cent, sup).localCheckpoint()
+        used = sup.join(members.select("sid").distinct(), "sid").localCheckpoint()
+        return _probe_argmax(b, used, members, n_probe)
 
-    if n_super is None:
-        n_super = max(2, math.ceil(math.sqrt(n_centroids)))
-
-    b = embeddings.select(
-        "vec_id", normalized(F.col("embedding")).alias("nv")
-    )
     # k rows; checkpointed so the router-training passes (router_iters
     # + 1 argmax scans per assign) re-read k rows, not the corpus
-    cent = (
-        b.filter(F.col("vec_id") < n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("nv").alias("cv"))
-        .localCheckpoint()
-    )
-
-    def _member_argmax(cent_df: DataFrame, sup_df: DataFrame) -> DataFrame:
-        wc = Window.partitionBy("cid").orderBy(F.desc("c_sup"), F.asc("sid"))
-        return (
-            cent_df.crossJoin(F.broadcast(sup_df))
-            .select(
-                "cid",
-                "cv",
-                "sid",
-                fround(dot(F.col("cv"), F.col("sv")), 6).alias("c_sup"),
-            )
-            .withColumn("rn", F.row_number().over(wc))
-            .filter(F.col("rn") == 1)
-            .select("cid", "cv", "sid")
-        )
-
-    def _train_router(cent_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(members, used): inverted lists over the exact centroid set
-        and the non-empty trained supers — all frames <= k rows."""
-        sup = cent_df.filter(F.col("cid") < n_super).select(
-            F.col("cid").alias("sid"), F.col("cv").alias("sv")
-        )
-        for _ in range(router_iters):
-            m = _member_argmax(cent_df, sup)
-            comp = m.select("sid", F.posexplode("cv").alias("pos", "x"))
-            means = comp.groupBy("sid", "pos").agg(
-                fround(
-                    F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
-                    / F.count("*"),
-                    8,
-                ).alias("m")
-            )
-            sup = means.groupBy("sid").agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("sv")
-            )
-        members = _member_argmax(cent_df, sup).localCheckpoint()
-        used = sup.join(
-            members.select("sid").distinct(), "sid"
-        ).localCheckpoint()
-        return members, used
-
-    def assign(cent_df: DataFrame) -> DataFrame:
-        members, used = _train_router(cent_df)
-        wv = Window.partitionBy("vec_id").orderBy(
-            F.desc("v_sup"), F.asc("sid")
-        )
-        routed = (
-            b.crossJoin(F.broadcast(used))
-            .select(
-                "vec_id",
-                "nv",
-                "sid",
-                fround(dot(F.col("nv"), F.col("sv")), 6).alias("v_sup"),
-            )
-            .withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") <= n_probe)
-            .select("vec_id", "nv", "sid")
-        )
-        wa = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-        return (
-            routed.join(F.broadcast(members), "sid")
-            .select(
-                "vec_id",
-                "nv",
-                "cid",
-                fround(dot(F.col("nv"), F.col("cv")), 6).alias("sim"),
-            )
-            .withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    for _ in range(iters):
-        a = assign(cent)
-        comp = a.select("cid", F.posexplode("nv").alias("pos", "x"))
-        means = comp.groupBy("cid", "pos").agg(
-            fround(
-                F.sum(F.col("x").cast(DECIMAL_TYPE)).cast("double")
-                / F.count("*"),
-                8,
-            ).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("cv")
-        # k rows; same per-round lineage flattening as the other tiers
-        ).localCheckpoint()
-    return assign(cent)
+    cent = _seed_centroids(b, n_centroids).localCheckpoint()
+    return assign(_lloyd_rounds(cent, assign, iters))
 
 
 def semantic_dedup_probe(
@@ -755,18 +671,14 @@ def semantic_dedup_probe(
     stage actually buys (PLANS.md r7 x200 stage splits). Pair,
     duplicate-group, and keep semantics are byte-identical to the
     exact tier (shared tail)."""
-    import math
-
-    from ..sources.catalog import ensure_parallelism
-
-    embeddings = ensure_parallelism(embeddings)
-    if n_centroids is None:
-        n_centroids = max(8, math.ceil(math.sqrt(embeddings.count())))
-    a = lloyd_assignments_probe(
-        embeddings, n_centroids, iters, n_probe=n_probe,
-        router_iters=router_iters,
-    ).localCheckpoint()
-    return _dedup_from_assignments(a, eps)
+    return _semantic_dedup(
+        embeddings,
+        n_centroids,
+        eps,
+        lambda e, k: lloyd_assignments_probe(
+            e, k, iters, n_probe=n_probe, router_iters=router_iters
+        ),
+    )
 
 
 def lloyd_refined_clusters(
@@ -776,8 +688,6 @@ def lloyd_refined_clusters(
     for the iterative plan shape and the cross-engine exactness
     discipline). Output: one row per surviving cluster
     (cid, n_vecs, mean_sim)."""
-    from ..functions.exact import DECIMAL_TYPE, fround
-
     final = lloyd_assignments(embeddings, n_centroids, iters)
     return final.groupBy("cid").agg(
         F.count("*").alias("n_vecs"),
@@ -831,15 +741,9 @@ def semantic_dedup(
 
     Output: one row per vector —
     (vec_id, cid, centroid_sim, component, keep)."""
-    import math
-
-    from ..sources.catalog import ensure_parallelism
-
-    embeddings = ensure_parallelism(embeddings)
-    if n_centroids is None:
-        n_centroids = max(8, math.ceil(math.sqrt(embeddings.count())))
-    a = lloyd_assignments(embeddings, n_centroids, iters).localCheckpoint()
-    return _dedup_from_assignments(a, eps)
+    return _semantic_dedup(
+        embeddings, n_centroids, eps, lambda e, k: lloyd_assignments(e, k, iters)
+    )
 
 
 def semantic_dedup_pruned(
@@ -875,17 +779,32 @@ def semantic_dedup_pruned(
     inflation. The skew-split pair join
     (:func:`_dedup_from_assignments`) carries whatever residual
     skew the router leaves."""
-    import math
+    return _semantic_dedup(
+        embeddings,
+        n_centroids,
+        eps,
+        lambda e, k: lloyd_assignments_pruned(e, k, iters, n_probe=n_probe),
+    )
 
+
+def _semantic_dedup(
+    embeddings: DataFrame,
+    n_centroids: int | None,
+    eps: float,
+    assign: Callable[[DataFrame, int], DataFrame],
+) -> DataFrame:
+    """The prologue the three SemDeDup tiers share: spread the scan,
+    derive the adaptive ``n_centroids`` (see :func:`semantic_dedup`),
+    checkpoint the tier's ``assign(embeddings, n_centroids)`` once
+    (three consumers) and run the shared tail."""
     from ..sources.catalog import ensure_parallelism
 
     embeddings = ensure_parallelism(embeddings)
     if n_centroids is None:
         n_centroids = max(8, math.ceil(math.sqrt(embeddings.count())))
-    a = lloyd_assignments_pruned(
-        embeddings, n_centroids, iters, n_probe=n_probe
-    ).localCheckpoint()
-    return _dedup_from_assignments(a, eps)
+    return _dedup_from_assignments(
+        assign(embeddings, n_centroids).localCheckpoint(), eps
+    )
 
 
 def _dedup_from_assignments(
@@ -913,10 +832,7 @@ def _dedup_from_assignments(
     R=1 (slice 0, no replication) — the census (one count on the
     checkpointed assignment, <= k rows, broadcast back) is the only
     cost the balanced case pays."""
-    from ..functions.exact import fround
-    from ..functions.vectors import dot
     from .dedup import connected_components
-    from pyspark.sql import Window
 
     n_part = int(
         a.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -944,7 +860,7 @@ def _dedup_from_assignments(
         .select(
             F.col("vec_a").alias("doc_a"),
             F.col("vec_b").alias("doc_b"),
-            fround(dot(F.col("nv_a"), F.col("nv_b")), 6).alias("pair_sim"),
+            _sim("nv_a", "nv_b").alias("pair_sim"),
         )
         .filter(F.col("pair_sim") >= eps)
         .select("doc_a", "doc_b")
@@ -958,13 +874,7 @@ def _dedup_from_assignments(
             "component", F.coalesce(F.col("component"), F.col("vec_id"))
         )
     )
-    w = Window.partitionBy("component").orderBy(
-        F.asc("centroid_sim"), F.asc("vec_id")
-    )
+    keep = _rank("component", F.asc("centroid_sim"), F.asc("vec_id")) == 1
     return lab.select(
-        "vec_id",
-        "cid",
-        "centroid_sim",
-        "component",
-        (F.row_number().over(w) == 1).alias("keep"),
+        "vec_id", "cid", "centroid_sim", "component", keep.alias("keep")
     )

@@ -1441,7 +1441,7 @@ FROM f CROSS JOIN range(0, 16) r(i)
     "extract_features for the similarity pipeline.",
 )
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feats = mm.extract_features(_media(spark, sf_dir), fake=True)
+    feats = mm.extract_features(_media(spark, sf_dir))
     return feats.select(
         "media_id",
         "kind",

@@ -29,11 +29,6 @@ def test_feature_extract_shape_and_determinism(spark, media):
         assert ra.feature_norm > 0
 
 
-def test_feature_extract_real_codec_is_stubbed(media):
-    with pytest.raises(NotImplementedError):
-        mm.extract_features(media, fake=False)
-
-
 def test_resize_plan_bounds(spark, media):
     rows = mm.resize_plan(media).collect()
     for r in rows:
@@ -53,8 +48,6 @@ def test_frame_sample_only_videos(spark, media):
 def test_features_feed_similarity_pipeline(spark, media):
     """The stub embeddings flow into the similarity operators — the
     multimodal path composes with ANN end-to-end."""
-    from geoscale_healthflow_etl_django_analytics_spark.functions.vectors import cosine
-
     feats = mm.extract_features(media).select(
         F.col("media_id").alias("vec_id"),
         F.col("feature").alias("embedding"),

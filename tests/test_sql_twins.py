@@ -1,16 +1,33 @@
-"""Drift guard for the r12 SQL-string expression twins.
+"""Drift guard for the SQL-string expression twins that remain, and a
+value pin for the single-spelling vector math.
 
 The round-12 optimization composes the hot builders' repetitive
 expression trees as SQL strings (one JVM parse instead of one py4j
-round trip per node — OPTIMIZATION_r12.md finding #1).  Every helper
-keeps its Column form next to the `_sql` twin; this suite pins the
-two spellings VALUE-EQUAL on adversarial inputs so an edit to one
-side cannot silently desynchronize the other.  (The full value
-oracles already prove the rewritten queries end-to-end; this is the
-focused unit pin for the helpers themselves.)
+round trip per node — OPTIMIZATION_r12.md finding #1).  Where a helper
+still keeps a hand-written Column form next to its `_sql` twin, this
+suite pins the two spellings VALUE-EQUAL on adversarial inputs so an
+edit to one side cannot silently desynchronize the other.  The twins
+that remain, and why:
+
+- ``fround``, ``md5_int32``, ``md5_int60`` and ``tokens``: their Column
+  forms are also applied to computed Columns and to lambda variables
+  (e.g. inside ``transform``), which have no SQL text to hand to the
+  string form;
+- ``word_shingles`` and ``split_of_cluster``: on the dedup/split path,
+  left for a change of their own.
+
+The vector math (``functions/vectors.py``) has ONE spelling — the
+Column form is ``F.expr`` of the SQL text — so there is no second
+tree to pin against; instead its values are checked repr-exact
+against a pure-Python left-to-right fold over the same rows, the
+evaluation order the DuckDB oracles replay.  (The full value oracles
+prove the queries end-to-end; this is the focused unit pin for the
+helpers themselves.)
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,12 +49,10 @@ from geoscale_healthflow_etl_django_analytics_spark.functions.text import (
     word_shingles_sql,
 )
 from geoscale_healthflow_etl_django_analytics_spark.functions.vectors import (
+    cosine,
     dot,
-    dot_sql,
     norm,
-    norm_sql,
     normalized,
-    normalized_sql,
 )
 from geoscale_healthflow_etl_django_analytics_spark.operators.splitting import (
     split_of_cluster,
@@ -103,20 +118,40 @@ def test_fround_twin(spark):
             assert repr(a) == repr(b), (a, b, d)
 
 
-def test_vector_twins(spark):
-    df = spark.createDataFrame(
-        [
-            ([1.0, 2.0, 3.0, 4.0], [0.5, -0.25, 0.125, 2.0]),
-            ([-1.5, 0.0, 2.5, -3.0], [1.0, 1.0, 1.0, 1.0]),
-        ],
-        "u array<double>, v array<double>",
-    )
-    for a, b in _pairs(df, dot(F.col("u"), F.col("v")), dot_sql("u", "v")):
-        assert repr(a) == repr(b)
-    for a, b in _pairs(df, norm(F.col("u")), norm_sql("u")):
-        assert repr(a) == repr(b)
-    for a, b in _pairs(df, normalized(F.col("u")), normalized_sql("u")):
-        assert [repr(x) for x in a] == [repr(x) for x in b]
+def _py_dot(u, v):
+    acc = 0.0
+    for x, y in zip(u, v):
+        acc = acc + x * y
+    return acc
+
+
+def _py_norm(u):
+    return math.sqrt(_py_dot(u, u))
+
+
+def test_vector_math_matches_python_fold(spark):
+    rows = [
+        ([1.0, 2.0, 3.0, 4.0], [0.5, -0.25, 0.125, 2.0]),
+        ([-1.5, 0.0, 2.5, -3.0], [1.0, 1.0, 1.0, 1.0]),
+        # order-sensitive sums: a reassociated fold gives other bits
+        ([0.1, 0.2, 0.3, 1e-17], [0.7, -0.3, 1e16, 3.0]),
+        ([1e-3, -7.25, 1.0 / 3.0, 2.0 / 3.0], [-0.1, 0.1, 3.3, -1e-9]),
+    ]
+    df = spark.createDataFrame(rows, "u array<double>, v array<double>")
+    got = df.select(
+        dot("u", "v").alias("dot"),
+        norm("u").alias("norm"),
+        normalized("u").alias("normalized"),
+        cosine("u", "v").alias("cosine"),
+    ).collect()
+    assert len(got) == len(rows)
+    for (u, v), r in zip(rows, got):
+        n = _py_norm(u)
+        assert repr(r["dot"]) == repr(_py_dot(u, v))
+        assert repr(r["norm"]) == repr(n)
+        assert [repr(x) for x in r["normalized"]] == [repr(x / n) for x in u]
+        want = _py_dot(u, v) / (n * _py_norm(v))
+        assert repr(r["cosine"]) == repr(want)
 
 
 def test_split_of_cluster_twin(spark):
