@@ -22,7 +22,7 @@ def token_window_segments(col: Column, n: int = 10) -> Column:
     text.  The trailing partial window is a segment of its own.
     Empty/whitespace-only docs yield an empty array (NOT a [''] —
     Spark's sequence(0, -1) would descend).  Same bound-variable
-    trick as word_shingles."""
+    trick as word_shingles_sql."""
 
     def build(t: Column) -> Column:
         n_seg = F.ceil(F.size(t) / F.lit(float(n))).cast("int")

@@ -125,33 +125,17 @@ def fingerprint(col: Column) -> Column:
     return F.md5(canon)
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as array<string> — the unit set for
-    Jaccard/MinHash near-dup detection.
-
-    Implementation note: the token array must enter the shingle
-    lambda as a BOUND variable. Referencing a tokenization
-    expression inside the per-index lambda body re-inlines (and
-    re-evaluates) the split/filter once per shingle after projection
-    collapse — measured ~10x slowdown on a 5k-doc corpus. Wrapping
-    in a 1-element array + transform binds it once.
-    """
-
-    def build(t: Column) -> Column:
-        n = F.size(t)
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i + 1, k)))
-        # short docs (< k tokens) get their whole text as one shingle
-        return F.array_distinct(
-            F.when(n >= k, sh).otherwise(F.array(F.concat_ws(" ", t)))
-        )
-
-    return F.element_at(F.transform(F.array(tokens(F.lower(col))), build), 1)
-
-
 def word_shingles_sql(expr: str, k: int = 3) -> str:
-    """SQL-string twin of :func:`word_shingles` (same bound-variable
-    trick, same short-doc fallback; see tokens_sql)."""
+    """Distinct k-word shingles of the SQL text ``expr`` as
+    array<string> — the unit set for Jaccard/MinHash near-dup
+    detection; docs with fewer than k tokens get their whole text as
+    one shingle.
+
+    The token array enters the shingle lambda as a BOUND variable
+    (wrapped in a 1-element array + transform): referencing the
+    tokenization inside the per-index lambda re-inlines and
+    re-evaluates the split/filter once per shingle after projection
+    collapse — measured ~10x slower on a 5k-doc corpus."""
     tok = tokens_sql(f"lower({expr})")
     return (
         f"element_at(transform(array({tok}), t -> array_distinct("
@@ -164,9 +148,9 @@ def word_shingles_sql(expr: str, k: int = 3) -> str:
 
 def word_ngrams(col: Column, k: int) -> Column:
     """ALL overlapping k-word grams (duplicates KEPT, unlike
-    :func:`word_shingles`) — the unit for repetition-quality signals
+    :func:`word_shingles_sql`) — the unit for repetition-quality signals
     (duplicate-n-gram fraction, top-gram share, cf. the Gopher data
-    rules). Same bound-variable trick as word_shingles; docs with
+    rules). Same bound-variable trick as word_shingles_sql; docs with
     fewer than k tokens yield an empty array (no repetition is
     measurable)."""
 

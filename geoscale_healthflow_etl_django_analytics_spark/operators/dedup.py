@@ -54,7 +54,7 @@ from ..functions.hashing import (
     md5_int32,
     md5_int60,
 )
-from ..functions.text import fingerprint, tokens, word_shingles
+from ..functions.text import fingerprint, tokens
 from ..functions.exact import fround
 
 
@@ -297,10 +297,9 @@ def minhash_perm_band_hashes(
     bands: int = 16,
     k: int = 3,
 ) -> DataFrame:
-    """Tier 3 candidate-generation front half, TRUE-PERMUTATION form
-    (the default since r6): (doc_id, band, bh) rows — a classic
-    ``num_perm``-wise MinHash signature sliced into ``bands`` band
-    hashes.
+    """Tier 3 candidate-generation front half, TRUE-PERMUTATION form:
+    (doc_id, band, bh) rows — a classic ``num_perm``-wise MinHash
+    signature sliced into ``bands`` band hashes.
 
     Why not one-permutation hashing: OPH (even rotationally densified)
     fills each band from however many of the doc's shingles happen to
@@ -361,133 +360,6 @@ def minhash_perm_band_hashes(
         for b in range(bands)
     )
     return sig.selectExpr("doc_id", f"inline(array({band_cells}))")
-
-
-def lsh_band_hashes(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    k: int = 3,
-) -> DataFrame:
-    """One-permutation (OPH) band hashes — FENCED ESTIMATION/COMPAT
-    TIER since r6. Kept for sketch-cost comparison and the bucket-
-    census tests; the candidate-generation default is
-    :func:`minhash_perm_band_hashes`, because OPH banding on short
-    docs has a measured quadratic candidate floor (sparse bands
-    carry 1-2 distinct values → effective r << 4; the r6 x500 deep
-    point hit ~495M candidates vs ~560k true pairs). OPH remains the
-    right SKETCH for similarity *estimation* (one hash per shingle);
-    it is the banding recall/precision math it breaks."""
-    slots_per_band = num_perm // bands
-    # One-permutation MinHash (Li et al.): hash each shingle ONCE,
-    # route it to slot = h mod num_perm, keep the min hash per slot.
-    # Expressed as explode + groupBy so every step is whole-stage
-    # codegen (a per-row higher-order fold does 64 hash ops per
-    # shingle in the interpreted expression walker — measured 5-10x
-    # slower). The shuffle is per-(doc, slot) AFTER map-side combine,
-    # i.e. ≤ num_perm rows per doc — the standard shape for corpus-
-    # scale MinHash in Spark.
-    # hash shingles to longs WITHIN the row (one transform over the
-    # shingle array), then explode longs — the exploded/shuffled
-    # volume is 8-byte hashes instead of shingle strings. md5-derived
-    # (not xxhash64) so DuckDB replays the identical pipeline.
-    from ..sources.catalog import ensure_parallelism
-
-    docs = ensure_parallelism(docs, key="doc_id")
-    shingle_hashes = F.array_distinct(
-        F.transform(
-            word_shingles(F.col(text_col), k), lambda s: md5_int32(s)
-        )
-    )
-    shingled = docs.select(
-        "doc_id", F.explode(shingle_hashes).alias("h")
-    )
-    # ONE shuffle: collect the sorted (slot, hash) set per doc — the
-    # per-slot min falls out of the sort order downstream (a separate
-    # groupBy(doc, slot).min first was measured to buy nothing: the
-    # exploded volume is the same and it costs a second exchange).
-    es = shingled.select(
-        "doc_id",
-        F.struct(
-            F.pmod(F.col("h"), F.lit(num_perm)).cast("int").alias("slot"),
-            F.col("h").alias("mh"),
-        ).alias("e"),
-    ).groupBy("doc_id").agg(F.sort_array(F.collect_set("e")).alias("es"))
-    # ROTATIONAL DENSIFICATION (Shrivastava & Li, "Densifying One
-    # Permutation Hashing via Rotation for Fast Near Neighbor Search",
-    # ICML 2014): an empty slot takes the value of the nearest filled
-    # slot to its RIGHT, circularly. Without it, one-permutation
-    # MinHash collapses on short docs: a doc with ~40 distinct
-    # shingles fills ~30 of 64 slots, and sparsely-filled bands hash
-    # on their few shared (slot, min) entries — the round-5 x50 scale
-    # point measured 24M candidate pairs (n^2 growth) from exactly
-    # this, 430x the true near-dup count. Densified, every band
-    # carries 4 real values and collision probability returns to the
-    # ~j^4 the banding math assumes.
-    #
-    # Mechanics — SEGMENT EXPANSION in one aggregate() pass: es is
-    # sorted by (slot, mh), so the densified array is just each
-    # entry's mh repeated over the gap it closes — concat(...,
-    # array_repeat(mh_j, slot_j - slot_{j-1}), ...) with the wrap tail
-    # repeating the FIRST entry's mh. Duplicate slots contribute
-    # empty segments (repeat count 0), so the per-slot MIN wins via
-    # the sort order. This replaces the previous 64 per-slot
-    # array-filter probes — interpreted O(slots x fill) predicate
-    # evaluations that dominated the banding stage at sf0.1 (2.37s ->
-    # 1.46s measured, identical output); the aggregate form is
-    # O(fill) struct steps of native long-array copies, and the band
-    # assembly below reads the dense array with O(1) element_at.
-    # band key = md5 of the canonical "slot:min,..." string over the
-    # DENSIFIED slots — a fixed 32-hex shuffle key any engine
-    # reproduces; F.hash over the struct list would be murmur3.
-    dens_arr = F.aggregate(
-        F.col("es"),
-        F.struct(
-            F.lit(-1).cast("int").alias("prev"),
-            F.array().cast("array<long>").alias("out"),
-        ),
-        lambda acc, e: F.struct(
-            e["slot"].alias("prev"),
-            F.concat(
-                acc["out"], F.array_repeat(e["mh"], e["slot"] - acc["prev"])
-            ).alias("out"),
-        ),
-        lambda acc: F.concat(
-            acc["out"],
-            F.array_repeat(
-                F.get(F.col("es"), 0)["mh"],
-                F.lit(num_perm - 1).cast("int") - acc["prev"],
-            ),
-        ),
-    )
-    withd = es.select("doc_id", dens_arr.alias("dens"))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.concat_ws(
-                                ":",
-                                F.lit(s),
-                                F.element_at(F.col("dens"), s + 1),
-                            )
-                            for s in range(
-                                b * slots_per_band, (b + 1) * slots_per_band
-                            )
-                        ],
-                    )
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return withd.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
 
 
 def _verify_candidates(
@@ -682,7 +554,7 @@ def with_simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Tier 4a — 60-bit SimHash over distinct tokens. md5-derived
     token hashes keep the sketch bit-identical across engines.
 
-    Shape matters for speed (same lesson as lsh_band_hashes): the
+    Shape matters for speed (same lesson as the MinHash signature): the
     per-row nested fold — 60 bit positions x every token hash inside
     ``aggregate()`` — runs in the interpreted expression walker and
     measured ~10x slower than this explode → groupBy form, where the

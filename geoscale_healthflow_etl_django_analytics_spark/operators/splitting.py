@@ -58,24 +58,19 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_int32
-
 
 def split_of_cluster(
-    cluster: Column,
+    expr: str,
     train_pct: int = 80,
     val_pct: int = 10,
     salt: str = "split-",
 ) -> Column:
-    """The deterministic cluster -> split bucket, shared by
-    ``subdoc.leakage_safe_split`` and the incremental form so the two
-    cannot drift apart."""
-    bucket = md5_int32(F.concat(F.lit(salt), cluster.cast("string"))) % 100
-    return (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    """The deterministic cluster -> split bucket of the cluster id SQL
+    text ``expr``, shared by ``subdoc.leakage_safe_split`` and the
+    incremental form so the two cannot drift apart:
+    md5_int32(salt || cluster) % 100, below ``train_pct`` -> train,
+    below ``train_pct + val_pct`` -> val, else test."""
+    return F.expr(split_of_cluster_sql(expr, train_pct, val_pct, salt))
 
 
 def split_of_cluster_sql(
@@ -84,22 +79,20 @@ def split_of_cluster_sql(
     val_pct: int = 10,
     salt: str = "split-",
 ) -> str:
-    """SQL-string twin of :func:`split_of_cluster` — identical tree,
-    one expr() parse (r12, guide §5; see hashing.md5_int32_sql).
+    """SQL text of :func:`split_of_cluster` (one expr() parse; see
+    hashing.md5_int32_sql).
 
     ``salt`` is interpolated into a single-quoted SQL literal, so it
-    is restricted to a quote/backslash-free charset (ADVICE r12 #2: a
-    quote breaks parsing, and a backslash would silently hash a
-    DIFFERENT string than the Column twin — a silent train/val/test
-    divergence rather than an error)."""
+    is restricted to a quote/backslash-free charset (a quote breaks
+    parsing, and a backslash would silently hash a DIFFERENT string —
+    a silent train/val/test divergence rather than an error)."""
     import re
 
     from ..functions.hashing import md5_int32_sql
 
     if not re.fullmatch(r"[A-Za-z0-9_\- ]+", salt):
         raise ValueError(
-            "split_of_cluster_sql salt must match [A-Za-z0-9_- ]+ "
-            f"(got {salt!r}); use split_of_cluster for arbitrary salts"
+            f"split_of_cluster salt must match [A-Za-z0-9_- ]+ (got {salt!r})"
         )
     inner = f"concat('{salt}', CAST({expr} AS STRING))"
     b = f"{md5_int32_sql(inner)} % 100"
@@ -145,7 +138,7 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
     comp = connected_components(edges).select(
         "doc_id",
         F.col("component").alias("cluster_id"),
-        split_of_cluster(F.col("component")).alias("split"),
+        split_of_cluster("component").alias("split"),
     )
     comp.write.mode("overwrite").parquet(os.path.join(path, "clusters"))
     index_bands.write.mode("overwrite").parquet(
@@ -436,7 +429,7 @@ def fold_batch_into_cluster_table(
         assigned.filter(batch_pred(F.col("doc_id")))
         .filter(
             (F.col("cluster_id") != F.col("doc_id"))
-            | (F.col("split") != split_of_cluster(F.col("cluster_id")))
+            | (F.col("split") != split_of_cluster("cluster_id"))
         )
         .localCheckpoint()
     )

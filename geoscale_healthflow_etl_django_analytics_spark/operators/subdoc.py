@@ -129,9 +129,9 @@ def leakage_safe_split(
     out = docs.select(F.col(doc_id_col).alias("doc_id")).join(
         comp, F.col("doc_id") == F.col("__cid_doc"), "left"
     )
-    cluster = F.coalesce(F.col("component"), F.col("doc_id"))
+    cluster = "coalesce(component, doc_id)"
     return out.select(
         "doc_id",
-        cluster.alias("cluster_id"),
+        F.expr(cluster).alias("cluster_id"),
         split_of_cluster(cluster, train_pct, val_pct, salt).alias("split"),
     )

@@ -14,10 +14,23 @@ registry. Conventions that keep the value-hash comparison exact:
 - DuckDB ``CAST(double AS INT)`` rounds, Spark truncates → oracles
   use ``trunc()`` where C2 semantics apply.
 - LIMIT queries order by a deterministic unique key chain.
+
+One generator per replayed contract: an oracle fragment that more
+than one query replays is written once, as a module-level constant or
+a ``_*`` function that returns CTE text (CTE-name suffix, source table
+and predicate as arguments), and every oracle composes it. The shared
+fragments sit just above their first user; the near-dup/split family
+(``_BAND_CTES``, ``_lsh_ctes``, ``_verified``, ``_cc_ctes``,
+``_batch_cands``, ``_ingest_batch``, ``_split_oracle``) follows
+``_SHINGLE_CTE``, the Lloyd tiers (``_lloyd_seed``, ``_lloyd_update``,
+``_probed_assign``) precede ``_lloyd_ctes``, and the IVF-PQ chain
+(``_ivf_assign_ctes``, ``_ivf_members_ctes``, ``_pq_encode_ctes``,
+``_ivfpq_rerank``) precedes ``sim_ivf_topk``.
 """
 
 from __future__ import annotations
 
+import textwrap
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -127,10 +140,8 @@ def hc_a2_gender_positivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ha.gender_positivity(_lab(spark, sf_dir))
 
 
-@register(
-    "hc_a3_village_positivity",
-    oracle=semantic.with_lab_cte("""
-SELECT
+# A3's per-(village, year) positivity; O3 ranks the same rows
+_VILLAGE_POSITIVITY_SQL = """SELECT
     village,
     year,
     min(district) AS district,
@@ -141,7 +152,13 @@ SELECT
     round(100.0 * sum(is_positive) / count(*), 2) AS positivity_rate
 FROM lab
 WHERE village IS NOT NULL AND trim(village) <> ''
-GROUP BY village, year
+GROUP BY village, year"""
+
+
+@register(
+    "hc_a3_village_positivity",
+    oracle=semantic.with_lab_cte(f"""
+{_VILLAGE_POSITIVITY_SQL}
 """),
     tags=("A3", "aggregation"),
     bench=True,
@@ -232,20 +249,9 @@ def hc_a5_total_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hc_o3_top20_villages",
-    oracle=semantic.with_lab_cte("""
+    oracle=semantic.with_lab_cte(f"""
 SELECT * FROM (
-    SELECT
-        village,
-        year,
-        min(district) AS district,
-        min(sector) AS sector,
-        count(*) AS total_tests,
-        CAST(sum(is_positive) AS BIGINT) AS positive_cases,
-        CAST(count(*) - sum(is_positive) AS BIGINT) AS negative_cases,
-        round(100.0 * sum(is_positive) / count(*), 2) AS positivity_rate
-    FROM lab
-    WHERE village IS NOT NULL AND trim(village) <> ''
-    GROUP BY village, year
+{textwrap.indent(_VILLAGE_POSITIVITY_SQL, "    ")}
 ) t
 ORDER BY positivity_rate DESC, village ASC, year ASC
 LIMIT 20
@@ -829,7 +835,7 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup_groups(catalog.load_table(spark, sf_dir, "documents"))
 
 
-# 3-word shingles in DuckDB (mirrors functions/text.py word_shingles):
+# 3-word shingles in DuckDB (mirrors functions/text.py word_shingles_sql):
 _SHINGLE_CTE = r"""
 doc_sh AS (
     SELECT doc_id, lang,
@@ -893,7 +899,8 @@ _band_cells = ",\n        ".join(
     for b in range(16)
 )
 
-_MINHASH_CTES = f"""{_SHINGLE_CTE.strip()},
+# shingle -> band hashes: (doc_id, band, bh) rows in ``band_hashes``
+_BAND_CTES = f"""{_SHINGLE_CTE.strip()},
 hs AS (
     SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
     FROM (SELECT doc_id, unnest(sh) AS s FROM doc_sh) u
@@ -911,35 +918,216 @@ band_structs AS (
 ),
 band_hashes AS (
     SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
+)"""
+
+
+def _verified(cand: str, ind: str = "") -> str:
+    """Exact-Jaccard verify at j >= 0.8 of the candidate table ``cand``
+    (doc_a, doc_b): the body and close of a ``(...) v`` subquery that
+    yields (doc_a, doc_b, jaccard), every line indented by ``ind``."""
+    return textwrap.indent(f"""    SELECT c.doc_a, c.doc_b,
+           round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                 / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
+               AS jaccard
+    FROM {cand} c
+    JOIN doc_sh sa ON sa.doc_id = c.doc_a
+    JOIN doc_sh sb ON sb.doc_id = c.doc_b
+) v WHERE jaccard >= 0.8""", ind)
+
+
+def _lsh_ctes(p: str, bands: str) -> str:
+    """Salted LSH candidates over the band table ``bands``, verified
+    (dedup.minhash_lsh_pairs): CTEs ``{p}bsz``, ``{p}salted``,
+    ``{p}cand`` and ``{p}lsh_pairs`` (doc_a, doc_b, jaccard).  A bucket
+    above ``dd._SALT_CAP`` docs splits into ceil(size / _SALT_TARGET)
+    salts; smaller buckets keep salt 0."""
+    return f"""{p}bsz AS (
+    SELECT band, bh, count(*) AS bsz FROM {bands} GROUP BY band, bh
 ),
-bsz AS (
-    SELECT band, bh, count(*) AS bsz FROM band_hashes GROUP BY band, bh
-),
-salted AS (
+{p}salted AS (
     SELECT h.doc_id, h.band, h.bh,
-           CASE WHEN z.bsz > 512
+           CASE WHEN z.bsz > {dd._SALT_CAP}
                 THEN ('0x' || substr(md5(h.doc_id || ':' || h.band), 1, 8))::BIGINT
-                     % CAST(ceil(z.bsz / 128.0) AS BIGINT)
+                     % CAST(ceil(z.bsz / {float(dd._SALT_TARGET)}) AS BIGINT)
                 ELSE 0 END AS salt
-    FROM band_hashes h JOIN bsz z USING (band, bh)
+    FROM {bands} h JOIN {p}bsz z USING (band, bh)
 ),
-cand AS (
+{p}cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM salted a JOIN salted b
+    FROM {p}salted a JOIN {p}salted b
       ON a.band = b.band AND a.bh = b.bh AND a.salt = b.salt
      AND a.doc_id < b.doc_id
 ),
-lsh_pairs AS (
+{p}lsh_pairs AS (
     SELECT doc_a, doc_b, jaccard FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
+{_verified(f"{p}cand", "    ")}
 )"""
+
+
+def _cc_ctes(edges: str, cc: str, pairs: str) -> str:
+    """Connected components of the pair graph ``pairs`` (doc_a, doc_b)
+    as a recursive label closure (dedup.connected_components): ``{cc}``
+    holds (node, label) and min(label) per node is its component."""
+    return f"""{edges} AS (
+    SELECT doc_a AS a, doc_b AS b FROM {pairs}
+    UNION
+    SELECT doc_b AS a, doc_a AS b FROM {pairs}
+),
+{cc}(node, label) AS (
+    SELECT a, a FROM {edges}
+    UNION
+    SELECT e.b, {cc}.label FROM {cc} JOIN {edges} e ON e.a = {cc}.node
+)"""
+
+
+_MINHASH_CTES = f"""{_BAND_CTES},
+{_lsh_ctes("", "band_hashes")}"""
+
+# near-dup clusters: ``cc`` over the LSH pair graph
+_MINHASH_CC = f"""WITH RECURSIVE
+{_MINHASH_CTES},
+{_cc_ctes("edges", "cc", "lsh_pairs")}"""
+
+
+def _split_case(expr: str) -> str:
+    """DuckDB replay of splitting.split_of_cluster's bucket arithmetic."""
+    b = f"('0x' || substr(md5('split-' || CAST({expr} AS VARCHAR)), 1, 8))::BIGINT % 100"
+    return (
+        f"CASE WHEN {b} < 80 THEN 'train' "
+        f"WHEN {b} < 90 THEN 'val' ELSE 'test' END"
+    )
+
+
+def _link_type(t: str, ind: str) -> str:
+    """link_type of a verified pair when the batch is ``doc_id % 10 {t}``;
+    ``ind`` indents the continuation line."""
+    return (
+        f"CASE WHEN doc_a % 10 {t} AND doc_b % 10 {t} THEN 'batch_batch'\n"
+        f"{ind}     ELSE 'batch_index' END AS link_type"
+    )
+
+
+def _batch_cands(s: str, t: str, visible: str | None = None) -> str:
+    """Unsalted incremental candidates (operators/incremental.py) for the
+    batch ``doc_id % 10 {t}``: pairs sharing a bucket some batch doc
+    touches, at least one side in the batch, among the docs
+    ``doc_id % 10 {visible}`` (None: every doc) — CTEs ``nk{s}``,
+    ``tb{s}`` and ``cand{s}``."""
+    where = "" if visible is None else f"\n    WHERE h.doc_id % 10 {visible}"
+    return f"""nk{s} AS (
+    SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 {t}
+),
+tb{s} AS (
+    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk{s} USING (band, bh){where}
+),
+cand{s} AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM tb{s} a JOIN tb{s} b
+      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
+     AND (a.doc_id % 10 {t} OR b.doc_id % 10 {t})
+)"""
+
+
+def _ingest_batch(s: str, t: str, visible: str | None, resolve: str) -> str:
+    """One ingest generation (splitting.incremental_leakage_safe_split)
+    of the batch ``doc_id % 10 {t}``: candidates among the corpus visible
+    at ingest, verified ``pairs{s}``, the batch graph's components, and
+    anchors resolved against ``resolve`` (doc_id, cluster_id, split).
+    A component adopts min(anchor cluster) and, when its anchors share
+    one split, that split; split-conflicted components are quarantined;
+    unanchored ones self-cluster.  Ends in ``b{s}_assign`` (doc_id,
+    cluster_id, split)."""
+    return f"""{_batch_cands(s, t, visible)},
+pairs{s} AS (
+    SELECT doc_a, doc_b,
+           {_link_type(t, " " * 11)}
+    FROM (
+{_verified(f"cand{s}", "    ")}
+),
+{_cc_ctes(f"bedges{s}", f"bcc{s}", f"pairs{s} WHERE link_type = 'batch_batch'")},
+bcomp0{s} AS (SELECT node, min(label) AS comp FROM bcc{s} GROUP BY node),
+bcomp{s} AS (
+    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
+    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 {t}) b
+    LEFT JOIN bcomp0{s} c ON c.node = b.doc_id
+),
+anchors{s} AS (
+    SELECT CASE WHEN doc_a % 10 {t} THEN doc_a ELSE doc_b END AS bdoc,
+           CASE WHEN doc_a % 10 {t} THEN doc_b ELSE doc_a END AS idoc
+    FROM pairs{s} WHERE link_type = 'batch_index'
+),
+anch{s} AS (
+    SELECT a.bdoc,
+           coalesce(f.cluster_id, a.idoc) AS anchor_cluster,
+           coalesce(f.split, {_split_case("a.idoc")}) AS anchor_split
+    FROM anchors{s} a LEFT JOIN {resolve} f ON f.doc_id = a.idoc
+),
+comp_agg{s} AS (
+    SELECT bc.bcomp,
+           min(a.anchor_cluster) AS anc_min,
+           count(DISTINCT a.anchor_split) AS n_anchor_splits,
+           min(a.anchor_split) AS anc_split
+    FROM bcomp{s} bc JOIN anch{s} a ON a.bdoc = bc.doc_id
+    GROUP BY bc.bcomp
+),
+b{s}_assign AS (
+    SELECT bc.doc_id,
+           coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
+           CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
+                WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
+                ELSE 'quarantine' END AS split
+    FROM bcomp{s} bc LEFT JOIN comp_agg{s} ca USING (bcomp)
+)"""
+
+
+def _split_oracle(*cuts: int) -> str:
+    """Full replay of the incremental leakage-safe split over a persisted
+    cluster table.  The index corpus is ``doc_id % 10 < cuts[0]``; ingest
+    batch k holds the residues cuts[k-1]..cuts[k]-1 and the last batch
+    ``>= cuts[-1]``.  The index side is the salted LSH + CC over index
+    docs only (exactly minhash_lsh_pairs(index_docs)), with derived
+    splits as ``folded0``; batch k is assigned against ``folded{k-1}``,
+    seeing only the corpus visible at its ingest, and folding appends
+    its assignment.  Folded reads coalesce: a doc with no stored row
+    self-clusters and re-derives its bucket, a stored split (incl.
+    'quarantine') is authoritative.  Compaction is bit-identical by
+    contract and therefore invisible here."""
+    ctes = [
+        _BAND_CTES,
+        f"ibh AS (SELECT doc_id, band, bh FROM band_hashes WHERE doc_id % 10 < {cuts[0]})",
+        _lsh_ctes("i", "ibh"),
+        _cc_ctes("iedges", "icc", "ilsh_pairs"),
+        f"""icomp AS (SELECT node AS doc_id, min(label) AS cluster_id
+          FROM icc GROUP BY node),
+folded0 AS (
+    SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
+    FROM icomp
+)""",
+    ]
+    n = len(cuts)
+    for k, (lo, hi) in enumerate(zip(cuts, cuts[1:] + (None,)), 1):
+        if hi is None:  # the last batch sees the whole corpus
+            ctes.append(_ingest_batch(str(k), f">= {lo}", None, f"folded{k - 1}"))
+            continue
+        residues = ", ".join(str(r) for r in range(lo, hi))
+        ctes.append(_ingest_batch(str(k), f"IN ({residues})", f"< {hi}", f"folded{k - 1}"))
+        ctes.append(f"""folded{k} AS (
+    SELECT doc_id, cluster_id, split FROM folded{k - 1}
+    UNION ALL
+    SELECT doc_id, cluster_id, split FROM b{k}_assign
+)""")
+    return "WITH RECURSIVE " + ",\n".join(ctes) + f""",
+index_out AS (
+    SELECT d.doc_id,
+           coalesce(f.cluster_id, d.doc_id) AS cluster_id,
+           coalesce(f.split, {_split_case("d.doc_id")}) AS split
+    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 < {cuts[-1]}) d
+    LEFT JOIN folded{n - 1} f USING (doc_id)
+)
+SELECT doc_id, cluster_id, split FROM index_out
+UNION ALL
+SELECT doc_id, cluster_id, split FROM b{n}_assign
+"""
 
 _MINHASH_ORACLE = f"""WITH {_MINHASH_CTES}
 SELECT doc_a, doc_b, jaccard FROM lsh_pairs
@@ -960,10 +1148,38 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sign_bits_cte(name: str, h: str) -> str:
+    """SimHash sketch bits: per (doc, bit i < 60) the sign of the sum of
+    +-1 votes of the token hashes ``th.{h}``, as ``{name}`` (doc_id, i,
+    bitval)."""
+    return f"""{name} AS (
+    SELECT doc_id, r.i AS i,
+           CASE WHEN sum(CASE WHEN ({h} >> CAST(r.i AS INTEGER)) & 1 = 1
+                              THEN 1 ELSE -1 END) >= 0
+                THEN (CAST(1 AS BIGINT) << CAST(r.i AS INTEGER))
+                ELSE CAST(0 AS BIGINT) END AS bitval
+    FROM th CROSS JOIN range(0, 60) r(i)
+    GROUP BY doc_id, r.i
+)"""
+
+
+def _banded4_cte(name: str) -> str:
+    """Four 30-bit bands of the 120-bit sketch ``sim`` (sk0, sk1)."""
+    return f"""{name} AS (
+    SELECT doc_id, sk0, sk1, b.band,
+           CASE b.band
+             WHEN 0 THEN sk0 & 1073741823
+             WHEN 1 THEN sk0 >> 30
+             WHEN 2 THEN sk1 & 1073741823
+             ELSE sk1 >> 30 END AS bh
+    FROM sim CROSS JOIN (SELECT CAST(unnest([0,1,2,3]) AS INTEGER) AS band) b
+)"""
+
+
 # SimHash replay: 60-bit sketch (15-hex md5 token hashes), sign-of-sum
 # per bit, 4 x 15-bit band blocking, hamming <= 3 (see
 # operators/dedup.py:with_simhash / simhash_pairs).
-_SIMHASH_ORACLE = r"""WITH tok AS (
+_SIMHASH_ORACLE = rf"""WITH tok AS (
     SELECT doc_id, unnest(list_distinct(list_filter(
         regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> ''))) AS t
     FROM documents
@@ -971,15 +1187,7 @@ _SIMHASH_ORACLE = r"""WITH tok AS (
 th AS (
     SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tok
 ),
-bits AS (
-    SELECT doc_id, r.i AS i,
-           CASE WHEN sum(CASE WHEN (h >> CAST(r.i AS INTEGER)) & 1 = 1
-                              THEN 1 ELSE -1 END) >= 0
-                THEN (CAST(1 AS BIGINT) << CAST(r.i AS INTEGER))
-                ELSE CAST(0 AS BIGINT) END AS bitval
-    FROM th CROSS JOIN range(0, 60) r(i)
-    GROUP BY doc_id, r.i
-),
+{_sign_bits_cte("bits", "h")},
 sim AS (
     SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS simhash
     FROM bits GROUP BY doc_id
@@ -1297,29 +1505,36 @@ CASE WHEN slide_raw IS NULL OR upper(trim(slide_raw)) = '' THEN 'Unknown'
 """
 
 
+def _clean_cols_sql(ind: str) -> str:
+    """The C1-C8 cleaned columns over the raw gender/age/month/slide
+    fields, each line of the select list indented by ``ind``."""
+    age, tr = _CLEAN_AGE_SQL.strip(), _TEST_RESULT_SQL.strip()
+    return f"""{ind}CASE WHEN upper(trim(gender_raw)) IN ('M', 'MALE', 'MAN') THEN 'Male'
+{ind}     WHEN upper(trim(gender_raw)) IN ('F', 'FEMALE', 'WOMAN') THEN 'Female'
+{ind}     ELSE 'Unknown' END AS gender,
+{ind}{age} AS age,
+{ind}CASE WHEN ({age}) < 5 THEN 'Under 5'
+{ind}     WHEN ({age}) < 15 THEN '5-14'
+{ind}     WHEN ({age}) < 25 THEN '15-24'
+{ind}     WHEN ({age}) < 45 THEN '25-44'
+{ind}     WHEN ({age}) < 65 THEN '45-64'
+{ind}     ELSE '65+' END AS age_group,
+{ind}CASE WHEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER) BETWEEN 1 AND 12
+{ind}     THEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER)
+{ind}     WHEN upper(trim(month_raw)) IN ('MARCH', 'MAR') THEN 3
+{ind}     ELSE NULL END AS month,
+{ind}{tr} AS test_result,
+{ind}CASE WHEN ({tr}) = 'Positive' THEN 1 ELSE 0 END
+{ind}    AS is_positive"""
+
+
 @register(
     "c9_clean_records",
     oracle=f"""WITH {_DIRTY_CTE.strip()}
 SELECT
     event_id,
     coalesce(trim(text_raw), '') AS cleaned_text,
-    CASE WHEN upper(trim(gender_raw)) IN ('M', 'MALE', 'MAN') THEN 'Male'
-         WHEN upper(trim(gender_raw)) IN ('F', 'FEMALE', 'WOMAN') THEN 'Female'
-         ELSE 'Unknown' END AS gender,
-    {_CLEAN_AGE_SQL.strip()} AS age,
-    CASE WHEN ({_CLEAN_AGE_SQL.strip()}) < 5 THEN 'Under 5'
-         WHEN ({_CLEAN_AGE_SQL.strip()}) < 15 THEN '5-14'
-         WHEN ({_CLEAN_AGE_SQL.strip()}) < 25 THEN '15-24'
-         WHEN ({_CLEAN_AGE_SQL.strip()}) < 45 THEN '25-44'
-         WHEN ({_CLEAN_AGE_SQL.strip()}) < 65 THEN '45-64'
-         ELSE '65+' END AS age_group,
-    CASE WHEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER) BETWEEN 1 AND 12
-         THEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER)
-         WHEN upper(trim(month_raw)) IN ('MARCH', 'MAR') THEN 3
-         ELSE NULL END AS month,
-    {_TEST_RESULT_SQL.strip()} AS test_result,
-    CASE WHEN ({_TEST_RESULT_SQL.strip()}) = 'Positive' THEN 1 ELSE 0 END
-        AS is_positive
+{_clean_cols_sql("    ")}
 FROM dirty
 """,
     tags=("C1", "C3", "C4", "C5", "C6", "C7", "C8", "C9", "cleaning"),
@@ -1473,6 +1688,16 @@ polys AS (
 """
 
 _QX0, _QY0, _QX1, _QY1 = 10.0, 5.0, 60.0, 35.0
+
+
+def _wkt_ring(ind: str, *pts: str) -> str:
+    """WKT of the closed ring through ``pts`` (SQL "x, y" pairs): one
+    printf per vertex, continuation lines indented by ``ind``."""
+    return (
+        "'POLYGON ((' ||\n"
+        + "".join(f"{ind}printf('%.1f %.1f, ', {p}) ||\n" for p in pts)
+        + f"{ind}printf('%.1f %.1f', {pts[0]}) || '))'"
+    )
 
 _J7_BODY = f"""
 SELECT poly_id, name, slope,
@@ -2254,18 +2479,7 @@ def a13_sketch_vs_exact_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_connected_components",
-    oracle=f"""WITH RECURSIVE
-{_MINHASH_CTES},
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM lsh_pairs
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM lsh_pairs
-),
-cc(node, label) AS (
-    SELECT a, a FROM edges
-    UNION
-    SELECT e.b, cc.label FROM cc JOIN edges e ON e.a = cc.node
-)
+    oracle=f"""{_MINHASH_CC}
 SELECT node AS doc_id, min(label) AS component
 FROM cc GROUP BY node
 """,
@@ -2284,34 +2498,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_leakage_safe_split",
-    oracle=f"""WITH RECURSIVE
-{_MINHASH_CTES},
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM lsh_pairs
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM lsh_pairs
-),
-cc(node, label) AS (
-    SELECT a, a FROM edges
-    UNION
-    SELECT e.b, cc.label FROM cc JOIN edges e ON e.a = cc.node
-),
+    oracle=f"""{_MINHASH_CC},
 comp AS (SELECT node AS doc_id, min(label) AS component
          FROM cc GROUP BY node),
 assign AS (
     SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster_id
     FROM documents d LEFT JOIN comp c USING (doc_id)
 )
-SELECT doc_id, cluster_id,
-       CASE WHEN b < 80 THEN 'train'
-            WHEN b < 90 THEN 'val'
-            ELSE 'test' END AS split
-FROM (
-    SELECT doc_id, cluster_id,
-           ('0x' || substr(md5('split-' || CAST(cluster_id AS VARCHAR)),
-                           1, 8))::BIGINT % 100 AS b
-    FROM assign
-) t
+SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
+FROM assign
 """,
     tags=("curation", "split", "dedup", "leakage", "llm-pipeline"),
     bench=True,
@@ -2338,164 +2533,9 @@ def curation_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return subdoc.leakage_safe_split(docs, comp)
 
 
-def _split_case(expr: str) -> str:
-    """DuckDB replay of splitting.split_of_cluster's bucket arithmetic."""
-    b = f"('0x' || substr(md5('split-' || CAST({expr} AS VARCHAR)), 1, 8))::BIGINT % 100"
-    return (
-        f"CASE WHEN {b} < 80 THEN 'train' "
-        f"WHEN {b} < 90 THEN 'val' ELSE 'test' END"
-    )
-
-
-# Incremental-split oracle: ONE set of per-doc band-hash fragments
-# (identical per-doc arithmetic to _MINHASH_CTES / the incremental
-# oracle) feeds BOTH derivations — the index-side LSH+CC (census and
-# salting over index docs only, exactly minhash_lsh_pairs(index_docs))
-# and the batch-restricted unsalted incremental candidates — then the
-# batch-graph CC, anchor resolution and bucket arithmetic replay the
-# operator's label rules verbatim.
-_INCR_SPLIT_ORACLE = f"""WITH RECURSIVE {_SHINGLE_CTE.strip()},
-hs AS (
-    SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, unnest(sh) AS s FROM doc_sh) u
-),
-pm AS (
-    SELECT doc_id,
-           {_perm_min_cols}
-    FROM hs GROUP BY doc_id
-),
-band_structs AS (
-    SELECT doc_id, unnest([
-        {_band_cells}
-    ]) AS u
-    FROM pm
-),
-band_hashes AS (
-    SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
-),
-ibh AS (SELECT doc_id, band, bh FROM band_hashes WHERE doc_id % 10 < 8),
-ibsz AS (SELECT band, bh, count(*) AS bsz FROM ibh GROUP BY band, bh),
-isalted AS (
-    SELECT h.doc_id, h.band, h.bh,
-           CASE WHEN z.bsz > 512
-                THEN ('0x' || substr(md5(h.doc_id || ':' || h.band), 1, 8))::BIGINT
-                     % CAST(ceil(z.bsz / 128.0) AS BIGINT)
-                ELSE 0 END AS salt
-    FROM ibh h JOIN ibsz z USING (band, bh)
-),
-icand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM isalted a JOIN isalted b
-      ON a.band = b.band AND a.bh = b.bh AND a.salt = b.salt
-     AND a.doc_id < b.doc_id
-),
-ilsh AS (
-    SELECT doc_a, doc_b FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM icand c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-iedges AS (
-    SELECT doc_a AS a, doc_b AS b FROM ilsh
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM ilsh
-),
-icc(node, label) AS (
-    SELECT a, a FROM iedges
-    UNION
-    SELECT e.b, icc.label FROM icc JOIN iedges e ON e.a = icc.node
-),
-icomp AS (SELECT node AS doc_id, min(label) AS cluster_id
-          FROM icc GROUP BY node),
-nk AS (
-    SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 >= 8
-),
-tb AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk USING (band, bh)
-),
-cand2 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb a JOIN tb b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 >= 8 OR b.doc_id % 10 >= 8)
-),
-ipairs AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 >= 8 AND doc_b % 10 >= 8 THEN 'batch_batch'
-                ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand2 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges AS (
-    SELECT doc_a AS a, doc_b AS b FROM ipairs WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM ipairs WHERE link_type = 'batch_batch'
-),
-bcc(node, label) AS (
-    SELECT a, a FROM bedges
-    UNION
-    SELECT e.b, bcc.label FROM bcc JOIN bedges e ON e.a = bcc.node
-),
-bcomp0 AS (SELECT node, min(label) AS comp FROM bcc GROUP BY node),
-bcomp AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) b
-    LEFT JOIN bcomp0 c ON c.node = b.doc_id
-),
-anchors AS (
-    SELECT CASE WHEN doc_a % 10 >= 8 THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 >= 8 THEN doc_b ELSE doc_a END AS idoc
-    FROM ipairs WHERE link_type = 'batch_index'
-),
-anch AS (
-    SELECT a.bdoc, coalesce(ic.cluster_id, a.idoc) AS anchor_cluster
-    FROM anchors a LEFT JOIN icomp ic ON ic.doc_id = a.idoc
-),
-anch2 AS (
-    SELECT bdoc, anchor_cluster,
-           {_split_case("anchor_cluster")} AS anchor_split
-    FROM anch
-),
-comp_agg AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp bc JOIN anch2 a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-index_out AS (
-    SELECT d.doc_id, coalesce(ic.cluster_id, d.doc_id) AS cluster_id
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 < 8) d
-    LEFT JOIN icomp ic USING (doc_id)
-)
-SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
-FROM index_out
-UNION ALL
-SELECT bc.doc_id,
-       coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-       CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-            WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-            ELSE 'quarantine' END AS split
-FROM bcomp bc LEFT JOIN comp_agg ca USING (bcomp)
-"""
-
-
 @register(
     "curation_incremental_split",
-    oracle=_INCR_SPLIT_ORACLE,
+    oracle=_split_oracle(8),
     tags=("curation", "split", "dedup", "leakage", "incremental",
           "persisted", "llm-pipeline"),
     bench=True,
@@ -2543,7 +2583,7 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_incremental_split_indexed",
-    oracle=_INCR_SPLIT_ORACLE,
+    oracle=_split_oracle(8),
     tags=("curation", "split", "dedup", "leakage", "incremental",
           "persisted", "llm-pipeline"),
     bench=True,
@@ -2585,236 +2625,9 @@ def curation_incremental_split_indexed(
     )
 
 
-# Fold-maintenance oracle (VERDICT r10 next-round #3): three corpus
-# generations — index (doc_id%10<6) built once, batch1 (%10 in 6,7)
-# FOLDED into the persisted clusters+bands (operators/splitting.py::
-# fold_batch_into_cluster_table — pure append, no rebuild), batch2
-# (%10>=8) assigned against the FOLDED table, so batch2 candidates
-# include batch2×batch1 links through the appended band rows.  One
-# band-hash derivation feeds all three stages; the folded table's
-# read-side semantics (pruned default rows self-cluster and re-derive
-# their bucket; stored quarantine splits are authoritative) replay as
-# coalesce fallbacks.  Labels stay cluster-stable across BOTH ingests.
-_FOLD_SPLIT_ORACLE = f"""WITH RECURSIVE {_SHINGLE_CTE.strip()},
-hs AS (
-    SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, unnest(sh) AS s FROM doc_sh) u
-),
-pm AS (
-    SELECT doc_id,
-           {_perm_min_cols}
-    FROM hs GROUP BY doc_id
-),
-band_structs AS (
-    SELECT doc_id, unnest([
-        {_band_cells}
-    ]) AS u
-    FROM pm
-),
-band_hashes AS (
-    SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
-),
-ibh AS (SELECT doc_id, band, bh FROM band_hashes WHERE doc_id % 10 < 6),
-ibsz AS (SELECT band, bh, count(*) AS bsz FROM ibh GROUP BY band, bh),
-isalted AS (
-    SELECT h.doc_id, h.band, h.bh,
-           CASE WHEN z.bsz > 512
-                THEN ('0x' || substr(md5(h.doc_id || ':' || h.band), 1, 8))::BIGINT
-                     % CAST(ceil(z.bsz / 128.0) AS BIGINT)
-                ELSE 0 END AS salt
-    FROM ibh h JOIN ibsz z USING (band, bh)
-),
-icand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM isalted a JOIN isalted b
-      ON a.band = b.band AND a.bh = b.bh AND a.salt = b.salt
-     AND a.doc_id < b.doc_id
-),
-ilsh AS (
-    SELECT doc_a, doc_b FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM icand c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-iedges AS (
-    SELECT doc_a AS a, doc_b AS b FROM ilsh
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM ilsh
-),
-icc(node, label) AS (
-    SELECT a, a FROM iedges
-    UNION
-    SELECT e.b, icc.label FROM icc JOIN iedges e ON e.a = icc.node
-),
-icomp AS (SELECT node AS doc_id, min(label) AS cluster_id
-          FROM icc GROUP BY node),
-nk1 AS (
-    SELECT DISTINCT band, bh FROM band_hashes
-    WHERE doc_id % 10 IN (6, 7)
-),
-tb1 AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk1 USING (band, bh)
-    WHERE h.doc_id % 10 < 8
-),
-cand1 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb1 a JOIN tb1 b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 IN (6, 7) OR b.doc_id % 10 IN (6, 7))
-),
-pairs1 AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 IN (6, 7) AND doc_b % 10 IN (6, 7)
-                THEN 'batch_batch' ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand1 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges1 AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs1 WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM pairs1 WHERE link_type = 'batch_batch'
-),
-bcc1(node, label) AS (
-    SELECT a, a FROM bedges1
-    UNION
-    SELECT e.b, bcc1.label FROM bcc1 JOIN bedges1 e ON e.a = bcc1.node
-),
-bcomp01 AS (SELECT node, min(label) AS comp FROM bcc1 GROUP BY node),
-bcomp1 AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 IN (6, 7)) b
-    LEFT JOIN bcomp01 c ON c.node = b.doc_id
-),
-anchors1 AS (
-    SELECT CASE WHEN doc_a % 10 IN (6, 7) THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 IN (6, 7) THEN doc_b ELSE doc_a END AS idoc
-    FROM pairs1 WHERE link_type = 'batch_index'
-),
-anch1 AS (
-    SELECT a.bdoc, coalesce(ic.cluster_id, a.idoc) AS anchor_cluster
-    FROM anchors1 a LEFT JOIN icomp ic ON ic.doc_id = a.idoc
-),
-anch1s AS (
-    SELECT bdoc, anchor_cluster,
-           {_split_case("anchor_cluster")} AS anchor_split
-    FROM anch1
-),
-comp_agg1 AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp1 bc JOIN anch1s a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-b1_assign AS (
-    SELECT bc.doc_id,
-           coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-           CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-                WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-                ELSE 'quarantine' END AS split
-    FROM bcomp1 bc LEFT JOIN comp_agg1 ca USING (bcomp)
-),
-folded AS (
-    SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
-    FROM icomp
-    UNION ALL
-    SELECT doc_id, cluster_id, split FROM b1_assign
-),
-nk2 AS (
-    SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 >= 8
-),
-tb2 AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk2 USING (band, bh)
-),
-cand2 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb2 a JOIN tb2 b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 >= 8 OR b.doc_id % 10 >= 8)
-),
-pairs2 AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 >= 8 AND doc_b % 10 >= 8 THEN 'batch_batch'
-                ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand2 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges2 AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs2 WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM pairs2 WHERE link_type = 'batch_batch'
-),
-bcc2(node, label) AS (
-    SELECT a, a FROM bedges2
-    UNION
-    SELECT e.b, bcc2.label FROM bcc2 JOIN bedges2 e ON e.a = bcc2.node
-),
-bcomp02 AS (SELECT node, min(label) AS comp FROM bcc2 GROUP BY node),
-bcomp2 AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) b
-    LEFT JOIN bcomp02 c ON c.node = b.doc_id
-),
-anchors2 AS (
-    SELECT CASE WHEN doc_a % 10 >= 8 THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 >= 8 THEN doc_b ELSE doc_a END AS idoc
-    FROM pairs2 WHERE link_type = 'batch_index'
-),
-anch2 AS (
-    SELECT a.bdoc,
-           coalesce(f.cluster_id, a.idoc) AS anchor_cluster,
-           coalesce(f.split, {_split_case("a.idoc")}) AS anchor_split
-    FROM anchors2 a LEFT JOIN folded f ON f.doc_id = a.idoc
-),
-comp_agg2 AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp2 bc JOIN anch2 a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-index_out AS (
-    SELECT d.doc_id,
-           coalesce(f.cluster_id, d.doc_id) AS cluster_id,
-           coalesce(f.split, {_split_case("d.doc_id")}) AS split
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 < 8) d
-    LEFT JOIN folded f USING (doc_id)
-)
-SELECT doc_id, cluster_id, split FROM index_out
-UNION ALL
-SELECT bc.doc_id,
-       coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-       CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-            WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-            ELSE 'quarantine' END AS split
-FROM bcomp2 bc LEFT JOIN comp_agg2 ca USING (bcomp)
-"""
-
-
 @register(
     "curation_cluster_table_update",
-    oracle=_FOLD_SPLIT_ORACLE,
+    oracle=_split_oracle(6, 8),
     tags=("curation", "split", "dedup", "leakage", "incremental",
           "persisted", "maintenance", "llm-pipeline"),
     bench=True,
@@ -2856,311 +2669,9 @@ def curation_cluster_table_update(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# Steady-state lifecycle oracle (VERDICT r11 next-round #2): THREE
-# corpus generations fold through the persisted table — index CC, b1
-# assigned-then-folded, b2 assigned-then-folded against the ONCE-folded
-# state, then b3 assigned against the TWICE-folded state.  Compaction
-# between fold2 and the b3 assignment is bit-identical by contract and
-# therefore invisible to the oracle.  Each generation replays the
-# operator's label rules verbatim; each fold's candidate generation
-# sees exactly the corpus visible at its ingest time (tb1 < 6,
-# tb2 < 8, tb3 unrestricted).
-_LIFECYCLE_SPLIT_ORACLE = f"""WITH RECURSIVE {_SHINGLE_CTE.strip()},
-hs AS (
-    SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, unnest(sh) AS s FROM doc_sh) u
-),
-pm AS (
-    SELECT doc_id,
-           {_perm_min_cols}
-    FROM hs GROUP BY doc_id
-),
-band_structs AS (
-    SELECT doc_id, unnest([
-        {_band_cells}
-    ]) AS u
-    FROM pm
-),
-band_hashes AS (
-    SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
-),
-ibh AS (SELECT doc_id, band, bh FROM band_hashes WHERE doc_id % 10 < 4),
-ibsz AS (SELECT band, bh, count(*) AS bsz FROM ibh GROUP BY band, bh),
-isalted AS (
-    SELECT h.doc_id, h.band, h.bh,
-           CASE WHEN z.bsz > 512
-                THEN ('0x' || substr(md5(h.doc_id || ':' || h.band), 1, 8))::BIGINT
-                     % CAST(ceil(z.bsz / 128.0) AS BIGINT)
-                ELSE 0 END AS salt
-    FROM ibh h JOIN ibsz z USING (band, bh)
-),
-icand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM isalted a JOIN isalted b
-      ON a.band = b.band AND a.bh = b.bh AND a.salt = b.salt
-     AND a.doc_id < b.doc_id
-),
-ilsh AS (
-    SELECT doc_a, doc_b FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM icand c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-iedges AS (
-    SELECT doc_a AS a, doc_b AS b FROM ilsh
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM ilsh
-),
-icc(node, label) AS (
-    SELECT a, a FROM iedges
-    UNION
-    SELECT e.b, icc.label FROM icc JOIN iedges e ON e.a = icc.node
-),
-icomp AS (SELECT node AS doc_id, min(label) AS cluster_id
-          FROM icc GROUP BY node),
-nk1 AS (
-    SELECT DISTINCT band, bh FROM band_hashes
-    WHERE doc_id % 10 IN (4, 5)
-),
-tb1 AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk1 USING (band, bh)
-    WHERE h.doc_id % 10 < 6
-),
-cand1 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb1 a JOIN tb1 b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 IN (4, 5) OR b.doc_id % 10 IN (4, 5))
-),
-pairs1 AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 IN (4, 5) AND doc_b % 10 IN (4, 5)
-                THEN 'batch_batch' ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand1 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges1 AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs1 WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM pairs1 WHERE link_type = 'batch_batch'
-),
-bcc1(node, label) AS (
-    SELECT a, a FROM bedges1
-    UNION
-    SELECT e.b, bcc1.label FROM bcc1 JOIN bedges1 e ON e.a = bcc1.node
-),
-bcomp01 AS (SELECT node, min(label) AS comp FROM bcc1 GROUP BY node),
-bcomp1 AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 IN (4, 5)) b
-    LEFT JOIN bcomp01 c ON c.node = b.doc_id
-),
-anchors1 AS (
-    SELECT CASE WHEN doc_a % 10 IN (4, 5) THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 IN (4, 5) THEN doc_b ELSE doc_a END AS idoc
-    FROM pairs1 WHERE link_type = 'batch_index'
-),
-anch1 AS (
-    SELECT a.bdoc, coalesce(ic.cluster_id, a.idoc) AS anchor_cluster
-    FROM anchors1 a LEFT JOIN icomp ic ON ic.doc_id = a.idoc
-),
-anch1s AS (
-    SELECT bdoc, anchor_cluster,
-           {_split_case("anchor_cluster")} AS anchor_split
-    FROM anch1
-),
-comp_agg1 AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp1 bc JOIN anch1s a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-b1_assign AS (
-    SELECT bc.doc_id,
-           coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-           CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-                WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-                ELSE 'quarantine' END AS split
-    FROM bcomp1 bc LEFT JOIN comp_agg1 ca USING (bcomp)
-),
-folded1 AS (
-    SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
-    FROM icomp
-    UNION ALL
-    SELECT doc_id, cluster_id, split FROM b1_assign
-),
-nk2 AS (
-    SELECT DISTINCT band, bh FROM band_hashes
-    WHERE doc_id % 10 IN (6, 7)
-),
-tb2 AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk2 USING (band, bh)
-    WHERE h.doc_id % 10 < 8
-),
-cand2 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb2 a JOIN tb2 b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 IN (6, 7) OR b.doc_id % 10 IN (6, 7))
-),
-pairs2 AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 IN (6, 7) AND doc_b % 10 IN (6, 7)
-                THEN 'batch_batch' ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand2 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges2 AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs2 WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM pairs2 WHERE link_type = 'batch_batch'
-),
-bcc2(node, label) AS (
-    SELECT a, a FROM bedges2
-    UNION
-    SELECT e.b, bcc2.label FROM bcc2 JOIN bedges2 e ON e.a = bcc2.node
-),
-bcomp02 AS (SELECT node, min(label) AS comp FROM bcc2 GROUP BY node),
-bcomp2 AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 IN (6, 7)) b
-    LEFT JOIN bcomp02 c ON c.node = b.doc_id
-),
-anchors2 AS (
-    SELECT CASE WHEN doc_a % 10 IN (6, 7) THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 IN (6, 7) THEN doc_b ELSE doc_a END AS idoc
-    FROM pairs2 WHERE link_type = 'batch_index'
-),
-anch2 AS (
-    SELECT a.bdoc,
-           coalesce(f.cluster_id, a.idoc) AS anchor_cluster,
-           coalesce(f.split, {_split_case("a.idoc")}) AS anchor_split
-    FROM anchors2 a LEFT JOIN folded1 f ON f.doc_id = a.idoc
-),
-comp_agg2 AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp2 bc JOIN anch2 a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-b2_assign AS (
-    SELECT bc.doc_id,
-           coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-           CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-                WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-                ELSE 'quarantine' END AS split
-    FROM bcomp2 bc LEFT JOIN comp_agg2 ca USING (bcomp)
-),
-folded2 AS (
-    SELECT doc_id, cluster_id, split FROM folded1
-    UNION ALL
-    SELECT doc_id, cluster_id, split FROM b2_assign
-),
-nk3 AS (
-    SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 >= 8
-),
-tb3 AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk3 USING (band, bh)
-),
-cand3 AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb3 a JOIN tb3 b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 >= 8 OR b.doc_id % 10 >= 8)
-),
-pairs3 AS (
-    SELECT doc_a, doc_b,
-           CASE WHEN doc_a % 10 >= 8 AND doc_b % 10 >= 8 THEN 'batch_batch'
-                ELSE 'batch_index' END AS link_type
-    FROM (
-        SELECT c.doc_a, c.doc_b,
-               round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-                   AS jaccard
-        FROM cand3 c
-        JOIN doc_sh sa ON sa.doc_id = c.doc_a
-        JOIN doc_sh sb ON sb.doc_id = c.doc_b
-    ) v WHERE jaccard >= 0.8
-),
-bedges3 AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs3 WHERE link_type = 'batch_batch'
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM pairs3 WHERE link_type = 'batch_batch'
-),
-bcc3(node, label) AS (
-    SELECT a, a FROM bedges3
-    UNION
-    SELECT e.b, bcc3.label FROM bcc3 JOIN bedges3 e ON e.a = bcc3.node
-),
-bcomp03 AS (SELECT node, min(label) AS comp FROM bcc3 GROUP BY node),
-bcomp3 AS (
-    SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 >= 8) b
-    LEFT JOIN bcomp03 c ON c.node = b.doc_id
-),
-anchors3 AS (
-    SELECT CASE WHEN doc_a % 10 >= 8 THEN doc_a ELSE doc_b END AS bdoc,
-           CASE WHEN doc_a % 10 >= 8 THEN doc_b ELSE doc_a END AS idoc
-    FROM pairs3 WHERE link_type = 'batch_index'
-),
-anch3 AS (
-    SELECT a.bdoc,
-           coalesce(f.cluster_id, a.idoc) AS anchor_cluster,
-           coalesce(f.split, {_split_case("a.idoc")}) AS anchor_split
-    FROM anchors3 a LEFT JOIN folded2 f ON f.doc_id = a.idoc
-),
-comp_agg3 AS (
-    SELECT bc.bcomp,
-           min(a.anchor_cluster) AS anc_min,
-           count(DISTINCT a.anchor_split) AS n_anchor_splits,
-           min(a.anchor_split) AS anc_split
-    FROM bcomp3 bc JOIN anch3 a ON a.bdoc = bc.doc_id
-    GROUP BY bc.bcomp
-),
-index_out AS (
-    SELECT d.doc_id,
-           coalesce(f.cluster_id, d.doc_id) AS cluster_id,
-           coalesce(f.split, {_split_case("d.doc_id")}) AS split
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 < 8) d
-    LEFT JOIN folded2 f USING (doc_id)
-)
-SELECT doc_id, cluster_id, split FROM index_out
-UNION ALL
-SELECT bc.doc_id,
-       coalesce(ca.anc_min, bc.bcomp) AS cluster_id,
-       CASE WHEN ca.anc_min IS NULL THEN {_split_case("bc.bcomp")}
-            WHEN ca.n_anchor_splits = 1 THEN ca.anc_split
-            ELSE 'quarantine' END AS split
-FROM bcomp3 bc LEFT JOIN comp_agg3 ca USING (bcomp)
-"""
-
-
 @register(
     "curation_cluster_table_lifecycle",
-    oracle=_LIFECYCLE_SPLIT_ORACLE,
+    oracle=_split_oracle(4, 6, 8),
     tags=("curation", "split", "dedup", "leakage", "incremental",
           "persisted", "maintenance", "lifecycle", "llm-pipeline"),
     bench=True,
@@ -3450,21 +2961,17 @@ def text_lm_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-trick vocabulary, sparse kept-gram tables, context totals
 # derived from them, deterministic backoff weights, integer micro-nat
 # NLLs — regenerates closed-form from range() + md5 arithmetic, so
-# every rung of the coalesce ladder replays exactly.
-_BACKOFF_LM_ORACLE = r"""WITH
-dt AS (
+# every rung of the coalesce ladder replays exactly.  Both vocabulary
+# tiers share ``dt`` (per-doc lowered tokens) and the model CTEs, which
+# read per-doc wid lists ``wt`` (doc_id, ws) and end in the per-gram
+# ladder ``scored``; a tier defines only its token -> wid map.
+_BACKOFF_DT_CTE = r"""dt AS (
     SELECT doc_id,
            list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
                        x -> x <> '') AS ltoks
     FROM documents
-),
-wt AS (
-    SELECT doc_id,
-           list_transform(ltoks,
-               t -> ('0x' || substr(md5(t), 1, 8))::BIGINT % 128) AS ws
-    FROM dt
-),
-g AS (
+)"""
+_BACKOFF_MODEL_CTES = r"""g AS (
     SELECT doc_id, gg[1] AS a, gg[2] AS b, gg[3] AS c
     FROM (
         SELECT doc_id,
@@ -3553,7 +3060,17 @@ scored AS (
     LEFT JOIN tri t ON t.a = g.a AND t.b = g.b AND t.c = g.c
     JOIN bo3 b3 ON b3.a = g.a AND b3.b = g.b
     JOIN nll2bo n2 ON n2.b = g.b AND n2.c = g.c
-)
+)"""
+
+_BACKOFF_LM_ORACLE = rf"""WITH
+{_BACKOFF_DT_CTE},
+wt AS (
+    SELECT doc_id,
+           list_transform(ltoks,
+               t -> ('0x' || substr(md5(t), 1, 8))::BIGINT % 128) AS ws
+    FROM dt
+),
+{_BACKOFF_MODEL_CTES}
 SELECT doc_id,
        CAST(count(*) AS INTEGER) AS n_grams,
        CAST(sum(bo) AS INTEGER) AS n_bigram_backoffs,
@@ -3603,13 +3120,8 @@ def text_lm_apply_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # model and ladder, but wids come from a corpus-derived top-127
 # vocabulary (frequency rank, ties by token) with <unk> = 127, so the
 # OOV rate is real and measurable instead of hash-collision-closed.
-_BACKOFF_VOCAB_ORACLE = r"""WITH
-dt AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS ltoks
-    FROM documents
-),
+_BACKOFF_VOCAB_ORACLE = rf"""WITH
+{_BACKOFF_DT_CTE},
 tokc AS (
     SELECT token, count(*) AS cnt
     FROM (SELECT unnest(ltoks) AS token FROM dt) u
@@ -3638,96 +3150,7 @@ unkc AS (
                AS n_unk
     FROM mapped GROUP BY doc_id
 ),
-g AS (
-    SELECT doc_id, gg[1] AS a, gg[2] AS b, gg[3] AS c
-    FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(3, len(ws) + 1),
-                      i -> [ws[i-2], ws[i-1], ws[i]])) AS gg
-        FROM wt WHERE len(ws) >= 3
-    ) u
-),
-tri0 AS (
-    SELECT (id // 16384) % 128 AS a, (id // 128) % 128 AS b,
-           id % 128 AS c
-    FROM range(2097152) t(id)
-),
-tri1 AS (
-    SELECT a, b, c,
-           ('0x' || substr(md5('c3-' || a || '_' || b || '_' || c), 1, 8))::BIGINT
-               % 9000 + 1000 AS cnt
-    FROM tri0
-    WHERE ('0x' || substr(md5('t3-' || a || '_' || b || '_' || c), 1, 8))::BIGINT
-              % 10 < 1
-),
-ctx3 AS (SELECT a, b, sum(cnt) AS ctx FROM tri1 GROUP BY a, b),
-tri AS (
-    SELECT t.a, t.b, t.c,
-           CAST(floor(ln(CAST(x.ctx AS DOUBLE) / t.cnt) * 1000000 + 0.5)
-                AS BIGINT) AS nll3_u
-    FROM tri1 t JOIN ctx3 x USING (a, b)
-),
-pairs AS (
-    SELECT (id // 128) % 128 AS b, id % 128 AS c FROM range(16384) t(id)
-),
-bo3 AS (
-    SELECT b AS a, c AS b,
-           CAST(floor(ln(1000.0 /
-                (('0x' || substr(md5('b3-' || b || '_' || c), 1, 8))::BIGINT
-                 % 500 + 250)) * 1000000 + 0.5) AS BIGINT) AS bo3_u
-    FROM pairs
-),
-bi1 AS (
-    SELECT b, c,
-           ('0x' || substr(md5('c2-' || b || '_' || c), 1, 8))::BIGINT
-               % 9000 + 1000 AS cnt
-    FROM pairs
-    WHERE ('0x' || substr(md5('t2-' || b || '_' || c), 1, 8))::BIGINT % 10 < 4
-),
-ctx2 AS (SELECT b, sum(cnt) AS ctx FROM bi1 GROUP BY b),
-bi AS (
-    SELECT t.b, t.c,
-           CAST(floor(ln(CAST(x.ctx AS DOUBLE) / t.cnt) * 1000000 + 0.5)
-                AS BIGINT) AS nll2_u
-    FROM bi1 t JOIN ctx2 x USING (b)
-),
-uni0 AS (
-    SELECT id AS c,
-           ('0x' || substr(md5('c1-' || id), 1, 8))::BIGINT % 9000 + 1000 AS cnt
-    FROM range(128) t(id)
-),
-uni AS (
-    SELECT c,
-           CAST(floor(ln(CAST((SELECT sum(cnt) FROM uni0) AS DOUBLE) / cnt)
-                      * 1000000 + 0.5) AS BIGINT) AS nll1_u
-    FROM uni0
-),
-bo2 AS (
-    SELECT id AS b,
-           CAST(floor(ln(1000.0 /
-                (('0x' || substr(md5('b2-' || id), 1, 8))::BIGINT
-                 % 500 + 250)) * 1000000 + 0.5) AS BIGINT) AS bo2_u
-    FROM range(128) t(id)
-),
-nll2bo AS (
-    SELECT p.b, p.c,
-           coalesce(bi.nll2_u, bo2.bo2_u + uni.nll1_u) AS nll2bo_u,
-           bi.nll2_u IS NOT NULL AS has_bi
-    FROM pairs p
-    LEFT JOIN bi ON bi.b = p.b AND bi.c = p.c
-    JOIN bo2 ON bo2.b = p.b
-    JOIN uni ON uni.c = p.c
-),
-scored AS (
-    SELECT g.doc_id,
-           coalesce(t.nll3_u, b3.bo3_u + n2.nll2bo_u) AS nll_u,
-           CASE WHEN t.nll3_u IS NULL THEN 1 ELSE 0 END AS bo,
-           CASE WHEN t.nll3_u IS NULL AND NOT n2.has_bi THEN 1 ELSE 0 END AS bo1
-    FROM g
-    LEFT JOIN tri t ON t.a = g.a AND t.b = g.b AND t.c = g.c
-    JOIN bo3 b3 ON b3.a = g.a AND b3.b = g.b
-    JOIN nll2bo n2 ON n2.b = g.b AND n2.c = g.c
-),
+{_BACKOFF_MODEL_CTES},
 agg AS (
     SELECT doc_id,
            CAST(count(*) AS INTEGER) AS n_grams,
@@ -3983,21 +3406,6 @@ def ev_signup_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# LIBRARY SURFACE, deliberately unregistered (VERDICT r9 next-round
-# #8, oracle hygiene): the GROUPED_AGG pandas UDAF puts Python in the
-# plan by design, so it stays out of the oracle set (no-Python-in-
-# oracle-paths invariant) and a registered form could only earn a
-# rows-only driver row. Its REGISTERED form is
-# udaf_trimmed_mean_vs_exact below, which runs the live UDAF and
-# value-pins |udaf - exact| <= 1e-4 against the DuckDB-replayed pure-
-# JVM two-pass twin — strictly stronger. The UDAF itself stays pinned
-# against DuckDB in tests/test_udafs.py.
-def udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.udafs import trimmed_mean_by_type
-
-    return trimmed_mean_by_type(catalog.load_table(spark, sf_dir, "events"))
-
-
 @register(
     "udaf_trimmed_mean_vs_exact",
     oracle="""WITH b AS (
@@ -4099,44 +3507,34 @@ _S2_ROWS = [
     [5.0, " Musanze", "MAN", 12.0, "clean slide", None],
     [6.0, "Rubavu ", "F", 64.2, "b/s -", "3.0"],
 ]
-_S2_VALUES_SQL = ",\n        ".join(
-    "("
-    + ", ".join(
-        "NULL" if v is None else ("'" + v + "'" if isinstance(v, str) else str(v))
-        for v in row
+
+
+def _upload_clean_oracle(rows) -> str:
+    """Oracle of an upload's C1-C8 cleaning over the literal ``rows``
+    (row_id, village, gender, age, slide, month)."""
+    values = ",\n        ".join(
+        "("
+        + ", ".join(
+            "NULL" if v is None else ("'" + v + "'" if isinstance(v, str) else str(v))
+            for v in row
+        )
+        + ")"
+        for row in rows
     )
-    + ")"
-    for row in _S2_ROWS
+    return f"""WITH lab(row_id, village_raw, gender_raw, age_raw, slide_raw, month_raw) AS (
+    VALUES
+        {values}
 )
+SELECT CAST(row_id AS INTEGER) AS row_id,
+       coalesce(trim(village_raw), '') AS village,
+{_clean_cols_sql(" " * 7)}
+FROM lab
+"""
 
 
 @register(
     "s2_xlsx_clean_records",
-    oracle=f"""WITH lab(row_id, village_raw, gender_raw, age_raw, slide_raw, month_raw) AS (
-    VALUES
-        {_S2_VALUES_SQL}
-)
-SELECT CAST(row_id AS INTEGER) AS row_id,
-       coalesce(trim(village_raw), '') AS village,
-       CASE WHEN upper(trim(gender_raw)) IN ('M', 'MALE', 'MAN') THEN 'Male'
-            WHEN upper(trim(gender_raw)) IN ('F', 'FEMALE', 'WOMAN') THEN 'Female'
-            ELSE 'Unknown' END AS gender,
-       {_CLEAN_AGE_SQL.strip()} AS age,
-       CASE WHEN ({_CLEAN_AGE_SQL.strip()}) < 5 THEN 'Under 5'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 15 THEN '5-14'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 25 THEN '15-24'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 45 THEN '25-44'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 65 THEN '45-64'
-            ELSE '65+' END AS age_group,
-       CASE WHEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER) BETWEEN 1 AND 12
-            THEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER)
-            WHEN upper(trim(month_raw)) IN ('MARCH', 'MAR') THEN 3
-            ELSE NULL END AS month,
-       {_TEST_RESULT_SQL.strip()} AS test_result,
-       CASE WHEN ({_TEST_RESULT_SQL.strip()}) = 'Positive' THEN 1 ELSE 0 END
-           AS is_positive
-FROM lab
-""",
+    oracle=_upload_clean_oracle(_S2_ROWS),
     tags=("S2", "C9", "ingest", "end-to-end"),
     doc="S2 end-to-end: ECMA-376 workbook bytes -> xlsx parse -> C1-C8 "
     "cleaning, oracle over the same literals "
@@ -4186,44 +3584,9 @@ def _s1_csv_bytes(rows, encoding: str, bom: bytes = b"") -> bytes:
     return bom + ("\n".join(lines) + "\n").encode(encoding)
 
 
-_S1_VALUES_SQL = ",\n        ".join(
-    "("
-    + ", ".join(
-        "NULL" if v is None else ("'" + v + "'" if isinstance(v, str) else str(v))
-        for v in row
-    )
-    + ")"
-    for row in _S1_ROWS
-)
-
-
 @register(
     "s1_csv_clean_records",
-    oracle=f"""WITH lab(row_id, village_raw, gender_raw, age_raw, slide_raw, month_raw) AS (
-    VALUES
-        {_S1_VALUES_SQL}
-)
-SELECT CAST(row_id AS INTEGER) AS row_id,
-       coalesce(trim(village_raw), '') AS village,
-       CASE WHEN upper(trim(gender_raw)) IN ('M', 'MALE', 'MAN') THEN 'Male'
-            WHEN upper(trim(gender_raw)) IN ('F', 'FEMALE', 'WOMAN') THEN 'Female'
-            ELSE 'Unknown' END AS gender,
-       {_CLEAN_AGE_SQL.strip()} AS age,
-       CASE WHEN ({_CLEAN_AGE_SQL.strip()}) < 5 THEN 'Under 5'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 15 THEN '5-14'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 25 THEN '15-24'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 45 THEN '25-44'
-            WHEN ({_CLEAN_AGE_SQL.strip()}) < 65 THEN '45-64'
-            ELSE '65+' END AS age_group,
-       CASE WHEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER) BETWEEN 1 AND 12
-            THEN CAST(trunc(try_cast(month_raw AS DOUBLE)) AS INTEGER)
-            WHEN upper(trim(month_raw)) IN ('MARCH', 'MAR') THEN 3
-            ELSE NULL END AS month,
-       {_TEST_RESULT_SQL.strip()} AS test_result,
-       CASE WHEN ({_TEST_RESULT_SQL.strip()}) = 'Positive' THEN 1 ELSE 0 END
-           AS is_positive
-FROM lab
-""",
+    oracle=_upload_clean_oracle(_S1_ROWS),
     tags=("S1", "C9", "ingest", "end-to-end"),
     doc="S1 end-to-end: CSV bytes in two encodings -> sniff_encoding "
     "(latin-1 probe + UTF-8 BOM) -> Spark CSV scan -> C1-C8 cleaning, "
@@ -4280,16 +3643,17 @@ _S3_RING = {
 _S3_COUNTRY = [(0.0, 0.0), (0.0, 50.0), (100.0, 50.0), (100.0, 0.0), (0.0, 0.0)]
 
 
-@register(
-    "s3_shapefile_zonal_stats",
-    oracle="""WITH polys(poly_id, name, x0, y0, x1, y1) AS (
+def _fixture_zonal_oracle(pixel_value: str) -> str:
+    """Zonal stats of the three fixture villages over the 40x40 raster
+    whose cell value is ``pixel_value`` (SQL over i.g, j.g)."""
+    return f"""WITH polys(poly_id, name, x0, y0, x1, y1) AS (
     VALUES (1, 'alpha', 0.0, 0.0, 10.0, 10.0),
            (2, 'beta', 20.0, 20.0, 30.0, 30.0),
            (3, 'gamma', 5.0, 25.0, 9.0, 33.0)
 ),
 pixels AS (
     SELECT i.g + 0.5 AS px, j.g + 0.5 AS py,
-           CAST((i.g * 31 + j.g * 17) % 97 AS DOUBLE) / 3.0 AS pixel_value
+           {pixel_value}
     FROM generate_series(0, 39) i(g) CROSS JOIN generate_series(0, 39) j(g)
 )
 SELECT poly_id, name,
@@ -4299,7 +3663,14 @@ SELECT poly_id, name,
        count(*) AS pixel_count
 FROM pixels JOIN polys ON px >= x0 AND px < x1 AND py >= y0 AND py < y1
 GROUP BY poly_id, name
-""",
+"""
+
+
+@register(
+    "s3_shapefile_zonal_stats",
+    oracle=_fixture_zonal_oracle(
+        "CAST((i.g * 31 + j.g * 17) % 97 AS DOUBLE) / 3.0 AS pixel_value"
+    ),
     tags=("S3", "J6", "geo", "ingest", "end-to-end"),
     doc="S3 end-to-end: zipped shapefile bytes (ESRI spec writer) -> "
     "village-layer heuristic -> .shp/.dbf parse -> WKT bridge -> "
@@ -4330,24 +3701,7 @@ def s3_shapefile_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s4_geotiff_zonal_stats",
-    oracle="""WITH polys(poly_id, name, x0, y0, x1, y1) AS (
-    VALUES (1, 'alpha', 0.0, 0.0, 10.0, 10.0),
-           (2, 'beta', 20.0, 20.0, 30.0, 30.0),
-           (3, 'gamma', 5.0, 25.0, 9.0, 33.0)
-),
-pixels AS (
-    SELECT i.g + 0.5 AS px, j.g + 0.5 AS py,
-           CAST((i.g * 31 + j.g * 17) % 97 AS DOUBLE) / 3.0 AS pixel_value
-    FROM generate_series(0, 39) i(g) CROSS JOIN generate_series(0, 39) j(g)
-)
-SELECT poly_id, name,
-       round(avg(pixel_value), 4) AS mean_value,
-       max(pixel_value) AS max_value,
-       min(pixel_value) AS min_value,
-       count(*) AS pixel_count
-FROM pixels JOIN polys ON px >= x0 AND px < x1 AND py >= y0 AND py < y1
-GROUP BY poly_id, name
-""",
+    oracle=REGISTRY["s3_shapefile_zonal_stats"].oracle,
     tags=("S4", "J6", "geo", "ingest", "end-to-end"),
     doc="S4 end-to-end: uncompressed-GeoTIFF bytes (TIFF 6.0 + OGC "
     "GeoTIFF spec writer) -> strip/affine parse -> pixel rows -> "
@@ -4518,12 +3872,7 @@ SELECT poly_id, name,
        5 AS n_after,
        round(-2.0 * (x1 - x0) * (y1 - y0), 6) AS area2,
        true AS is_valid,
-       'POLYGON ((' ||
-       printf('%.1f %.1f, ', x0, y0) ||
-       printf('%.1f %.1f, ', x1, y0) ||
-       printf('%.1f %.1f, ', x1, y1) ||
-       printf('%.1f %.1f, ', x0, y1) ||
-       printf('%.1f %.1f', x0, y0) || '))' AS wkt
+       {_wkt_ring(" " * 7, "x0, y0", "x1, y0", "x1, y1", "x0, y1")} AS wkt
 FROM polys
 """,
     tags=("C20", "geo", "validity"),
@@ -4609,12 +3958,7 @@ def geo_c21_quantize_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT poly_id, name,
        9 AS n_before,
        5 AS n_after,
-       'POLYGON ((' ||
-       printf('%.1f %.1f, ', x0, y0) ||
-       printf('%.1f %.1f, ', x1, y0) ||
-       printf('%.1f %.1f, ', x1, y1) ||
-       printf('%.1f %.1f, ', x0, y1) ||
-       printf('%.1f %.1f', x0, y0) || '))' AS wkt
+       {_wkt_ring(" " * 7, "x0, y0", "x1, y0", "x1, y1", "x0, y1")} AS wkt
 FROM polys
 """,
     tags=("C21", "geo", "simplify", "mapInPandas"),
@@ -4660,30 +4004,17 @@ def geo_c21_simplify_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 fx AS (
     SELECT poly_id, name, 'bowtie' AS fixture, 0 AS lobe, 2 AS n_lobes,
            1.0 AS area,
-           'POLYGON ((' ||
-           printf('%.1f %.1f, ', x0 + 1, y0 + 1) ||
-           printf('%.1f %.1f, ', x0 + 2, y0 + 2) ||
-           printf('%.1f %.1f, ', x0 + 2, y0) ||
-           printf('%.1f %.1f', x0 + 1, y0 + 1) || '))' AS wkt
+           {_wkt_ring(" " * 11, "x0 + 1, y0 + 1", "x0 + 2, y0 + 2", "x0 + 2, y0")} AS wkt
     FROM polys
     UNION ALL
     SELECT poly_id, name, 'bowtie' AS fixture, 1 AS lobe, 2 AS n_lobes,
            1.0 AS area,
-           'POLYGON ((' ||
-           printf('%.1f %.1f, ', x0, y0) ||
-           printf('%.1f %.1f, ', x0 + 1, y0 + 1) ||
-           printf('%.1f %.1f, ', x0, y0 + 2) ||
-           printf('%.1f %.1f', x0, y0) || '))' AS wkt
+           {_wkt_ring(" " * 11, "x0, y0", "x0 + 1, y0 + 1", "x0, y0 + 2")} AS wkt
     FROM polys
     UNION ALL
     SELECT poly_id, name, 'simple' AS fixture, 0 AS lobe, 1 AS n_lobes,
            1.0 AS area,
-           'POLYGON ((' ||
-           printf('%.1f %.1f, ', x0, y0) ||
-           printf('%.1f %.1f, ', x0 + 1, y0) ||
-           printf('%.1f %.1f, ', x0 + 1, y0 + 1) ||
-           printf('%.1f %.1f, ', x0, y0 + 1) ||
-           printf('%.1f %.1f', x0, y0) || '))' AS wkt
+           {_wkt_ring(" " * 11, "x0, y0", "x0 + 1, y0", "x0 + 1, y0 + 1", "x0, y0 + 1")} AS wkt
     FROM polys
 )
 SELECT poly_id, name, fixture, lobe, n_lobes, area, wkt FROM fx
@@ -4751,30 +4082,24 @@ def geo_c20_untangle_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_C21_BOWTIE = (
+    "x0, y0", "x0 + 10, y0", "x0 + 10, y0 + 12", "x0 + 2, y0 + 12",
+    "x0 + 7, y0 + 10.5", "x0 + 8, y0 + 3", "x0 + 4, y0 + 10",
+)
+
+
 @register(
     "geo_c21_simplify_topo",
     oracle=f"""WITH {_POLY_CTE.strip()},
 fx AS (
     SELECT poly_id, name, 'collapse' AS fixture,
            5 AS n_before, 4 AS n_after, 2 AS repaired,
-           'POLYGON ((' ||
-           printf('%.1f %.1f, ', x0, y0) ||
-           printf('%.1f %.1f, ', x0 + 1, y0) ||
-           printf('%.1f %.1f, ', x0 + 1, y0 + 1) ||
-           printf('%.1f %.1f', x0, y0) || '))' AS wkt
+           {_wkt_ring(" " * 11, "x0, y0", "x0 + 1, y0", "x0 + 1, y0 + 1")} AS wkt
     FROM polys
     UNION ALL
     SELECT poly_id, name, 'bowtie' AS fixture,
            8 AS n_before, 8 AS n_after, 1 AS repaired,
-           'POLYGON ((' ||
-           printf('%.1f %.1f, ', x0, y0) ||
-           printf('%.1f %.1f, ', x0 + 10, y0) ||
-           printf('%.1f %.1f, ', x0 + 10, y0 + 12) ||
-           printf('%.1f %.1f, ', x0 + 2, y0 + 12) ||
-           printf('%.1f %.1f, ', x0 + 7, y0 + 10.5) ||
-           printf('%.1f %.1f, ', x0 + 8, y0 + 3) ||
-           printf('%.1f %.1f, ', x0 + 4, y0 + 10) ||
-           printf('%.1f %.1f', x0, y0) || '))' AS wkt
+           {_wkt_ring(" " * 11, *_C21_BOWTIE)} AS wkt
     FROM polys
 )
 SELECT poly_id, name, fixture, n_before, n_after, repaired, wkt FROM fx
@@ -4851,15 +4176,17 @@ def geo_c21_simplify_topo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_ivf_topk",
-    oracle=f"""WITH {_EMB_CTE.strip()},
-b AS (
+def _ivf_assign_ctes(cent_where: str) -> str:
+    """IVF inverted lists: unit vectors ``b`` (vec_id, label, nv), the
+    seed centroids ``cent`` = the vectors of ``b`` passing
+    ``cent_where``, and each vector's nearest centroid ``assign``
+    (vec_id, label, nv, cid)."""
+    return f"""b AS (
     SELECT vec_id, label,
            list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
     FROM emb
 ),
-cent AS (SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < 8),
+cent AS (SELECT vec_id AS cid, nv AS cv FROM b{cent_where}),
 assign AS (
     SELECT vec_id, label, nv, cid FROM (
         SELECT b.vec_id, b.label, b.nv, cent.cid,
@@ -4869,7 +4196,77 @@ assign AS (
                             cent.cid ASC) AS rn
         FROM b CROSS JOIN cent
     ) t WHERE rn = 1
+)"""
+
+
+def _ivf_members_ctes(nprobe: int) -> str:
+    """The query vector (vec_id 0) as ``q``, its ``nprobe`` nearest
+    centroids and the members of their lists."""
+    return f"""q AS (SELECT nv AS qv FROM b WHERE vec_id = 0),
+probed AS (
+    SELECT cid FROM (
+        SELECT cent.cid, round(list_inner_product(cent.cv, q.qv), 6) AS c_sim
+        FROM cent, q
+    ) s ORDER BY c_sim DESC, cid ASC LIMIT {nprobe}
 ),
+members AS (
+    SELECT a.vec_id, a.label, a.nv FROM assign a JOIN probed USING (cid)
+)"""
+
+
+def _pq_encode_ctes(sub: str, final: str) -> str:
+    """PQ codes of the subvectors ``sub`` (vec_id, s, sv) against the
+    codebook table ``final`` (s, cid, cv) as ``enc``, and the query's
+    integer micro-unit inner-product lookup table ``lut``."""
+    return f"""enc AS (
+    SELECT vec_id, s, cid AS code FROM (
+        SELECT {sub}.vec_id, {sub}.s, c.cid,
+               row_number() OVER (
+                   PARTITION BY {sub}.vec_id, {sub}.s
+                   ORDER BY round(list_inner_product({sub}.sv, {sub}.sv)
+                                  - 2 * list_inner_product({sub}.sv, c.cv)
+                                  + list_inner_product(c.cv, c.cv), 6) ASC,
+                            c.cid ASC) AS rn
+        FROM {sub} JOIN {final} c USING (s)
+    ) t WHERE rn = 1
+),
+qs AS (SELECT s, sv AS qsv FROM {sub} WHERE vec_id = 0),
+lut AS (
+    SELECT c.s, c.cid,
+           CAST(sign(list_inner_product(qs.qsv, c.cv))
+                * floor(abs(list_inner_product(qs.qsv, c.cv)) * 1000000 + 0.5)
+                AS BIGINT) AS ip_u
+    FROM {final} c JOIN qs USING (s)
+)"""
+
+
+def _ivfpq_rerank(rerank: int, k: int) -> str:
+    """ADC-score the probed members' codes, shortlist ``rerank`` and
+    exact-cosine rerank to the top ``k`` (the query's tail SELECT)."""
+    return f"""approx AS (
+    SELECT e.vec_id,
+           round(CAST(sum(l.ip_u) AS DOUBLE) / 1000000.0, 6) AS approx_score
+    FROM enc e
+    JOIN (SELECT vec_id FROM members) mm USING (vec_id)
+    JOIN lut l ON l.s = e.s AND l.cid = e.code
+    WHERE e.vec_id <> 0 GROUP BY e.vec_id
+),
+short AS (
+    SELECT vec_id, approx_score FROM approx
+    ORDER BY approx_score DESC, vec_id ASC LIMIT {rerank}
+)
+SELECT s.vec_id, m.label, s.approx_score,
+       round(list_inner_product(m.nv, q.qv), 6) AS cosine_sim
+FROM short s JOIN members m USING (vec_id), q
+ORDER BY cosine_sim DESC, s.vec_id ASC
+LIMIT {k}
+"""
+
+
+@register(
+    "sim_ivf_topk",
+    oracle=f"""WITH {_EMB_CTE.strip()},
+{_ivf_assign_ctes(" WHERE vec_id < 8")},
 q AS (SELECT nv AS qv FROM assign WHERE vec_id = 0),
 probed AS (
     SELECT cid FROM (
@@ -5501,14 +4898,18 @@ def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_repetition_profile",
-    oracle=r"""WITH d AS (
+# lowered whitespace tokens per doc: d (doc_id, lt)
+_LT_CTE = r"""d AS (
     SELECT doc_id,
            list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
                        x -> x <> '') AS lt
     FROM documents
-),
+)"""
+
+
+@register(
+    "text_repetition_profile",
+    oracle=rf"""WITH {_LT_CTE},
 grams AS (
     SELECT doc_id,
            CASE WHEN len(lt) >= 3 THEN
@@ -5658,12 +5059,15 @@ def sample_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "mm_bmp_decode_stats",
-    oracle="""WITH m AS (
+def _resize_stats_oracle(w_mod: int, h_mod: int, r: str, g: str, b: str) -> str:
+    """Nearest-neighbour resize to max side 8, channel means and the
+    position-weighted fingerprint of the synthetic media whose source
+    pixel (sx, sy) has channels ``r``, ``g``, ``b`` (SQL over sx, sy,
+    media_id); image sides are doc_id % ``w_mod``/``h_mod`` + 2."""
+    return f"""WITH m AS (
   SELECT doc_id AS media_id,
-         doc_id % 13 + 2 AS w, doc_id % 11 + 2 AS h,
-         least(doc_id % 13 + 2, 8) AS ow, least(doc_id % 11 + 2, 8) AS oh
+         doc_id % {w_mod} + 2 AS w, doc_id % {h_mod} + 2 AS h,
+         least(doc_id % {w_mod} + 2, 8) AS ow, least(doc_id % {h_mod} + 2, 8) AS oh
   FROM documents
 ),
 px AS (
@@ -5674,9 +5078,9 @@ px AS (
 ),
 v AS (
   SELECT media_id, w, h, ow, oh, i, j,
-         (sx * 7 + sy * 3 + media_id) % 256 AS r,
-         (sx * 5 + sy * 11 + 2 * media_id) % 256 AS g,
-         (sx * 13 + sy + 3 * media_id) % 256 AS b
+         {r} AS r,
+         {g} AS g,
+         {b} AS b
   FROM px
 )
 SELECT media_id,
@@ -5688,7 +5092,17 @@ SELECT media_id,
        CAST(sum((r + 2 * g + 3 * b) * (1 + i + 2 * j)) AS BIGINT)
            AS fingerprint
 FROM v GROUP BY media_id, w, h, ow, oh
-""",
+"""
+
+
+@register(
+    "mm_bmp_decode_stats",
+    oracle=_resize_stats_oracle(
+        13, 11,
+        "(sx * 7 + sy * 3 + media_id) % 256",
+        "(sx * 5 + sy * 11 + 2 * media_id) % 256",
+        "(sx * 13 + sy + 3 * media_id) % 256",
+    ),
     tags=("multimodal", "image", "decode", "mapInPandas"),
     bench=True,
     doc="REAL image decode end-to-end: per doc a genuine 24-bit BMP "
@@ -5712,35 +5126,12 @@ def mm_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_png_decode_stats",
-    oracle="""WITH m AS (
-  SELECT doc_id AS media_id,
-         doc_id % 12 + 2 AS w, doc_id % 9 + 2 AS h,
-         least(doc_id % 12 + 2, 8) AS ow, least(doc_id % 9 + 2, 8) AS oh
-  FROM documents
-),
-px AS (
-  SELECT media_id, w, h, ow, oh, i.i AS i, j.j AS j,
-         (i.i * w // ow) AS sx, (j.j * h // oh) AS sy
-  FROM m, range(0, 8) i(i), range(0, 8) j(j)
-  WHERE i.i < ow AND j.j < oh
-),
-v AS (
-  SELECT media_id, w, h, ow, oh, i, j,
-         (sx * 11 + sy * 5 + media_id) % 256 AS r,
-         (sx * 3 + sy * 13 + 2 * media_id) % 256 AS g,
-         (sx * 7 + sy * 17 + 3 * media_id) % 256 AS b
-  FROM px
-)
-SELECT media_id,
-       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-       CAST(ow AS INTEGER) AS out_w, CAST(oh AS INTEGER) AS out_h,
-       round(sum(r) * 1.0 / (ow * oh), 6) AS mean_r,
-       round(sum(g) * 1.0 / (ow * oh), 6) AS mean_g,
-       round(sum(b) * 1.0 / (ow * oh), 6) AS mean_b,
-       CAST(sum((r + 2 * g + 3 * b) * (1 + i + 2 * j)) AS BIGINT)
-           AS fingerprint
-FROM v GROUP BY media_id, w, h, ow, oh
-""",
+    oracle=_resize_stats_oracle(
+        12, 9,
+        "(sx * 11 + sy * 5 + media_id) % 256",
+        "(sx * 3 + sy * 13 + 2 * media_id) % 256",
+        "(sx * 7 + sy * 17 + 3 * media_id) % 256",
+    ),
     tags=("multimodal", "image", "decode", "png", "mapInPandas"),
     bench=True,
     doc="REAL PNG decode end-to-end (pure-stdlib codec sources/png.py "
@@ -6429,14 +5820,10 @@ def agg_hotkey_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "dedup_decontaminate",
-    oracle=r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
+# Exact decontamination semantics, shared by dedup_decontaminate and
+# its semijoin and Bloom tiers: a tier changes only the physical plan,
+# never the answer.
+_DECON_EXACT_ORACLE = rf"""WITH {_LT_CTE},
 g AS (
     SELECT doc_id,
            CASE WHEN len(lt) >= 8 THEN
@@ -6466,7 +5853,12 @@ SELECT g.doc_id,
             AS INTEGER) AS contaminated
 FROM g LEFT JOIN m USING (doc_id)
 WHERE g.doc_id % 17 <> 0
-""",
+"""
+
+
+@register(
+    "dedup_decontaminate",
+    oracle=_DECON_EXACT_ORACLE,
     tags=("dedup", "decontamination", "curation", "scale-shape"),
     bench=True,
     doc="Benchmark decontamination — the training-data hygiene step "
@@ -6532,42 +5924,7 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_decontaminate_semijoin",
-    oracle=r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
-g AS (
-    SELECT doc_id,
-           CASE WHEN len(lt) >= 8 THEN
-             list_transform(range(1, len(lt) - 6),
-                            i -> concat_ws(' ', lt[i], lt[i+1], lt[i+2],
-                                           lt[i+3], lt[i+4], lt[i+5],
-                                           lt[i+6], lt[i+7]))
-           ELSE [] END AS g8
-    FROM d
-),
-bg AS (
-    SELECT DISTINCT gram FROM (
-        SELECT unnest(g8) AS gram FROM g WHERE doc_id % 17 = 0)
-),
-tg AS (
-    SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id, unnest(g8) AS gram FROM g WHERE doc_id % 17 <> 0)
-),
-m AS (
-    SELECT tg.doc_id, count(*) AS n_matched
-    FROM tg JOIN bg USING (gram) GROUP BY tg.doc_id
-)
-SELECT g.doc_id,
-       CAST(len(g8) AS BIGINT) AS n_grams,
-       CAST(COALESCE(m.n_matched, 0) AS BIGINT) AS n_matched,
-       CAST(CASE WHEN COALESCE(m.n_matched, 0) > 0 THEN 1 ELSE 0 END
-            AS INTEGER) AS contaminated
-FROM g LEFT JOIN m USING (doc_id)
-WHERE g.doc_id % 17 <> 0
-""",
+    oracle=_DECON_EXACT_ORACLE,
     tags=("dedup", "decontamination", "curation", "scale-shape"),
     doc="dedup_decontaminate's LARGE-EVAL-SET tier — byte-identical "
     "output (same oracle), different physical plan. The broadcast "
@@ -6626,12 +5983,7 @@ def dedup_decontaminate_semijoin(
 
 @register(
     "curation_dsir_select",
-    oracle=r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
+    oracle=rf"""WITH {_LT_CTE},
 uni AS (SELECT doc_id, unnest(lt) AS g FROM d),
 bi AS (
     SELECT doc_id, unnest(
@@ -6772,15 +6124,12 @@ def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(K)
 
 
-@register(
-    "dedup_substring_spans",
-    oracle=r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
-pw AS (
+def _span_island_ctes(win_mat: str = "") -> str:
+    """Windows of 10 tokens over ``d`` (doc_id, lt) shared verbatim by
+    >= 2 docs, merged per doc into islands: isl (doc_id, pos, g), where
+    g numbers the doc's maximal spans.  ``win_mat`` " MATERIALIZED"
+    pins the window table."""
+    return f"""pw AS (
     SELECT doc_id,
            CASE WHEN len(lt) >= 10 THEN
              list_transform(range(1, len(lt) - 8),
@@ -6790,7 +6139,7 @@ pw AS (
            ELSE CAST([] AS STRUCT(pos INTEGER, wh VARCHAR)[]) END AS pws
     FROM d
 ),
-win AS (
+win AS{win_mat} (
     SELECT doc_id, u.pos AS pos, u.wh AS wh
     FROM (SELECT doc_id, unnest(pws) AS u FROM pw)
 ),
@@ -6812,7 +6161,26 @@ isl AS (
            sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
                           ROWS UNBOUNDED PRECEDING) AS g
     FROM marks
-)
+)"""
+
+
+# a doc's spans as [s, e] token ranges: per_doc (doc_id, spans)
+_SPAN_LIST_CTES = """spans AS (
+    SELECT doc_id,
+           CAST(min(pos) AS INTEGER) AS s,
+           CAST(max(pos) + 9 AS INTEGER) AS e
+    FROM isl GROUP BY doc_id, g
+),
+per_doc AS (
+    SELECT doc_id, list(struct_pack(s := s, e := e)) AS spans
+    FROM spans GROUP BY doc_id
+)"""
+
+
+@register(
+    "dedup_substring_spans",
+    oracle=rf"""WITH {_LT_CTE},
+{_span_island_ctes()}
 SELECT doc_id,
        CAST(min(pos) AS INTEGER) AS span_start,
        CAST(max(pos) + 9 AS INTEGER) AS span_end,
@@ -6854,55 +6222,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_apply_span_removal",
-    oracle=r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
-pw AS (
-    SELECT doc_id,
-           CASE WHEN len(lt) >= 10 THEN
-             list_transform(range(1, len(lt) - 8),
-                            i -> struct_pack(
-                                pos := CAST(i AS INTEGER),
-                                wh := md5(array_to_string(lt[i:i+9], ' '))))
-           ELSE CAST([] AS STRUCT(pos INTEGER, wh VARCHAR)[]) END AS pws
-    FROM d
-),
-win AS (
-    SELECT doc_id, u.pos AS pos, u.wh AS wh
-    FROM (SELECT doc_id, unnest(pws) AS u FROM pw)
-),
-dup AS (
-    SELECT wh FROM win GROUP BY wh HAVING count(DISTINCT doc_id) >= 2
-),
-dwin AS (
-    SELECT w.doc_id, w.pos FROM win w JOIN dup USING (wh)
-),
-marks AS (
-    SELECT doc_id, pos,
-           CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                     <= 10
-                THEN 0 ELSE 1 END AS brk
-    FROM dwin
-),
-isl AS (
-    SELECT doc_id, pos,
-           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS UNBOUNDED PRECEDING) AS g
-    FROM marks
-),
-spans AS (
-    SELECT doc_id,
-           CAST(min(pos) AS INTEGER) AS s,
-           CAST(max(pos) + 9 AS INTEGER) AS e
-    FROM isl GROUP BY doc_id, g
-),
-per_doc AS (
-    SELECT doc_id, list(struct_pack(s := s, e := e)) AS spans
-    FROM spans GROUP BY doc_id
-),
+    oracle=rf"""WITH {_LT_CTE},
+{_span_island_ctes()},
+{_SPAN_LIST_CTES},
 cut AS (
     SELECT d.doc_id,
            CAST(coalesce(len(p.spans), 0) AS INTEGER) AS n_spans,
@@ -6964,49 +6286,8 @@ d AS MATERIALIZED (
                        x -> x <> '') AS lt
     FROM q0
 ),
-pw AS (
-    SELECT doc_id,
-           CASE WHEN len(lt) >= 10 THEN
-             list_transform(range(1, len(lt) - 8),
-                            i -> struct_pack(
-                                pos := CAST(i AS INTEGER),
-                                wh := md5(array_to_string(lt[i:i+9], ' '))))
-           ELSE CAST([] AS STRUCT(pos INTEGER, wh VARCHAR)[]) END AS pws
-    FROM d
-),
-win AS MATERIALIZED (
-    SELECT doc_id, u.pos AS pos, u.wh AS wh
-    FROM (SELECT doc_id, unnest(pws) AS u FROM pw)
-),
-dup AS (
-    SELECT wh FROM win GROUP BY wh HAVING count(DISTINCT doc_id) >= 2
-),
-dwin AS (
-    SELECT w.doc_id, w.pos FROM win w JOIN dup USING (wh)
-),
-marks AS (
-    SELECT doc_id, pos,
-           CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                     <= 10
-                THEN 0 ELSE 1 END AS brk
-    FROM dwin
-),
-isl AS (
-    SELECT doc_id, pos,
-           sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS UNBOUNDED PRECEDING) AS g
-    FROM marks
-),
-spans AS (
-    SELECT doc_id,
-           CAST(min(pos) AS INTEGER) AS s,
-           CAST(max(pos) + 9 AS INTEGER) AS e
-    FROM isl GROUP BY doc_id, g
-),
-per_doc AS (
-    SELECT doc_id, list(struct_pack(s := s, e := e)) AS spans
-    FROM spans GROUP BY doc_id
-),
+{_span_island_ctes(" MATERIALIZED")},
+{_SPAN_LIST_CTES},
 ct AS MATERIALIZED (
     SELECT d.doc_id,
            coalesce(array_to_string(list_transform(
@@ -7713,6 +6994,71 @@ def orc_roundtrip_priority_revenue(
     return _roundtrip_agg(back)
 
 
+def _lloyd_seed(k: int | str, mat: str = "") -> list[str]:
+    """Unit-normalized vectors ``b`` and the seed centroids ``c0`` (the
+    first ``k`` vectors) that every Lloyd tier starts from.  ``mat`` is
+    "" or " MATERIALIZED" (the CTE form of the tier)."""
+    return [
+        f"""b AS{mat} (
+    SELECT vec_id,
+           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
+    FROM emb
+)""",
+        f"""c0 AS{mat} (
+    SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < ({k})
+)""",
+    ]
+
+
+def _lloyd_update(i: int, dim: int, mat: str = "") -> list[str]:
+    """Round ``i``'s centroid update: exact-decimal per-position means
+    (8 dp) of the assignment ``a{i}``, giving ``c{i+1}``."""
+    return [
+        f"""cm{i} AS{mat} (
+    SELECT cid, gs.i AS pos,
+           round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
+                 / count(*), 8) AS m
+    FROM a{i}, generate_series(1, {dim}) gs(i)
+    GROUP BY cid, gs.i
+)""",
+        f"""c{i + 1} AS{mat} (
+    SELECT cid, list(m ORDER BY pos) AS cv FROM cm{i} GROUP BY cid
+)""",
+    ]
+
+
+def _probed_assign(
+    tag: str, sup: str, members: str, n_probe: int, mat: str = ""
+) -> list[str]:
+    """Two-level assignment: each vector routes to its top-``n_probe``
+    supers of ``sup`` (sid, sv) as ``vs{tag}``, then takes the exact
+    argmax over those supers' member centroids ``members`` (cid, cv,
+    sid) as ``a{tag}`` (vec_id, nv, cid, sim)."""
+    return [
+        f"""vs{tag} AS{mat} (
+    SELECT vec_id, nv, sid FROM (
+        SELECT b.vec_id, b.nv, u.sid,
+               row_number() OVER (
+                   PARTITION BY b.vec_id
+                   ORDER BY round(list_inner_product(b.nv, u.sv), 6) DESC,
+                            u.sid ASC) AS rn
+        FROM b CROSS JOIN {sup} u
+    ) t WHERE rn <= {n_probe}
+)""",
+        f"""a{tag} AS{mat} (
+    SELECT vec_id, nv, cid, sim FROM (
+        SELECT v.vec_id, v.nv, m.cid,
+               round(list_inner_product(v.nv, m.cv), 6) AS sim,
+               row_number() OVER (
+                   PARTITION BY v.vec_id
+                   ORDER BY round(list_inner_product(v.nv, m.cv), 6) DESC,
+                            m.cid ASC) AS rn
+        FROM vs{tag} v JOIN {members} m USING (sid)
+    ) t WHERE rn = 1
+)""",
+    ]
+
+
 def _lloyd_ctes(
     iters: int = 2, k: int | str = 8, dim: int = 64
 ) -> list[str]:
@@ -7723,16 +7069,7 @@ def _lloyd_ctes(
     ``k`` may be an int or a SQL scalar expression (the adaptive
     count-derived centroid count); it only ever appears in the seed
     CTE's vec_id bound."""
-    ctes = [
-        """b AS (
-    SELECT vec_id,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-)""",
-        f"""c0 AS (
-    SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < ({k})
-)""",
-    ]
+    ctes = _lloyd_seed(k)
     for i in range(iters):
         ctes.append(f"""a{i} AS (
     SELECT vec_id, nv, cid FROM (
@@ -7744,16 +7081,7 @@ def _lloyd_ctes(
         FROM b CROSS JOIN c{i} c
     ) t WHERE rn = 1
 )""")
-        ctes.append(f"""cm{i} AS (
-    SELECT cid, gs.i AS pos,
-           round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
-                 / count(*), 8) AS m
-    FROM a{i}, generate_series(1, {dim}) gs(i)
-    GROUP BY cid, gs.i
-)""")
-        ctes.append(f"""c{i + 1} AS (
-    SELECT cid, list(m ORDER BY pos) AS cv FROM cm{i} GROUP BY cid
-)""")
+        ctes.extend(_lloyd_update(i, dim))
     ctes.append(f"""af AS (
     SELECT vec_id, nv, cid, sim FROM (
         SELECT b.vec_id, b.nv, c.cid,
@@ -7794,16 +7122,7 @@ def _lloyd_pruned_ctes(
     inflated cluster widths, PLANS.md r7), then the exact argmax
     among the probed supers' member centroids only. ``k`` and ``s``
     are SQL scalar expressions (the adaptive counts)."""
-    ctes = [
-        """b AS (
-    SELECT vec_id,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-)""",
-        f"""c0 AS (
-    SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < ({k})
-)""",
-    ]
+    ctes = _lloyd_seed(k)
 
     def round_ctes(i: int, final: bool) -> list[str]:
         tag = "f" if final else str(i)
@@ -7824,42 +7143,12 @@ def _lloyd_pruned_ctes(
         FROM {src} c CROSS JOIN sup{tag} u
     ) t WHERE rn = 1
 )""",
-            f"""vs{tag} AS (
-    SELECT vec_id, nv, sid FROM (
-        SELECT b.vec_id, b.nv, u.sid,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY round(list_inner_product(b.nv, u.sv), 6) DESC,
-                            u.sid ASC) AS rn
-        FROM b CROSS JOIN sup{tag} u
-    ) t WHERE rn <= {n_probe}
-)""",
-            f"""a{tag} AS (
-    SELECT vec_id, nv, cid, sim FROM (
-        SELECT v.vec_id, v.nv, m.cid,
-               round(list_inner_product(v.nv, m.cv), 6) AS sim,
-               row_number() OVER (
-                   PARTITION BY v.vec_id
-                   ORDER BY round(list_inner_product(v.nv, m.cv), 6) DESC,
-                            m.cid ASC) AS rn
-        FROM vs{tag} v JOIN cs{tag} m USING (sid)
-    ) t WHERE rn = 1
-)""",
         ]
-        return out
+        return out + _probed_assign(tag, f"sup{tag}", f"cs{tag}", n_probe)
 
     for i in range(iters):
         ctes.extend(round_ctes(i, final=False))
-        ctes.append(f"""cm{i} AS (
-    SELECT cid, gs.i AS pos,
-           round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
-                 / count(*), 8) AS m
-    FROM a{i}, generate_series(1, {dim}) gs(i)
-    GROUP BY cid, gs.i
-)""")
-        ctes.append(f"""c{i + 1} AS (
-    SELECT cid, list(m ORDER BY pos) AS cv FROM cm{i} GROUP BY cid
-)""")
+        ctes.extend(_lloyd_update(i, dim))
     # the final-round chain's tag is "f", so its assignment CTE is
     # literally named ``af`` — the same terminal name the flat chain
     # ends in, which is what lets _semdedup_sql share its tail.
@@ -7883,16 +7172,7 @@ def _lloyd_probe_ctes(
     their top-``n_probe`` NON-EMPTY lists, and the exact argmax runs
     over the probed lists' member centroids only. ``k``/``s`` are SQL
     scalar expressions (the adaptive counts)."""
-    ctes = [
-        """b AS MATERIALIZED (
-    SELECT vec_id,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-)""",
-        f"""c0 AS MATERIALIZED (
-    SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < ({k})
-)""",
-    ]
+    ctes = _lloyd_seed(k, " MATERIALIZED")
 
     def _member_argmax(name: str, src: str, sup: str) -> str:
         return f"""{name} AS MATERIALIZED (
@@ -7933,41 +7213,13 @@ def _lloyd_probe_ctes(
     SELECT u.sid, u.sv FROM rsup{tag}{router_iters} u
     WHERE u.sid IN (SELECT sid FROM mem{tag})
 )""")
-        out.append(f"""vs{tag} AS MATERIALIZED (
-    SELECT vec_id, nv, sid FROM (
-        SELECT b.vec_id, b.nv, u.sid,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY round(list_inner_product(b.nv, u.sv), 6) DESC,
-                            u.sid ASC) AS rn
-        FROM b CROSS JOIN used{tag} u
-    ) t WHERE rn <= {n_probe}
-)""")
-        out.append(f"""a{tag} AS MATERIALIZED (
-    SELECT vec_id, nv, cid, sim FROM (
-        SELECT v.vec_id, v.nv, m.cid,
-               round(list_inner_product(v.nv, m.cv), 6) AS sim,
-               row_number() OVER (
-                   PARTITION BY v.vec_id
-                   ORDER BY round(list_inner_product(v.nv, m.cv), 6) DESC,
-                            m.cid ASC) AS rn
-        FROM vs{tag} v JOIN mem{tag} m USING (sid)
-    ) t WHERE rn = 1
-)""")
-        return out
+        return out + _probed_assign(
+            tag, f"used{tag}", f"mem{tag}", n_probe, " MATERIALIZED"
+        )
 
     for i in range(iters):
         ctes.extend(round_ctes(i, final=False))
-        ctes.append(f"""cm{i} AS MATERIALIZED (
-    SELECT cid, gs.i AS pos,
-           round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
-                 / count(*), 8) AS m
-    FROM a{i}, generate_series(1, {dim}) gs(i)
-    GROUP BY cid, gs.i
-)""")
-        ctes.append(f"""c{i + 1} AS MATERIALIZED (
-    SELECT cid, list(m ORDER BY pos) AS cv FROM cm{i} GROUP BY cid
-)""")
+        ctes.extend(_lloyd_update(i, dim, " MATERIALIZED"))
     # terminal tag "f" -> the chain ends in ``af``, the shared tail name
     ctes.extend(round_ctes(iters, final=True))
     return ctes
@@ -8162,7 +7414,7 @@ def sim_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_WIDE_ORACLE = r"""WITH tok AS (
+_SIMHASH_WIDE_ORACLE = rf"""WITH tok AS (
     SELECT doc_id, unnest(list_distinct(list_filter(
         regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> ''))) AS t
     FROM documents
@@ -8173,24 +7425,8 @@ th AS (
            ('0x' || substr(md5(t), 16, 15))::BIGINT AS h1
     FROM tok
 ),
-bits0 AS (
-    SELECT doc_id, r.i AS i,
-           CASE WHEN sum(CASE WHEN (h0 >> CAST(r.i AS INTEGER)) & 1 = 1
-                              THEN 1 ELSE -1 END) >= 0
-                THEN (CAST(1 AS BIGINT) << CAST(r.i AS INTEGER))
-                ELSE CAST(0 AS BIGINT) END AS bitval
-    FROM th CROSS JOIN range(0, 60) r(i)
-    GROUP BY doc_id, r.i
-),
-bits1 AS (
-    SELECT doc_id, r.i AS i,
-           CASE WHEN sum(CASE WHEN (h1 >> CAST(r.i AS INTEGER)) & 1 = 1
-                              THEN 1 ELSE -1 END) >= 0
-                THEN (CAST(1 AS BIGINT) << CAST(r.i AS INTEGER))
-                ELSE CAST(0 AS BIGINT) END AS bitval
-    FROM th CROSS JOIN range(0, 60) r(i)
-    GROUP BY doc_id, r.i
-),
+{_sign_bits_cte("bits0", "h0")},
+{_sign_bits_cte("bits1", "h1")},
 sim AS (
     SELECT s0.doc_id, s0.sk0, s1.sk1 FROM
     (SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS sk0 FROM bits0 GROUP BY doc_id) s0
@@ -8198,15 +7434,7 @@ sim AS (
     (SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS sk1 FROM bits1 GROUP BY doc_id) s1
     USING (doc_id)
 ),
-banded AS (
-    SELECT doc_id, sk0, sk1, b.band,
-           CASE b.band
-             WHEN 0 THEN sk0 & 1073741823
-             WHEN 1 THEN sk0 >> 30
-             WHEN 2 THEN sk1 & 1073741823
-             ELSE sk1 >> 30 END AS bh
-    FROM sim CROSS JOIN (SELECT CAST(unnest([0,1,2,3]) AS INTEGER) AS band) b
-),
+{_banded4_cte("banded")},
 pairs AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.sk0, b.sk0))
@@ -8251,15 +7479,7 @@ _SIMHASH_BANDED6_SQL = "\nUNION ALL\n".join(
 _SIMHASH_ADAPTIVE_ORACLE = (
     _SIMHASH_WIDE_ORACLE.split("banded AS (")[0]
     + f"""nsim AS (SELECT count(*) AS n FROM sim),
-banded4 AS (
-    SELECT doc_id, sk0, sk1, b.band,
-           CASE b.band
-             WHEN 0 THEN sk0 & 1073741823
-             WHEN 1 THEN sk0 >> 30
-             WHEN 2 THEN sk1 & 1073741823
-             ELSE sk1 >> 30 END AS bh
-    FROM sim CROSS JOIN (SELECT CAST(unnest([0,1,2,3]) AS INTEGER) AS band) b
-),
+{_banded4_cte("banded4")},
 blk AS (
     SELECT doc_id, sk0, sk1,
            sk0 & 1048575 AS b0, (sk0 >> 20) & 1048575 AS b1, sk0 >> 40 AS b2,
@@ -8332,12 +7552,10 @@ def dedup_simhash_adaptive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash_adaptive_pairs(docs, max_hamming=3, jaccard_threshold=0.7)
 
 
-_ARC_P = geo.molodensky_params(geo.ARC1960_TO_WGS84)
-
-
-@register(
-    "geo_c19_datum_arc1960",
-    oracle=f"""WITH {_POLY_CTE.strip()},
+def _molodensky_oracle(p: dict) -> str:
+    """Abridged-Molodensky datum shift of each polygon's ring centroid
+    under the parameters ``p`` (geo.molodensky_params)."""
+    return f"""WITH {_POLY_CTE.strip()},
 cent AS (
     SELECT poly_id, name,
            round((y0 + y0 + y1 + y1 + y0) / 5, 6) AS lat,
@@ -8353,22 +7571,30 @@ trig AS (
 ),
 sh AS (
     SELECT poly_id, name, lat, lon,
-           (({-_ARC_P['dx']!r}) * sinp * cosl
-            + ({-_ARC_P['dy']!r}) * sinp * sinl
-            + ({_ARC_P['dz']!r}) * cosp
-            + ({_ARC_P['adf_fda']!r}) * sin2p)
-           / ({_ARC_P['rho_num']!r}
-              / pow(1.0 - {_ARC_P['e2']!r} * sinp * sinp, 1.5)) AS dphi,
-           (({-_ARC_P['dx']!r}) * sinl + ({_ARC_P['dy']!r}) * cosl)
-           / (({_ARC_P['a']!r}
-               / sqrt(1.0 - {_ARC_P['e2']!r} * sinp * sinp)) * cosp) AS dlam
+           (({-p['dx']!r}) * sinp * cosl
+            + ({-p['dy']!r}) * sinp * sinl
+            + ({p['dz']!r}) * cosp
+            + ({p['adf_fda']!r}) * sin2p)
+           / ({p['rho_num']!r}
+              / pow(1.0 - {p['e2']!r} * sinp * sinp, 1.5)) AS dphi,
+           (({-p['dx']!r}) * sinl + ({p['dy']!r}) * cosl)
+           / (({p['a']!r}
+               / sqrt(1.0 - {p['e2']!r} * sinp * sinp)) * cosp) AS dlam
     FROM trig
 )
 SELECT poly_id, name, lat, lon,
        round(lat + degrees(dphi), 8) AS lat_wgs84,
        round(lon + degrees(dlam), 8) AS lon_wgs84
 FROM sh
-""",
+"""
+
+
+_ARC_P = geo.molodensky_params(geo.ARC1960_TO_WGS84)
+
+
+@register(
+    "geo_c19_datum_arc1960",
+    oracle=_molodensky_oracle(_ARC_P),
     tags=("C19", "geo", "datum", "reprojection"),
     doc="C19 datum extension — Arc 1960 -> WGS84 via the abridged "
     "Molodensky transformation (DMA TM 8350.2 formulas, EPSG mean "
@@ -8409,38 +7635,7 @@ _ARC50_P = geo.molodensky_params(geo.ARC1950_TO_WGS84)
 
 @register(
     "geo_c19_datum_arc1950",
-    oracle=f"""WITH {_POLY_CTE.strip()},
-cent AS (
-    SELECT poly_id, name,
-           round((y0 + y0 + y1 + y1 + y0) / 5, 6) AS lat,
-           round((x0 + x1 + x1 + x0 + x0) / 5, 6) AS lon
-    FROM polys
-),
-trig AS (
-    SELECT poly_id, name, lat, lon,
-           sin(radians(lat)) AS sinp, cos(radians(lat)) AS cosp,
-           sin(radians(lon)) AS sinl, cos(radians(lon)) AS cosl,
-           sin(2.0 * radians(lat)) AS sin2p
-    FROM cent
-),
-sh AS (
-    SELECT poly_id, name, lat, lon,
-           (({-_ARC50_P['dx']!r}) * sinp * cosl
-            + ({-_ARC50_P['dy']!r}) * sinp * sinl
-            + ({_ARC50_P['dz']!r}) * cosp
-            + ({_ARC50_P['adf_fda']!r}) * sin2p)
-           / ({_ARC50_P['rho_num']!r}
-              / pow(1.0 - {_ARC50_P['e2']!r} * sinp * sinp, 1.5)) AS dphi,
-           (({-_ARC50_P['dx']!r}) * sinl + ({_ARC50_P['dy']!r}) * cosl)
-           / (({_ARC50_P['a']!r}
-               / sqrt(1.0 - {_ARC50_P['e2']!r} * sinp * sinp)) * cosp) AS dlam
-    FROM trig
-)
-SELECT poly_id, name, lat, lon,
-       round(lat + degrees(dphi), 8) AS lat_wgs84,
-       round(lon + degrees(dlam), 8) AS lon_wgs84
-FROM sh
-""",
+    oracle=_molodensky_oracle(_ARC50_P),
     tags=("C19", "geo", "datum", "reprojection"),
     doc="C19 datum extension — Arc 1950 -> WGS84 (abridged Molodensky, "
     "EPSG mean 3-parameter shift for southern Africa, Clarke 1880 "
@@ -8477,25 +7672,10 @@ def geo_c19_datum_arc1950(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s4_geotiff_jpeg_zonal_stats",
-    oracle="""WITH polys(poly_id, name, x0, y0, x1, y1) AS (
-    VALUES (1, 'alpha', 0.0, 0.0, 10.0, 10.0),
-           (2, 'beta', 20.0, 20.0, 30.0, 30.0),
-           (3, 'gamma', 5.0, 25.0, 9.0, 33.0)
-),
-pixels AS (
-    SELECT i.g + 0.5 AS px, j.g + 0.5 AS py,
-           CAST(((i.g // 8) * 31 + (j.g // 8) * 17) % 97 AS DOUBLE)
-               AS pixel_value
-    FROM generate_series(0, 39) i(g) CROSS JOIN generate_series(0, 39) j(g)
-)
-SELECT poly_id, name,
-       round(avg(pixel_value), 4) AS mean_value,
-       max(pixel_value) AS max_value,
-       min(pixel_value) AS min_value,
-       count(*) AS pixel_count
-FROM pixels JOIN polys ON px >= x0 AND px < x1 AND py >= y0 AND py < y1
-GROUP BY poly_id, name
-""",
+    oracle=_fixture_zonal_oracle(
+        "CAST(((i.g // 8) * 31 + (j.g // 8) * 17) % 97 AS DOUBLE)\n"
+        "               AS pixel_value"
+    ),
     tags=("S4", "J6", "geo", "ingest", "end-to-end", "compression"),
     doc="S4 with Compression=7 (new-style JPEG, TIFF TechNote 2): the "
     "raster is written as multi-strip baseline-JPEG GeoTIFF via the "
@@ -8718,18 +7898,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_select_representatives",
-    oracle=f"""WITH RECURSIVE
-{_MINHASH_CTES},
-edges AS (
-    SELECT doc_a AS a, doc_b AS b FROM lsh_pairs
-    UNION
-    SELECT doc_b AS a, doc_a AS b FROM lsh_pairs
-),
-cc(node, label) AS (
-    SELECT a, a FROM edges
-    UNION
-    SELECT e.b, cc.label FROM cc JOIN edges e ON e.a = cc.node
-),
+    oracle=f"""{_MINHASH_CC},
 comp AS (
     SELECT node AS doc_id, min(label) AS component FROM cc GROUP BY node
 ),
@@ -8785,46 +7954,6 @@ def dedup_select_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 8 additions: Bloom-screened decontamination, incremental
 # MinHash ingest, Count-Min heavy hitters, product-quantization ANN
 # ===========================================================================
-
-# Exact decontamination semantics (identical to dedup_decontaminate /
-# dedup_decontaminate_semijoin): the Bloom tier only changes the
-# physical plan, never the answer.
-_DECON_EXACT_ORACLE = r"""WITH d AS (
-    SELECT doc_id,
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x <> '') AS lt
-    FROM documents
-),
-g AS (
-    SELECT doc_id,
-           CASE WHEN len(lt) >= 8 THEN
-             list_transform(range(1, len(lt) - 6),
-                            i -> concat_ws(' ', lt[i], lt[i+1], lt[i+2],
-                                           lt[i+3], lt[i+4], lt[i+5],
-                                           lt[i+6], lt[i+7]))
-           ELSE [] END AS g8
-    FROM d
-),
-bg AS (
-    SELECT DISTINCT gram FROM (
-        SELECT unnest(g8) AS gram FROM g WHERE doc_id % 17 = 0)
-),
-tg AS (
-    SELECT DISTINCT doc_id, gram FROM (
-        SELECT doc_id, unnest(g8) AS gram FROM g WHERE doc_id % 17 <> 0)
-),
-m AS (
-    SELECT tg.doc_id, count(*) AS n_matched
-    FROM tg JOIN bg USING (gram) GROUP BY tg.doc_id
-)
-SELECT g.doc_id,
-       CAST(len(g8) AS BIGINT) AS n_grams,
-       CAST(COALESCE(m.n_matched, 0) AS BIGINT) AS n_matched,
-       CAST(CASE WHEN COALESCE(m.n_matched, 0) > 0 THEN 1 ELSE 0 END
-            AS INTEGER) AS contaminated
-FROM g LEFT JOIN m USING (doc_id)
-WHERE g.doc_id % 17 <> 0
-"""
 
 
 @register(
@@ -8922,49 +8051,12 @@ def dedup_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNSALTED bucket semantics the incremental tier defines
 # (operators/incremental.py docstring: old x old never expands, so
 # the mega-bucket quadratic term salting exists for is absent).
-_INCR_MINHASH_ORACLE = f"""WITH {_SHINGLE_CTE.strip()},
-hs AS (
-    SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h
-    FROM (SELECT doc_id, unnest(sh) AS s FROM doc_sh) u
-),
-pm AS (
-    SELECT doc_id,
-           {_perm_min_cols}
-    FROM hs GROUP BY doc_id
-),
-band_structs AS (
-    SELECT doc_id, unnest([
-        {_band_cells}
-    ]) AS u
-    FROM pm
-),
-band_hashes AS (
-    SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
-),
-nk AS (
-    SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 >= 8
-),
-tb AS (
-    SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk USING (band, bh)
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM tb a JOIN tb b
-      ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-     AND (a.doc_id % 10 >= 8 OR b.doc_id % 10 >= 8)
-)
+_INCR_MINHASH_ORACLE = f"""WITH {_BAND_CTES},
+{_batch_cands("", ">= 8")}
 SELECT doc_a, doc_b, jaccard,
-       CASE WHEN doc_a % 10 >= 8 AND doc_b % 10 >= 8 THEN 'batch_batch'
-            ELSE 'batch_index' END AS link_type
+       {_link_type(">= 8", " " * 7)}
 FROM (
-    SELECT c.doc_a, c.doc_b,
-           round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-               AS jaccard
-    FROM cand c
-    JOIN doc_sh sa ON sa.doc_id = c.doc_a
-    JOIN doc_sh sb ON sb.doc_id = c.doc_b
-) v WHERE jaccard >= 0.8
+{_verified("cand")}
 """
 
 
@@ -9286,32 +8378,8 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_ivfpq_topk",
     oracle=f"""WITH {_EMB_CTE.strip()},
-b AS (
-    SELECT vec_id, label,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-),
-cent AS (SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < 8),
-assign AS (
-    SELECT vec_id, label, nv, cid FROM (
-        SELECT b.vec_id, b.label, b.nv, cent.cid,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY round(list_inner_product(b.nv, cent.cv), 6) DESC,
-                            cent.cid ASC) AS rn
-        FROM b CROSS JOIN cent
-    ) t WHERE rn = 1
-),
-q AS (SELECT nv AS qv FROM b WHERE vec_id = 0),
-probed AS (
-    SELECT cid FROM (
-        SELECT cent.cid, round(list_inner_product(cent.cv, q.qv), 6) AS c_sim
-        FROM cent, q
-    ) s ORDER BY c_sim DESC, cid ASC LIMIT 2
-),
-members AS (
-    SELECT a.vec_id, a.label, a.nv FROM assign a JOIN probed USING (cid)
-),
+{_ivf_assign_ctes(" WHERE vec_id < 8")},
+{_ivf_members_ctes(2)},
 sub AS (
     SELECT vec_id, s.s, nv[s.s * 16 + 1 : s.s * 16 + 16] AS sv
     FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS s) s(s)
@@ -9337,24 +8405,7 @@ lut AS (
                 AS BIGINT) AS ip_u
     FROM cb JOIN qs USING (s)
 ),
-approx AS (
-    SELECT e.vec_id,
-           round(CAST(sum(l.ip_u) AS DOUBLE) / 1000000.0, 6) AS approx_score
-    FROM enc e
-    JOIN (SELECT vec_id FROM members) mm USING (vec_id)
-    JOIN lut l ON l.s = e.s AND l.cid = e.code
-    WHERE e.vec_id <> 0 GROUP BY e.vec_id
-),
-short AS (
-    SELECT vec_id, approx_score FROM approx
-    ORDER BY approx_score DESC, vec_id ASC LIMIT 50
-)
-SELECT s.vec_id, m.label, s.approx_score,
-       round(list_inner_product(m.nv, q.qv), 6) AS cosine_sim
-FROM short s JOIN members m USING (vec_id), q
-ORDER BY cosine_sim DESC, s.vec_id ASC
-LIMIT 10
-""",
+{_ivfpq_rerank(50, 10)}""",
     tags=("similarity", "ann", "ivf", "pq", "topk"),
     bench=True,
     doc="IVF-PQ composition (operators/pq.py::ivfpq_topk) — the "
@@ -9598,76 +8649,16 @@ def _ivfpq_trained_sql(
     train, final = _pq_train_chain(iters, ks, subd)
     train_sql = ",\n".join(train)
     return f"""WITH {_EMB_CTE.strip()},
-b AS (
-    SELECT vec_id, label,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-),
-cent AS (SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < {n_centroids}),
-assign AS (
-    SELECT vec_id, label, nv, cid FROM (
-        SELECT b.vec_id, b.label, b.nv, cent.cid,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY round(list_inner_product(b.nv, cent.cv), 6) DESC,
-                            cent.cid ASC) AS rn
-        FROM b CROSS JOIN cent
-    ) t WHERE rn = 1
-),
-q AS (SELECT nv AS qv FROM b WHERE vec_id = 0),
-probed AS (
-    SELECT cid FROM (
-        SELECT cent.cid, round(list_inner_product(cent.cv, q.qv), 6) AS c_sim
-        FROM cent, q
-    ) s ORDER BY c_sim DESC, cid ASC LIMIT {nprobe}
-),
-members AS (
-    SELECT a.vec_id, a.label, a.nv FROM assign a JOIN probed USING (cid)
-),
+{_ivf_assign_ctes(f" WHERE vec_id < {n_centroids}")},
+{_ivf_members_ctes(nprobe)},
 sub AS (
     SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
     FROM b CROSS JOIN (
         SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
 ),
 {train_sql},
-enc AS (
-    SELECT vec_id, s, cid AS code FROM (
-        SELECT sub.vec_id, sub.s, c.cid,
-               row_number() OVER (
-                   PARTITION BY sub.vec_id, sub.s
-                   ORDER BY round(list_inner_product(sub.sv, sub.sv)
-                                  - 2 * list_inner_product(sub.sv, c.cv)
-                                  + list_inner_product(c.cv, c.cv), 6) ASC,
-                            c.cid ASC) AS rn
-        FROM sub JOIN {final} c USING (s)
-    ) t WHERE rn = 1
-),
-qs AS (SELECT s, sv AS qsv FROM sub WHERE vec_id = 0),
-lut AS (
-    SELECT c.s, c.cid,
-           CAST(sign(list_inner_product(qs.qsv, c.cv))
-                * floor(abs(list_inner_product(qs.qsv, c.cv)) * 1000000 + 0.5)
-                AS BIGINT) AS ip_u
-    FROM {final} c JOIN qs USING (s)
-),
-approx AS (
-    SELECT e.vec_id,
-           round(CAST(sum(l.ip_u) AS DOUBLE) / 1000000.0, 6) AS approx_score
-    FROM enc e
-    JOIN (SELECT vec_id FROM members) mm USING (vec_id)
-    JOIN lut l ON l.s = e.s AND l.cid = e.code
-    WHERE e.vec_id <> 0 GROUP BY e.vec_id
-),
-short AS (
-    SELECT vec_id, approx_score FROM approx
-    ORDER BY approx_score DESC, vec_id ASC LIMIT {rerank}
-)
-SELECT s.vec_id, m.label, s.approx_score,
-       round(list_inner_product(m.nv, q.qv), 6) AS cosine_sim
-FROM short s JOIN members m USING (vec_id), q
-ORDER BY cosine_sim DESC, s.vec_id ASC
-LIMIT {k}
-"""
+{_pq_encode_ctes("sub", final)},
+{_ivfpq_rerank(rerank, k)}"""
 
 
 @register(
@@ -9755,34 +8746,10 @@ def _ivfpq_add_sql(
     subd = dim // m
     train, final = _pq_train_chain(iters, ks, subd)
     train_sql = ",\n".join(train)
+    cent_where = f"\n         WHERE vec_id < {n_centroids} AND {index_where}"
     return f"""WITH {_EMB_CTE.strip()},
-b AS (
-    SELECT vec_id, label,
-           list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
-    FROM emb
-),
-cent AS (SELECT vec_id AS cid, nv AS cv FROM b
-         WHERE vec_id < {n_centroids} AND {index_where}),
-assign AS (
-    SELECT vec_id, label, nv, cid FROM (
-        SELECT b.vec_id, b.label, b.nv, cent.cid,
-               row_number() OVER (
-                   PARTITION BY b.vec_id
-                   ORDER BY round(list_inner_product(b.nv, cent.cv), 6) DESC,
-                            cent.cid ASC) AS rn
-        FROM b CROSS JOIN cent
-    ) t WHERE rn = 1
-),
-q AS (SELECT nv AS qv FROM b WHERE vec_id = 0),
-probed AS (
-    SELECT cid FROM (
-        SELECT cent.cid, round(list_inner_product(cent.cv, q.qv), 6) AS c_sim
-        FROM cent, q
-    ) s ORDER BY c_sim DESC, cid ASC LIMIT {nprobe}
-),
-members AS (
-    SELECT a.vec_id, a.label, a.nv FROM assign a JOIN probed USING (cid)
-),
+{_ivf_assign_ctes(cent_where)},
+{_ivf_members_ctes(nprobe)},
 sub_all AS (
     SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
     FROM b CROSS JOIN (
@@ -9792,44 +8759,8 @@ sub AS (
     SELECT sub_all.* FROM sub_all JOIN b USING (vec_id) WHERE {index_where}
 ),
 {train_sql},
-enc AS (
-    SELECT vec_id, s, cid AS code FROM (
-        SELECT sub_all.vec_id, sub_all.s, c.cid,
-               row_number() OVER (
-                   PARTITION BY sub_all.vec_id, sub_all.s
-                   ORDER BY round(list_inner_product(sub_all.sv, sub_all.sv)
-                                  - 2 * list_inner_product(sub_all.sv, c.cv)
-                                  + list_inner_product(c.cv, c.cv), 6) ASC,
-                            c.cid ASC) AS rn
-        FROM sub_all JOIN {final} c USING (s)
-    ) t WHERE rn = 1
-),
-qs AS (SELECT s, sv AS qsv FROM sub_all WHERE vec_id = 0),
-lut AS (
-    SELECT c.s, c.cid,
-           CAST(sign(list_inner_product(qs.qsv, c.cv))
-                * floor(abs(list_inner_product(qs.qsv, c.cv)) * 1000000 + 0.5)
-                AS BIGINT) AS ip_u
-    FROM {final} c JOIN qs USING (s)
-),
-approx AS (
-    SELECT e.vec_id,
-           round(CAST(sum(l.ip_u) AS DOUBLE) / 1000000.0, 6) AS approx_score
-    FROM enc e
-    JOIN (SELECT vec_id FROM members) mm USING (vec_id)
-    JOIN lut l ON l.s = e.s AND l.cid = e.code
-    WHERE e.vec_id <> 0 GROUP BY e.vec_id
-),
-short AS (
-    SELECT vec_id, approx_score FROM approx
-    ORDER BY approx_score DESC, vec_id ASC LIMIT {rerank}
-)
-SELECT s.vec_id, m.label, s.approx_score,
-       round(list_inner_product(m.nv, q.qv), 6) AS cosine_sim
-FROM short s JOIN members m USING (vec_id), q
-ORDER BY cosine_sim DESC, s.vec_id ASC
-LIMIT {k}
-"""
+{_pq_encode_ctes("sub_all", final)},
+{_ivfpq_rerank(rerank, k)}"""
 
 
 @register(

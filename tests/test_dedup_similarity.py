@@ -287,37 +287,29 @@ def test_decontaminate_planted_overlap(spark):
 
 def test_perm_banding_kills_oph_candidate_floor(spark):
     """The r6 tier-swap regression pin: on short docs drawn from a
-    SMALL vocabulary (the regime where one-permutation banding
-    under-delivers its nominal r and docs sharing globally-small
-    shingle hashes collide en masse — the x500 deep point measured
-    ~495M candidates vs ~560k true pairs), true-permutation banding's
-    candidate set stays within a small multiple of the true pair
-    count while the OPH form's floor is already visible at 10k docs."""
+    SMALL vocabulary — the regime where one-permutation banding
+    under-delivered its nominal r and docs sharing globally-small
+    shingle hashes collided en masse (the x500 deep point measured
+    ~495M candidates vs ~560k true pairs) — true-permutation
+    banding's candidate set stays within a small multiple of the true
+    pair count."""
     from geoscale_healthflow_etl_django_analytics_spark.scalegen import gen_documents
 
     docs = gen_documents(spark, 10_000).localCheckpoint()
-
-    def n_candidates(band_fn):
-        bh = band_fn(docs)
-        a = bh.select("band", "bh", F.col("doc_id").alias("a"))
-        b = bh.select("band", "bh", F.col("doc_id").alias("b"))
-        return (
-            a.join(b, ["band", "bh"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-            .count()
-        )
-
+    bh = dd.minhash_perm_band_hashes(docs)
+    a = bh.select("band", "bh", F.col("doc_id").alias("a"))
+    b = bh.select("band", "bh", F.col("doc_id").alias("b"))
+    perm_cands = (
+        a.join(b, ["band", "bh"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+        .count()
+    )
     true_pairs = dd.minhash_lsh_pairs(docs, threshold=0.8).count()
-    perm_cands = n_candidates(dd.minhash_perm_band_hashes)
-    oph_cands = n_candidates(dd.lsh_band_hashes)
-    # true-perm: every candidate is either a genuine near-dup or one
-    # of the rare j^4 strays — linear in the corpus
+    # every candidate is either a genuine near-dup or one of the rare
+    # j^4 strays — linear in the corpus
     assert perm_cands <= 2 * true_pairs + 100
-    # OPH on the same corpus shows the floor (strictly worse, and by
-    # a margin that grows quadratically with n)
-    assert oph_cands > 2 * perm_cands
 
 
 def test_substring_spans_merge_and_positions(spark):

@@ -329,7 +329,7 @@ def test_fold_then_assign_equals_stateless_equivalent(spark, tmp_path):
     ).select(
         "doc_id",
         F.col("component").alias("cluster_id"),
-        splitting.split_of_cluster(F.col("component")).alias("split"),
+        splitting.split_of_cluster("component").alias("split"),
     )
     b1_assign = splitting.incremental_leakage_safe_split(
         visible,

@@ -105,8 +105,9 @@ def test_lsh_mega_cluster_salted_buckets(spark):
     near-identical docs) floods single LSH buckets with ~1000 ids —
     quadratic pair expansion in one task. minhash_lsh_pairs' adaptive
     salting splits every bucket above its cap into bounded sub-buckets,
-    and the cluster still comes out as ONE connected component
-    (transitive linking across bands)."""
+    the cluster still comes out as ONE connected component
+    (transitive linking across bands), and the oracle's salted branch
+    yields the same pair set."""
     from pyspark.sql import functions as F
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import dedup as dd
@@ -142,6 +143,28 @@ def test_lsh_mega_cluster_salted_buckets(spark):
     n_nodes = comps.count()
     assert n_components == 1
     assert n_nodes == 1000
+
+    # the DuckDB oracle replays the same salted buckets: equal pair
+    # sets (count + an order-free checksum) over the mega-cluster
+    import duckdb
+
+    from geoscale_healthflow_etl_django_analytics_spark.registry import REGISTRY
+
+    checksum = [
+        "count(*)",
+        "sum(doc_a)",
+        "sum(doc_b)",
+        "sum(doc_a * doc_b)",
+        "sum(CAST(round(jaccard * 10000) AS BIGINT))",
+    ]
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    oracle = con.execute(
+        f"SELECT {', '.join(checksum)} "
+        f"FROM ({REGISTRY['dedup_minhash_lsh'].oracle}) p"
+    ).fetchone()
+    got = pairs.selectExpr(*checksum).first()
+    assert [int(x) for x in got] == [int(x) for x in oracle]
 
 
 def test_asof_chunked_spreads_hot_key(spark):

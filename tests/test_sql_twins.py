@@ -1,5 +1,5 @@
 """Drift guard for the SQL-string expression twins that remain, and a
-value pin for the single-spelling vector math.
+value pin for the single-spelling vector math and split bucket.
 
 The round-12 optimization composes the hot builders' repetitive
 expression trees as SQL strings (one JVM parse instead of one py4j
@@ -12,17 +12,16 @@ that remain, and why:
 - ``fround``, ``md5_int32``, ``md5_int60`` and ``tokens``: their Column
   forms are also applied to computed Columns and to lambda variables
   (e.g. inside ``transform``), which have no SQL text to hand to the
-  string form;
-- ``word_shingles`` and ``split_of_cluster``: on the dedup/split path,
-  left for a change of their own.
+  string form.
 
-The vector math (``functions/vectors.py``) has ONE spelling — the
-Column form is ``F.expr`` of the SQL text — so there is no second
-tree to pin against; instead its values are checked repr-exact
-against a pure-Python left-to-right fold over the same rows, the
-evaluation order the DuckDB oracles replay.  (The full value oracles
-prove the queries end-to-end; this is the focused unit pin for the
-helpers themselves.)
+The vector math (``functions/vectors.py``) and the split bucket
+(``splitting.split_of_cluster``) have ONE spelling — the Column form
+is ``F.expr`` of the SQL text — so there is no second tree to pin
+against; instead their values are checked repr-exact against pure
+Python over the same rows (a left-to-right fold for the vectors, the
+evaluation order the DuckDB oracles replay; an md5 bucket for the
+split).  (The full value oracles prove the queries end-to-end; this
+is the focused unit pin for the helpers themselves.)
 """
 
 from __future__ import annotations
@@ -45,8 +44,6 @@ from geoscale_healthflow_etl_django_analytics_spark.functions.hashing import (
 from geoscale_healthflow_etl_django_analytics_spark.functions.text import (
     tokens,
     tokens_sql,
-    word_shingles,
-    word_shingles_sql,
 )
 from geoscale_healthflow_etl_django_analytics_spark.functions.vectors import (
     cosine,
@@ -86,16 +83,6 @@ def _pairs(df, col_form, sql_form):
 def test_tokens_twin(text_df):
     for a, b in _pairs(text_df, tokens(F.col("text")), tokens_sql("text")):
         assert a == b
-
-
-def test_word_shingles_twin(text_df):
-    for k in (2, 3):
-        for a, b in _pairs(
-            text_df,
-            word_shingles(F.col("text"), k),
-            word_shingles_sql("text", k),
-        ):
-            assert a == b
 
 
 def test_md5_int_twins(text_df):
@@ -154,13 +141,27 @@ def test_vector_math_matches_python_fold(spark):
         assert repr(r["cosine"]) == repr(want)
 
 
-def test_split_of_cluster_twin(spark):
-    df = spark.createDataFrame(
-        [(i,) for i in range(0, 2000, 7)], "cluster_id long"
-    )
-    for a, b in _pairs(
-        df,
-        split_of_cluster(F.col("cluster_id")),
-        split_of_cluster_sql("cluster_id"),
-    ):
-        assert a == b
+def test_split_of_cluster_values(spark):
+    """Repr-exact against a pure-Python md5 bucket over the same ids."""
+    import hashlib
+
+    ids = list(range(0, 2000, 7))
+    df = spark.createDataFrame([(i,) for i in ids], "cluster_id long")
+    got = [
+        r["split"]
+        for r in df.orderBy("cluster_id")
+        .select(split_of_cluster("cluster_id").alias("split"))
+        .collect()
+    ]
+
+    def py_split(cid: int) -> str:
+        b = int(hashlib.md5(f"split-{cid}".encode()).hexdigest()[:8], 16) % 100
+        return "train" if b < 80 else "val" if b < 90 else "test"
+
+    assert got == [py_split(c) for c in ids]
+
+
+def test_split_of_cluster_rejects_quoted_salt():
+    with pytest.raises(ValueError):
+        split_of_cluster("cluster_id", salt="split'-")
+
