@@ -100,6 +100,60 @@ def _corpus_words(docs: DataFrame, doc_id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _word_vocab(words: DataFrame) -> DataFrame:
+    """(w, freq) — the word VOCABULARY of the corpus words."""
+    return words.groupBy("w").agg(F.count("*").alias("freq"))
+
+
+def _seed_vocab(docs: DataFrame, doc_id_col: str, text_col: str) -> DataFrame:
+    """(w, freq, s): the vocabulary with its characters as the seed
+    symbols — vocab-sized, ONE partition (see _vocab_loop_mode),
+    checkpointed: each round consumes it twice (pair count + apply)
+    and rounds chain, so unchecked lineage would re-execute the
+    corpus word extraction per consumer per round (the Lloyd lesson,
+    operators/similarity.py).  Call inside ``_vocab_loop_mode``."""
+    vocab = _word_vocab(_corpus_words(docs, doc_id_col, text_col))
+    # seed symbols = characters (filter guards the empty tail Java's
+    # limit=-1 split appends; DuckDB mirrors with list_filter)
+    chars = F.filter(F.split(F.col("w"), ""), lambda x: x != "")
+    sym = F.concat(F.lit(SEP), F.array_join(chars, SEP), F.lit(SEP))
+    return (
+        vocab.select("w", "freq", sym.alias("s")).coalesce(1).localCheckpoint()
+    )
+
+
+def _top_pair(v: DataFrame) -> DataFrame:
+    """ONE row (a, b, total): the adjacent symbol pair with the largest
+    word-frequency-weighted count, ranked (total DESC, a ASC, b ASC)."""
+    arr = _sym_array(F.col("s"))
+    n = F.size(arr)
+    # adjacent pairs: zip(arr[0:n-1], arr[1:n]) — empty for 1-symbol
+    # words, whose rows explode() then drops
+    pairs = F.zip_with(
+        F.slice(arr, 1, n - 1),
+        F.slice(arr, 2, n - 1),
+        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
+    )
+    return (
+        v.select("freq", F.explode(pairs).alias("p"))
+        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .agg(F.sum("freq").alias("total"))
+        .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
+        .limit(1)
+    )
+
+
+def _merged(a: Column, b: Column, passes: int) -> Column:
+    """Column ``s`` after merge (a, b): ``passes`` chained ``replace``
+    calls (MERGE SEMANTICS above)."""
+    pat = F.concat(F.lit(SEP), a, F.lit(SEP), b, F.lit(SEP))
+    rep = F.concat(F.lit(SEP), a, b, F.lit(SEP))
+    s_new: Column = F.col("s")
+    for _ in range(passes):
+        s_new = F.replace(s_new, pat, rep)
+    return s_new
+
+
 def learn_merged_vocab(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
@@ -108,50 +162,16 @@ def learn_merged_vocab(
     passes: int = 3,
 ) -> DataFrame:
     """(w, freq, s): the word vocabulary after ``n_merges`` learned
-    merges, ``s`` the separator-joined symbol string."""
-    words = _corpus_words(docs, doc_id_col, text_col)
-    vocab = words.groupBy("w").agg(F.count("*").alias("freq"))
-    # seed symbols = characters (filter guards the empty tail Java's
-    # limit=-1 split appends; DuckDB mirrors with list_filter)
-    chars = F.filter(F.split(F.col("w"), ""), lambda x: x != "")
-    sym = F.concat(F.lit(SEP), F.array_join(chars, SEP), F.lit(SEP))
+    merges, ``s`` the separator-joined symbol string.  Each round's
+    winner stays in-plan as a one-row broadcast."""
     with _vocab_loop_mode(docs):
-        # vocab-sized frame, ONE partition (see _vocab_loop_mode),
-        # checkpointed per round: each round consumes it twice (pair
-        # count + apply) and rounds chain, so unchecked lineage would
-        # re-execute the corpus word extraction per consumer per
-        # round (the Lloyd lesson, operators/similarity.py)
-        v = (
-            vocab.select("w", "freq", sym.alias("s"))
-            .coalesce(1)
-            .localCheckpoint()
-        )
+        v = _seed_vocab(docs, doc_id_col, text_col)
         for _ in range(n_merges):
-            arr = _sym_array(F.col("s"))
-            n = F.size(arr)
-            # adjacent pairs: zip(arr[0:n-1], arr[1:n]) — empty for
-            # 1-symbol words, whose rows explode() then drops
-            pairs = F.zip_with(
-                F.slice(arr, 1, n - 1),
-                F.slice(arr, 2, n - 1),
-                lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-            )
-            pc = (
-                v.select("freq", F.explode(pairs).alias("p"))
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("total"))
-            )
-            top = pc.orderBy(F.desc("total"), F.asc("a"), F.asc("b")).limit(1)
-            pat = F.concat(
-                F.lit(SEP), F.col("a"), F.lit(SEP), F.col("b"), F.lit(SEP)
-            )
-            rep = F.concat(F.lit(SEP), F.col("a"), F.col("b"), F.lit(SEP))
-            s_new: Column = F.col("s")
-            for _ in range(passes):
-                s_new = F.replace(s_new, pat, rep)
             v = (
-                v.crossJoin(F.broadcast(top))
-                .select("w", "freq", s_new.alias("s"))
+                v.crossJoin(F.broadcast(_top_pair(v)))
+                .select(
+                    "w", "freq", _merged(F.col("a"), F.col("b"), passes).alias("s")
+                )
                 .localCheckpoint()
             )
     return v
@@ -173,43 +193,18 @@ def learn_merges(
     production persists merges.txt and ships it to every worker, so
     the n_merges-row collect is the contract, not a scale hazard).
     """
-    words = _corpus_words(docs, doc_id_col, text_col)
-    vocab = words.groupBy("w").agg(F.count("*").alias("freq"))
-    chars = F.filter(F.split(F.col("w"), ""), lambda x: x != "")
-    sym = F.concat(F.lit(SEP), F.array_join(chars, SEP), F.lit(SEP))
     merges: list[tuple[str, str]] = []
     with _vocab_loop_mode(docs):
-        v = (
-            vocab.select("w", "freq", sym.alias("s"))
-            .coalesce(1)
-            .localCheckpoint()
-        )
+        v = _seed_vocab(docs, doc_id_col, text_col)
         for _ in range(n_merges):
-            arr = _sym_array(F.col("s"))
-            n = F.size(arr)
-            pairs = F.zip_with(
-                F.slice(arr, 1, n - 1),
-                F.slice(arr, 2, n - 1),
-                lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-            )
-            top = (
-                v.select("freq", F.explode(pairs).alias("p"))
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("total"))
-                .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .first()
-            )
+            top = _top_pair(v).first()
             if top is None:  # vocabulary fully merged — no pairs left
                 break
             a, b = top["a"], top["b"]
             merges.append((a, b))
-            pat = F.lit(SEP + a + SEP + b + SEP)
-            rep = F.lit(SEP + a + b + SEP)
-            s_new: Column = F.col("s")
-            for _ in range(passes):
-                s_new = F.replace(s_new, pat, rep)
-            v = v.select("w", "freq", s_new.alias("s")).localCheckpoint()
+            v = v.select(
+                "w", "freq", _merged(F.lit(a), F.lit(b), passes).alias("s")
+            ).localCheckpoint()
     return merges
 
 
@@ -292,6 +287,33 @@ def _apply_word(
     return len([t for t in s.split(SEP) if t])
 
 
+def _doc_stats(words: DataFrame, per_word: DataFrame) -> DataFrame:
+    """(doc_id, bpe_tokens, chars, chars_per_token) from the corpus
+    words and a per-word token count ``(w, n_tok)`` (inner join: docs
+    with zero words are absent)."""
+    out = (
+        words.join(per_word, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n_tok").alias("bpe_tokens"),
+            F.sum(F.length("w")).alias("chars"),
+        )
+    )
+    return out.select(
+        "doc_id",
+        "bpe_tokens",
+        "chars",
+        F.when(
+            F.col("bpe_tokens") > 0,
+            fround(
+                F.col("chars").cast("double") / F.col("bpe_tokens"), 4
+            ),
+        )
+        .otherwise(F.lit(0.0))
+        .alias("chars_per_token"),
+    )
+
+
 def bpe_apply_doc_stats(
     docs: DataFrame,
     merges: list[tuple[str, str]],
@@ -342,31 +364,10 @@ def bpe_apply_doc_stats(
             yield pdf
 
     words = _corpus_words(docs, doc_id_col, text_col)
-    vocab = words.groupBy("w").agg(F.count("*").alias("freq"))
-    per_word = vocab.mapInPandas(
+    per_word = _word_vocab(words).mapInPandas(
         tokenize_batches, schema="w string, freq bigint, n_tok int"
     ).select("w", "n_tok")
-    out = (
-        words.join(per_word, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_tok").alias("bpe_tokens"),
-            F.sum(F.length("w")).alias("chars"),
-        )
-    )
-    return out.select(
-        "doc_id",
-        "bpe_tokens",
-        "chars",
-        F.when(
-            F.col("bpe_tokens") > 0,
-            fround(
-                F.col("chars").cast("double") / F.col("bpe_tokens"), 4
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("chars_per_token"),
-    )
+    return _doc_stats(words, per_word)
 
 
 def bpe_doc_stats(
@@ -383,24 +384,4 @@ def bpe_doc_stats(
     words = _corpus_words(docs, doc_id_col, text_col)
     v = learn_merged_vocab(docs, doc_id_col, text_col, n_merges, passes)
     per_word = v.select("w", F.size(_sym_array(F.col("s"))).alias("n_tok"))
-    out = (
-        words.join(per_word, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_tok").alias("bpe_tokens"),
-            F.sum(F.length("w")).alias("chars"),
-        )
-    )
-    return out.select(
-        "doc_id",
-        "bpe_tokens",
-        "chars",
-        F.when(
-            F.col("bpe_tokens") > 0,
-            fround(
-                F.col("chars").cast("double") / F.col("bpe_tokens"), 4
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("chars_per_token"),
-    )
+    return _doc_stats(words, per_word)

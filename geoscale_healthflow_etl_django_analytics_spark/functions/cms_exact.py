@@ -1,16 +1,26 @@
-"""Count-Min sketch on CROSS-ENGINE md5 buckets — the full-value-
-oracle port of ``functions/sketches.py`` (VERDICT r9 next-round #2).
+"""Count-Min sketch on CROSS-ENGINE md5 buckets — mergeable
+heavy-hitter counting for streams/corpora too wide to count exactly,
+with a full DuckDB value oracle.
 
-The original CMS hashes with JVM ``xxhash64``, which no other engine
-reproduces: the sketch itself sat outside the DuckDB replay and the
-registered query could only pin a probabilistic tolerance-1 error
-bound — a gate that a legitimate sketch could flip with Markov-tail
-probability under a regenerated corpus.  The HyperLogLog
-(``functions/hll.py``) proved the fix pattern in r9: derive buckets
-from md5 (bit-for-bit identical in Spark, DuckDB, Postgres, Trino)
-and keep every reduction exact-integer, so registers, estimates and
-bounds ALL replay and the correctness gate is a value hash, not a
-bound check.
+The sketch state is a CONSTANT-size table — ``depth x width`` cells
+regardless of corpus size — built with one map-side-combinable
+``groupBy().count()`` and collapsed to a one-row ``map<long,long>``
+for scalar composition.  Guarantees (Cormode & Muthukrishnan 2005): a
+point estimate NEVER underestimates (every cell the token hashes to
+counted every one of its occurrences), and overestimates by more than
+``e/width * N`` with probability at most ``e^-depth`` (N = total
+stream weight).  Per-partition sketches merge by cell-wise addition
+(the groupBy does exactly that), which is what the sketch buys at
+100 TB: a long-running ingest (``streaming/sketch_stream.py``) can
+maintain heavy-hitter counts without ever holding the distinct-token
+set anywhere.
+
+Buckets come from md5 (bit-for-bit identical in Spark, DuckDB,
+Postgres, Trino) and every reduction is exact-integer — the
+``functions/hll.py`` pattern — so cells, estimates and bounds ALL
+replay and the correctness gate is a value hash, not a bound check.
+JVM ``xxhash64`` buckets, which no other engine reproduces, would
+leave only a probabilistic error-bound check.
 
 Bucket derivation — and its cost discipline: ONE ``md5_int60`` per
 token (one md5 + one hex parse, the HLL's exact per-row price), then
@@ -23,14 +33,6 @@ x200; this form measures at the HLL's cost.)  DuckDB replay per row:
 ``(('0x' || substr(md5(token), 1, 15))::BIGINT >> (11*i)) & (width-1)``.
 Structural constraint: ``depth * log2(width) <= 60`` (4 x 11 = 44
 bits used here).
-
-Everything else — the one map-side-combinable ``groupBy().count()``
-over ``depth x width`` cells, the one-row packed ``map<long,long>``,
-the min-over-rows point estimate, cell-wise-addition mergeability —
-is the proven design of ``functions/sketches.py`` unchanged; see that
-module for the Cormode & Muthukrishnan 2005 guarantees and the
-100 TB streaming rationale.  The xxhash64 original stays for
-pure-speed paths with no oracle (the streaming merge twin keeps it).
 """
 
 from __future__ import annotations

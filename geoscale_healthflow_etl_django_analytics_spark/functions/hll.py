@@ -1,11 +1,10 @@
 """HyperLogLog distinct-count sketch (Flajolet et al. 2007).
 
-Split out of functions/sketches.py into its own module so the CMS
-module's bytes (and with them the credit of every query whose code
-path includes it) stay untouched — the HLL is new this round and
-carries its own closure.  See the block comment below for the design
+The cardinality companion of the Count-Min sketch
+(``functions/cms_exact.py``); both hash with md5 so Spark and DuckDB
+agree bit for bit.  See the block comment below for the design
 contract (full value oracle via md5-derived hashes + integer-exact
-harmonic reduction, unlike the CMS's boolean bound gate).
+harmonic reduction).
 """
 
 from __future__ import annotations
@@ -15,12 +14,11 @@ from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
 # HyperLogLog — mergeable distinct-count sketch (Flajolet et al. 2007),
-# the cardinality complement of the CMS above.  Unlike the CMS (whose
-# xxhash64 buckets put the sketch itself outside the oracle replay and
-# force a boolean error-bound gate), the HLL here is built on the
-# md5-derived 60-bit hash (functions/hashing.md5_int60) that Spark and
-# DuckDB agree on bit-for-bit, and its register reduction is kept as an
-# EXACT INTEGER (sum of 2^(RHO_MAX - M_j) as BIGINT — every term a
+# the cardinality complement of the CMS.  Like the CMS, the HLL here is
+# built on the md5-derived 60-bit hash (functions/hashing.md5_int60)
+# that Spark and DuckDB agree on bit-for-bit, and its register
+# reduction is kept as an EXACT INTEGER (sum of 2^(RHO_MAX - M_j) as
+# BIGINT — every term a
 # power of two, so the sum is associative and partitioning-independent)
 # — which means the ENTIRE sketch, estimate included, replays in ANSI
 # SQL and is value-hash-checked, not just bound-checked.

@@ -182,34 +182,18 @@ def backoff_model(
     return tri, bo3, nll2bo
 
 
-def backoff_lm_scores(
-    docs: DataFrame,
-    decimals: int = 6,
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document backoff-LM score: (doc_id, n_grams,
-    n_bigram_backoffs, n_unigram_backoffs, mean_nll, perplexity).
-
-    Tokens (whitespace, lowered) hash to wids; each doc contributes
-    its ``len-2`` interior trigram windows (docs with <3 tokens drop,
-    the bigram-LM convention — no BOS padding, so every scored gram
-    has a real 2-word context).  The ladder resolves per gram as
+def _score_windows(ws: DataFrame, keys: list[str], decimals: int) -> DataFrame:
+    """The corpus path shared by both tiers: ``ws`` carries ``keys``
+    plus the per-doc wid array ``ws`` (already filtered to >= 3
+    wids).  Each doc contributes its ``len-2`` interior trigram
+    windows; the ladder resolves per gram as
     ``coalesce(nll3_u, bo3_u + nll2bo_u)`` over three broadcast
-    probes; the per-doc sum is an exact LONG sum of micro-nats."""
-    from ..functions.hashing import md5_int32_sql
-    from ..functions.text import tokens_sql
-
-    spark = docs.sparkSession
-    tri, bo3, nll2bo = backoff_model(spark)
-    # SQL-string construction for the token/gram trees (r12, guide §5
-    # — see dedup.minhash_perm_band_hashes for the measured rationale)
-    ws = docs.selectExpr(
-        "doc_id",
-        f"transform({tokens_sql(f'lower({text_col})')}, "
-        f"t -> {md5_int32_sql('t')} % {W}) AS ws",
-    ).filter(F.size("ws") >= 3)
+    probes; the per-doc sum is an exact LONG sum of micro-nats.
+    Returns ``(*keys, n_grams, n_bigram_backoffs, n_unigram_backoffs,
+    mean_nll, perplexity)``."""
+    tri, bo3, nll2bo = backoff_model(ws.sparkSession)
     grams = ws.selectExpr(
-        "doc_id",
+        *keys,
         "inline(transform(sequence(1, size(ws) - 2), i -> named_struct("
         "'a', element_at(ws, i), 'b', element_at(ws, i + 1), "
         "'c', element_at(ws, i + 2))))",
@@ -219,7 +203,7 @@ def backoff_lm_scores(
         .join(F.broadcast(bo3), ["a", "b"])
         .join(F.broadcast(nll2bo), ["b", "c"])
         .select(
-            "doc_id",
+            *keys,
             F.coalesce(
                 F.col("nll3_u"), F.col("bo3_u") + F.col("nll2bo_u")
             ).alias("nll_u"),
@@ -229,7 +213,7 @@ def backoff_lm_scores(
             .alias("bo1"),
         )
     )
-    per_doc = scored.groupBy("doc_id").agg(
+    per_doc = scored.groupBy(*keys).agg(
         F.count("*").cast("int").alias("n_grams"),
         F.sum("bo").cast("int").alias("n_bigram_backoffs"),
         F.sum("bo1").cast("int").alias("n_unigram_backoffs"),
@@ -241,13 +225,38 @@ def backoff_lm_scores(
         ).alias("mean_nll"),
     )
     return per_doc.select(
-        "doc_id",
+        *keys,
         "n_grams",
         "n_bigram_backoffs",
         "n_unigram_backoffs",
         "mean_nll",
         fround(F.exp(F.col("mean_nll")), 4).alias("perplexity"),
     )
+
+
+def backoff_lm_scores(
+    docs: DataFrame,
+    decimals: int = 6,
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-document backoff-LM score: (doc_id, n_grams,
+    n_bigram_backoffs, n_unigram_backoffs, mean_nll, perplexity).
+
+    Tokens (whitespace, lowered) hash to wids; each doc contributes
+    its ``len-2`` interior trigram windows (docs with <3 tokens drop,
+    the bigram-LM convention — no BOS padding, so every scored gram
+    has a real 2-word context), scored by :func:`_score_windows`."""
+    from ..functions.hashing import md5_int32_sql
+    from ..functions.text import tokens_sql
+
+    # SQL-string construction for the token/gram trees (r12, guide §5
+    # — see dedup.minhash_perm_band_hashes for the measured rationale)
+    ws = docs.selectExpr(
+        "doc_id",
+        f"transform({tokens_sql(f'lower({text_col})')}, "
+        f"t -> {md5_int32_sql('t')} % {W}) AS ws",
+    ).filter(F.size("ws") >= 3)
+    return _score_windows(ws, ["doc_id"], decimals)
 
 
 def top_k_vocab(
@@ -301,8 +310,6 @@ def backoff_lm_scores_vocab(
         map_args.append(F.lit(tok))
         map_args.append(F.lit(wid))
     vmap = F.create_map(*map_args) if map_args else F.create_map()
-    spark = docs.sparkSession
-    tri, bo3, nll2bo = backoff_model(spark)
     ws = docs.select(
         "doc_id",
         F.transform(
@@ -318,49 +325,4 @@ def backoff_lm_scores_vocab(
         "size(ws) AS n_tokens",
         f"size(filter(ws, w -> w = {k})) AS n_unk",
     ).filter(F.size("ws") >= 3)
-    grams = counted.selectExpr(
-        "doc_id",
-        "n_tokens",
-        "n_unk",
-        "inline(transform(sequence(1, size(ws) - 2), i -> named_struct("
-        "'a', element_at(ws, i), 'b', element_at(ws, i + 1), "
-        "'c', element_at(ws, i + 2))))",
-    )
-    scored = (
-        grams.join(F.broadcast(tri), ["a", "b", "c"], "left")
-        .join(F.broadcast(bo3), ["a", "b"])
-        .join(F.broadcast(nll2bo), ["b", "c"])
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_unk",
-            F.coalesce(
-                F.col("nll3_u"), F.col("bo3_u") + F.col("nll2bo_u")
-            ).alias("nll_u"),
-            F.col("nll3_u").isNull().cast("int").alias("bo"),
-            (F.col("nll3_u").isNull() & ~F.col("has_bi"))
-            .cast("int")
-            .alias("bo1"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id", "n_tokens", "n_unk").agg(
-        F.count("*").cast("int").alias("n_grams"),
-        F.sum("bo").cast("int").alias("n_bigram_backoffs"),
-        F.sum("bo1").cast("int").alias("n_unigram_backoffs"),
-        fround(
-            F.sum("nll_u").cast("double")
-            / F.lit(float(_MICRO))
-            / F.count("*"),
-            decimals,
-        ).alias("mean_nll"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_tokens",
-        "n_unk",
-        "n_grams",
-        "n_bigram_backoffs",
-        "n_unigram_backoffs",
-        "mean_nll",
-        fround(F.exp(F.col("mean_nll")), 4).alias("perplexity"),
-    )
+    return _score_windows(counted, ["doc_id", "n_tokens", "n_unk"], decimals)

@@ -19,8 +19,9 @@ similarity operators (operators/similarity.py) end-to-end.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -206,6 +207,77 @@ def _spread_ids(ids: DataFrame) -> DataFrame:
     return ensure_parallelism(ids, min_parts=target, key="media_id")
 
 
+def _media_corpus(
+    ids: DataFrame, payload_of: Callable[[int], bytes]
+) -> DataFrame:
+    """One payload per input row (``media_id`` long column), the bytes
+    given by ``payload_of(media_id)``.  Built in mapInPandas over the
+    spread ids so payload generation is distributed exactly like a
+    binaryFile ingest would be."""
+
+    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "payload": [payload_of(int(m)) for m in pdf["media_id"]],
+                }
+            )
+
+    return _spread_ids(ids).mapInPandas(
+        _gen, "media_id long, payload binary"
+    )
+
+
+def _decode_stats(
+    media: DataFrame, row_of: Callable[[int, bytes], tuple], schema: str
+) -> DataFrame:
+    """Arrow-batched decode: one ``row_of(media_id, payload)`` tuple
+    per media row, in the column order of ``schema``."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    row_of(int(mid), bytes(payload))
+                    for mid, payload in zip(pdf["media_id"], pdf["payload"])
+                ],
+                columns=columns,
+            )
+
+    return media.mapInPandas(_stats, schema)
+
+
+def _resize_stats_row(
+    mid: int, w: int, h: int, px: list, max_side: int
+) -> tuple:
+    """numpy nearest-neighbor resize of decoded RGB pixels (out dim =
+    min(side, max_side), source index = i*src//dst — pure integer
+    arithmetic) → a :data:`BMP_STATS_SCHEMA` row: channel means over
+    the RESIZED pixels plus the position-weighted fingerprint
+    Σ (r + 2g + 3b)·(1 + i + 2j)."""
+    arr = np.array(px, dtype=np.int64).reshape(h, w, 3)
+    ow, oh = min(w, max_side), min(h, max_side)
+    xs = [i * w // ow for i in range(ow)]
+    ys = [j * h // oh for j in range(oh)]
+    out = arr[np.ix_(ys, xs)]  # (oh, ow, 3)
+    n = ow * oh
+    sums = out.sum(axis=(0, 1))
+    ii = np.arange(ow).reshape(1, ow)
+    jj = np.arange(oh).reshape(oh, 1)
+    weight = 1 + ii + 2 * jj
+    chan = out[:, :, 0] + 2 * out[:, :, 1] + 3 * out[:, :, 2]
+    fp = int((chan * weight).sum())
+    return (
+        mid, w, h, ow, oh,
+        _round6(sums[0] / n),
+        _round6(sums[1] / n),
+        _round6(sums[2] / n),
+        fp,
+    )
+
+
 def _bmp_pixel(x: int, y: int, mid: int) -> tuple:
     """Deterministic synthetic pixel — integer arithmetic an ANSI-SQL
     oracle replays verbatim (registry.py::mm_bmp_decode_stats)."""
@@ -219,86 +291,80 @@ def _bmp_pixel(x: int, y: int, mid: int) -> tuple:
 def media_bmp_corpus(ids: DataFrame) -> DataFrame:
     """One real 24-bit BMP payload per input row (``media_id`` long
     column): width = id%13+2, height = id%11+2, pixels from
-    :func:`_bmp_pixel`. Built in mapInPandas so payload generation is
-    distributed exactly like a binaryFile ingest would be."""
+    :func:`_bmp_pixel`."""
     from ..sources.bmp import write_bmp_bytes
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h = mid % 13 + 2, mid % 11 + 2
-                payloads.append(
-                    write_bmp_bytes(
-                        w,
-                        h,
-                        [
-                            _bmp_pixel(x, y, mid)
-                            for y in range(h)
-                            for x in range(w)
-                        ],
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+    def _payload(mid: int) -> bytes:
+        w, h = mid % 13 + 2, mid % 11 + 2
+        return write_bmp_bytes(
+            w, h, [_bmp_pixel(x, y, mid) for y in range(h) for x in range(w)]
+        )
 
-    return _spread_ids(ids).mapInPandas(
-        _gen, "media_id long, payload binary"
-    )
+    return _media_corpus(ids, _payload)
 
 
 def bmp_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
     """The real multimodal hot path: Arrow-batched BMP decode →
-    numpy nearest-neighbor resize (out dim = min(side, max_side),
-    source index = i*src//dst — pure integer arithmetic) → per-image
-    channel means over the RESIZED pixels plus a position-weighted
-    fingerprint Σ (r + 2g + 3b)·(1 + i + 2j). The fingerprint is
-    position-sensitive on purpose: a row-flip, BGR swap or padding
-    slip in the decoder shifts it even when the means survive, and
-    the DuckDB oracle recomputes it independently from the pixel
-    function — the same writer-vs-independent-oracle proof pattern as
-    the GeoTIFF path."""
-    import numpy as np
-
+    :func:`_resize_stats_row`. The fingerprint is position-sensitive
+    on purpose: a row-flip, BGR swap or padding slip in the decoder
+    shifts it even when the means survive, and the DuckDB oracle
+    recomputes it independently from the pixel function — the same
+    writer-vs-independent-oracle proof pattern as the GeoTIFF path."""
     from ..sources.bmp import parse_bmp_bytes
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, px = parse_bmp_bytes(bytes(payload))
-                arr = np.array(px, dtype=np.int64).reshape(h, w, 3)
-                ow, oh = min(w, max_side), min(h, max_side)
-                xs = [i * w // ow for i in range(ow)]
-                ys = [j * h // oh for j in range(oh)]
-                out = arr[np.ix_(ys, xs)]  # (oh, ow, 3)
-                n = ow * oh
-                sums = out.sum(axis=(0, 1))
-                ii = np.arange(ow).reshape(1, ow)
-                jj = np.arange(oh).reshape(oh, 1)
-                weight = 1 + ii + 2 * jj
-                chan = out[:, :, 0] + 2 * out[:, :, 1] + 3 * out[:, :, 2]
-                fp = int((chan * weight).sum())
-                rows.append(
-                    (
-                        int(mid), w, h, ow, oh,
-                        _round6(sums[0] / n),
-                        _round6(sums[1] / n),
-                        _round6(sums[2] / n),
-                        fp,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "out_w", "out_h",
-                    "mean_r", "mean_g", "mean_b", "fingerprint",
-                ],
-            )
+    return _decode_stats(
+        media,
+        lambda mid, payload: _resize_stats_row(
+            mid, *parse_bmp_bytes(payload), max_side
+        ),
+        BMP_STATS_SCHEMA,
+    )
 
-    return media.mapInPandas(_stats, BMP_STATS_SCHEMA)
+
+def _png_pixel(x: int, y: int, mid: int) -> tuple:
+    """Deterministic synthetic pixel for the PNG path — different
+    coefficients than :func:`_bmp_pixel` so the two codec queries
+    never share outputs; integer arithmetic an ANSI-SQL oracle
+    replays verbatim (registry.py::mm_png_decode_stats)."""
+    return (
+        (x * 11 + y * 5 + mid) % 256,
+        (x * 3 + y * 13 + 2 * mid) % 256,
+        (x * 7 + y * 17 + 3 * mid) % 256,
+    )
+
+
+def media_png_corpus(ids: DataFrame) -> DataFrame:
+    """One real 8-bit RGB PNG payload per input row: width = id%12+2,
+    height = id%9+2, pixels from :func:`_png_pixel`.  The writer
+    (sources/png.py) stores scanline y under filter y % 5, so every
+    payload taller than 4 rows exercises ALL five PNG predictors —
+    the decode below must reverse Sub/Up/Average/Paeth correctly or
+    the oracle hash breaks."""
+    from ..sources.png import write_png_bytes
+
+    def _payload(mid: int) -> bytes:
+        w, h = mid % 12 + 2, mid % 9 + 2
+        return write_png_bytes(
+            w, h, [_png_pixel(x, y, mid) for y in range(h) for x in range(w)]
+        )
+
+    return _media_corpus(ids, _payload)
+
+
+def png_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
+    """PNG twin of :func:`bmp_decode_resize_stats`: Arrow-batched
+    inflate + unfilter (all five predictors) + CRC verify →
+    :func:`_resize_stats_row`, independently recomputed by the oracle
+    from the pixel function (it never parses PNG)."""
+    from ..sources.png import parse_png_bytes
+
+    return _decode_stats(
+        media,
+        lambda mid, payload: _resize_stats_row(
+            mid, *parse_png_bytes(payload), max_side
+        ),
+        BMP_STATS_SCHEMA,
+    )
 
 
 def _round6(x: float) -> float:
@@ -322,28 +388,15 @@ def _wav_sample(t: int, mid: int) -> int:
 
 def media_wav_corpus(ids: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """One real mono 16-bit PCM WAV payload per ``media_id`` row;
-    n_samples = id%50+20, samples from :func:`_wav_sample`. Built in
-    mapInPandas like a binaryFile ingest."""
+    n_samples = id%50+20, samples from :func:`_wav_sample`."""
     from ..sources.wav import write_wav_bytes
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                n = mid % 50 + 20
-                payloads.append(
-                    write_wav_bytes(
-                        [_wav_sample(t, mid) for t in range(n)], sample_rate
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+    def _payload(mid: int) -> bytes:
+        return write_wav_bytes(
+            [_wav_sample(t, mid) for t in range(mid % 50 + 20)], sample_rate
+        )
 
-    return _spread_ids(ids).mapInPandas(
-        _gen, "media_id long, payload binary"
-    )
+    return _media_corpus(ids, _payload)
 
 
 def wav_decode_stats(media: DataFrame) -> DataFrame:
@@ -357,30 +410,16 @@ def wav_decode_stats(media: DataFrame) -> DataFrame:
 
     from ..sources.wav import parse_wav_bytes
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = parse_wav_bytes(bytes(payload))
-                n = len(s)
-                sq = sum(v * v for v in s)
-                rms = math.floor(math.sqrt(sq / n) * 1e6 + 0.5) / 1e6
-                nz = [v for v in s if v != 0]
-                zc = sum(
-                    1 for a, b in zip(nz, nz[1:]) if (a < 0) != (b < 0)
-                )
-                rows.append(
-                    (int(mid), rate, n, rms, max(abs(v) for v in s), zc)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "rms", "peak", "zero_crossings",
-                ],
-            )
+    def _row(mid: int, payload: bytes) -> tuple:
+        rate, s = parse_wav_bytes(payload)
+        n = len(s)
+        sq = sum(v * v for v in s)
+        rms = math.floor(math.sqrt(sq / n) * 1e6 + 0.5) / 1e6
+        nz = [v for v in s if v != 0]
+        zc = sum(1 for a, b in zip(nz, nz[1:]) if (a < 0) != (b < 0))
+        return (mid, rate, n, rms, max(abs(v) for v in s), zc)
 
-    return media.mapInPandas(_stats, WAV_STATS_SCHEMA)
+    return _decode_stats(media, _row, WAV_STATS_SCHEMA)
 
 
 def media_jpeg_corpus(ids: DataFrame) -> DataFrame:
@@ -389,31 +428,24 @@ def media_jpeg_corpus(ids: DataFrame) -> DataFrame:
     (id%3+1)*8, height (id%2+1)*8, block value
     ((bx*7 + by*13 + id) % 256) — encoded by the pure-stdlib T.81
     codec with a unit quantization table, so decode is bit-exact
-    (sources/jpeg.py docstring). Built in mapInPandas like
-    media_bmp_corpus."""
-    import numpy as np
-
+    (sources/jpeg.py docstring)."""
     from ..sources.jpeg import encode_gray
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h = (mid % 3 + 1) * 8, (mid % 2 + 1) * 8
-                img = (
-                    (np.arange(w)[None, :] // 8) * 7
-                    + (np.arange(h)[:, None] // 8) * 13
-                    + mid
-                ).astype(np.int64) % 256
-                payloads.append(encode_gray(img.astype(np.uint8), quant=1))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+    def _payload(mid: int) -> bytes:
+        w, h = (mid % 3 + 1) * 8, (mid % 2 + 1) * 8
+        img = (
+            (np.arange(w)[None, :] // 8) * 7
+            + (np.arange(h)[:, None] // 8) * 13
+            + mid
+        ).astype(np.int64) % 256
+        return encode_gray(img.astype(np.uint8), quant=1)
 
-    return _spread_ids(ids).mapInPandas(
-        _gen, "media_id long, payload binary"
-    )
+    return _media_corpus(ids, _payload)
+
+
+JPEG_STATS_SCHEMA = (
+    "media_id long, width int, height int, mean_lum double, fingerprint long"
+)
 
 
 def jpeg_decode_stats(media: DataFrame) -> DataFrame:
@@ -431,33 +463,19 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
     these sizes, and throughput on real photos is bounded by the
     table-driven Python entropy decoder (~5-10 MB/s/core of
     compressed payload). At 100 TB the
-    codec inside ``_stats`` must be swapped for a JVM/native one
+    codec inside ``_row`` must be swapped for a JVM/native one
     (e.g. ImageIO via a JVM UDF or GPU decode); every Spark-side
     piece — binary column schema, mapInPandas batching, partitioning,
     the oracle-independent stats contract — is codec-agnostic and
     carries over unchanged."""
-    import numpy as np
-
     from ..sources.jpeg import decode_gray
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_gray(bytes(payload)).astype(np.int64)
-                h, w = arr.shape
-                xs = np.arange(w).reshape(1, w)
-                ys = np.arange(h).reshape(h, 1)
-                fp = int((arr * (1 + xs + 2 * ys)).sum())
-                rows.append(
-                    (int(mid), w, h, _round6(arr.sum() / (w * h)), fp)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "mean_lum", "fingerprint"],
-            )
+    def _row(mid: int, payload: bytes) -> tuple:
+        arr = decode_gray(payload).astype(np.int64)
+        h, w = arr.shape
+        xs = np.arange(w).reshape(1, w)
+        ys = np.arange(h).reshape(h, 1)
+        fp = int((arr * (1 + xs + 2 * ys)).sum())
+        return (mid, w, h, _round6(arr.sum() / (w * h)), fp)
 
-    return media.mapInPandas(
-        _stats,
-        "media_id long, width int, height int, mean_lum double, fingerprint long",
-    )
+    return _decode_stats(media, _row, JPEG_STATS_SCHEMA)

@@ -30,25 +30,11 @@ def _exact_avg(col: str) -> F.Column:
     return F.sum(F.col(col).cast(DECIMAL_TYPE)).cast("double") / F.count("*")
 
 
-def monthly_precip(precip: DataFrame) -> DataFrame:
-    """A6 — per (station, year, month) precipitation average + count
-    (weather_data_prec_temp_etl_view.py:332-359)."""
-    return precip.groupBy("station", "year", "month").agg(
-        _exact_avg("precip").alias("prec_avg"),
-        F.count("*").alias("prec_n"),
-    )
-
-
 def monthly_temp(temp: DataFrame) -> DataFrame:
     """A8 — per (station, year, month) temperature average (:423-443)."""
     return temp.groupBy("station", "year", "month").agg(
         _exact_avg("temp").alias("temp_avg")
     )
-
-
-def yearly_temp(temp: DataFrame) -> DataFrame:
-    """A7 — per (station, year) average, the J2 fill source (:404-421)."""
-    return temp.groupBy("station", "year").agg(_exact_avg("temp").alias("temp_yavg"))
 
 
 def merge_precip_temp(precip: DataFrame, temp: DataFrame) -> DataFrame:

@@ -25,7 +25,11 @@ fragments sit just above their first user; the near-dup/split family
 ``_SHINGLE_CTE``, the Lloyd tiers (``_lloyd_seed``, ``_lloyd_update``,
 ``_probed_assign``) precede ``_lloyd_ctes``, and the IVF-PQ chain
 (``_ivf_assign_ctes``, ``_ivf_members_ctes``, ``_pq_encode_ctes``,
-``_ivfpq_rerank``) precedes ``sim_ivf_topk``.
+``_ivfpq_rerank``) precedes ``sim_ivf_topk``.  In these shared
+generators a non-recursive CTE that an oracle reads twice or more is
+written ``AS MATERIALIZED``: DuckDB 1.0 inlines every CTE reference,
+so an unmarked one is recomputed per read, and the chained split
+oracles took minutes (tests/test_oracle_parity.py bounds each oracle).
 """
 
 from __future__ import annotations
@@ -837,7 +841,7 @@ def dedup_exact_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 3-word shingles in DuckDB (mirrors functions/text.py word_shingles_sql):
 _SHINGLE_CTE = r"""
-doc_sh AS (
+doc_sh AS MATERIALIZED (
     SELECT doc_id, lang,
            CASE WHEN len(toks) >= 3 THEN
                list_distinct(list_transform(range(1, len(toks) - 1),
@@ -916,7 +920,7 @@ band_structs AS (
     ]) AS u
     FROM pm
 ),
-band_hashes AS (
+band_hashes AS MATERIALIZED (
     SELECT doc_id, u.band AS band, u.bh AS bh FROM band_structs
 )"""
 
@@ -944,7 +948,7 @@ def _lsh_ctes(p: str, bands: str) -> str:
     return f"""{p}bsz AS (
     SELECT band, bh, count(*) AS bsz FROM {bands} GROUP BY band, bh
 ),
-{p}salted AS (
+{p}salted AS MATERIALIZED (
     SELECT h.doc_id, h.band, h.bh,
            CASE WHEN z.bsz > {dd._SALT_CAP}
                 THEN ('0x' || substr(md5(h.doc_id || ':' || h.band), 1, 8))::BIGINT
@@ -958,7 +962,7 @@ def _lsh_ctes(p: str, bands: str) -> str:
       ON a.band = b.band AND a.bh = b.bh AND a.salt = b.salt
      AND a.doc_id < b.doc_id
 ),
-{p}lsh_pairs AS (
+{p}lsh_pairs AS MATERIALIZED (
     SELECT doc_a, doc_b, jaccard FROM (
 {_verified(f"{p}cand", "    ")}
 )"""
@@ -1017,7 +1021,7 @@ def _batch_cands(s: str, t: str, visible: str | None = None) -> str:
     return f"""nk{s} AS (
     SELECT DISTINCT band, bh FROM band_hashes WHERE doc_id % 10 {t}
 ),
-tb{s} AS (
+tb{s} AS MATERIALIZED (
     SELECT h.doc_id, h.band, h.bh FROM band_hashes h JOIN nk{s} USING (band, bh){where}
 ),
 cand{s} AS (
@@ -1038,7 +1042,7 @@ def _ingest_batch(s: str, t: str, visible: str | None, resolve: str) -> str:
     unanchored ones self-cluster.  Ends in ``b{s}_assign`` (doc_id,
     cluster_id, split)."""
     return f"""{_batch_cands(s, t, visible)},
-pairs{s} AS (
+pairs{s} AS MATERIALIZED (
     SELECT doc_a, doc_b,
            {_link_type(t, " " * 11)}
     FROM (
@@ -1046,7 +1050,7 @@ pairs{s} AS (
 ),
 {_cc_ctes(f"bedges{s}", f"bcc{s}", f"pairs{s} WHERE link_type = 'batch_batch'")},
 bcomp0{s} AS (SELECT node, min(label) AS comp FROM bcc{s} GROUP BY node),
-bcomp{s} AS (
+bcomp{s} AS MATERIALIZED (
     SELECT b.doc_id, coalesce(c.comp, b.doc_id) AS bcomp
     FROM (SELECT doc_id FROM documents WHERE doc_id % 10 {t}) b
     LEFT JOIN bcomp0{s} c ON c.node = b.doc_id
@@ -1094,12 +1098,13 @@ def _split_oracle(*cuts: int) -> str:
     contract and therefore invisible here."""
     ctes = [
         _BAND_CTES,
-        f"ibh AS (SELECT doc_id, band, bh FROM band_hashes WHERE doc_id % 10 < {cuts[0]})",
+        f"ibh AS MATERIALIZED (SELECT doc_id, band, bh FROM band_hashes "
+        f"WHERE doc_id % 10 < {cuts[0]})",
         _lsh_ctes("i", "ibh"),
         _cc_ctes("iedges", "icc", "ilsh_pairs"),
         f"""icomp AS (SELECT node AS doc_id, min(label) AS cluster_id
           FROM icc GROUP BY node),
-folded0 AS (
+folded0 AS MATERIALIZED (
     SELECT doc_id, cluster_id, {_split_case("cluster_id")} AS split
     FROM icomp
 )""",
@@ -1165,7 +1170,7 @@ def _sign_bits_cte(name: str, h: str) -> str:
 
 def _banded4_cte(name: str) -> str:
     """Four 30-bit bands of the 120-bit sketch ``sim`` (sk0, sk1)."""
-    return f"""{name} AS (
+    return f"""{name} AS MATERIALIZED (
     SELECT doc_id, sk0, sk1, b.band,
            CASE b.band
              WHEN 0 THEN sk0 & 1073741823
@@ -1184,15 +1189,15 @@ _SIMHASH_ORACLE = rf"""WITH tok AS (
         regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> ''))) AS t
     FROM documents
 ),
-th AS (
+th AS MATERIALIZED (
     SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tok
 ),
 {_sign_bits_cte("bits", "h")},
-sim AS (
+sim AS MATERIALIZED (
     SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS simhash
     FROM bits GROUP BY doc_id
 ),
-banded AS (
+banded AS MATERIALIZED (
     SELECT doc_id, simhash, b.band,
            (simhash >> (b.band * 15)) & 32767 AS bh
     FROM sim CROSS JOIN (SELECT CAST(unnest([0,1,2,3]) AS INTEGER) AS band) b
@@ -2965,7 +2970,7 @@ def text_lm_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tiers share ``dt`` (per-doc lowered tokens) and the model CTEs, which
 # read per-doc wid lists ``wt`` (doc_id, ws) and end in the per-gram
 # ladder ``scored``; a tier defines only its token -> wid map.
-_BACKOFF_DT_CTE = r"""dt AS (
+_BACKOFF_DT_CTE = r"""dt AS MATERIALIZED (
     SELECT doc_id,
            list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
                        x -> x <> '') AS ltoks
@@ -2985,7 +2990,7 @@ tri0 AS (
            id % 128 AS c
     FROM range(2097152) t(id)
 ),
-tri1 AS (
+tri1 AS MATERIALIZED (
     SELECT a, b, c,
            ('0x' || substr(md5('c3-' || a || '_' || b || '_' || c), 1, 8))::BIGINT
                % 9000 + 1000 AS cnt
@@ -3000,7 +3005,7 @@ tri AS (
                 AS BIGINT) AS nll3_u
     FROM tri1 t JOIN ctx3 x USING (a, b)
 ),
-pairs AS (
+pairs AS MATERIALIZED (
     SELECT (id // 128) % 128 AS b, id % 128 AS c FROM range(16384) t(id)
 ),
 bo3 AS (
@@ -3010,7 +3015,7 @@ bo3 AS (
                  % 500 + 250)) * 1000000 + 0.5) AS BIGINT) AS bo3_u
     FROM pairs
 ),
-bi1 AS (
+bi1 AS MATERIALIZED (
     SELECT b, c,
            ('0x' || substr(md5('c2-' || b || '_' || c), 1, 8))::BIGINT
                % 9000 + 1000 AS cnt
@@ -3024,7 +3029,7 @@ bi AS (
                 AS BIGINT) AS nll2_u
     FROM bi1 t JOIN ctx2 x USING (b)
 ),
-uni0 AS (
+uni0 AS MATERIALIZED (
     SELECT id AS c,
            ('0x' || substr(md5('c1-' || id), 1, 8))::BIGINT % 9000 + 1000 AS cnt
     FROM range(128) t(id)
@@ -3137,7 +3142,7 @@ tokpos AS (
     SELECT doc_id, i, ltoks[i] AS token
     FROM dt, unnest(range(1, len(ltoks) + 1)) AS u(i)
 ),
-mapped AS (
+mapped AS MATERIALIZED (
     SELECT t.doc_id, t.i, coalesce(v.wid, 127) AS w
     FROM tokpos t LEFT JOIN vocab v USING (token)
 ),
@@ -4181,13 +4186,13 @@ def _ivf_assign_ctes(cent_where: str) -> str:
     seed centroids ``cent`` = the vectors of ``b`` passing
     ``cent_where``, and each vector's nearest centroid ``assign``
     (vec_id, label, nv, cid)."""
-    return f"""b AS (
+    return f"""b AS MATERIALIZED (
     SELECT vec_id, label,
            list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
     FROM emb
 ),
-cent AS (SELECT vec_id AS cid, nv AS cv FROM b{cent_where}),
-assign AS (
+cent AS MATERIALIZED (SELECT vec_id AS cid, nv AS cv FROM b{cent_where}),
+assign AS MATERIALIZED (
     SELECT vec_id, label, nv, cid FROM (
         SELECT b.vec_id, b.label, b.nv, cent.cid,
                row_number() OVER (
@@ -4202,14 +4207,14 @@ assign AS (
 def _ivf_members_ctes(nprobe: int) -> str:
     """The query vector (vec_id 0) as ``q``, its ``nprobe`` nearest
     centroids and the members of their lists."""
-    return f"""q AS (SELECT nv AS qv FROM b WHERE vec_id = 0),
+    return f"""q AS MATERIALIZED (SELECT nv AS qv FROM b WHERE vec_id = 0),
 probed AS (
     SELECT cid FROM (
         SELECT cent.cid, round(list_inner_product(cent.cv, q.qv), 6) AS c_sim
         FROM cent, q
     ) s ORDER BY c_sim DESC, cid ASC LIMIT {nprobe}
 ),
-members AS (
+members AS MATERIALIZED (
     SELECT a.vec_id, a.label, a.nv FROM assign a JOIN probed USING (cid)
 )"""
 
@@ -5150,7 +5155,7 @@ def mm_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "native decode UDF slots behind the same mapInPandas signature.",
 )
 def mm_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import multimodal_png as mm
+    from .operators import multimodal as mm
 
     docs = catalog.load_table(spark, sf_dir, "documents")
     ids = docs.select(F.col("doc_id").alias("media_id"))
@@ -6994,48 +6999,47 @@ def orc_roundtrip_priority_revenue(
     return _roundtrip_agg(back)
 
 
-def _lloyd_seed(k: int | str, mat: str = "") -> list[str]:
+def _lloyd_seed(k: int | str) -> list[str]:
     """Unit-normalized vectors ``b`` and the seed centroids ``c0`` (the
-    first ``k`` vectors) that every Lloyd tier starts from.  ``mat`` is
-    "" or " MATERIALIZED" (the CTE form of the tier)."""
+    first ``k`` vectors) that every Lloyd tier starts from."""
     return [
-        f"""b AS{mat} (
+        f"""b AS MATERIALIZED (
     SELECT vec_id,
            list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
     FROM emb
 )""",
-        f"""c0 AS{mat} (
+        f"""c0 AS MATERIALIZED (
     SELECT vec_id AS cid, nv AS cv FROM b WHERE vec_id < ({k})
 )""",
     ]
 
 
-def _lloyd_update(i: int, dim: int, mat: str = "") -> list[str]:
+def _lloyd_update(i: int, dim: int) -> list[str]:
     """Round ``i``'s centroid update: exact-decimal per-position means
     (8 dp) of the assignment ``a{i}``, giving ``c{i+1}``."""
     return [
-        f"""cm{i} AS{mat} (
+        f"""cm{i} AS MATERIALIZED (
     SELECT cid, gs.i AS pos,
            round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
                  / count(*), 8) AS m
     FROM a{i}, generate_series(1, {dim}) gs(i)
     GROUP BY cid, gs.i
 )""",
-        f"""c{i + 1} AS{mat} (
+        f"""c{i + 1} AS MATERIALIZED (
     SELECT cid, list(m ORDER BY pos) AS cv FROM cm{i} GROUP BY cid
 )""",
     ]
 
 
 def _probed_assign(
-    tag: str, sup: str, members: str, n_probe: int, mat: str = ""
+    tag: str, sup: str, members: str, n_probe: int
 ) -> list[str]:
     """Two-level assignment: each vector routes to its top-``n_probe``
     supers of ``sup`` (sid, sv) as ``vs{tag}``, then takes the exact
     argmax over those supers' member centroids ``members`` (cid, cv,
     sid) as ``a{tag}`` (vec_id, nv, cid, sim)."""
     return [
-        f"""vs{tag} AS{mat} (
+        f"""vs{tag} AS MATERIALIZED (
     SELECT vec_id, nv, sid FROM (
         SELECT b.vec_id, b.nv, u.sid,
                row_number() OVER (
@@ -7045,7 +7049,7 @@ def _probed_assign(
         FROM b CROSS JOIN {sup} u
     ) t WHERE rn <= {n_probe}
 )""",
-        f"""a{tag} AS{mat} (
+        f"""a{tag} AS MATERIALIZED (
     SELECT vec_id, nv, cid, sim FROM (
         SELECT v.vec_id, v.nv, m.cid,
                round(list_inner_product(v.nv, m.cv), 6) AS sim,
@@ -7071,7 +7075,7 @@ def _lloyd_ctes(
     CTE's vec_id bound."""
     ctes = _lloyd_seed(k)
     for i in range(iters):
-        ctes.append(f"""a{i} AS (
+        ctes.append(f"""a{i} AS MATERIALIZED (
     SELECT vec_id, nv, cid FROM (
         SELECT b.vec_id, b.nv, c.cid,
                row_number() OVER (
@@ -7082,7 +7086,7 @@ def _lloyd_ctes(
     ) t WHERE rn = 1
 )""")
         ctes.extend(_lloyd_update(i, dim))
-    ctes.append(f"""af AS (
+    ctes.append(f"""af AS MATERIALIZED (
     SELECT vec_id, nv, cid, sim FROM (
         SELECT b.vec_id, b.nv, c.cid,
                round(list_inner_product(b.nv, c.cv), 6) AS sim,
@@ -7128,10 +7132,10 @@ def _lloyd_pruned_ctes(
         tag = "f" if final else str(i)
         src = f"c{iters if final else i}"
         out = [
-            f"""sup{tag} AS (
+            f"""sup{tag} AS MATERIALIZED (
     SELECT cid AS sid, cv AS sv FROM {src} WHERE cid < ({s})
 )""",
-            f"""cs{tag} AS (
+            f"""cs{tag} AS MATERIALIZED (
     SELECT cid, cv,
            CASE WHEN cid < ({s}) THEN cid ELSE sid END AS sid
     FROM (
@@ -7172,7 +7176,7 @@ def _lloyd_probe_ctes(
     their top-``n_probe`` NON-EMPTY lists, and the exact argmax runs
     over the probed lists' member centroids only. ``k``/``s`` are SQL
     scalar expressions (the adaptive counts)."""
-    ctes = _lloyd_seed(k, " MATERIALIZED")
+    ctes = _lloyd_seed(k)
 
     def _member_argmax(name: str, src: str, sup: str) -> str:
         return f"""{name} AS MATERIALIZED (
@@ -7213,13 +7217,11 @@ def _lloyd_probe_ctes(
     SELECT u.sid, u.sv FROM rsup{tag}{router_iters} u
     WHERE u.sid IN (SELECT sid FROM mem{tag})
 )""")
-        return out + _probed_assign(
-            tag, f"used{tag}", f"mem{tag}", n_probe, " MATERIALIZED"
-        )
+        return out + _probed_assign(tag, f"used{tag}", f"mem{tag}", n_probe)
 
     for i in range(iters):
         ctes.extend(round_ctes(i, final=False))
-        ctes.extend(_lloyd_update(i, dim, " MATERIALIZED"))
+        ctes.extend(_lloyd_update(i, dim))
     # terminal tag "f" -> the chain ends in ``af``, the shared tail name
     ctes.extend(round_ctes(iters, final=True))
     return ctes
@@ -7264,7 +7266,7 @@ def _semdedup_sql(
         f"WITH RECURSIVE {_EMB_CTE.strip()},\n"
         + ",\n".join(chain)
         + f""",
-p AS (
+p AS MATERIALIZED (
     SELECT x.vec_id AS a, y.vec_id AS b
     FROM af x JOIN af y ON x.cid = y.cid AND x.vec_id < y.vec_id
     WHERE round(list_inner_product(x.nv, y.nv), 6) >= {eps}
@@ -7414,12 +7416,12 @@ def sim_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_WIDE_ORACLE = rf"""WITH tok AS (
+_SIMHASH_WIDE_ORACLE = rf"""WITH tok AS MATERIALIZED (
     SELECT doc_id, unnest(list_distinct(list_filter(
         regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> ''))) AS t
     FROM documents
 ),
-th AS (
+th AS MATERIALIZED (
     SELECT doc_id,
            ('0x' || substr(md5(t), 1, 15))::BIGINT AS h0,
            ('0x' || substr(md5(t), 16, 15))::BIGINT AS h1
@@ -7427,7 +7429,7 @@ th AS (
 ),
 {_sign_bits_cte("bits0", "h0")},
 {_sign_bits_cte("bits1", "h1")},
-sim AS (
+sim AS MATERIALIZED (
     SELECT s0.doc_id, s0.sk0, s1.sk1 FROM
     (SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS sk0 FROM bits0 GROUP BY doc_id) s0
     JOIN
@@ -7477,16 +7479,16 @@ _SIMHASH_BANDED6_SQL = "\nUNION ALL\n".join(
 )
 
 _SIMHASH_ADAPTIVE_ORACLE = (
-    _SIMHASH_WIDE_ORACLE.split("banded AS (")[0]
-    + f"""nsim AS (SELECT count(*) AS n FROM sim),
+    _SIMHASH_WIDE_ORACLE.split("banded AS MATERIALIZED (")[0]
+    + f"""nsim AS MATERIALIZED (SELECT count(*) AS n FROM sim),
 {_banded4_cte("banded4")},
-blk AS (
+blk AS MATERIALIZED (
     SELECT doc_id, sk0, sk1,
            sk0 & 1048575 AS b0, (sk0 >> 20) & 1048575 AS b1, sk0 >> 40 AS b2,
            sk1 & 1048575 AS b3, (sk1 >> 20) & 1048575 AS b4, sk1 >> 40 AS b5
     FROM sim
 ),
-banded6 AS (
+banded6 AS MATERIALIZED (
 {_SIMHASH_BANDED6_SQL}
 ),
 surv AS (
@@ -7506,7 +7508,7 @@ surv AS (
     WHERE (SELECT n FROM nsim) > {dd._SIMHASH_B4_MAX}
       AND bit_count(xor(a.sk0, b.sk0)) + bit_count(xor(a.sk1, b.sk1)) <= 3
 ),
-nt AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
+nt AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
 inter AS (
     SELECT s.doc_a, s.doc_b, s.hamming, count(*) AS ni
     FROM surv s
@@ -8159,9 +8161,8 @@ ORDER BY exact_count DESC, token ASC
     "packed sketch (broadcast). What the sketch buys at scale is "
     "the streaming form: per-partition sketches merge by cell-wise "
     "addition, so ingest tracks heavy hitters without ever "
-    "materializing the distinct-token set (the xxhash64 original in "
-    "functions/sketches.py stays for oracle-free speed paths and "
-    "the streaming merge twin).",
+    "materializing the distinct-token set (streaming/sketch_stream.py "
+    "runs that form on these same md5 buckets).",
 )
 def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import cms_exact as sk
@@ -8552,7 +8553,7 @@ def _pq_train_chain(
     FROM pa{i}, generate_series(1, {subd}) gs(i)
     GROUP BY s, cid, gs.i
 )""")
-        ctes.append(f"""p{i + 1} AS (
+        ctes.append(f"""p{i + 1} AS MATERIALIZED (
     SELECT s, cid, list(mv ORDER BY pos) AS cv FROM pm{i} GROUP BY s, cid
 )""")
     return ctes, f"p{iters}"
@@ -8569,12 +8570,12 @@ def _pq_lloyd_sql(iters: int = 2, m: int = 4, ks: int = 16, dim: int = 64) -> st
         " + list_inner_product(c.cv, c.cv), 6)"
     )
     ctes = [
-        """b AS (
+        """b AS MATERIALIZED (
     SELECT vec_id,
            list_transform(v, x -> x / sqrt(list_inner_product(v, v))) AS nv
     FROM emb
 )""",
-        f"""sub AS (
+        f"""sub AS MATERIALIZED (
     SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
     FROM b CROSS JOIN (
         SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
@@ -8651,7 +8652,7 @@ def _ivfpq_trained_sql(
     return f"""WITH {_EMB_CTE.strip()},
 {_ivf_assign_ctes(f" WHERE vec_id < {n_centroids}")},
 {_ivf_members_ctes(nprobe)},
-sub AS (
+sub AS MATERIALIZED (
     SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
     FROM b CROSS JOIN (
         SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
@@ -8750,12 +8751,12 @@ def _ivfpq_add_sql(
     return f"""WITH {_EMB_CTE.strip()},
 {_ivf_assign_ctes(cent_where)},
 {_ivf_members_ctes(nprobe)},
-sub_all AS (
+sub_all AS MATERIALIZED (
     SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
     FROM b CROSS JOIN (
         SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
 ),
-sub AS (
+sub AS MATERIALIZED (
     SELECT sub_all.* FROM sub_all JOIN b USING (vec_id) WHERE {index_where}
 ),
 {train_sql},

@@ -119,13 +119,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def harden_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs this engine depends on to a
-    session we did not create (the verify driver passes its own).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

@@ -173,58 +173,12 @@ def encode_gray(img: np.ndarray, quant: int = 1) -> bytes:
     return bytes(out)
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1  # stuffed byte
-            else:
-                # marker (EOI) — spec: treat as 1-fill past end
-                self.pos -= 1
-                b = 0xFF
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            self._fill()
-        v = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-
-def _decode_tables(bits: bytes, syms: bytes) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol."""
-    enc = _canonical_codes(list(bits), list(syms))
-    return {(length, code): s for s, (code, length) in enc.items()}
-
-
-def _huff_decode(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read(1)
-        s = table.get((length, code))
-        if s is not None:
-            return s
-    raise ValueError("invalid Huffman code in JPEG stream")
-
-
 # --- fast decode path (r7) -------------------------------------------------
 #
-# The r6 decoder ran the T.81 entropy decode one BIT at a time through
-# _BitReader/_huff_decode (~30-60 interpreter ops per symbol) and one
-# numpy 8x8 IDCT per block (~10us of per-call dispatch each) — measured
-# 0.18 ms/image, the repo's only per-pixel-Python hot path (VERDICT r6
+# The r6 decoder (since removed) ran the T.81 entropy decode one BIT at
+# a time through a per-bit reader (~30-60 interpreter ops per symbol)
+# and one numpy 8x8 IDCT per block (~10us of per-call dispatch each) —
+# measured 0.18 ms/image, the repo's only per-pixel-Python hot path (VERDICT r6
 # "Next round" #5). This path keeps the decode pure-Python+numpy (no
 # codec libs in the container) but restructures it:
 #   * one 64k-entry Huffman lookup table per (bits, syms) pair, cached
@@ -282,12 +236,6 @@ def _unstuff_entropy(data: bytes, pos: int) -> bytes:
         end = j  # a real marker (EOI) terminates the scan
         break
     return data[pos:end].replace(b"\xff\x00", b"\xff")
-
-
-def _extend(bits: int, size: int) -> int:
-    if size == 0:
-        return 0
-    return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
 def decode_gray(data: bytes) -> np.ndarray:

@@ -106,6 +106,36 @@ def accept_batch(
     return b2.join(victims.hint("shuffle_hash"), "doc_id", "left_anti")
 
 
+def drain_parquet_stream(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint: str,
+    per_batch,
+    max_files_per_trigger: int = 1,
+) -> None:
+    """Drain a parquet file source with an AvailableNow trigger
+    (``max_files_per_trigger`` files per micro-batch; drains everything
+    then stops, the ev_* replay pattern), calling
+    ``per_batch(batch_df, batch_id)`` in ``foreachBatch``.  Blocks until
+    the drain ends."""
+    schema = (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(source_dir)
+        .schema
+    )
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("recursiveFileLookup", "true")
+        .parquet(source_dir)
+        .writeStream.foreachBatch(per_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def run_streaming_ingest(
     spark: SparkSession,
     batch_source_dir: str,
@@ -115,22 +145,14 @@ def run_streaming_ingest(
     max_files_per_trigger: int = 1,
 ) -> str:
     """Run the ACCEPT gate as a Structured Streaming query over a
-    parquet file source (one micro-batch per ``max_files_per_trigger``
-    files, AvailableNow trigger — drains everything then stops, the
-    ev_* replay pattern).  Returns the accepted-store path.
+    parquet file source (:func:`drain_parquet_stream`).  Returns the
+    accepted-store path.
 
     ``index_docs`` must be a re-readable frame (it is evaluated once
     per micro-batch inside foreachBatch).
     """
     seen_dir = os.path.join(work_dir, "seen")
     accepted_dir = os.path.join(work_dir, "accepted")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-
-    schema = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(batch_source_dir)
-        .schema
-    )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select(*_DOC_COLS).localCheckpoint()
@@ -149,17 +171,11 @@ def run_streaming_ingest(
             os.path.join(seen_dir, f"batch_id={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .parquet(batch_source_dir)
+    drain_parquet_stream(
+        spark,
+        batch_source_dir,
+        os.path.join(work_dir, "checkpoint"),
+        _gate,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return accepted_dir

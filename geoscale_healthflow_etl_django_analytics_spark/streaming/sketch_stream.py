@@ -1,19 +1,22 @@
 """Streaming Count-Min heavy hitters — the sketch family's §2.10 form.
 
-``functions/sketches.py`` documents WHY the CMS exists at 100 TB: the
-streaming/pre-aggregation shape, where per-partition (here per-micro-
-batch) sketches merge by cell-wise addition and a long-running ingest
-tracks heavy hitters without ever materializing the distinct-token
-set.  This module runs that shape for real: a document file stream is
-drained with an AvailableNow ``foreachBatch`` that computes the
+The Count-Min sketch (``functions/cms_exact.py``) exists at 100 TB
+for its streaming/pre-aggregation shape: per-partition (here per-
+micro-batch) sketches merge by cell-wise addition and a long-running
+ingest tracks heavy hitters without ever materializing the distinct-
+token set.  This module runs that shape for real: a document file
+stream is drained with an AvailableNow ``foreachBatch``
+(``streaming.ingest.drain_parquet_stream``) that computes the
 constant-size per-batch sketch and appends it to a parquet store —
 one row (depth x width map, n_total) per micro-batch, written into a
 ``batch_id=N`` subdirectory with overwrite so a foreachBatch retry is
-idempotent (the ingest-gate convention).  The merged sketch is an
-exact cell-wise sum over the stored rows (integer addition commutes
-and associates), so streaming == batch holds BYTE-EXACTLY for the
-sketch, and therefore for every point estimate — pinned by
-tests/test_streaming_ingest.py's sibling test module.
+idempotent (the ingest-gate convention).  The sketch uses the same
+md5 buckets as the registered ``text_cms_heavy_hitters``.  The merged
+sketch is an exact cell-wise sum over the stored rows (integer
+addition commutes and associates), so streaming == batch holds
+BYTE-EXACTLY for the sketch, and therefore for every point estimate —
+pinned by tests/test_streaming_cms.py.  The HyperLogLog registers
+(``functions/hll.py``) stream the same way and merge by cell-wise max.
 
 At scale the store stays tiny forever: each row is <= depth*width
 cells regardless of corpus size, so a year of micro-batches is still
@@ -29,9 +32,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.cms_exact import CMS_DEPTH, CMS_WIDTH, cms_sketch
 from ..functions.hll import hll_registers
-from ..functions.sketches import CMS_DEPTH, CMS_WIDTH, cms_sketch
 from ..functions.text import tokens
+from .ingest import drain_parquet_stream
 
 
 def merge_sketches(per_batch: DataFrame) -> DataFrame:
@@ -52,6 +56,40 @@ def merge_sketches(per_batch: DataFrame) -> DataFrame:
     ).crossJoin(F.broadcast(totals))
 
 
+def _drain_token_state(
+    spark: SparkSession,
+    source_dir: str,
+    work_dir: str,
+    store: str,
+    checkpoint: str,
+    text_col: str,
+    state,
+    max_files_per_trigger: int,
+) -> str:
+    """Drain a parquet document stream; per micro-batch, lower-case
+    tokenize ``text_col``, reduce the tokens with ``state`` and
+    overwrite the result under ``work_dir/store/batch_id=N``.  Returns
+    the store path."""
+    store_dir = os.path.join(work_dir, store)
+
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        toks = batch_df.select(
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+        )
+        state(toks).write.mode("overwrite").parquet(
+            os.path.join(store_dir, f"batch_id={batch_id}")
+        )
+
+    drain_parquet_stream(
+        spark,
+        source_dir,
+        os.path.join(work_dir, checkpoint),
+        _write,
+        max_files_per_trigger,
+    )
+    return store_dir
+
+
 def run_streaming_cms(
     spark: SparkSession,
     source_dir: str,
@@ -65,34 +103,16 @@ def run_streaming_cms(
     sketch row per micro-batch under ``work_dir/sketches``.  Returns
     the sketch-store path; ``merge_sketches(spark.read.parquet(path))``
     is the corpus sketch."""
-    sketch_dir = os.path.join(work_dir, "sketches")
-    checkpoint = os.path.join(work_dir, "checkpoint")
-    schema = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-        .schema
+    return _drain_token_state(
+        spark,
+        source_dir,
+        work_dir,
+        "sketches",
+        "checkpoint",
+        text_col,
+        lambda toks: cms_sketch(toks, depth=depth, width=width),
+        max_files_per_trigger,
     )
-
-    def _sketch(batch_df: DataFrame, batch_id: int) -> None:
-        toks = batch_df.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
-        )
-        cms_sketch(toks, depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sketch_dir, f"batch_id={batch_id}"))
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_sketch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sketch_dir
 
 
 def merge_hll_registers(per_batch: DataFrame) -> DataFrame:
@@ -117,31 +137,13 @@ def run_streaming_hll(
     kilobytes per batch, and the corpus cardinality is
     ``hll_summary(merge_hll_registers(read(path)))`` at any moment,
     with no distinct-token state anywhere."""
-    hll_dir = os.path.join(work_dir, "hll")
-    checkpoint = os.path.join(work_dir, "hll_checkpoint")
-    schema = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-        .schema
+    return _drain_token_state(
+        spark,
+        source_dir,
+        work_dir,
+        "hll",
+        "hll_checkpoint",
+        text_col,
+        hll_registers,
+        max_files_per_trigger,
     )
-
-    def _registers(batch_df: DataFrame, batch_id: int) -> None:
-        toks = batch_df.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
-        )
-        hll_registers(toks).write.mode("overwrite").parquet(
-            os.path.join(hll_dir, f"batch_id={batch_id}")
-        )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_registers)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return hll_dir

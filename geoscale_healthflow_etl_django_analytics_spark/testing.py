@@ -90,7 +90,3 @@ def compare_query(
                     f"value mismatch in '{col}' row {i}: spark={a!r} duck={b!r}",
                 )
     return True, f"ok: {len(s)} rows x {len(s.columns)} cols"
-
-
-def run_all(spark: SparkSession, sf_dir: str) -> dict[str, tuple[bool, str]]:
-    return {name: compare_query(spark, name, sf_dir) for name in REGISTRY}

@@ -171,7 +171,7 @@ def test_png_decode_stats_matches_pixel_function(spark):
     import numpy as np
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import (
-        multimodal_png as mm,
+        multimodal as mm,
     )
 
     ids = spark.createDataFrame(

@@ -8,8 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from geoscale_healthflow_etl_django_analytics_spark.functions import cms_exact as sk
 from geoscale_healthflow_etl_django_analytics_spark.functions import hll
-from geoscale_healthflow_etl_django_analytics_spark.functions import sketches as sk
 from geoscale_healthflow_etl_django_analytics_spark.functions.text import tokens
 from geoscale_healthflow_etl_django_analytics_spark.streaming.sketch_stream import (
     merge_sketches,
