@@ -160,9 +160,22 @@ def interpret_test_result(col: Column) -> Column:
     )
 
 
-def is_positive_case(col: Column) -> Column:
-    """C8 — C7 == Positive (helpers.py:229-231)."""
-    return (interpret_test_result(col) == "Positive").cast("int")
+def lab_record_columns(
+    gender: Column, age: Column, month: Column, slide: Column
+) -> list[Column]:
+    """C3-C8 over one raw lab record: gender, age, age_group, month,
+    test_result and is_positive (C8 — C7 == Positive,
+    helpers.py:229-231), in that order."""
+    clean = clean_age(age)
+    result = interpret_test_result(slide)
+    return [
+        clean_gender(gender).alias("gender"),
+        clean.alias("age"),
+        categorize_age(clean).alias("age_group"),
+        clean_month(month).alias("month"),
+        result.alias("test_result"),
+        (result == "Positive").cast("int").alias("is_positive"),
+    ]
 
 
 def api_per_1000(cases: Column, population: Column) -> Column:

@@ -44,7 +44,6 @@ from .hashing import md5_int60
 
 CMS_DEPTH = 4
 CMS_WIDTH = 2048  # eps = e/width ~ 0.00133 -> overestimate <= 0.133% of N
-_WIDTH_BITS = 11  # log2(CMS_WIDTH)
 
 
 def _check_params(depth: int, width: int) -> int:

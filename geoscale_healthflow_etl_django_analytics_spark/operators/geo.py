@@ -54,6 +54,27 @@ from pyspark.sql import functions as F
 from ..functions.exact import fround
 
 
+def point(lon: Column, lat: Column) -> Column:
+    """One ring vertex: struct<lon, lat>."""
+    return F.struct(lon.alias("lon"), lat.alias("lat"))
+
+
+def ring_wkt(ring: Column) -> Column:
+    """``POLYGON ((lon lat, ...))`` of ``ring``, coordinates printed
+    ``%.1f`` (the registry oracles' ``_wkt_ring``)."""
+    return F.concat(
+        F.lit("POLYGON (("),
+        F.array_join(
+            F.transform(
+                ring,
+                lambda p: F.format_string("%.1f %.1f", p["lon"], p["lat"]),
+            ),
+            ", ",
+        ),
+        F.lit("))"),
+    )
+
+
 def synth_polygons(nation: DataFrame) -> DataFrame:
     """Deterministic axis-aligned rectangle ring per nation + a slope
     attribute (stand-in for the slope-polygon FeatureCollections)."""
@@ -62,11 +83,9 @@ def synth_polygons(nation: DataFrame) -> DataFrame:
     y0 = (k * 11 % 50).cast("double")
     x1 = x0 + 5.0 + (k % 10).cast("double")
     y1 = y0 + 3.0 + (k % 7).cast("double")
-
-    def pt(lon, lat):
-        return F.struct(lon.alias("lon"), lat.alias("lat"))
-
-    ring = F.array(pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1), pt(x0, y0))
+    ring = F.array(
+        point(x0, y0), point(x1, y0), point(x1, y1), point(x0, y1), point(x0, y0)
+    )
     return nation.select(
         F.col("n_nationkey").alias("poly_id"),
         F.col("n_name").alias("name"),
@@ -228,6 +247,52 @@ def quantize_ring(ring: Column, step: float) -> Column:
     return dedupe_ring(snapped)
 
 
+def _extended_schema(polys: DataFrame, *added: str) -> str:
+    """DDL of a ring operator's output: every field of ``polys`` (the
+    ring rewritten in place) followed by the ``added`` columns."""
+    fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in polys.schema.fields]
+    return ", ".join(fields + list(added))
+
+
+def _seg_err(pts, i, j):
+    """Squared distances of interior points i+1..j-1 from the (i, j)
+    chord — the Douglas-Peucker error metric."""
+    import numpy as np
+
+    a, b = pts[i], pts[j]
+    ab = b - a
+    l2 = float(ab @ ab)
+    seg = pts[i + 1 : j]
+    if l2 == 0.0:
+        return ((seg - a) ** 2).sum(axis=1)
+    t = np.clip(((seg - a) @ ab) / l2, 0.0, 1.0)
+    proj = a + t[:, None] * ab
+    return ((seg - proj) ** 2).sum(axis=1)
+
+
+def _dp_keep(pts, tol2):
+    """Douglas-Peucker kept mask of the vertex array ``pts``: a vertex
+    stays when its chord error exceeds ``tol2`` (squared tolerance)
+    inside the recursion; the endpoints always stay."""
+    import numpy as np
+
+    n = len(pts)
+    keep = np.zeros(n, dtype=bool)
+    keep[0] = keep[n - 1] = True
+    stack = [(0, n - 1)]
+    while stack:
+        i, j = stack.pop()
+        if j <= i + 1:
+            continue
+        d2 = _seg_err(pts, i, j)
+        k = int(d2.argmax())
+        if d2[k] > tol2:
+            keep[i + 1 + k] = True
+            stack.append((i, i + 1 + k))
+            stack.append((i + 1 + k, j))
+    return keep
+
+
 def simplify_rings_dp(
     polys: DataFrame, tolerance: float, ring_col: str = "ring"
 ) -> DataFrame:
@@ -242,43 +307,15 @@ def simplify_rings_dp(
     import numpy as np
     import pandas as pd
 
-    out_fields = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in polys.schema.fields
-    ]
-    schema = ", ".join(out_fields + ["n_before int", "n_after int"])
-
-    def _dp(pts: "np.ndarray") -> "np.ndarray":
-        n = len(pts)
-        keep = np.zeros(n, dtype=bool)
-        keep[0] = keep[n - 1] = True
-        stack = [(0, n - 1)]
-        while stack:
-            i, j = stack.pop()
-            if j <= i + 1:
-                continue
-            a, b = pts[i], pts[j]
-            ab = b - a
-            l2 = float(ab @ ab)
-            seg = pts[i + 1 : j]
-            if l2 == 0.0:
-                d2 = ((seg - a) ** 2).sum(axis=1)
-            else:
-                t = np.clip(((seg - a) @ ab) / l2, 0.0, 1.0)
-                proj = a + t[:, None] * ab
-                d2 = ((seg - proj) ** 2).sum(axis=1)
-            k = int(d2.argmax())
-            if d2[k] > tolerance * tolerance:
-                keep[i + 1 + k] = True
-                stack.append((i, i + 1 + k))
-                stack.append((i + 1 + k, j))
-        return pts[keep]
+    schema = _extended_schema(polys, "n_before int", "n_after int")
+    tol2 = tolerance * tolerance
 
     def _simplify(batches):
         for pdf in batches:
             n_before, n_after, rings = [], [], []
             for ring in pdf[ring_col]:
                 pts = np.array([(p["lon"], p["lat"]) for p in ring])
-                kept = _dp(pts)
+                kept = pts[_dp_keep(pts, tol2)]
                 n_before.append(len(pts))
                 n_after.append(len(kept))
                 rings.append(
@@ -361,6 +398,22 @@ def area_weighted_slope(
     )
 
 
+def _pixel_values() -> list[Column]:
+    """The value columns of a pixel (i, j): center px/py and the
+    deterministic value f(i, j)."""
+    return [
+        (F.col("i") + 0.5).alias("px"),
+        (F.col("j") + 0.5).alias("py"),
+        (((F.col("i") * 31 + F.col("j") * 17) % 97).cast("double") / 3.0).alias(
+            "pixel_value"
+        ),
+        # integer numerator of pixel_value: lets aggregations sum
+        # exactly (BIGINT) and divide once, so cross-engine float
+        # comparison is deterministic at any pixel volume
+        ((F.col("i") * 31 + F.col("j") * 17) % 97).alias("pixel_value_n"),
+    ]
+
+
 def pixel_grid(spark_df_one_row: DataFrame, nx: int = 100, ny: int = 50) -> DataFrame:
     """Deterministic raster stand-in: nx×ny pixels, value = f(i,j).
     Pixel center at (i+0.5, j+0.5)."""
@@ -369,19 +422,7 @@ def pixel_grid(spark_df_one_row: DataFrame, nx: int = 100, ny: int = 50) -> Data
             F.explode(F.sequence(F.lit(0), F.lit(nx - 1))).alias("i")
         )
         .select("i", F.explode(F.sequence(F.lit(0), F.lit(ny - 1))).alias("j"))
-        .select(
-            "i",
-            "j",
-            (F.col("i") + 0.5).alias("px"),
-            (F.col("j") + 0.5).alias("py"),
-            (((F.col("i") * 31 + F.col("j") * 17) % 97).cast("double") / 3.0).alias(
-                "pixel_value"
-            ),
-            # integer numerator of pixel_value: lets aggregations sum
-            # exactly (BIGINT) and divide once, so cross-engine float
-            # comparison is deterministic at any pixel volume
-            ((F.col("i") * 31 + F.col("j") * 17) % 97).alias("pixel_value_n"),
-        )
+        .select("i", "j", *_pixel_values())
     )
 
 
@@ -447,16 +488,7 @@ def pixel_grid_par(spark, nx: int, ny: int) -> DataFrame:
     production shape."""
     i = (F.col("id") / ny).cast("long").alias("i")
     df = spark.range(nx * ny).select(i, (F.col("id") % ny).alias("j"))
-    return df.select(
-        "i",
-        "j",
-        (F.col("i") + 0.5).alias("px"),
-        (F.col("j") + 0.5).alias("py"),
-        (((F.col("i") * 31 + F.col("j") * 17) % 97).cast("double") / 3.0).alias(
-            "pixel_value"
-        ),
-        ((F.col("i") * 31 + F.col("j") * 17) % 97).alias("pixel_value_n"),
-    )
+    return df.select("i", "j", *_pixel_values())
 
 
 def zonal_stats(polys: DataFrame, pixels: DataFrame) -> DataFrame:

@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .geo import _extended_schema
+
 
 def _untangle(ring):
     """ring: list[(x, y)] closed (first == last). Returns list of
@@ -123,12 +125,7 @@ def untangle_rings(polys: DataFrame, ring_col: str = "ring") -> DataFrame:
     yields exactly one lobe, byte-identical to its input."""
     import pandas as pd
 
-    out_fields = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in polys.schema.fields
-    ]
-    schema = ", ".join(
-        out_fields + ["lobe int", "n_lobes int", "area double"]
-    )
+    schema = _extended_schema(polys, "lobe int", "n_lobes int", "area double")
 
     def _gen(batches):
         for pdf in batches:

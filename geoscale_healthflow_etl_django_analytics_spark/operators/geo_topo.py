@@ -11,9 +11,8 @@ two user-visible guarantees for a single ring:
    route a chord across a notch and create a bow-tie.
 
 This module implements those guarantees deterministically on top of
-the plain-DP kernel (the IDENTICAL recursion as operators/geo.py::
-simplify_rings_dp — that module is deliberately NOT edited; this is
-a sibling operator): run DP, then REPAIR by re-adding excluded
+the plain-DP kernel that operators/geo.py::simplify_rings_dp runs
+(``geo._dp_keep``): run DP, then REPAIR by re-adding excluded
 ORIGINAL vertices, ranked by their DP-tree chord error descending
 (the same metric DP itself selects by, so each repair step re-adds
 the canonical "next DP vertex"; JTS's TaggedLineString repair is
@@ -35,44 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-
-def _seg_err(pts, i, j):
-    """Squared chord distances of interior points i+1..j-1 from the
-    (i, j) chord — the plain-DP error metric (geo.py kernel)."""
-    import numpy as np
-
-    a, b = pts[i], pts[j]
-    ab = b - a
-    l2 = float(ab @ ab)
-    seg = pts[i + 1 : j]
-    if l2 == 0.0:
-        return ((seg - a) ** 2).sum(axis=1)
-    t = np.clip(((seg - a) @ ab) / l2, 0.0, 1.0)
-    proj = a + t[:, None] * ab
-    return ((seg - proj) ** 2).sum(axis=1)
-
-
-def _dp_keep(pts, tol2):
-    """Plain Douglas-Peucker kept mask — the IDENTICAL recursion as
-    operators/geo.py::simplify_rings_dp (threshold inside the
-    recursion), so the no-repair output matches it byte-for-byte."""
-    import numpy as np
-
-    n = len(pts)
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[n - 1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j <= i + 1:
-            continue
-        d2 = _seg_err(pts, i, j)
-        k = int(d2.argmax())
-        if d2[k] > tol2:
-            keep[i + 1 + k] = True
-            stack.append((i, i + 1 + k))
-            stack.append((i + 1 + k, j))
-    return keep
+from .geo import _dp_keep, _extended_schema, _seg_err
 
 
 def _dp_tree_err(pts):
@@ -152,12 +114,7 @@ def simplify_rings_topo(
     import numpy as np
     import pandas as pd
 
-    out_fields = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in polys.schema.fields
-    ]
-    schema = ", ".join(
-        out_fields + ["n_before int", "n_after int", "repaired int"]
-    )
+    schema = _extended_schema(polys, "n_before int", "n_after int", "repaired int")
     tol2 = tolerance * tolerance
 
     def _one(ring):

@@ -141,31 +141,9 @@ def asof_join_backward(
     """
     from pyspark.sql import Window
 
-    _check_asof_output_names(left, time_col, by_cols, carry_cols, suffix)
-
-    carried = [f"__carry_{c}" for c in carry_cols]
-    r_tag = right.select(
-        *by_cols,
-        F.col(time_col).alias(time_col),
-        F.lit(0).alias("__side"),
-        *[F.col(c).alias(cc) for c, cc in zip(carry_cols, carried)],
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-            if c not in by_cols and c != time_col
-        ],
+    carried, _, unioned = _tag_sides(
+        left, right, time_col, by_cols, carry_cols, suffix
     )
-    l_tag = left.select(
-        *by_cols,
-        time_col,
-        F.lit(1).alias("__side"),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(cc)
-            for c, cc in zip(carry_cols, carried)
-        ],
-        *[c for c in left.columns if c not in by_cols and c != time_col],
-    )
-    unioned = r_tag.unionByName(l_tag)
     w = (
         Window.partitionBy(*by_cols)
         .orderBy(F.col(time_col).asc(), F.col("__side").asc())
@@ -201,6 +179,49 @@ def _check_asof_output_names(
                 f"as-of output column {out!r} collides with a retained "
                 f"output column; pass a different suffix"
             )
+
+
+def _tag_sides(
+    left: DataFrame,
+    right: DataFrame,
+    time_col: str,
+    by_cols: list[str],
+    carry_cols: list[str],
+    suffix: str,
+    *extra,
+):
+    """The side-tagged union both backward as-of tiers scan: right rows
+    (``__side`` 0) carry their payload as ``__carry_<c>`` with null
+    left columns, left rows (``__side`` 1) the reverse; ``extra``
+    columns ride on both sides after the time column.  Returns the
+    carried names, the tagged right side and the union."""
+    _check_asof_output_names(left, time_col, by_cols, carry_cols, suffix)
+    carried = [f"__carry_{c}" for c in carry_cols]
+    r_tag = right.select(
+        *by_cols,
+        F.col(time_col).alias(time_col),
+        *extra,
+        F.lit(0).alias("__side"),
+        *[F.col(c).alias(cc) for c, cc in zip(carry_cols, carried)],
+        *[
+            F.lit(None).cast(left.schema[c].dataType).alias(c)
+            for c in left.columns
+            if c not in by_cols and c != time_col
+        ],
+    )
+    l_tag = left.select(
+        *by_cols,
+        time_col,
+        *extra,
+        F.lit(1).alias("__side"),
+        *[
+            F.lit(None).cast(right.schema[c].dataType).alias(cc)
+            for c, cc in zip(carry_cols, carried)
+        ],
+        *[c for c in left.columns if c not in by_cols and c != time_col],
+    )
+    unioned = r_tag.unionByName(l_tag)
+    return carried, r_tag, unioned
 
 
 def asof_join_backward_chunked(
@@ -240,8 +261,6 @@ def asof_join_backward_chunked(
     """
     from pyspark.sql import Window
 
-    _check_asof_output_names(left, time_col, by_cols, carry_cols, suffix)
-    carried = [f"__carry_{c}" for c in carry_cols]
     # epoch seconds for bucketing: timestamps (incl. NTZ, which cannot
     # cast straight to double) go through unix_millis under the pinned
     # UTC session; numeric time columns cast directly
@@ -250,30 +269,9 @@ def asof_join_backward_chunked(
     else:
         epoch = F.col(time_col).cast("double")
     bucket = F.floor(epoch / F.lit(float(bucket_span))).alias("__bucket")
-    r_tag = right.select(
-        *by_cols,
-        F.col(time_col).alias(time_col),
-        bucket,
-        F.lit(0).alias("__side"),
-        *[F.col(c).alias(cc) for c, cc in zip(carry_cols, carried)],
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-            if c not in by_cols and c != time_col
-        ],
+    carried, r_tag, unioned = _tag_sides(
+        left, right, time_col, by_cols, carry_cols, suffix, bucket
     )
-    l_tag = left.select(
-        *by_cols,
-        time_col,
-        bucket,
-        F.lit(1).alias("__side"),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(cc)
-            for c, cc in zip(carry_cols, carried)
-        ],
-        *[c for c in left.columns if c not in by_cols and c != time_col],
-    )
-    unioned = r_tag.unionByName(l_tag)
     # 1) segmented carry: partition includes the time bucket
     w_seg = (
         Window.partitionBy(*by_cols, "__bucket")

@@ -28,10 +28,6 @@ from pyspark.sql import functions as F
 
 FEATURE_DIM = 16
 
-MEDIA_META_SCHEMA = (
-    "media_id long, kind string, byte_len int, width int, height int"
-)
-
 FEATURES_SCHEMA = (
     "media_id long, kind string, feature array<double>, feature_norm double"
 )

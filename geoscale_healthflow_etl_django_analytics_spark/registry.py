@@ -30,6 +30,21 @@ generators a non-recursive CTE that an oracle reads twice or more is
 written ``AS MATERIALIZED``: DuckDB 1.0 inlines every CTE reference,
 so an unmarked one is recomputed per read, and the chained split
 oracles took minutes (tests/test_oracle_parity.py bounds each oracle).
+
+The same rule holds for the Spark builders: a step that more than one
+builder runs is a ``_*`` builder helper written once, just above its
+first user — the lab-upload cleaning ``_upload_clean``, the
+incremental-split prologue ``_index_cluster_table``, the GeoTIFF
+zonal fixture ``_s4_zonal``, the as-of attribution ``_signups`` and
+``_attribute_purchases``, the unigram score ``_unigram_mean_logprob``,
+the decile aggregate ``_decile_stats`` and histogram-quantile
+``_histogram_buckets``, the decontamination ``_eval_8grams`` and
+``_shuffled_contamination``, the DSIR scorer ``_dsir_buckets`` and
+``_dsir_top``, and the datum ``_datum_shift``.  Column functions that
+operators share too live in their operator module (``geo.point``,
+``geo.ring_wkt``, ``cleaning.lab_record_columns``).
+tests/test_registry_shape.py fails when a 6-line code window of one
+registry function repeats in another.
 """
 
 from __future__ import annotations
@@ -1547,17 +1562,12 @@ FROM dirty
 )
 def c9_clean_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _dirty_inputs(spark, sf_dir)
-    age = cl.clean_age(F.col("age_raw"))
-    tr = cl.interpret_test_result(F.col("slide_raw"))
     return d.select(
         "event_id",
         cl.clean_text(F.col("text_raw")).alias("cleaned_text"),
-        cl.clean_gender(F.col("gender_raw")).alias("gender"),
-        age.alias("age"),
-        cl.categorize_age(age).alias("age_group"),
-        cl.clean_month(F.col("month_raw")).alias("month"),
-        tr.alias("test_result"),
-        (tr == "Positive").cast("int").alias("is_positive"),
+        *cl.lab_record_columns(
+            F.col("gender_raw"), F.col("age_raw"), F.col("month_raw"), F.col("slide_raw")
+        ),
     )
 
 
@@ -2538,6 +2548,24 @@ def curation_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return subdoc.leakage_safe_split(docs, comp)
 
 
+def _index_cluster_table(spark: SparkSession, sf_dir: str):
+    """Incremental-split prologue: the documents, the batch predicate
+    (doc_id % 10 >= 8), the persisted index cluster table's path
+    (ensured from the non-batch docs) and its clusters."""
+    import os
+
+    from .operators import splitting
+
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    batch_pred = lambda c: c % 10 >= 8  # noqa: E731
+    path = _roundtrip_path("index_clusters", sf_dir)
+    splitting.ensure_cluster_table(
+        docs.filter(~batch_pred(F.col("doc_id"))), path
+    )
+    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    return docs, batch_pred, path, iclu
+
+
 @register(
     "curation_incremental_split",
     oracle=_split_oracle(8),
@@ -2569,15 +2597,7 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import splitting
     from .operators.incremental import incremental_minhash_pairs
 
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    batch_pred = lambda c: c % 10 >= 8  # noqa: E731
-    path = _roundtrip_path("index_clusters", sf_dir)
-    splitting.ensure_cluster_table(
-        docs.filter(~batch_pred(F.col("doc_id"))), path
-    )
-    import os
-
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    docs, batch_pred, _, iclu = _index_cluster_table(spark, sf_dir)
     pairs = incremental_minhash_pairs(
         docs, threshold=0.8, new_pred=batch_pred
     )
@@ -2611,17 +2631,9 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_incremental_split_indexed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from .operators import splitting
 
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    batch_pred = lambda c: c % 10 >= 8  # noqa: E731
-    path = _roundtrip_path("index_clusters", sf_dir)
-    splitting.ensure_cluster_table(
-        docs.filter(~batch_pred(F.col("doc_id"))), path
-    )
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    docs, batch_pred, path, iclu = _index_cluster_table(spark, sf_dir)
     pairs = splitting.incremental_pairs_vs_index(
         docs, batch_pred, path, threshold=0.8
     )
@@ -3537,6 +3549,18 @@ FROM lab
 """
 
 
+def _upload_clean(raw: DataFrame) -> DataFrame:
+    """An upload's C1-C8 cleaning (the Spark side of
+    _upload_clean_oracle)."""
+    return raw.select(
+        F.col("row_id").cast("int").alias("row_id"),
+        cl.clean_text(F.col("village_raw")).alias("village"),
+        *cl.lab_record_columns(
+            F.col("gender_raw"), F.col("age_raw"), F.col("month_raw"), F.col("slide_raw")
+        ),
+    )
+
+
 @register(
     "s2_xlsx_clean_records",
     oracle=_upload_clean_oracle(_S2_ROWS),
@@ -3550,18 +3574,7 @@ FROM lab
 def s2_xlsx_clean_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = xlsxsrc.write_xlsx_bytes(_S2_HEADER, _S2_ROWS)
     raw = _df_from_fixture_bytes(spark, data, ".xlsx", fsrc.read_excel)
-    age = cl.clean_age(F.col("age_raw"))
-    tr = cl.interpret_test_result(F.col("slide_raw"))
-    return raw.select(
-        F.col("row_id").cast("int").alias("row_id"),
-        cl.clean_text(F.col("village_raw")).alias("village"),
-        cl.clean_gender(F.col("gender_raw")).alias("gender"),
-        age.alias("age"),
-        cl.categorize_age(age).alias("age_group"),
-        cl.clean_month(F.col("month_raw")).alias("month"),
-        tr.alias("test_result"),
-        (tr == "Positive").cast("int").alias("is_positive"),
-    )
+    return _upload_clean(raw)
 
 
 # Dirty lab-upload CSVs, split across two files with different byte
@@ -3624,18 +3637,7 @@ def s1_csv_clean_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = fsrc.read_csv(spark, paths["s1_latin1.csv"]).unionByName(
         fsrc.read_csv(spark, paths["s1_utf8bom.csv"])
     )
-    age = cl.clean_age(F.col("age_raw"))
-    tr = cl.interpret_test_result(F.col("slide_raw"))
-    return raw.select(
-        F.col("row_id").cast("int").alias("row_id"),
-        cl.clean_text(F.col("village_raw")).alias("village"),
-        cl.clean_gender(F.col("gender_raw")).alias("gender"),
-        age.alias("age"),
-        cl.categorize_age(age).alias("age_group"),
-        cl.clean_month(F.col("month_raw")).alias("month"),
-        tr.alias("test_result"),
-        (tr == "Positive").cast("int").alias("is_positive"),
-    )
+    return _upload_clean(raw)
 
 
 # Admin-boundary upload: two layers so the village-selection heuristic
@@ -3704,29 +3706,20 @@ def s3_shapefile_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return geo.zonal_stats(polys, geo.pixel_grid(one, nx=40, ny=40))
 
 
-@register(
-    "s4_geotiff_zonal_stats",
-    oracle=REGISTRY["s3_shapefile_zonal_stats"].oracle,
-    tags=("S4", "J6", "geo", "ingest", "end-to-end"),
-    doc="S4 end-to-end: uncompressed-GeoTIFF bytes (TIFF 6.0 + OGC "
-    "GeoTIFF spec writer) -> strip/affine parse -> pixel rows -> "
-    "zonal stats (SlopeGeoJsonUploadView.py:195-321). The raster's "
-    "cell values replay geo.pixel_grid's deterministic value "
-    "function in model space, so the oracle is the same "
-    "generate_series grid.",
-)
-def s4_geotiff_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+# north-up raster: row 0 is the TOP (py = 39.5); the value field
+# replays pixel_grid's f(i, j) at each pixel's model-space cell
+_S4_VALUES = [
+    ((i * 31 + (39 - row) * 17) % 97) / 3.0 for row in range(40) for i in range(40)
+]
+
+
+def _s4_zonal(spark: SparkSession, values: list[float], **write) -> DataFrame:
+    """Zonal stats of the three fixture villages over the 40x40
+    GeoTIFF of ``values`` (row 0 on top), written with the ``write``
+    options and read back through the upload path."""
     from .sources import geotiff as gt
 
-    nx = ny = 40
-    # north-up raster: row 0 is the TOP (py = ny - 0.5); value field
-    # replays pixel_grid's f(i, j) at the pixel's model-space cell
-    values = [
-        ((i * 31 + (ny - 1 - row) * 17) % 97) / 3.0
-        for row in range(ny)
-        for i in range(nx)
-    ]
-    data = gt.write_geotiff_bytes(nx, ny, values, origin_x=0.0, origin_y=float(ny))
+    data = gt.write_geotiff_bytes(40, 40, values, origin_x=0.0, origin_y=40.0, **write)
     pixels = _df_from_fixture_bytes(spark, data, ".tif", fsrc.read_geotiff_pixels)
     polys = spark.createDataFrame(
         [
@@ -3740,6 +3733,21 @@ def s4_geotiff_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "s4_geotiff_zonal_stats",
+    oracle=REGISTRY["s3_shapefile_zonal_stats"].oracle,
+    tags=("S4", "J6", "geo", "ingest", "end-to-end"),
+    doc="S4 end-to-end: uncompressed-GeoTIFF bytes (TIFF 6.0 + OGC "
+    "GeoTIFF spec writer) -> strip/affine parse -> pixel rows -> "
+    "zonal stats (SlopeGeoJsonUploadView.py:195-321). The raster's "
+    "cell values replay geo.pixel_grid's deterministic value "
+    "function in model space, so the oracle is the same "
+    "generate_series grid.",
+)
+def s4_geotiff_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _s4_zonal(spark, _S4_VALUES)
+
+
+@register(
     "s4_geotiff_deflate_zonal_stats",
     oracle=REGISTRY["s4_geotiff_zonal_stats"].oracle,
     tags=("S4", "J6", "geo", "ingest", "end-to-end", "compression"),
@@ -3750,7 +3758,7 @@ def s4_geotiff_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "uncompressed form.",
 )
 def s4_geotiff_deflate_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _s4_compressed(spark, "deflate")
+    return _s4_zonal(spark, _S4_VALUES, compression="deflate", rows_per_strip=7)
 
 
 @register(
@@ -3764,7 +3772,7 @@ def s4_geotiff_deflate_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFram
     "oracle as the uncompressed form.",
 )
 def s4_geotiff_lzw_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _s4_compressed(spark, "lzw")
+    return _s4_zonal(spark, _S4_VALUES, compression="lzw", rows_per_strip=7)
 
 
 @register(
@@ -3831,36 +3839,6 @@ def s4_polygonize_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s4_compressed(spark: SparkSession, compression: str) -> DataFrame:
-    from .sources import geotiff as gt
-
-    nx = ny = 40
-    values = [
-        ((i * 31 + (ny - 1 - row) * 17) % 97) / 3.0
-        for row in range(ny)
-        for i in range(nx)
-    ]
-    data = gt.write_geotiff_bytes(
-        nx,
-        ny,
-        values,
-        origin_x=0.0,
-        origin_y=float(ny),
-        compression=compression,
-        rows_per_strip=7,
-    )
-    pixels = _df_from_fixture_bytes(spark, data, ".tif", fsrc.read_geotiff_pixels)
-    polys = spark.createDataFrame(
-        [
-            (1, "alpha", 0.0, 0.0, 10.0, 10.0),
-            (2, "beta", 20.0, 20.0, 30.0, 30.0),
-            (3, "gamma", 5.0, 25.0, 9.0, 33.0),
-        ],
-        "poly_id int, name string, x0 double, y0 double, x1 double, y1 double",
-    )
-    return geo.zonal_stats(polys, pixels)
-
-
 # ===========================================================================
 # C20/C21 — geometry validity fix + simplify/quantize (geo.py ring model)
 # ===========================================================================
@@ -3890,9 +3868,7 @@ FROM polys
 def geo_c20_validity_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
 
-    def pt(lon, lat):
-        return F.struct(lon.alias("lon"), lat.alias("lat"))
-
+    pt = geo.point
     x0, y0 = F.col("x0"), F.col("y0")
     x1, y1 = F.col("x1"), F.col("y1")
     # defect fixture: first vertex duplicated, closing vertex missing
@@ -3900,17 +3876,6 @@ def geo_c20_validity_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
         pt(x0, y0), pt(x0, y0), pt(x1, y0), pt(x1, y1), pt(x0, y1)
     )
     fixed = geo.fix_ring(bad)
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.array_join(
-            F.transform(
-                fixed,
-                lambda p: F.format_string("%.1f %.1f", p["lon"], p["lat"]),
-            ),
-            ", ",
-        ),
-        F.lit("))"),
-    )
     return polys.select(
         "poly_id",
         "name",
@@ -3919,7 +3884,7 @@ def geo_c20_validity_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(fixed).alias("n_after"),
         fround(geo.ring_area2(fixed), 6).alias("area2"),
         geo.ring_is_valid(fixed).alias("is_valid"),
-        wkt.alias("wkt"),
+        geo.ring_wkt(fixed).alias("wkt"),
     )
 
 
@@ -3977,9 +3942,7 @@ FROM polys
 def geo_c21_simplify_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
 
-    def pt(lon, lat):
-        return F.struct(lon.alias("lon"), lat.alias("lat"))
-
+    pt = geo.point
     x0, y0 = F.col("x0"), F.col("y0")
     x1, y1 = F.col("x1"), F.col("y1")
     mx, my = (x0 + x1) / 2.0, (y0 + y1) / 2.0
@@ -3989,18 +3952,9 @@ def geo_c21_simplify_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     densified = polys.select("poly_id", "name", dense.alias("ring"))
     simplified = geo.simplify_rings_dp(densified, tolerance=0.1)
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.array_join(
-            F.transform(
-                F.col("ring"),
-                lambda p: F.format_string("%.1f %.1f", p["lon"], p["lat"]),
-            ),
-            ", ",
-        ),
-        F.lit("))"),
+    return simplified.select(
+        "poly_id", "name", "n_before", "n_after", geo.ring_wkt(F.col("ring")).alias("wkt")
     )
-    return simplified.select("poly_id", "name", "n_before", "n_after", wkt.alias("wkt"))
 
 
 @register(
@@ -4047,9 +4001,7 @@ def geo_c20_untangle_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     polys = geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
 
-    def pt(lon, lat):
-        return F.struct(lon.alias("lon"), lat.alias("lat"))
-
+    pt = geo.point
     x0, y0 = F.col("x0"), F.col("y0")
     bowtie = polys.select(
         "poly_id",
@@ -4070,20 +4022,10 @@ def geo_c20_untangle_bowtie(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ring"),
     )
     out = untangle_rings(bowtie.unionByName(simple))
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.array_join(
-            F.transform(
-                F.col("ring"),
-                lambda p: F.format_string("%.1f %.1f", p["lon"], p["lat"]),
-            ),
-            ", ",
-        ),
-        F.lit("))"),
-    )
     return out.select(
         "poly_id", "name", "fixture", "lobe", "n_lobes",
-        F.col("area").cast("double").alias("area"), wkt.alias("wkt"),
+        F.col("area").cast("double").alias("area"),
+        geo.ring_wkt(F.col("ring")).alias("wkt"),
     )
 
 
@@ -4138,9 +4080,7 @@ def geo_c21_simplify_topo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     polys = geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
 
-    def pt(lon, lat):
-        return F.struct(lon.alias("lon"), lat.alias("lat"))
-
+    pt = geo.point
     x0, y0 = F.col("x0"), F.col("y0")
     collapse = polys.select(
         "poly_id",
@@ -4164,20 +4104,9 @@ def geo_c21_simplify_topo(spark: SparkSession, sf_dir: str) -> DataFrame:
     simplified = simplify_rings_topo(
         collapse.unionByName(bowtie), tolerance=4.0
     )
-    wkt = F.concat(
-        F.lit("POLYGON (("),
-        F.array_join(
-            F.transform(
-                F.col("ring"),
-                lambda p: F.format_string("%.1f %.1f", p["lon"], p["lat"]),
-            ),
-            ", ",
-        ),
-        F.lit("))"),
-    )
     return simplified.select(
         "poly_id", "name", "fixture", "n_before", "n_after", "repaired",
-        wkt.alias("wkt"),
+        geo.ring_wkt(F.col("ring")).alias("wkt"),
     )
 
 
@@ -4592,6 +4521,47 @@ def text_bpe_apply_vocab32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _signups(ev: DataFrame) -> DataFrame:
+    """Signup events as the as-of right side: (user_id, ts, signup_ts,
+    signup_value)."""
+    return ev.filter(F.col("event_type") == "signup").select(
+        F.col("user_id"),
+        F.col("ts"),
+        F.col("ts").alias("signup_ts"),
+        F.col("value").alias("signup_value"),
+    )
+
+
+def _attribute_purchases(ev: DataFrame, signups: DataFrame, asof_join, **kw) -> DataFrame:
+    """Each purchase in ``ev`` attributed to its user's most recent
+    signup in ``signups`` by the backward as-of tier ``asof_join``
+    (``kw`` are its partitioning arguments), plus ms_since_signup."""
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", "value"
+    )
+    joined = asof_join(
+        p,
+        signups,
+        time_col="ts",
+        by_cols=["user_id"],
+        carry_cols=["signup_ts", "signup_value"],
+        suffix="",
+        **kw,
+    )
+    return joined.select(
+        "event_id",
+        "user_id",
+        "ts",
+        "value",
+        "signup_ts",
+        "signup_value",
+        (
+            F.unix_millis(F.col("ts").cast("timestamp"))
+            - F.unix_millis(F.col("signup_ts").cast("timestamp"))
+        ).alias("ms_since_signup"),
+    )
+
+
 @register(
     "asof_purchase_attribution",
     oracle="""WITH p AS (
@@ -4617,35 +4587,7 @@ FROM p ASOF LEFT JOIN s ON p.user_id = s.user_id AND p.ts >= s.signup_ts
 )
 def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = catalog.load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    s = ev.filter(F.col("event_type") == "signup").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"),
-    )
-    joined = oj.asof_join_backward(
-        p,
-        s,
-        time_col="ts",
-        by_cols=["user_id"],
-        carry_cols=["signup_ts", "signup_value"],
-        suffix="",
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        "signup_ts",
-        "signup_value",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            - F.unix_millis(F.col("signup_ts").cast("timestamp"))
-        ).alias("ms_since_signup"),
-    )
+    return _attribute_purchases(ev, _signups(ev), oj.asof_join_backward)
 
 
 @register(
@@ -4661,35 +4603,8 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def asof_attribution_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = catalog.load_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    s = ev.filter(F.col("event_type") == "signup").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.col("ts").alias("signup_ts"),
-        F.col("value").alias("signup_value"),
-    )
-    joined = oj.asof_join_backward_chunked(
-        p,
-        s,
-        time_col="ts",
-        by_cols=["user_id"],
-        carry_cols=["signup_ts", "signup_value"],
-        suffix="",
-        bucket_span=7 * 86_400.0,
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        "signup_ts",
-        "signup_value",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            - F.unix_millis(F.col("signup_ts").cast("timestamp"))
-        ).alias("ms_since_signup"),
+    return _attribute_purchases(
+        ev, _signups(ev), oj.asof_join_backward_chunked, bucket_span=7 * 86_400.0
     )
 
 
@@ -5414,6 +5329,38 @@ def ts_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _unigram_mean_logprob(spark: SparkSession, sf_dir: str, *extra) -> DataFrame:
+    """Per-doc unigram-LM ``mean_logprob`` of the documents: corpus
+    token frequencies -> per-token ln(count/N) quantized to
+    DECIMAL(30,8) -> exact per-doc mean; ``extra`` per-doc aggregates
+    ride along."""
+    from .functions.exact import DECIMAL_TYPE, fround
+    from .functions.text import tokens
+
+    docs = catalog.load_table(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
+    )
+    freq = tok.groupBy("token").agg(F.count("*").alias("c"))
+    n = tok.agg(F.count("*").alias("nn"))
+    scored = (
+        tok.join(freq, "token")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "doc_id",
+            F.log(F.col("c") * 1.0 / F.col("nn"))
+            .cast(DECIMAL_TYPE)
+            .alias("lp"),
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        fround(F.sum("lp").cast("double") / F.count("*"), 6).alias(
+            "mean_logprob"
+        ),
+        *extra,
+    )
+
+
 @register(
     "text_unigram_logprob",
     oracle=r"""WITH tok AS (
@@ -5445,31 +5392,7 @@ FROM scored GROUP BY doc_id
     "in both engines.",
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.exact import DECIMAL_TYPE, fround
-    from .functions.text import tokens
-
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
-    )
-    freq = tok.groupBy("token").agg(F.count("*").alias("c"))
-    n = tok.agg(F.count("*").alias("nn"))
-    scored = (
-        tok.join(freq, "token")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            F.log(F.col("c") * 1.0 / F.col("nn"))
-            .cast(DECIMAL_TYPE)
-            .alias("lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        fround(F.sum("lp").cast("double") / F.count("*"), 6).alias(
-            "mean_logprob"
-        ),
-        F.count("*").alias("n_tokens"),
-    )
+    return _unigram_mean_logprob(spark, sf_dir, F.count("*").alias("n_tokens"))
 
 
 @register(
@@ -5487,6 +5410,20 @@ def dedup_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     edges = dd.minhash_lsh_pairs(docs, threshold=0.8)
     return dd.connected_components(edges, local_threshold=0)
+
+
+def _decile_stats(dec: DataFrame) -> DataFrame:
+    """Per-decile count, exact mean, min and max of o_totalprice."""
+    from .functions.exact import exact_sum, fround
+
+    return dec.groupBy("decile").agg(
+        F.count("*").alias("n_orders"),
+        fround(
+            exact_sum(F.col("o_totalprice"), 8) / F.count("*"), 2
+        ).alias("avg_price"),
+        fround(F.min("o_totalprice"), 2).alias("lo"),
+        fround(F.max("o_totalprice"), 2).alias("hi"),
+    )
 
 
 @register(
@@ -5515,23 +5452,12 @@ FROM t GROUP BY decile
     "and broadcast-join them back as range predicates.",
 )
 def pricing_decile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .functions.exact import exact_sum, fround
-
     orders = catalog.load_table(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     t = orders.select(
         "o_totalprice", F.ntile(10).over(w).alias("decile")
     )
-    return t.groupBy("decile").agg(
-        F.count("*").alias("n_orders"),
-        fround(
-            exact_sum(F.col("o_totalprice"), 8) / F.count("*"), 2
-        ).alias("avg_price"),
-        fround(F.min("o_totalprice"), 2).alias("lo"),
-        fround(F.max("o_totalprice"), 2).alias("hi"),
-    )
+    return _decile_stats(t)
 
 
 @register(
@@ -5582,6 +5508,37 @@ def sample_weighted_exp_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") <= 100)
     )
+
+def _histogram_buckets(base: DataFrame, key: str, buckets: int):
+    """Exact ``buckets``-quantile bucketing of the integer column
+    ``key`` without a corpus-wide sort: a key histogram, a running
+    count over it, the minimal key reaching each rank target
+    ceil(i*N/buckets), the sorted bounds broadcast back as array
+    ``bs``.  Returns ``base`` joined with ``bs`` and the 1-based
+    bucket Column ``1 + |{b in bs : key > b}|``."""
+    hist = base.groupBy(key).agg(F.count("*").alias("c"))
+    wcum = Window.orderBy(key).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = hist.select(key, F.sum("c").over(wcum).alias("cum"))
+    n = hist.agg(F.sum("c").alias("n"))
+    ranks = (
+        base.sparkSession.range(1, buckets)
+        .select(F.col("id").alias("i"))
+        .crossJoin(F.broadcast(n))
+        .select(
+            "i", F.ceil(F.col("i") * F.col("n") / float(buckets)).alias("target")
+        )
+    )
+    bounds = (
+        cum.join(F.broadcast(ranks), F.col("cum") >= F.col("target"))
+        .groupBy("i")
+        .agg(F.min(key).alias("bound"))
+    )
+    barr = bounds.agg(F.sort_array(F.collect_list("bound")).alias("bs"))
+    bucket = F.lit(1) + F.size(F.filter(F.col("bs"), lambda b: F.col(key) > b))
+    return base.crossJoin(F.broadcast(barr)), bucket
+
 
 @register(
     "pricing_decile_sketch",
@@ -5635,47 +5592,16 @@ FROM dec GROUP BY decile
     "boundary math and the assignment rule.",
 )
 def pricing_decile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .functions.exact import exact_sum, fround
-
     orders = catalog.load_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey", "o_totalprice", F.floor("o_totalprice").alias("pq")
     )
-    hist = base.groupBy("pq").agg(F.count("*").alias("c"))
-    wcum = Window.orderBy("pq").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    joined, decile = _histogram_buckets(base, "pq", 10)
+    dec = joined.select(
+        "o_totalprice", decile.cast("integer").alias("decile")
     )
-    cum = hist.select("pq", F.sum("c").over(wcum).alias("cum"))
-    n = hist.agg(F.sum("c").alias("n"))
-    ranks = (
-        spark.range(1, 10)
-        .select(F.col("id").alias("i"))
-        .crossJoin(F.broadcast(n))
-        .select("i", F.ceil(F.col("i") * F.col("n") / 10.0).alias("target"))
-    )
-    bounds = (
-        cum.join(F.broadcast(ranks), F.col("cum") >= F.col("target"))
-        .groupBy("i")
-        .agg(F.min("pq").alias("bound"))
-    )
-    barr = bounds.agg(F.sort_array(F.collect_list("bound")).alias("bs"))
-    dec = base.crossJoin(F.broadcast(barr)).select(
-        "o_totalprice",
-        (
-            F.lit(1)
-            + F.size(F.filter(F.col("bs"), lambda b: F.col("pq") > b))
-        ).cast("integer").alias("decile"),
-    )
-    return dec.groupBy("decile").agg(
-        F.count("*").alias("n_orders"),
-        fround(
-            exact_sum(F.col("o_totalprice"), 8) / F.count("*"), 2
-        ).alias("avg_price"),
-        fround(F.min("o_totalprice"), 2).alias("lo"),
-        fround(F.max("o_totalprice"), 2).alias("hi"),
-    )
+    return _decile_stats(dec)
+
 
 @register(
     "asof_hotkey_attribution",
@@ -5721,9 +5647,6 @@ def asof_hotkey_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
     s = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id", "ts")
@@ -5732,26 +5655,8 @@ def asof_hotkey_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "ts", F.col("ts").alias("signup_ts"), "signup_value"
         )
     )
-    joined = oj.asof_join_backward_chunked(
-        p,
-        s,
-        time_col="ts",
-        by_cols=["user_id"],
-        carry_cols=["signup_ts", "signup_value"],
-        suffix="",
-        bucket_span=7 * 86_400.0,
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        "signup_ts",
-        "signup_value",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            - F.unix_millis(F.col("signup_ts").cast("timestamp"))
-        ).alias("ms_since_signup"),
+    return _attribute_purchases(
+        ev, s, oj.asof_join_backward_chunked, bucket_span=7 * 86_400.0
     )
 
 
@@ -5861,6 +5766,42 @@ WHERE g.doc_id % 17 <> 0
 """
 
 
+def _eval_8grams(docs: DataFrame):
+    """Decontamination prologue over ``docs`` (doc_id, text): the
+    8-gram arrays (doc_id, g8), the eval-split predicate
+    doc_id % 17 == 0, and the eval split's distinct grams (gram)."""
+    from .functions.text import word_ngrams
+
+    g = docs.select("doc_id", word_ngrams(F.col("text"), 8).alias("g8"))
+    is_eval = F.col("doc_id") % 17 == 0
+    grams = g.filter(is_eval).select(F.explode("g8").alias("gram")).distinct()
+    return g, is_eval, grams
+
+
+def _shuffled_contamination(
+    train: DataFrame, n_grams, cand: DataFrame, bgrams: DataFrame
+) -> DataFrame:
+    """Per ``train`` doc: ``n_grams``, n_matched = its distinct
+    (doc_id, gram) candidates ``cand`` found among the eval grams
+    ``bgrams``, and the contaminated flag.  Both joins are pinned
+    shuffle_hash, so no eval-sized side is ever broadcast."""
+    matched = (
+        cand.join(bgrams.hint("shuffle_hash"), "gram")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_matched"))
+    )
+    return train.join(matched.hint("shuffle_hash"), "doc_id", "left").select(
+        "doc_id",
+        n_grams.cast("bigint").alias("n_grams"),
+        F.coalesce(F.col("n_matched"), F.lit(0))
+        .cast("bigint")
+        .alias("n_matched"),
+        (F.coalesce(F.col("n_matched"), F.lit(0)) > 0)
+        .cast("integer")
+        .alias("contaminated"),
+    )
+
+
 @register(
     "dedup_decontaminate",
     oracle=_DECON_EXACT_ORACLE,
@@ -5881,18 +5822,10 @@ WHERE g.doc_id % 17 <> 0
     "(operators/dedup.py) to eval-overlap semantics.",
 )
 def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.text import word_ngrams
-
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", word_ngrams(F.col("text"), 8).alias("g8")
+    docs, is_bench, bgrams = _eval_8grams(
+        catalog.load_table(spark, sf_dir, "documents")
     )
-    is_bench = F.col("doc_id") % 17 == 0
-    bgrams = (
-        docs.filter(is_bench)
-        .select(F.explode("g8").alias("gram"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
+    bgrams = bgrams.withColumn("__hit", F.lit(1))
     # r12 restructure (guide §2.4/§1.2), output identical under the
     # same oracle: the former shape computed the 8-gram arrays THREE
     # times (bench branch, train distinct-gram branch, final join-back
@@ -5951,39 +5884,94 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_decontaminate_semijoin(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .functions.text import word_ngrams
-
-    docs = catalog.load_table(spark, sf_dir, "documents").select(
-        "doc_id", word_ngrams(F.col("text"), 8).alias("g8")
-    )
-    is_bench = F.col("doc_id") % 17 == 0
-    bgrams = (
-        docs.filter(is_bench)
-        .select(F.explode("g8").alias("gram"))
-        .distinct()
+    docs, is_bench, bgrams = _eval_8grams(
+        catalog.load_table(spark, sf_dir, "documents")
     )
     train = docs.filter(~is_bench)
     tgrams = train.select(
         "doc_id", F.explode("g8").alias("gram")
     ).distinct()
-    matched = (
-        tgrams.join(bgrams.hint("shuffle_hash"), "gram")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_matched"))
+    return _shuffled_contamination(train, F.size("g8"), tgrams, bgrams)
+
+
+_DSIR_B, _DSIR_K = 512, 200
+
+
+def _dsir_buckets(docs: DataFrame) -> DataFrame:
+    """(doc_id, b): every unigram and bigram of ``docs.text`` hashed
+    into one of _DSIR_B md5 buckets."""
+    from .functions.hashing import md5_int60
+    from .functions.text import tokens, word_ngrams
+
+    return docs.select(
+        "doc_id",
+        F.explode(
+            F.concat(
+                tokens(F.lower(F.col("text"))),
+                word_ngrams(F.col("text"), 2),
+            )
+        ).alias("g"),
+    ).select("doc_id", F.pmod(md5_int60(F.col("g")), F.lit(_DSIR_B)).alias("b"))
+
+
+def _dsir_top(dc: DataFrame, tgt: DataFrame) -> DataFrame:
+    """DSIR importance scores of the source docs: ``dc`` holds their
+    (doc_id, b, c) bucket counts, ``tgt`` the target's (b, cp).
+    Smoothed per-bucket log-ratio ``lam``, DECIMAL-exact
+    ``log_weight``, md5-Gumbel ``score``; the top _DSIR_K by score."""
+    from .functions.exact import DECIMAL_TYPE, fround
+    from .functions.hashing import md5_int60
+
+    B = _DSIR_B
+    src = dc.groupBy("b").agg(F.sum("c").alias("cq"))
+    # both totals null-coalesced, mirroring the oracle's 0-total
+    # arithmetic on an empty split (ADVICE r7 #4)
+    tots = src.agg(F.coalesce(F.sum("cq"), F.lit(0)).alias("tq")).crossJoin(
+        tgt.agg(F.coalesce(F.sum("cp"), F.lit(0)).alias("tp"))
     )
-    return (
-        train.join(matched.hint("shuffle_hash"), "doc_id", "left")
+    lam = (
+        src.join(tgt, "b", "left")
+        .crossJoin(F.broadcast(tots))
         .select(
-            "doc_id",
-            F.size("g8").cast("bigint").alias("n_grams"),
-            F.coalesce(F.col("n_matched"), F.lit(0))
-            .cast("bigint")
-            .alias("n_matched"),
-            (F.coalesce(F.col("n_matched"), F.lit(0)) > 0)
-            .cast("integer")
-            .alias("contaminated"),
+            "b",
+            fround(
+                F.log(
+                    (F.coalesce(F.col("cp"), F.lit(0)) + 1)
+                    * (F.col("tq") + B)
+                )
+                - F.log((F.col("cq") + 1) * (F.col("tp") + B)),
+                6,
+            ).alias("lam"),
         )
     )
+    w = (
+        dc.join(F.broadcast(lam), "b")
+        .groupBy("doc_id")
+        .agg(
+            fround(
+                F.sum(
+                    (F.col("c") * F.col("lam")).cast(DECIMAL_TYPE)
+                ).cast("double"),
+                6,
+            ).alias("log_weight")
+        )
+    )
+    u = (
+        F.pmod(
+            md5_int60(
+                F.concat(F.lit("dsir:"), F.col("doc_id").cast("string"))
+            ),
+            F.lit(1000000),
+        )
+        + F.lit(0.5)
+    ) / F.lit(1000000.0)
+    gumbel = fround(-F.log(-F.log(u)), 6)
+    out = w.select(
+        "doc_id",
+        "log_weight",
+        fround(F.col("log_weight") + gumbel, 6).alias("score"),
+    )
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(_DSIR_K)
 
 
 @register(
@@ -6057,76 +6045,13 @@ LIMIT 200
     "never a full sort.",
 )
 def curation_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.exact import DECIMAL_TYPE, fround
-    from .functions.hashing import md5_int60
-    from .functions.text import tokens, word_ngrams
-
-    B, K = 512, 200
     docs = catalog.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.concat(
-                tokens(F.lower(F.col("text"))),
-                word_ngrams(F.col("text"), 2),
-            )
-        ).alias("g"),
-    ).select("doc_id", F.pmod(md5_int60(F.col("g")), F.lit(B)).alias("b"))
-    dc = grams.groupBy("doc_id", "b").agg(F.count("*").alias("c"))
+    dc = _dsir_buckets(docs).groupBy("doc_id", "b").agg(F.count("*").alias("c"))
     is_target = F.col("doc_id") % 17 == 0
     tgt = dc.filter(is_target).groupBy("b").agg(F.sum("c").alias("cp"))
-    src = dc.filter(~is_target).groupBy("b").agg(F.sum("c").alias("cq"))
-    # both totals null-coalesced, mirroring the oracle's 0-total
-    # arithmetic on an empty split (ADVICE r7 #4)
-    tots = src.agg(F.coalesce(F.sum("cq"), F.lit(0)).alias("tq")).crossJoin(
-        tgt.agg(F.coalesce(F.sum("cp"), F.lit(0)).alias("tp"))
-    )
-    lam = (
-        src.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(tots))
-        .select(
-            "b",
-            fround(
-                F.log(
-                    (F.coalesce(F.col("cp"), F.lit(0)) + 1)
-                    * (F.col("tq") + B)
-                )
-                - F.log((F.col("cq") + 1) * (F.col("tp") + B)),
-                6,
-            ).alias("lam"),
-        )
-    )
-    w = (
-        dc.filter(~is_target)
-        .join(F.broadcast(lam), "b")
-        .groupBy("doc_id")
-        .agg(
-            fround(
-                F.sum(
-                    (F.col("c") * F.col("lam")).cast(DECIMAL_TYPE)
-                ).cast("double"),
-                6,
-            ).alias("log_weight")
-        )
-    )
-    u = (
-        F.pmod(
-            md5_int60(
-                F.concat(F.lit("dsir:"), F.col("doc_id").cast("string"))
-            ),
-            F.lit(1000000),
-        )
-        + F.lit(0.5)
-    ) / F.lit(1000000.0)
-    gumbel = fround(-F.log(-F.log(u)), 6)
-    out = w.select(
-        "doc_id",
-        "log_weight",
-        fround(F.col("log_weight") + gumbel, 6).alias("score"),
-    )
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(K)
+    return _dsir_top(dc.filter(~is_target), tgt)
 
 
 def _span_island_ctes(win_mat: str = "") -> str:
@@ -6559,12 +6484,10 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .functions import text as T
-    from .functions.exact import DECIMAL_TYPE, fround
-    from .functions.hashing import md5_int60
     from .functions.layout import export_shuffle_hash
     from .operators.dedup import remove_repeated_spans
 
-    B, K, SHARDS = 512, 200, 4
+    SHARDS = 4
     docs = catalog.load_table(spark, sf_dir, "documents")
     t = F.col("text")
     filtered = (
@@ -6580,13 +6503,7 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = remove_repeated_spans(filtered).select(
         "doc_id", F.col("clean_text").alias("text")
     )
-    is_eval = F.col("doc_id") % 17 == 0
-    g = cleaned.select(
-        "doc_id", T.word_ngrams(F.col("text"), 8).alias("g8")
-    )
-    bgrams = (
-        g.filter(is_eval).select(F.explode("g8").alias("gram")).distinct()
-    )
+    g, is_eval, bgrams = _eval_8grams(cleaned)
     # r12 (guide §2.4): membership only — a doc is contaminated iff ANY
     # of its grams hits the eval set, so the (doc,gram) distinct the
     # counting tier needs is a wasted corpus-gram exchange here; the
@@ -6603,77 +6520,15 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         contaminated, "doc_id", "left_anti"
     )
 
-    def bucket_grams(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id",
-            F.explode(
-                F.concat(
-                    T.tokens(F.lower(F.col("text"))),
-                    T.word_ngrams(F.col("text"), 2),
-                )
-            ).alias("g"),
-        ).select(
-            "doc_id", F.pmod(md5_int60(F.col("g")), F.lit(B)).alias("b")
-        )
-
     tgt = (
-        bucket_grams(cleaned.filter(is_eval))
+        _dsir_buckets(cleaned.filter(is_eval))
         .groupBy("b")
         .agg(F.count("*").alias("cp"))
     )
-    dc = bucket_grams(survivors).groupBy("doc_id", "b").agg(
+    dc = _dsir_buckets(survivors).groupBy("doc_id", "b").agg(
         F.count("*").alias("c")
     )
-    src = dc.groupBy("b").agg(F.sum("c").alias("cq"))
-    tots = src.agg(
-        F.coalesce(F.sum("cq"), F.lit(0)).alias("tq")
-    ).crossJoin(tgt.agg(F.coalesce(F.sum("cp"), F.lit(0)).alias("tp")))
-    lam = (
-        src.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(tots))
-        .select(
-            "b",
-            fround(
-                F.log(
-                    (F.coalesce(F.col("cp"), F.lit(0)) + 1)
-                    * (F.col("tq") + B)
-                )
-                - F.log((F.col("cq") + 1) * (F.col("tp") + B)),
-                6,
-            ).alias("lam"),
-        )
-    )
-    w = (
-        dc.join(F.broadcast(lam), "b")
-        .groupBy("doc_id")
-        .agg(
-            fround(
-                F.sum(
-                    (F.col("c") * F.col("lam")).cast(DECIMAL_TYPE)
-                ).cast("double"),
-                6,
-            ).alias("log_weight")
-        )
-    )
-    u = (
-        F.pmod(
-            md5_int60(
-                F.concat(F.lit("dsir:"), F.col("doc_id").cast("string"))
-            ),
-            F.lit(1000000),
-        )
-        + F.lit(0.5)
-    ) / F.lit(1000000.0)
-    gumbel = fround(-F.log(-F.log(u)), 6)
-    sel = (
-        w.select(
-            "doc_id",
-            "log_weight",
-            fround(F.col("log_weight") + gumbel, 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(K)
-    )
+    sel = _dsir_top(dc, tgt)
     h = export_shuffle_hash(F.col("doc_id"), "epoch0")
     win = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (
@@ -6818,66 +6673,18 @@ FROM q
     "because the boundary rule is integer-exact.",
 )
 def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .functions.exact import DECIMAL_TYPE, fround
-    from .functions.text import tokens
-
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
-    )
-    freq = tok.groupBy("token").agg(F.count("*").alias("c"))
-    n = tok.agg(F.count("*").alias("nn"))
-    scored = (
-        tok.join(freq, "token")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            F.log(F.col("c") * 1.0 / F.col("nn"))
-            .cast(DECIMAL_TYPE)
-            .alias("lp"),
-        )
-    )
-    docsc = scored.groupBy("doc_id").agg(
-        fround(F.sum("lp").cast("double") / F.count("*"), 6).alias(
-            "mean_logprob"
-        )
-    )
+    docsc = _unigram_mean_logprob(spark, sf_dir)
     q = docsc.select(
         "doc_id",
         "mean_logprob",
         F.floor(F.col("mean_logprob") * 10000).cast("bigint").alias("sq"),
     )
-    hist = q.groupBy("sq").agg(F.count("*").alias("c"))
-    wcum = Window.orderBy("sq").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.select("sq", F.sum("c").over(wcum).alias("cum"))
-    nn2 = hist.agg(F.sum("c").alias("n"))
-    ranks = (
-        spark.range(1, 3)
-        .select(F.col("id").alias("i"))
-        .crossJoin(F.broadcast(nn2))
-        .select("i", F.ceil(F.col("i") * F.col("n") / 3.0).alias("target"))
-    )
-    bounds = (
-        cum.join(F.broadcast(ranks), F.col("cum") >= F.col("target"))
-        .groupBy("i")
-        .agg(F.min("sq").alias("bound"))
-    )
-    barr = bounds.agg(F.sort_array(F.collect_list("bound")).alias("bs"))
+    joined, bucket = _histogram_buckets(q, "sq", 3)
     lab = F.array(F.lit("tail"), F.lit("middle"), F.lit("head"))
-    return q.crossJoin(F.broadcast(barr)).select(
+    return joined.select(
         "doc_id",
         "mean_logprob",
-        F.element_at(
-            lab,
-            (
-                F.lit(1)
-                + F.size(F.filter(F.col("bs"), lambda b: F.col("sq") > b))
-            ),
-        ).alias("ccnet_bucket"),
+        F.element_at(lab, bucket).alias("ccnet_bucket"),
     )
 
 
@@ -7591,6 +7398,28 @@ FROM sh
 """
 
 
+def _datum_shift(spark: SparkSession, sf_dir: str, p: dict) -> DataFrame:
+    """Abridged-Molodensky shift of each polygon's vertex-mean
+    centroid under ``p`` — the Spark side of _molodensky_oracle."""
+    cent = geo.vertex_mean_centroid(
+        geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
+    ).select(
+        "poly_id",
+        "name",
+        F.col("centroid_lat").alias("lat"),
+        F.col("centroid_lon").alias("lon"),
+    )
+    lat2, lon2 = geo.molodensky_shift(F.col("lat"), F.col("lon"), p)
+    return cent.select(
+        "poly_id",
+        "name",
+        "lat",
+        "lon",
+        fround(lat2, 8).alias("lat_wgs84"),
+        fround(lon2, 8).alias("lon_wgs84"),
+    )
+
+
 _ARC_P = geo.molodensky_params(geo.ARC1960_TO_WGS84)
 
 
@@ -7611,25 +7440,7 @@ _ARC_P = geo.molodensky_params(geo.ARC1960_TO_WGS84)
     "centroid frame; one scan, no shuffle beyond the source agg.",
 )
 def geo_c19_datum_arc1960(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.exact import fround
-
-    cent = geo.vertex_mean_centroid(
-        geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
-    ).select(
-        "poly_id",
-        "name",
-        F.col("centroid_lat").alias("lat"),
-        F.col("centroid_lon").alias("lon"),
-    )
-    lat2, lon2 = geo.molodensky_shift(F.col("lat"), F.col("lon"), _ARC_P)
-    return cent.select(
-        "poly_id",
-        "name",
-        "lat",
-        "lon",
-        fround(lat2, 8).alias("lat_wgs84"),
-        fround(lon2, 8).alias("lon_wgs84"),
-    )
+    return _datum_shift(spark, sf_dir, _ARC_P)
 
 
 _ARC50_P = geo.molodensky_params(geo.ARC1950_TO_WGS84)
@@ -7651,25 +7462,7 @@ _ARC50_P = geo.molodensky_params(geo.ARC1950_TO_WGS84)
     "frame; one scan, no shuffle beyond the source agg.",
 )
 def geo_c19_datum_arc1950(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.exact import fround
-
-    cent = geo.vertex_mean_centroid(
-        geo.synth_polygons(catalog.load_table(spark, sf_dir, "nation"))
-    ).select(
-        "poly_id",
-        "name",
-        F.col("centroid_lat").alias("lat"),
-        F.col("centroid_lon").alias("lon"),
-    )
-    lat2, lon2 = geo.molodensky_shift(F.col("lat"), F.col("lon"), _ARC50_P)
-    return cent.select(
-        "poly_id",
-        "name",
-        "lat",
-        "lon",
-        fround(lat2, 8).alias("lat_wgs84"),
-        fround(lon2, 8).alias("lon_wgs84"),
-    )
+    return _datum_shift(spark, sf_dir, _ARC50_P)
 
 
 @register(
@@ -7692,30 +7485,14 @@ def geo_c19_datum_arc1950(spark: SparkSession, sf_dir: str) -> DataFrame:
     "error anywhere breaks the hash.",
 )
 def s4_geotiff_jpeg_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources import geotiff as gt
-
-    nx = ny = 40
-    # north-up: row 0 is the TOP; block-constant value field over
-    # 8x8 model-space blocks (JPEG strips carry 8-bit samples)
+    # block-constant value field over 8x8 model-space blocks (JPEG
+    # strips carry 8-bit samples)
     values = [
-        float(((i // 8) * 31 + (((ny - 1 - row) // 8)) * 17) % 97)
-        for row in range(ny)
-        for i in range(nx)
+        float(((i // 8) * 31 + ((39 - row) // 8) * 17) % 97)
+        for row in range(40)
+        for i in range(40)
     ]
-    data = gt.write_geotiff_bytes(
-        nx, ny, values, origin_x=0.0, origin_y=float(ny),
-        compression="jpeg", rows_per_strip=16,
-    )
-    pixels = _df_from_fixture_bytes(spark, data, ".tif", fsrc.read_geotiff_pixels)
-    polys = spark.createDataFrame(
-        [
-            (1, "alpha", 0.0, 0.0, 10.0, 10.0),
-            (2, "beta", 20.0, 20.0, 30.0, 30.0),
-            (3, "gamma", 5.0, 25.0, 9.0, 33.0),
-        ],
-        "poly_id int, name string, x0 double, y0 double, x1 double, y1 double",
-    )
-    return geo.zonal_stats(polys, pixels)
+    return _s4_zonal(spark, values, compression="jpeg", rows_per_strip=16)
 
 
 @register(
@@ -7983,23 +7760,15 @@ def dedup_select_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import bloom as bl
-    from .functions.text import tokens, word_ngrams
+    from .functions.text import tokens
 
     base = catalog.load_table(spark, sf_dir, "documents")
-    docs = base.select(
-        "doc_id", word_ngrams(F.col("text"), 8).alias("g8")
-    )
-    is_bench = F.col("doc_id") % 17 == 0
+    docs, is_bench, bgrams = _eval_8grams(base)
     # CONSTRUCTION-TIME EXECUTION CONTRACT (the minhash-census
     # precedent): the eval gram set materializes here — three
     # consumers (the count below, the bitmap build, the exact verify
     # join) read its blocks instead of re-deriving the explode.
-    bgrams = (
-        docs.filter(is_bench)
-        .select(F.explode("g8").alias("gram"))
-        .distinct()
-        .localCheckpoint()
-    )
+    bgrams = bgrams.localCheckpoint()
     # corpus-count-adaptive filter size (bloom_plan docstring: a
     # saturated fixed-size filter pays probe cost and cuts nothing)
     m_bits = bl.bloom_plan(bgrams.count())
@@ -8015,11 +7784,6 @@ def dedup_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "gram")
         .distinct()
     )
-    matched = (
-        cand.join(bgrams.hint("shuffle_hash"), "gram")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_matched"))
-    )
     # r13 (guide §1.2): the output branch needs only the gram COUNT,
     # not the grams — size(word_ngrams(text, 8)) is exactly
     # greatest(n_tokens - 7, 0) (n-7 overlapping windows when n >= 8,
@@ -8033,17 +7797,8 @@ def dedup_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(tokens(F.lower(F.col("text")))) - 7, F.lit(0)
         ).alias("__n_grams"),
     )
-    return train_totals.join(
-        matched.hint("shuffle_hash"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.col("__n_grams").cast("bigint").alias("n_grams"),
-        F.coalesce(F.col("n_matched"), F.lit(0))
-        .cast("bigint")
-        .alias("n_matched"),
-        (F.coalesce(F.col("n_matched"), F.lit(0)) > 0)
-        .cast("integer")
-        .alias("contaminated"),
+    return _shuffled_contamination(
+        train_totals, F.col("__n_grams"), cand, bgrams
     )
 
 

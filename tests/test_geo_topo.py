@@ -4,8 +4,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from geoscale_healthflow_etl_django_analytics_spark.operators.geo import _dp_keep
 from geoscale_healthflow_etl_django_analytics_spark.operators.geo_topo import (
-    _dp_keep,
     _ring_is_simple,
 )
 
@@ -58,7 +58,7 @@ def test_topo_matches_plain_dp_when_no_guard_triggers(spark):
 
 
 def test_dp_keep_is_plain_dp():
-    """_dp_keep replicates geo.py's recursion: the densified unit
+    """geo._dp_keep, the DP kernel both simplify tiers run: the unit
     square at tolerance 10 keeps only the (identical) endpoints."""
     sq = np.array([(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (0.0, 0.0)])
     keep = _dp_keep(sq, 100.0)
