@@ -66,26 +66,24 @@ def bloom_plan(n_items: int) -> int:
     return m
 
 
-def _positions(gram: Column, m_bits: int, k: int) -> list[Column]:
-    """The k bit positions for one gram.  ``m_bits`` must be a power
+def _positions(gram: Column, m_bits: int) -> list[Column]:
+    """The ``BLOOM_K`` bit positions for one gram.  ``m_bits`` must be a power
     of two so the modulo is a mask (``& (m-1)`` of a negative xxhash64
     is still non-negative — only low bits survive)."""
     if m_bits & (m_bits - 1):
         raise ValueError(f"m_bits must be a power of two, got {m_bits}")
     return [
         F.xxhash64(gram, F.lit(i)).bitwiseAND(F.lit(m_bits - 1))
-        for i in range(k)
+        for i in range(BLOOM_K)
     ]
 
 
 def bloom_bitmap(
     grams: DataFrame,
-    gram_col: str = "gram",
     m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
 ) -> DataFrame:
     """ONE-row DataFrame ``(bloom: array<long>)`` — the packed filter
-    over every value of ``grams[gram_col]``, as a DENSE word array of
+    over every value of ``grams["gram"]``, as a DENSE word array of
     exactly ``m_bits/64`` entries.
 
     Dense array, NOT a map: Spark's ``element_at`` on a map is a
@@ -103,7 +101,7 @@ def bloom_bitmap(
     ``registry.dedup_decontaminate_bloom``).
     """
     pos = grams.select(
-        F.explode(F.array(*_positions(F.col(gram_col), m_bits, k))).alias(
+        F.explode(F.array(*_positions(F.col("gram"), m_bits))).alias(
             "pos"
         )
     ).distinct()
@@ -141,7 +139,6 @@ def bloom_contains(
     gram: Column,
     bloom: Column,
     m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
 ) -> Column:
     """True iff every one of the gram's k probe bits is set in
     ``bloom`` (the dense ``array<long>`` word array; O(1) indexing —
@@ -149,7 +146,7 @@ def bloom_contains(
     False positives possible at the configured rate, False negatives
     impossible.  ``m_bits`` must match the build."""
     out: Column | None = None
-    for pos in _positions(gram, m_bits, k):
+    for pos in _positions(gram, m_bits):
         word_idx = (F.floor(pos / 64) + 1).cast("int")  # 1-based
         mask = F.call_function(
             "shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int")

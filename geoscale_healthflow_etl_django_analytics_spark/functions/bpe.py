@@ -13,12 +13,13 @@ arXiv:1508.07909 — the subword-nmt training algorithm):
    (subword-nmt trains on a word-frequency dict for the same reason).
 2. Represent each word as a separator-joined symbol string seeded
    from its characters.
-3. ``n_merges`` rounds: count adjacent symbol pairs weighted by word
+3. ``n_merges`` (default ``N_MERGES``) rounds: count adjacent symbol
+   pairs weighted by word
    frequency (one map-side-combinable groupBy over the vocab), take
    the argmax pair with a deterministic (total DESC, a ASC, b ASC)
    rank — the merge stays IN-PLAN as a one-row broadcast, no driver
-   collect — and apply it to every vocab word as ``passes`` chained
-   ``replace`` calls (JVM codegen; see MERGE SEMANTICS below).
+   collect — and apply it to every vocab word as ``MERGE_PASSES``
+   chained ``replace`` calls (JVM codegen; see MERGE SEMANTICS below).
 4. Per-doc stats come from joining the corpus words back to the
    tokenized vocab — the vocab side is small, so AQE broadcasts it.
 
@@ -31,11 +32,11 @@ DuckDB replays the identical merge table and the identical bounded
 replace sequence.
 
 MERGE SEMANTICS (pinned, cross-engine): applying merge (a, b) means
-``passes`` successive non-overlapping left-to-right replacements of
+``MERGE_PASSES`` successive non-overlapping left-to-right replacements of
 the separator-delimited pair — the semantics of ``replace()`` in
 BOTH engines. Because consecutive occurrences share a boundary
 separator, one pass merges alternating occurrences of a symbol RUN;
-``passes=3`` reaches the fixpoint for any run the pre-tokenizer can
+``MERGE_PASSES = 3`` reaches the fixpoint for any run the pre-tokenizer can
 emit in practice, and both engines run the IDENTICAL bounded
 sequence, so cross-engine equality holds by construction even where
 a longer run would differ from a leftmost-first reference tokenizer
@@ -55,6 +56,10 @@ from .exact import fround
 from .text import bpe_tokens
 
 SEP = "\x1f"
+# Merges the corpus-learned tier trains, and the replace passes that
+# apply one merge (MERGE SEMANTICS); the DuckDB oracles read both.
+N_MERGES = 8
+MERGE_PASSES = 3
 
 
 class _vocab_loop_mode:
@@ -91,11 +96,11 @@ def _sym_array(s: Column) -> Column:
     return F.filter(F.split(s, SEP), lambda x: x != "")
 
 
-def _corpus_words(docs: DataFrame, doc_id_col: str, text_col: str) -> DataFrame:
+def _corpus_words(docs: DataFrame) -> DataFrame:
     """(doc_id, w) — one row per pre-token occurrence."""
-    clean = F.replace(F.col(text_col), F.lit(SEP), F.lit(""))
+    clean = F.replace(F.col("text"), F.lit(SEP), F.lit(""))
     return docs.select(
-        F.col(doc_id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.explode(bpe_tokens(clean)).alias("w"),
     )
 
@@ -105,14 +110,14 @@ def _word_vocab(words: DataFrame) -> DataFrame:
     return words.groupBy("w").agg(F.count("*").alias("freq"))
 
 
-def _seed_vocab(docs: DataFrame, doc_id_col: str, text_col: str) -> DataFrame:
+def _seed_vocab(docs: DataFrame) -> DataFrame:
     """(w, freq, s): the vocabulary with its characters as the seed
     symbols — vocab-sized, ONE partition (see _vocab_loop_mode),
     checkpointed: each round consumes it twice (pair count + apply)
     and rounds chain, so unchecked lineage would re-execute the
     corpus word extraction per consumer per round (the Lloyd lesson,
     operators/similarity.py).  Call inside ``_vocab_loop_mode``."""
-    vocab = _word_vocab(_corpus_words(docs, doc_id_col, text_col))
+    vocab = _word_vocab(_corpus_words(docs))
     # seed symbols = characters (filter guards the empty tail Java's
     # limit=-1 split appends; DuckDB mirrors with list_filter)
     chars = F.filter(F.split(F.col("w"), ""), lambda x: x != "")
@@ -143,46 +148,34 @@ def _top_pair(v: DataFrame) -> DataFrame:
     )
 
 
-def _merged(a: Column, b: Column, passes: int) -> Column:
-    """Column ``s`` after merge (a, b): ``passes`` chained ``replace``
-    calls (MERGE SEMANTICS above)."""
+def _merged(a: Column, b: Column) -> Column:
+    """Column ``s`` after merge (a, b): ``MERGE_PASSES`` chained
+    ``replace`` calls (MERGE SEMANTICS above)."""
     pat = F.concat(F.lit(SEP), a, F.lit(SEP), b, F.lit(SEP))
     rep = F.concat(F.lit(SEP), a, b, F.lit(SEP))
     s_new: Column = F.col("s")
-    for _ in range(passes):
+    for _ in range(MERGE_PASSES):
         s_new = F.replace(s_new, pat, rep)
     return s_new
 
 
-def learn_merged_vocab(
-    docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = 8,
-    passes: int = 3,
-) -> DataFrame:
+def learn_merged_vocab(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """(w, freq, s): the word vocabulary after ``n_merges`` learned
     merges, ``s`` the separator-joined symbol string.  Each round's
     winner stays in-plan as a one-row broadcast."""
     with _vocab_loop_mode(docs):
-        v = _seed_vocab(docs, doc_id_col, text_col)
+        v = _seed_vocab(docs)
         for _ in range(n_merges):
             v = (
                 v.crossJoin(F.broadcast(_top_pair(v)))
-                .select(
-                    "w", "freq", _merged(F.col("a"), F.col("b"), passes).alias("s")
-                )
+                .select("w", "freq", _merged(F.col("a"), F.col("b")).alias("s"))
                 .localCheckpoint()
             )
     return v
 
 
 def learn_merges(
-    docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = 8,
-    passes: int = 3,
+    docs: DataFrame, n_merges: int = N_MERGES
 ) -> list[tuple[str, str]]:
     """The learned merge TABLE as a driver-side list — the pretrained-
     vocab extraction path.  Identical training loop to
@@ -195,7 +188,7 @@ def learn_merges(
     """
     merges: list[tuple[str, str]] = []
     with _vocab_loop_mode(docs):
-        v = _seed_vocab(docs, doc_id_col, text_col)
+        v = _seed_vocab(docs)
         for _ in range(n_merges):
             top = _top_pair(v).first()
             if top is None:  # vocabulary fully merged — no pairs left
@@ -203,7 +196,7 @@ def learn_merges(
             a, b = top["a"], top["b"]
             merges.append((a, b))
             v = v.select(
-                "w", "freq", _merged(F.lit(a), F.lit(b), passes).alias("s")
+                "w", "freq", _merged(F.lit(a), F.lit(b)).alias("s")
             ).localCheckpoint()
     return merges
 
@@ -242,12 +235,11 @@ def _apply_word(
     word: str,
     rank_of: dict[tuple[str, str], int],
     merges: list[tuple[str, str]],
-    passes: int = 3,
 ) -> int:
     """Token count for one word under a pretrained merge table, with
     EXACTLY the in-plan tier's sequential merge semantics (MERGE
-    SEMANTICS above): merges apply in rank order, each as ``passes``
-    non-overlapping left-to-right replace passes — Python
+    SEMANTICS above): merges apply in rank order, each as
+    ``MERGE_PASSES`` non-overlapping left-to-right replace passes — Python
     ``str.replace`` and JVM/DuckDB ``replace`` share that contract,
     so this path is byte-identical to ``bpe_doc_stats`` given the
     same table (pinned by test + the full value oracle).
@@ -278,7 +270,7 @@ def _apply_word(
         a, b = merges[r]
         pat = SEP + a + SEP + b + SEP
         rep = SEP + a + b + SEP
-        for _ in range(passes):
+        for _ in range(MERGE_PASSES):
             ns = s.replace(pat, rep)
             if ns == s:
                 break
@@ -315,11 +307,7 @@ def _doc_stats(words: DataFrame, per_word: DataFrame) -> DataFrame:
 
 
 def bpe_apply_doc_stats(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    passes: int = 3,
+    docs: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """Per-doc token budget under a PRETRAINED merge table — the
     operator a production 100 TB pipeline actually runs (the in-plan
@@ -352,36 +340,28 @@ def bpe_apply_doc_stats(
             uniq.append(p)
 
     spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast((uniq, rank_of, passes))
+    bc = spark.sparkContext.broadcast((uniq, rank_of))
 
     def tokenize_batches(batches):
-        mg, rk, ps = bc.value
+        mg, rk = bc.value
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["n_tok"] = [
-                _apply_word(w, rk, mg, ps) for w in pdf["w"]
-            ]
+            pdf["n_tok"] = [_apply_word(w, rk, mg) for w in pdf["w"]]
             yield pdf
 
-    words = _corpus_words(docs, doc_id_col, text_col)
+    words = _corpus_words(docs)
     per_word = _word_vocab(words).mapInPandas(
         tokenize_batches, schema="w string, freq bigint, n_tok int"
     ).select("w", "n_tok")
     return _doc_stats(words, per_word)
 
 
-def bpe_doc_stats(
-    docs: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = 8,
-    passes: int = 3,
-) -> DataFrame:
+def bpe_doc_stats(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Per-doc token budget under the corpus-learned merge table:
     (doc_id, bpe_tokens, chars, chars_per_token). Docs whose text
     pre-tokenizes to zero words carry no token budget and are absent
     (inner join), mirrored by the oracle."""
-    words = _corpus_words(docs, doc_id_col, text_col)
-    v = learn_merged_vocab(docs, doc_id_col, text_col, n_merges, passes)
+    words = _corpus_words(docs)
+    v = learn_merged_vocab(docs, n_merges)
     per_word = v.select("w", F.size(_sym_array(F.col("s"))).alias("n_tok"))
     return _doc_stats(words, per_word)

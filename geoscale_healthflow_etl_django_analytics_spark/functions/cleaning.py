@@ -251,11 +251,11 @@ def sanitize_name(col: Column) -> Column:
     return F.regexp_replace(F.lower(py_strip(col)), r"[^a-z0-9]+", "_")
 
 
-def positivity_rate(positive: Column, total: Column, decimals: int = 2) -> Column:
+def positivity_rate(positive: Column, total: Column) -> Column:
     """round(positive/total*100, 2) with 0 when total==0 — the rate
     formula used across analytics_calculator.py (e.g. :64,110-112).
     """
     return fround(
         F.when(total > 0, positive.cast("double") * 100.0 / total).otherwise(0.0),
-        decimals,
+        2,
     )

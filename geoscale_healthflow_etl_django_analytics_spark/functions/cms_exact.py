@@ -44,48 +44,32 @@ from .hashing import md5_int60
 
 CMS_DEPTH = 4
 CMS_WIDTH = 2048  # eps = e/width ~ 0.00133 -> overestimate <= 0.133% of N
+_BITS = CMS_WIDTH.bit_length() - 1  # 11 hash bits per row, 44 of 60 in all
 
 
-def _check_params(depth: int, width: int) -> int:
-    if width & (width - 1):
-        raise ValueError(f"width must be a power of two, got {width}")
-    bits = width.bit_length() - 1
-    if depth * bits > 60:
-        raise ValueError(
-            f"depth * log2(width) = {depth * bits} exceeds the 60 "
-            "hash bits md5_int60 provides"
-        )
-    return bits
-
-
-def _bucket_from_h(h: Column, i: int, bits: int, width: int) -> Column:
-    """Row-i bucket: the i-th disjoint ``bits``-bit slice of the
+def _bucket_from_h(h: Column, i: int) -> Column:
+    """Row-i bucket: the i-th disjoint ``_BITS``-bit slice of the
     per-token 60-bit hash — shift + mask, no extra hashing."""
-    return F.shiftright(h, bits * i).bitwiseAND(F.lit(width - 1))
+    return F.shiftright(h, _BITS * i).bitwiseAND(F.lit(CMS_WIDTH - 1))
 
 
-def cms_sketch(
-    tokens: DataFrame,
-    token_col: str = "token",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_sketch(tokens: DataFrame) -> DataFrame:
     """ONE-row DataFrame ``(cms: map<long,long>, n_total: long)`` —
-    the packed md5-bucket sketch over every row of ``tokens``.  Cell
-    key is the flat address ``i * width + bucket``; ``n_total`` (the
+    the packed md5-bucket sketch over the ``token`` column of every
+    row of ``tokens``.  Cell key is the flat address
+    ``i * CMS_WIDTH + bucket``; ``n_total`` (the
     stream length N in the error bound) falls out of row 0's cells.
     The hash is BOUND as its own projection so the md5+parse runs
     once per row, not once per probe row."""
-    bits = _check_params(depth, width)
-    hashed = tokens.select(md5_int60(F.col(token_col)).alias("h"))
+    hashed = tokens.select(md5_int60(F.col("token")).alias("h"))
     probes = F.explode(
         F.array(
             *[
                 F.struct(
                     F.lit(i).alias("i"),
-                    _bucket_from_h(F.col("h"), i, bits, width).alias("b"),
+                    _bucket_from_h(F.col("h"), i).alias("b"),
                 )
-                for i in range(depth)
+                for i in range(CMS_DEPTH)
             ]
         )
     )
@@ -94,7 +78,7 @@ def cms_sketch(
         .groupBy(F.col("p.i").alias("i"), F.col("p.b").alias("b"))
         .agg(F.count("*").alias("cnt"))
     )
-    key = F.col("i").cast("long") * width + F.col("b").cast("long")
+    key = F.col("i").cast("long") * CMS_WIDTH + F.col("b").cast("long")
     return cells.agg(
         F.map_from_arrays(
             F.collect_list(key), F.collect_list("cnt")
@@ -105,27 +89,21 @@ def cms_sketch(
     )
 
 
-def cms_estimate(
-    token: Column,
-    cms: Column,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> Column:
+def cms_estimate(token: Column, cms: Column) -> Column:
     """Point estimate: min over rows of the token's cell — the classic
     CM estimator; missing cells read 0 (a never-seen token estimates
     0, which is correct, not an underestimate)."""
-    bits = _check_params(depth, width)
     h = md5_int60(token)
     return F.least(
         *[
             F.coalesce(
                 F.element_at(
                     cms,
-                    F.lit(i * width).cast("long")
-                    + _bucket_from_h(h, i, bits, width).cast("long"),
+                    F.lit(i * CMS_WIDTH).cast("long")
+                    + _bucket_from_h(h, i).cast("long"),
                 ),
                 F.lit(0).cast("long"),
             )
-            for i in range(depth)
+            for i in range(CMS_DEPTH)
         ]
     )

@@ -56,7 +56,6 @@ def compact_parquet_dir(
     path: str,
     partition_by: str | None = None,
     files_per_partition: int = 1,
-    n_partitions: int | None = None,
 ) -> dict:
     """Rewrite ``path`` with a compact file layout; returns
     ``{"files_before": int, "files_after": int}``.
@@ -75,12 +74,7 @@ def compact_parquet_dir(
     tmp = path.rstrip("/") + "__compact_tmp"
     old = path.rstrip("/") + "__compact_old"
     if partition_by is not None:
-        n = n_partitions
-        if n is None:
-            n = (
-                df.select(partition_by).distinct().count()
-                * files_per_partition
-            )
+        n = df.select(partition_by).distinct().count() * files_per_partition
         keys: list = [F.col(partition_by)]
         if files_per_partition > 1:
             keys.append(

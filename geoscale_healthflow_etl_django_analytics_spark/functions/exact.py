@@ -60,21 +60,21 @@ def exact_sum(col: Column, decimals: int = 2) -> Column:
     return fround(F.sum(col.cast(DECIMAL_TYPE)).cast("double"), decimals)
 
 
-def exact_sum_sql(expr: str, decimals: int = 2) -> str:
-    """The DuckDB-side mirror of :func:`exact_sum`."""
-    return f"round(CAST(sum(CAST({expr} AS DECIMAL(30,8))) AS DOUBLE), {decimals})"
+def exact_sum_sql(expr: str) -> str:
+    """The DuckDB-side mirror of :func:`exact_sum` at 2 dp."""
+    return f"round(CAST(sum(CAST({expr} AS DECIMAL(30,8))) AS DOUBLE), 2)"
 
 
-def exact_wavg(value: Column, weight: Column, decimals: int = 6) -> Column:
+def exact_wavg(value: Column, weight: Column) -> Column:
     """Weighted mean Σ(v·w)/Σw with exact decimal numerator and
-    denominator (A13/A14 shape)."""
+    denominator (A13/A14 shape), rounded to 6 dp."""
     num = F.sum((value * weight).cast(DECIMAL_TYPE)).cast("double")
     den = F.sum(weight.cast(DECIMAL_TYPE)).cast("double")
-    return fround(num / den, decimals)
+    return fround(num / den, 6)
 
 
-def exact_wavg_sql(value: str, weight: str, decimals: int = 6) -> str:
+def exact_wavg_sql(value: str, weight: str) -> str:
     return (
         f"round(CAST(sum(CAST(({value}) * ({weight}) AS DECIMAL(30,8))) AS DOUBLE)"
-        f" / CAST(sum(CAST({weight} AS DECIMAL(30,8))) AS DOUBLE), {decimals})"
+        f" / CAST(sum(CAST({weight} AS DECIMAL(30,8))) AS DOUBLE), 6)"
     )

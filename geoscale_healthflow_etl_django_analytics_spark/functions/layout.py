@@ -75,12 +75,11 @@ def export_shuffle_hash(key: Column, seed: str = "epoch0") -> Column:
 
 def export_shuffle_assignment(
     df: DataFrame,
-    key_col: str = "doc_id",
     num_shards: int = 16,
     seed: str = "epoch0",
 ) -> DataFrame:
     """Deterministic global shuffle for training-data export: assign
-    every row a ``(shard, pos)`` under the md5 permutation of
+    every ``doc_id`` a ``(shard, pos)`` under the md5 permutation of
     :func:`export_shuffle_hash` — ``shard = h % num_shards`` and
     ``pos`` = the row's rank within its shard ordered by ``(h, key)``
     (the key tiebreak keeps the order total even under a hash
@@ -96,10 +95,10 @@ def export_shuffle_assignment(
     the cluster's write parallelism at 100 TB; at any size the plan
     is the same Exchange + Sort + Window.
     """
-    h = export_shuffle_hash(F.col(key_col), seed)
-    w = Window.partitionBy("shard").orderBy("h", key_col)
+    h = export_shuffle_hash(F.col("doc_id"), seed)
+    w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (
-        df.select(F.col(key_col), h.alias("h"))
+        df.select(F.col("doc_id"), h.alias("h"))
         .withColumn("shard", F.col("h") % num_shards)
         .withColumn("pos", F.row_number().over(w).cast("long"))
     )
@@ -108,22 +107,21 @@ def export_shuffle_assignment(
 def write_shuffled_shards(
     df: DataFrame,
     path: str,
-    key_col: str = "doc_id",
     num_shards: int = 16,
-    seed: str = "epoch0",
 ) -> None:
     """Materialize the export shuffle: one parquet directory per
     shard (``shard=N/``), rows inside each file sorted by the
-    permutation hash.  ``repartition(num_shards, shard)`` bounds the
+    permutation hash (seed ``epoch0``).  ``repartition(num_shards,
+    shard)`` bounds the
     task count; ``partitionBy`` splits any hash-co-located shards
     into their own directories; ``sortWithinPartitions(shard, h,
-    key)`` keeps every output file in permutation order."""
+    doc_id)`` keeps every output file in permutation order."""
     keyed = df.select(
-        "*", export_shuffle_hash(F.col(key_col), seed).alias("__h")
+        "*", export_shuffle_hash(F.col("doc_id"), "epoch0").alias("__h")
     ).withColumn("__shard", F.col("__h") % num_shards)
     (
         keyed.repartition(num_shards, "__shard")
-        .sortWithinPartitions("__shard", "__h", key_col)
+        .sortWithinPartitions("__shard", "__h", "doc_id")
         .write.mode("overwrite")
         .partitionBy("__shard")
         .parquet(path)

@@ -14,6 +14,8 @@ from .exact import fround
 
 # a tiny function-word list; enough for a deterministic heuristic.
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is", "it")
+# words per shingle of the near-dup tiers (operators/dedup.py)
+SHINGLE_K = 3
 
 
 def tokens(col: Column) -> Column:
@@ -57,15 +59,15 @@ def bpe_token_count(col: Column) -> Column:
     return F.size(bpe_tokens(col))
 
 
-def avg_token_length(col: Column, decimals: int = 2) -> Column:
-    """Mean token length, 0.0 for empty docs."""
+def avg_token_length(col: Column) -> Column:
+    """Mean token length (2 dp), 0.0 for empty docs."""
     toks = tokens(col)
     total_len = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
     )
     n = F.size(toks)
     return fround(
-        F.when(n > 0, total_len.cast("double") / n).otherwise(0.0), decimals
+        F.when(n > 0, total_len.cast("double") / n).otherwise(0.0), 2
     )
 
 
@@ -110,10 +112,10 @@ def langid_en_score(col: Column, decimals: int = 4) -> Column:
     return stopword_ratio(col, decimals)
 
 
-def predict_lang(col: Column, threshold: float = 0.05) -> Column:
-    """'en' when the English function-word ratio clears the threshold,
-    else 'unknown'. Placeholder heuristic with a stable contract."""
-    return F.when(langid_en_score(col, 6) >= threshold, F.lit("en")).otherwise(
+def predict_lang(col: Column) -> Column:
+    """'en' when the English function-word ratio reaches 0.05, else
+    'unknown'. Placeholder heuristic with a stable contract."""
+    return F.when(langid_en_score(col, 6) >= 0.05, F.lit("en")).otherwise(
         F.lit("unknown")
     )
 
@@ -125,11 +127,11 @@ def fingerprint(col: Column) -> Column:
     return F.md5(canon)
 
 
-def word_shingles_sql(expr: str, k: int = 3) -> str:
-    """Distinct k-word shingles of the SQL text ``expr`` as
+def word_shingles_sql(expr: str) -> str:
+    """Distinct ``SHINGLE_K``-word shingles of the SQL text ``expr`` as
     array<string> — the unit set for Jaccard/MinHash near-dup
-    detection; docs with fewer than k tokens get their whole text as
-    one shingle.
+    detection; docs with fewer than SHINGLE_K tokens get their whole
+    text as one shingle.
 
     The token array enters the shingle lambda as a BOUND variable
     (wrapped in a 1-element array + transform): referencing the
@@ -137,6 +139,7 @@ def word_shingles_sql(expr: str, k: int = 3) -> str:
     re-evaluates the split/filter once per shingle after projection
     collapse — measured ~10x slower on a 5k-doc corpus."""
     tok = tokens_sql(f"lower({expr})")
+    k = SHINGLE_K
     return (
         f"element_at(transform(array({tok}), t -> array_distinct("
         f"CASE WHEN size(t) >= {k} THEN "
@@ -165,26 +168,27 @@ def word_ngrams(col: Column, k: int) -> Column:
     return F.element_at(F.transform(F.array(tokens(F.lower(col))), build), 1)
 
 
-def rolling_hash(col: Column, mod: int = 2147483647, mult: int = 31) -> Column:
+def rolling_hash(col: Column) -> Column:
     """Order-SENSITIVE document fingerprint: polynomial (Rabin-Karp
     style) rolling hash over the token sequence —
-    h = Σ h(tok_i)·mult^(n-i) mod p. Distinguishes permuted documents
+    h = Σ h(tok_i)·31^(n-i) mod (2^31 - 1). Distinguishes permuted documents
     that the canonical md5 fingerprint (set/whitespace-normalized)
     would also distinguish, but composes incrementally, which is what
     makes it usable over chunked/streamed documents.
 
     Arithmetic stays below 2^36 between mod reductions (acc < 2^31,
-    mult = 31) so Spark's ANSI overflow checking never trips. Token
+    multiplier 31) so Spark's ANSI overflow checking never trips. Token
     hashes are md5-derived (functions/hashing.py) so the exact fold
     replays in ANSI SQL (DuckDB list_reduce) — value-hash checked.
     """
     from .hashing import md5_int32
 
+    mod = 2147483647
     toks = tokens(F.lower(col))
     return F.aggregate(
         toks,
         F.lit(0).cast("long"),
         lambda acc, t: F.pmod(
-            acc * mult + F.pmod(md5_int32(t), F.lit(mod)), F.lit(mod)
+            acc * 31 + F.pmod(md5_int32(t), F.lit(mod)), F.lit(mod)
         ),
     )

@@ -48,11 +48,11 @@ LR = 4.0
 N_WEIGHTS = 4  # bias + 3 features
 
 
-def _fround_py(x: float, decimals: int = 6) -> float:
-    """Driver-side mirror of functions/exact.fround (sign * floor(|x|
-    * 10^n + 0.5) / 10^n) — the weight update happens on the driver,
-    so it must round EXACTLY like the engines do."""
-    f = 10.0**decimals
+def _fround_py(x: float) -> float:
+    """Driver-side mirror of functions/exact.fround at 6 dp (sign *
+    floor(|x| * 10^6 + 0.5) / 10^6) — the weight update happens on the
+    driver, so it must round EXACTLY like the engines do."""
+    f = 10.0**6
     return math.copysign(math.floor(abs(x) * f + 0.5) / f, x)
 
 
@@ -95,9 +95,7 @@ def _hsig(raw: Column) -> Column:
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), raw))
 
 
-def train_hardsig_logreg(
-    feats: DataFrame, iters: int = ITERS, lr: float = LR
-) -> list[float]:
+def train_hardsig_logreg(feats: DataFrame, iters: int = ITERS) -> list[float]:
     """Full-batch GD; returns the learned weights [w0, w1, w2, w3].
     One aggregation job per iteration; the only driver state is the
     4-float weight vector (bounded by construction)."""
@@ -121,7 +119,7 @@ def train_hardsig_logreg(
             ]
         ).collect()[0]
         w = [
-            _fround_py(w[j] - lr * g[f"g{j}"], 6) for j in range(N_WEIGHTS)
+            _fround_py(w[j] - LR * g[f"g{j}"]) for j in range(N_WEIGHTS)
         ]
     return w
 
@@ -130,13 +128,12 @@ def classifier_summary(
     docs: DataFrame,
     positive: Column,
     iters: int = ITERS,
-    lr: float = LR,
 ) -> DataFrame:
     """Train, then evaluate in one final pass: ONE row with the
     learned weights, selection counts at the 0.5 threshold, training
     accuracy and per-class mean scores — everything value-exact."""
     feats = quality_features(docs, positive).localCheckpoint()
-    w = train_hardsig_logreg(feats, iters=iters, lr=lr)
+    w = train_hardsig_logreg(feats, iters=iters)
     yhat = _hsig(_raw(w))
     sel = yhat >= F.lit(0.5)
     pos = F.col("y") == F.lit(1.0)

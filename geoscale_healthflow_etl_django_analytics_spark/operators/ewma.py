@@ -15,14 +15,14 @@ EWMA_ALPHA = 0.5  # halves are exact binary doubles -> cross-engine exact
 EWMA_WINDOW = 8
 
 
-def ewma_weights(
-    alpha: float = EWMA_ALPHA, window: int = EWMA_WINDOW
-) -> list[float]:
+def ewma_weights() -> list[float]:
     """w_i = alpha * (1-alpha)^(i-1) for the i-th most recent PRIOR
-    bucket.  With alpha=0.5 every weight is a power of two — exact in
-    IEEE doubles, so both engines' weighted sums agree bit-for-bit
-    when written in the same order."""
-    return [alpha * (1.0 - alpha) ** (i - 1) for i in range(1, window + 1)]
+    bucket, alpha = ``EWMA_ALPHA``, i <= ``EWMA_WINDOW``.  With
+    alpha=0.5 every weight is a power of two — exact in IEEE doubles,
+    so both engines' weighted sums agree bit-for-bit when written in
+    the same order."""
+    alpha = EWMA_ALPHA
+    return [alpha * (1.0 - alpha) ** (i - 1) for i in range(1, EWMA_WINDOW + 1)]
 
 
 def ewma_baseline_anomaly(
@@ -30,13 +30,10 @@ def ewma_baseline_anomaly(
     time_col: str,
     value_col: str,
     key_col: str,
-    step_seconds: int = 3600,
-    alpha: float = EWMA_ALPHA,
-    window: int = EWMA_WINDOW,
 ) -> DataFrame:
     """Time-decayed rolling baseline + anomaly flag — the monitoring
     shape over an event stream: per (key, hour) volume, an EWMA of
-    the previous ``window`` observed buckets (weights renormalized
+    the previous ``EWMA_WINDOW`` observed buckets (weights renormalized
     over the buckets that exist, so the series start is well-defined
     without an extrapolation branch), and a flag when the current
     bucket is 2x above / below half the baseline.
@@ -55,7 +52,7 @@ def ewma_baseline_anomaly(
     not #events, so per-key windows stay small at any corpus size;
     the events scan is one pass.
     """
-    step_ms = step_seconds * 1000
+    step_ms = 3600 * 1000
     bucket = F.floor(
         F.unix_millis(F.col(time_col).cast("timestamp")) / F.lit(step_ms)
     )
@@ -73,10 +70,10 @@ def ewma_baseline_anomaly(
         )
     )
     w = Window.partitionBy("key").orderBy("b")
-    lags = [F.lag("x", i).over(w).alias(f"l{i}") for i in range(1, window + 1)]
+    lags = [F.lag("x", i).over(w).alias(f"l{i}") for i in range(1, EWMA_WINDOW + 1)]
     lagged = x.select("key", "b", "x", *lags)
 
-    weights = ewma_weights(alpha, window)
+    weights = ewma_weights()
     num = F.lit(0.0)
     den = F.lit(0.0)
     for i, wi in enumerate(weights, start=1):

@@ -124,7 +124,7 @@ def synth_polygons_many(nation: DataFrame, per_nation: int = 10) -> DataFrame:
     )
 
 
-def polygons_from_wkt(df: DataFrame, wkt_col: str = "geometry") -> DataFrame:
+def polygons_from_wkt(df: DataFrame) -> DataFrame:
     """Bridge from WKT ingest (S3 shapefile rows, sources/shapefile.py)
     into this module's ring/bbox polygon shape — exterior-ring vertices
     as array<struct<lon,lat>> plus the bounding box. Pure JVM-side
@@ -139,7 +139,7 @@ def polygons_from_wkt(df: DataFrame, wkt_col: str = "geometry") -> DataFrame:
     ``n_rings``, so downstream can filter or route multipart
     geometries instead of receiving null coordinate structs (the
     failure mode of stripping only the outer parens)."""
-    body = F.regexp_extract(F.col(wkt_col), r"\(([^()]+)\)", 1)
+    body = F.regexp_extract(F.col("geometry"), r"\(([^()]+)\)", 1)
     ring = F.transform(
         F.split(body, ", "),
         lambda p: F.struct(
@@ -148,7 +148,7 @@ def polygons_from_wkt(df: DataFrame, wkt_col: str = "geometry") -> DataFrame:
         ),
     )
     with_ring = df.withColumn("ring", ring).withColumn(
-        "n_rings", F.regexp_count(F.col(wkt_col), F.lit(r"\([^()]+\)"))
+        "n_rings", F.regexp_count(F.col("geometry"), F.lit(r"\([^()]+\)"))
     )
     lons = F.transform(F.col("ring"), lambda p: p["lon"])
     lats = F.transform(F.col("ring"), lambda p: p["lat"])
@@ -294,7 +294,7 @@ def _dp_keep(pts, tol2):
 
 
 def simplify_rings_dp(
-    polys: DataFrame, tolerance: float, ring_col: str = "ring"
+    polys: DataFrame, tolerance: float
 ) -> DataFrame:
     """C21 — Douglas-Peucker simplification per ring
     (SlopeGeoJsonUploadView.py:263-266, shapely ``simplify``; plain
@@ -303,7 +303,7 @@ def simplify_rings_dp(
     expression: runs as an Arrow-batched ``mapInPandas`` stage
     (whole columnar batches, constant memory per worker), the same
     sanctioned escape hatch as multimodal feature extraction.
-    Replaces ``ring_col`` in place and adds n_before/n_after."""
+    Replaces ``ring`` in place and adds n_before/n_after."""
     import numpy as np
     import pandas as pd
 
@@ -313,7 +313,7 @@ def simplify_rings_dp(
     def _simplify(batches):
         for pdf in batches:
             n_before, n_after, rings = [], [], []
-            for ring in pdf[ring_col]:
+            for ring in pdf["ring"]:
                 pts = np.array([(p["lon"], p["lat"]) for p in ring])
                 kept = pts[_dp_keep(pts, tol2)]
                 n_before.append(len(pts))
@@ -322,7 +322,7 @@ def simplify_rings_dp(
                     [{"lon": float(x), "lat": float(y)} for x, y in kept]
                 )
             out = pdf.copy()
-            out[ring_col] = pd.Series(rings, index=pdf.index)
+            out["ring"] = pd.Series(rings, index=pdf.index)
             out["n_before"] = n_before
             out["n_after"] = n_after
             yield out
@@ -677,9 +677,7 @@ def diagnose_crs_overlap(
     return None
 
 
-def binned_zonal_stats(
-    polys: DataFrame, pixels: DataFrame, cell: float = 16.0
-) -> DataFrame:
+def binned_zonal_stats(polys: DataFrame, pixels: DataFrame) -> DataFrame:
     """J6 at raster scale — the grid-binned RANGE JOIN: both sides are
     keyed by grid cell so the pixel-in-bbox theta join becomes an
     EQUI-join on (cx, cy) plus a residual predicate.
@@ -696,7 +694,7 @@ def binned_zonal_stats(
     (asserted by the shared oracle); plan shape asserted in
     tests/test_plans.py.
     """
-    joined = binned_zonal_join(polys, pixels, cell=cell)
+    joined = binned_zonal_join(polys, pixels)
     return joined.groupBy("poly_id", "name").agg(
         fround(F.avg("pixel_value"), 4).alias("mean_value"),
         F.max("pixel_value").alias("max_value"),
@@ -751,18 +749,15 @@ CLARKE_1880_RGS = (6378249.145, 1.0 / 293.465)
 WGS84_ELLIPSOID = (6378137.0, 1.0 / 298.257223563)
 
 
-def molodensky_params(
-    shift: tuple[float, float, float],
-    src: tuple[float, float] = CLARKE_1880_RGS,
-    dst: tuple[float, float] = WGS84_ELLIPSOID,
-) -> dict[str, float]:
-    """Precompute every datum-dependent constant in PYTHON so both the
+def molodensky_params(shift: tuple[float, float, float]) -> dict[str, float]:
+    """Precompute every datum-dependent constant of the Clarke 1880
+    (RGS) -> WGS84 shift ``shift`` in PYTHON so both the
     Spark expression and the SQL oracle receive identical double
     literals (the cross-engine-exactness discipline: only per-row trig
     remains engine-evaluated)."""
     dx, dy, dz = shift
-    a, f = src
-    a2, f2 = dst
+    a, f = CLARKE_1880_RGS
+    a2, f2 = WGS84_ELLIPSOID
     e2 = f * (2.0 - f)
     return {
         "dx": dx,

@@ -117,7 +117,7 @@ def _shoelace(loop):
     return s / 2.0
 
 
-def untangle_rings(polys: DataFrame, ring_col: str = "ring") -> DataFrame:
+def untangle_rings(polys: DataFrame) -> DataFrame:
     """One row per SIMPLE lobe of each (possibly self-intersecting)
     input ring: all input columns, plus ``lobe`` (pop-order index),
     ``n_lobes``, ``area`` (absolute shoelace, 6 dp), and ``ring``
@@ -131,11 +131,11 @@ def untangle_rings(polys: DataFrame, ring_col: str = "ring") -> DataFrame:
         for pdf in batches:
             rows = []
             for _, row in pdf.iterrows():
-                ring = [(p["lon"], p["lat"]) for p in row[ring_col]]
+                ring = [(p["lon"], p["lat"]) for p in row["ring"]]
                 lobes = _untangle(ring)
                 for li, loop in enumerate(lobes):
                     r = row.to_dict()
-                    r[ring_col] = [
+                    r["ring"] = [
                         {"lon": x, "lat": y} for x, y in loop
                     ]
                     r["lobe"] = li

@@ -102,12 +102,12 @@ def _ring_is_simple(pts):
 
 
 def simplify_rings_topo(
-    polys: DataFrame, tolerance: float, ring_col: str = "ring"
+    polys: DataFrame, tolerance: float
 ) -> DataFrame:
     """Topology-preserving simplify: plain DP under ``tolerance``,
     then deterministic repair (re-add excluded original vertices by
     DP-tree error descending, index ascending) until the ring has
-    >= 3 distinct vertices AND is simple. Replaces ``ring_col``;
+    >= 3 distinct vertices AND is simple. Replaces ``ring``;
     adds n_before / n_after / repaired (vertices the guard re-added
     over plain DP — 0 means plain DP was already topology-safe and
     the output is byte-identical to simplify_rings_dp)."""
@@ -143,7 +143,7 @@ def simplify_rings_topo(
     def _simplify(batches):
         for pdf in batches:
             rings, n_before, n_after, repaired = [], [], [], []
-            for ring in pdf[ring_col]:
+            for ring in pdf["ring"]:
                 kept, nb, na, rep = _one(ring)
                 rings.append(
                     [{"lon": float(x), "lat": float(y)} for x, y in kept]
@@ -152,7 +152,7 @@ def simplify_rings_topo(
                 n_after.append(na)
                 repaired.append(rep)
             out = pdf.copy()
-            out[ring_col] = pd.Series(rings, index=pdf.index)
+            out["ring"] = pd.Series(rings, index=pdf.index)
             out["n_before"] = n_before
             out["n_after"] = n_after
             out["repaired"] = repaired

@@ -223,15 +223,15 @@ def total_summary(lab: DataFrame) -> DataFrame:
     )
 
 
-def top_villages_by_positivity(lab: DataFrame, k: int = 20) -> DataFrame:
-    """O3 — top-k villages by positivity rate desc
+def top_villages_by_positivity(lab: DataFrame) -> DataFrame:
+    """O3 — top-20 villages by positivity rate desc
     (analytics_dashboard/views.py:378-381). Deterministic tiebreak on
     (rate desc, village asc); Catalyst turns orderBy+limit into a
     TakeOrderedAndProject (no full sort at scale)."""
     v = village_positivity(lab)
     return (
         v.orderBy(F.desc("positivity_rate"), F.asc("village"), F.asc("year"))
-        .limit(k)
+        .limit(20)
     )
 
 

@@ -44,17 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _verify_candidates, minhash_perm_band_hashes
+from .dedup import PAIR_JACCARD, _verify_candidates, minhash_perm_band_hashes
 
 
 def incremental_minhash_pairs(
     docs: DataFrame,
-    new_col: str = "is_new",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    threshold: float = 0.8,
     new_pred=None,
     tagged: DataFrame | None = None,
 ) -> DataFrame:
@@ -62,13 +56,13 @@ def incremental_minhash_pairs(
 
     Batch membership comes from ONE of two join-free forms: pass
     ``new_pred`` (a callable mapping the ``doc_id`` Column to a
-    boolean Column) for the one-band-pass form — ``new_col`` is then
-    ignored — or mark ``docs`` with a boolean ``new_col`` for the
+    boolean Column) for the one-band-pass form — ``is_new`` is then
+    ignored — or mark ``docs`` with a boolean ``is_new`` column for the
     two-pass persisted-index form (see the branch comment below for
     the measured trade).  Every non-batch row is the
     already-deduplicated index.  Output:
     ``(doc_a, doc_b, jaccard, link_type)`` with doc_a < doc_b,
-    exact shingle Jaccard >= threshold, and link_type
+    exact shingle Jaccard >= ``PAIR_JACCARD``, and link_type
     ``'batch_batch'`` (both new — duplicates inside the batch) or
     ``'batch_index'`` (a new doc duplicating an indexed one — the
     batch doc is the one to drop).
@@ -79,7 +73,7 @@ def incremental_minhash_pairs(
     table is a stored artifact read back from disk and only the
     arriving batch is band-hashed fresh (see
     ``operators/splitting.py::incremental_pairs_vs_index``).
-    ``new_col``/``new_pred`` are ignored; the caller owns the flag.
+    ``is_new``/``new_pred`` are ignored; the caller owns the flag.
     A caller-supplied ``tagged`` is used as-is: restricting it to the
     buckets a batch key touches is the caller's job.  An unscreened
     table gives the same pairs (the candidate filter needs a batch doc
@@ -110,7 +104,7 @@ def incremental_minhash_pairs(
     if tagged is None:
         if new_pred is not None:
             tagged = (
-                minhash_perm_band_hashes(docs, text_col, num_perm, bands, k)
+                minhash_perm_band_hashes(docs)
                 .withColumn("__new", new_pred(F.col("doc_id")))
                 .localCheckpoint()
             )
@@ -123,16 +117,14 @@ def incremental_minhash_pairs(
             # conservative reading (an indexed doc can still be matched
             # against, whereas a vanished doc escapes dedup).  Documented
             # here as THE contract for the two-pass form.
-            is_new = F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
+            is_new = F.coalesce(F.col("is_new").cast("boolean"), F.lit(False))
             tagged = (
-                minhash_perm_band_hashes(
-                    docs.filter(is_new), text_col, num_perm, bands, k
-                )
+                minhash_perm_band_hashes(docs.filter(is_new))
                 .withColumn("__new", F.lit(True))
                 .unionByName(
-                    minhash_perm_band_hashes(
-                        docs.filter(~is_new), text_col, num_perm, bands, k
-                    ).withColumn("__new", F.lit(False))
+                    minhash_perm_band_hashes(docs.filter(~is_new)).withColumn(
+                        "__new", F.lit(False)
+                    )
                 )
                 .localCheckpoint()
             )
@@ -175,4 +167,4 @@ def incremental_minhash_pairs(
         .distinct()
         .localCheckpoint()
     )
-    return _verify_candidates(docs, candidates, text_col, k, threshold)
+    return _verify_candidates(docs, candidates, PAIR_JACCARD)

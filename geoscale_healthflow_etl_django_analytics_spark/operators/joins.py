@@ -40,22 +40,14 @@ def revenue_by_nation_year(
     orders: DataFrame,
     customer: DataFrame,
     nation: DataFrame,
-    region: DataFrame,
-    region_name: str | None = None,
 ) -> DataFrame:
     """J9 — the dashboard's implicit location equi-join chain
     (analytics_dashboard/views.py:30-92): fact ⋈ fact ⋈ dims on
     shared keys, aggregated per (nation, year). Dim joins broadcast."""
-    n = nation
-    if region_name is not None:
-        n = nation.join(
-            F.broadcast(region.filter(F.col("r_name") == region_name)),
-            nation.n_regionkey == region.r_regionkey,
-        )
     joined = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(n), customer.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
     )
     return joined.groupBy(
         F.col("n_name").alias("nation"), F.year("o_orderdate").alias("year")
@@ -67,7 +59,7 @@ def revenue_by_nation_year(
     )
 
 
-def fuzzy_name_fallback(customer: DataFrame, pattern: str, limit: int = 10) -> DataFrame:
+def fuzzy_name_fallback(customer: DataFrame, pattern: str) -> DataFrame:
     """F5 — contains-match fallback with a suggestion cap
     (village_admin_boundaries_etl_view.py:152-171). Deterministic
     order by key so LIMIT is oracle-stable; Catalyst executes
@@ -76,7 +68,7 @@ def fuzzy_name_fallback(customer: DataFrame, pattern: str, limit: int = 10) -> D
         customer.filter(F.col("c_name").contains(pattern))
         .select("c_custkey", "c_name", "c_mktsegment")
         .orderBy("c_custkey")
-        .limit(limit)
+        .limit(10)
     )
 
 

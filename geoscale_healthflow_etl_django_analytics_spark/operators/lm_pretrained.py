@@ -52,9 +52,10 @@ from ..functions.hashing import md5_int32
 ALPHABET = "abcdefghijklmnopqrstuvwxyz_"
 CNT_MOD = 9000
 CNT_BASE = 1000
+GRAM_N = 4  # character n-gram order of the pretrained table
 
 
-def chargram_table(spark: SparkSession, n: int = 4) -> DataFrame:
+def chargram_table(spark: SparkSession, n: int = GRAM_N) -> DataFrame:
     """(gram, cnt): the full 27^n pretrained count table, generated
     deterministically — ``spark.range`` digit decomposition in base
     27 over ALPHABET, pseudo-count md5_int32(gram) % 9000 + 1000."""
@@ -71,7 +72,7 @@ def chargram_table(spark: SparkSession, n: int = 4) -> DataFrame:
     )
 
 
-def chargram_model(spark: SparkSession, n: int = 4) -> DataFrame:
+def chargram_model(spark: SparkSession, n: int = GRAM_N) -> DataFrame:
     """(gram, cnt, ctx, lp_u): the apply-ready model — per-gram count,
     its (n-1)-prefix context total, and the PRE-COMPUTED negative
     log-prob in integer micro-nats:
@@ -115,17 +116,12 @@ def chargram_model(spark: SparkSession, n: int = 4) -> DataFrame:
     )
 
 
-def chargram_lm_scores(
-    docs: DataFrame,
-    n: int = 4,
-    decimals: int = 6,
-    text_col: str = "text",
-) -> DataFrame:
+def chargram_lm_scores(docs: DataFrame) -> DataFrame:
     """Per-document pretrained-LM score: (doc_id, n_chargrams,
     mean_nll, perplexity).
 
     Token -> ``[^a-z] -> _`` normalization -> ``('_' * (n-1)) + w +
-    '_'`` padding -> every length-n window (a w-char token yields
+    '_'`` padding -> every length-n window (n = ``GRAM_N``) (a w-char token yields
     w+1 grams, so every non-empty token scores).  NLL terms come from
     the model's pre-computed integer micro-nats (``lp_u``), so the
     per-doc sum is an exact LONG sum — aggregation-order-free by
@@ -134,10 +130,11 @@ def chargram_lm_scores(
     perplexity exponentiates the ALREADY-rounded mean.  Zero-token
     docs have no grams and drop (inner join), the bigram-LM
     convention."""
+    n = GRAM_N
     spark = docs.sparkSession
-    model = chargram_model(spark, n)
+    model = chargram_model(spark)
     toks = docs.select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col(text_col)))).alias("token")
+        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("token")
     )
     clean = F.regexp_replace(F.col("token"), "[^a-z]", "_")
     padded = F.concat(F.lit("_" * (n - 1)), clean, F.lit("_"))
@@ -174,7 +171,7 @@ def chargram_lm_scores(
                 F.sum("lp_u").cast("double")
                 / F.lit(1_000_000.0)
                 / F.count("*"),
-                decimals,
+                6,
             ).alias("mean_nll"),
         )
     )

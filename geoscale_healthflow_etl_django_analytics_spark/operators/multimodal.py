@@ -114,13 +114,14 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning happens on METADATA only — the payload column
+def resize_plan(media: DataFrame) -> DataFrame:
+    """Resize planning to at most 256 px a side happens on METADATA
+    only — the payload column
     is never read (verify via .explain: the parquet scan prunes it).
     The actual pixel resize would be one more mapInPandas over the
     rows where needs_resize."""
     w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(max_side) / w, F.lit(max_side) / h, F.lit(1.0))
+    scale = F.least(F.lit(256) / w, F.lit(256) / h, F.lit(1.0))
     return media.select(
         "media_id",
         "kind",
@@ -132,15 +133,15 @@ def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling plan for video rows: explode the frame index
-    space from metadata (again payload-free)."""
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Frame sampling plan for video rows: explode every 10th frame
+    index from metadata (again payload-free)."""
     return (
         media.filter(F.col("kind") == "video")
         .select(
             "media_id",
             F.explode(
-                F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n))
+                F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(10))
             ).alias("frame_idx"),
         )
     )
@@ -245,16 +246,14 @@ def _decode_stats(
     return media.mapInPandas(_stats, schema)
 
 
-def _resize_stats_row(
-    mid: int, w: int, h: int, px: list, max_side: int
-) -> tuple:
+def _resize_stats_row(mid: int, w: int, h: int, px: list) -> tuple:
     """numpy nearest-neighbor resize of decoded RGB pixels (out dim =
-    min(side, max_side), source index = i*src//dst — pure integer
+    min(side, 8), source index = i*src//dst — pure integer
     arithmetic) → a :data:`BMP_STATS_SCHEMA` row: channel means over
     the RESIZED pixels plus the position-weighted fingerprint
     Σ (r + 2g + 3b)·(1 + i + 2j)."""
     arr = np.array(px, dtype=np.int64).reshape(h, w, 3)
-    ow, oh = min(w, max_side), min(h, max_side)
+    ow, oh = min(w, 8), min(h, 8)
     xs = [i * w // ow for i in range(ow)]
     ys = [j * h // oh for j in range(oh)]
     out = arr[np.ix_(ys, xs)]  # (oh, ow, 3)
@@ -299,7 +298,7 @@ def media_bmp_corpus(ids: DataFrame) -> DataFrame:
     return _media_corpus(ids, _payload)
 
 
-def bmp_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
+def bmp_decode_resize_stats(media: DataFrame) -> DataFrame:
     """The real multimodal hot path: Arrow-batched BMP decode →
     :func:`_resize_stats_row`. The fingerprint is position-sensitive
     on purpose: a row-flip, BGR swap or padding slip in the decoder
@@ -310,9 +309,7 @@ def bmp_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
 
     return _decode_stats(
         media,
-        lambda mid, payload: _resize_stats_row(
-            mid, *parse_bmp_bytes(payload), max_side
-        ),
+        lambda mid, payload: _resize_stats_row(mid, *parse_bmp_bytes(payload)),
         BMP_STATS_SCHEMA,
     )
 
@@ -347,7 +344,7 @@ def media_png_corpus(ids: DataFrame) -> DataFrame:
     return _media_corpus(ids, _payload)
 
 
-def png_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
+def png_decode_resize_stats(media: DataFrame) -> DataFrame:
     """PNG twin of :func:`bmp_decode_resize_stats`: Arrow-batched
     inflate + unfilter (all five predictors) + CRC verify →
     :func:`_resize_stats_row`, independently recomputed by the oracle
@@ -356,9 +353,7 @@ def png_decode_resize_stats(media: DataFrame, max_side: int = 8) -> DataFrame:
 
     return _decode_stats(
         media,
-        lambda mid, payload: _resize_stats_row(
-            mid, *parse_png_bytes(payload), max_side
-        ),
+        lambda mid, payload: _resize_stats_row(mid, *parse_png_bytes(payload)),
         BMP_STATS_SCHEMA,
     )
 
@@ -382,15 +377,13 @@ def _wav_sample(t: int, mid: int) -> int:
     return (t * t * mid + 7 * t) % 2003 - 1001
 
 
-def media_wav_corpus(ids: DataFrame, sample_rate: int = 16000) -> DataFrame:
-    """One real mono 16-bit PCM WAV payload per ``media_id`` row;
+def media_wav_corpus(ids: DataFrame) -> DataFrame:
+    """One real mono 16-bit PCM 16 kHz WAV payload per ``media_id`` row;
     n_samples = id%50+20, samples from :func:`_wav_sample`."""
     from ..sources.wav import write_wav_bytes
 
     def _payload(mid: int) -> bytes:
-        return write_wav_bytes(
-            [_wav_sample(t, mid) for t in range(mid % 50 + 20)], sample_rate
-        )
+        return write_wav_bytes([_wav_sample(t, mid) for t in range(mid % 50 + 20)])
 
     return _media_corpus(ids, _payload)
 

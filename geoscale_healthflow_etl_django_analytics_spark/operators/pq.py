@@ -4,18 +4,19 @@ over compact codes (Jégou, Douze & Schmid, TPAMI 2011).
 Third member of the ANN family next to the sign-bucket LSH and the
 IVF probe (``operators/similarity.py``): where IVF prunes WHICH
 vectors a query scores, PQ shrinks WHAT is stored and scored per
-vector.  Each (unit-normalized) vector is split into ``m`` subspaces;
-each subvector is replaced by the id of its nearest entry in a
-per-subspace codebook of ``ks`` centroids — here 4 codes of 16
-entries, i.e. 4 bytes per vector instead of 256 (64 floats): a 64×
+vector.  Each (unit-normalized) vector is split into ``PQ_M``
+subspaces; each subvector is replaced by the id of its nearest entry
+in a per-subspace codebook of ``PQ_KS`` centroids — here 4 codes of
+16 entries, i.e. 4 bytes per vector instead of 256 (64 floats): a 64×
 smaller index that keeps a billion-vector corpus memory-resident.  A
-query builds one ``m × ks`` lookup table of subspace inner products
-(ADC), after which scoring a vector is ``m`` table lookups and adds —
+query builds one ``PQ_M × PQ_KS`` lookup table of subspace inner
+products (ADC), after which scoring a vector is ``PQ_M`` table
+lookups and adds —
 no per-vector float dot product at all.
 
 Determinism / oracle contract (mirrors ``ivf_assignments``):
-codebook entries are the subvectors of the first ``ks`` vectors by
-id; encoding argmin ranks the 6-dp-ROUNDED squared L2 with
+codebook entries are the subvectors of the first ``PQ_KS`` vectors
+by id; encoding argmin ranks the 6-dp-ROUNDED squared L2 with
 centroid-id tiebreak; and the ADC sum runs in integer micro-units
 (each LUT cell is ``round(ip * 1e6)`` as a long) so the per-vector
 sum is exact integer arithmetic — associative, hence independent of
@@ -27,7 +28,7 @@ constant-size broadcasts; encoding is one corpus pass against the
 broadcast codebook with a map-side-combinable ``min_by`` per
 (vector, subspace) — a one-time index-build cost, persisted in
 production like ``write_bucketed_index``'s layout; query-time ADC
-touches only the 4-byte codes.  A top-``rerank`` shortlist by ADC
+touches only the 4-byte codes.  A top-``PQ_RERANK`` shortlist by ADC
 score (TakeOrderedAndProject — no full sort) is exact-reranked with
 true cosine, the standard PQ recall repair.
 """
@@ -40,6 +41,11 @@ from pyspark.sql import functions as F
 from ..functions.exact import DECIMAL_TYPE, fround, fround_sql
 from ..functions.vectors import dot_sql
 from .similarity import (
+    DIM,
+    LLOYD_ITERS,
+    N_CENTROIDS,
+    NPROBE,
+    QUERY_VEC_ID,
     _lloyd_rounds,
     _probe,
     _query_nv,
@@ -52,6 +58,8 @@ from .similarity import (
 
 PQ_M = 4  # subspaces
 PQ_KS = 16  # codebook entries per subspace
+PQ_K = 10  # results of a PQ query
+PQ_RERANK = 50  # ADC shortlist that is exact-reranked
 _MICRO = 1_000_000  # LUT micro-units: exact integer ADC sums
 # LUT cell key = s * _CELL_STRIDE + cid.  A fixed stride, NOT ks: the
 # codebooks parameter lets a trained table with more than ks entries
@@ -61,22 +69,22 @@ _MICRO = 1_000_000  # LUT micro-units: exact integer ADC sums
 _CELL_STRIDE = 1 << 20
 
 
-def _subspaces(nv: Column, dim: int, m: int) -> Column:
-    """array of m structs (s, sv) — the subvector decomposition."""
-    sub = dim // m
+def _subspaces(nv: Column) -> Column:
+    """array of PQ_M structs (s, sv) — the subvector decomposition."""
+    sub = DIM // PQ_M
     return F.array(
         *[
             F.struct(
                 F.lit(s).alias("s"),
                 F.slice(nv, s * sub + 1, sub).alias("sv"),
             )
-            for s in range(m)
+            for s in range(PQ_M)
         ]
     )
 
 
 def pq_subvectors(
-    embeddings: DataFrame, dim: int = 64, m: int = PQ_M
+    embeddings: DataFrame, dim: int = DIM, m: int = PQ_M
 ) -> DataFrame:
     """(vec_id, label, s, sv): unit-normalized vectors sliced into m
     subvectors — the shared front half of codebook, encode and LUT.
@@ -96,7 +104,7 @@ def pq_subvectors(
 
 
 def pq_codebooks(
-    embeddings: DataFrame, dim: int = 64, m: int = PQ_M, ks: int = PQ_KS
+    embeddings: DataFrame, dim: int = DIM, m: int = PQ_M, ks: int = PQ_KS
 ) -> DataFrame:
     """(s, cid, cv): per-subspace codebooks — the subvectors of the
     first ``ks`` vectors by id (deterministic seeds, the
@@ -108,11 +116,7 @@ def pq_codebooks(
 
 
 def pq_codes(
-    embeddings: DataFrame,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    codebooks: DataFrame | None = None,
+    embeddings: DataFrame, codebooks: DataFrame | None = None
 ) -> DataFrame:
     """(vec_id, s, code): the compact index — nearest codebook entry
     per (vector, subspace) by 6-dp-rounded squared L2, cid tiebreak.
@@ -122,10 +126,8 @@ def pq_codes(
     One pass against the broadcast codebook; the argmin is a
     map-side-combinable ``min_by`` (no window, no n·ks-row shuffle —
     the exchange carries one row per (vector, subspace))."""
-    sub = pq_subvectors(embeddings, dim, m)
-    cb = codebooks if codebooks is not None else pq_codebooks(
-        embeddings, dim, m, ks
-    )
+    sub = pq_subvectors(embeddings)
+    cb = codebooks if codebooks is not None else pq_codebooks(embeddings)
     # delegate to the shared assign so the encode contract (6-dp
     # rounded L2, (d, cid) tiebreak) lives in exactly one place next
     # to the Lloyd training that must match it
@@ -161,49 +163,36 @@ def _query_lut(cb: DataFrame, qsub: DataFrame) -> DataFrame:
 
 
 def pq_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    k: int = 10,
-    rerank: int = 50,
-    codebooks: DataFrame | None = None,
+    embeddings: DataFrame, codebooks: DataFrame | None = None
 ) -> DataFrame:
-    """ADC top-k: score every code against the query's LUT (integer
-    micro-unit adds), shortlist top ``rerank`` by approx score, exact
-    cosine rerank, emit top ``k`` (query excluded).  ``codebooks``
-    overrides the seed codebooks (e.g. Lloyd-trained)."""
+    """ADC top-k for vector ``QUERY_VEC_ID``: score every code against
+    the query's LUT (integer micro-unit adds), shortlist top
+    ``PQ_RERANK`` by approx score, exact cosine rerank, emit top
+    ``PQ_K`` (query excluded).  ``codebooks`` overrides the seed
+    codebooks (e.g. Lloyd-trained)."""
     b = _unit_vectors(embeddings, "label")
-    lut, codes = _query_codes(embeddings, query_vec_id, dim, m, ks, codebooks)
+    lut, codes = _query_codes(embeddings, codebooks)
     return _adc_topk(
-        codes.filter(F.col("vec_id") != query_vec_id),
+        codes.filter(F.col("vec_id") != QUERY_VEC_ID),
         lut,
         b,
-        _query_nv(b, query_vec_id),
-        k,
-        rerank,
+        _query_nv(b, QUERY_VEC_ID),
+        PQ_K,
+        PQ_RERANK,
     )
 
 
 def _query_codes(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    dim: int,
-    m: int,
-    ks: int,
-    codebooks: DataFrame | None,
+    embeddings: DataFrame, codebooks: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
     """(lut, codes): the stored query vector's ADC lookup table and the
     corpus codes, both over ``codebooks`` (default: the seed
     codebooks)."""
-    cb = codebooks if codebooks is not None else pq_codebooks(
-        embeddings, dim, m, ks
-    )
+    cb = codebooks if codebooks is not None else pq_codebooks(embeddings)
     qsub = pq_subvectors(
-        embeddings.filter(F.col("vec_id") == query_vec_id), dim, m
+        embeddings.filter(F.col("vec_id") == QUERY_VEC_ID)
     ).select("s", F.col("sv").alias("qs"))
-    return _query_lut(cb, qsub), pq_codes(embeddings, dim, m, ks, codebooks=cb)
+    return _query_lut(cb, qsub), pq_codes(embeddings, codebooks=cb)
 
 
 def _adc_topk(
@@ -251,14 +240,7 @@ def _adc_topk(
 
 def ivfpq_topk(
     embeddings: DataFrame,
-    query_vec_id: int = 0,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    k: int = 10,
-    rerank: int = 50,
+    nprobe: int = NPROBE,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ: coarse routing composed with compact-code scoring —
@@ -268,8 +250,8 @@ def ivfpq_topk(
     directory at scale, cf. ``write_bucketed_index``), PQ shrinks
     WHAT those lists store (4-byte codes) and how survivors are
     scored (LUT lookups, no float dot products).  The two
-    approximations multiply: a probe touches ``nprobe/n_centroids``
-    of the corpus and scores it at PQ cost; only the top-``rerank``
+    approximations multiply: a probe touches ``nprobe/N_CENTROIDS``
+    of the corpus and scores it at PQ cost; only the top-``PQ_RERANK``
     shortlist ever reads a full vector again.
 
     Composes the verified pieces unchanged: coarse assignment is
@@ -277,9 +259,9 @@ def ivfpq_topk(
     rounded-argmax), codes/LUT/ADC are this module's (integer
     micro-unit sums), so the full chain replays in DuckDB like both
     parents."""
-    assign = ivf_assignments(embeddings, n_centroids)
-    q = _query_nv(assign, query_vec_id)
-    probed = _probe(_seed_centroids(assign, n_centroids), q, nprobe)
+    assign = ivf_assignments(embeddings)
+    q = _query_nv(assign, QUERY_VEC_ID)
+    probed = _probe(_seed_centroids(assign, N_CENTROIDS), q, nprobe)
     # the probed lists' members — at scale this is partition pruning,
     # here a broadcast semi-join against the nprobe-row list ids
     members = assign.join(F.broadcast(probed), "cid").select(
@@ -288,19 +270,15 @@ def ivfpq_topk(
     # ADC over member codes only (global, non-residual codebooks);
     # ``codebooks`` overrides the seed codebooks — the trained
     # quantizer from pq_train_codebooks plugs straight in (ADVICE r8)
-    lut, codes = _query_codes(embeddings, query_vec_id, dim, m, ks, codebooks)
+    lut, codes = _query_codes(embeddings, codebooks)
     codes = codes.join(members.select("vec_id"), "vec_id", "left_semi").filter(
-        F.col("vec_id") != query_vec_id
+        F.col("vec_id") != QUERY_VEC_ID
     )
-    return _adc_topk(codes, lut, members, q, k, rerank)
+    return _adc_topk(codes, lut, members, q, PQ_K, PQ_RERANK)
 
 
 def pq_lloyd_codebooks(
-    embeddings: DataFrame,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    iters: int = 2,
+    embeddings: DataFrame, iters: int = LLOYD_ITERS
 ) -> DataFrame:
     """Per-subspace k-means-refined PQ codebooks — the TRAINED
     quantizer (Jégou et al. §III trains each subspace codebook with
@@ -318,8 +296,8 @@ def pq_lloyd_codebooks(
     Output: one row per surviving (s, cid) — membership count and
     exact-mean quantization distance after refinement, the training
     summary a codebook registry would record."""
-    sub = pq_subvectors(embeddings, dim, m)
-    cur = pq_train_codebooks(embeddings, dim, m, ks, iters)
+    sub = pq_subvectors(embeddings)
+    cur = pq_train_codebooks(embeddings, iters=iters)
     final = _assign_subvectors(sub, cur, with_sv=False)
     return final.groupBy("s", F.col("code").alias("cid")).agg(
         F.count("*").alias("n_assigned"),
@@ -370,10 +348,10 @@ def _assign_subvectors(
 
 def pq_train_codebooks(
     embeddings: DataFrame,
-    dim: int = 64,
+    dim: int = DIM,
     m: int = PQ_M,
     ks: int = PQ_KS,
-    iters: int = 2,
+    iters: int = LLOYD_ITERS,
 ) -> DataFrame:
     """(s, cid, cv): the Lloyd-trained codebooks — ``iters`` rounds of
     assign + exact-decimal 8-dp component means from the seed

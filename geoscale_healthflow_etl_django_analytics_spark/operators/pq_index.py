@@ -12,12 +12,12 @@ lifecycle:
 - **build** (once, amortized over every query the index ever
   serves): train codebooks, encode the corpus, assign coarse lists,
   and persist four artifacts under one root —
-  ``centroids/`` (n_centroids rows), ``codebooks/`` (m*ks rows),
+  ``centroids/`` (N_CENTROIDS rows), ``codebooks/`` (PQ_M*PQ_KS rows),
   ``codes/`` and ``vectors/`` BOTH partitioned by the coarse list id,
   so each inverted list is a partition directory
   (``similarity.write_bucketed_index``'s layout, proven
   partition-pruned in its tests);
-- **query** (cheap, repeated): pick ``nprobe`` lists from the tiny
+- **query** (cheap, repeated): pick ``NPROBE`` lists from the tiny
   centroid table, read ONLY those partition directories (literal
   ``isin`` filters -> static partition pruning, file-listing
   visible), broadcast the m*ks LUT, ADC-score the 4-byte codes,
@@ -31,7 +31,7 @@ replays under the identical DuckDB oracle (``_ivfpq_trained_sql``) —
 the index is a materialization, not an approximation.
 
 Driver-side work is bounded by construction: probe selection
-collects ``nprobe`` ints from an ``n_centroids``-row table (the
+collects ``NPROBE`` ints from an ``N_CENTROIDS``-row table (the
 ``query_bucketed_index`` precedent); everything corpus-sized stays
 distributed.
 
@@ -49,8 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import normalized
-from .pq import PQ_KS, PQ_M, _adc_topk, _query_lut, _subspaces
+from .pq import PQ_K, PQ_RERANK, _adc_topk, _query_lut, _subspaces
 from .similarity import (
+    LLOYD_ITERS,
+    N_CENTROIDS,
+    NPROBE,
     _nearest_centroid,
     _probe,
     _seed_centroids,
@@ -62,11 +65,7 @@ from .similarity import (
 def write_ivfpq_index(
     embeddings: DataFrame,
     path: str,
-    n_centroids: int = 8,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    iters: int = 2,
+    iters: int = LLOYD_ITERS,
     n_vectors: int | None = None,
 ) -> None:
     """Train + encode + persist the index under ``path``.
@@ -74,22 +73,22 @@ def write_ivfpq_index(
     One Lloyd training pass (``pq.pq_train_codebooks``), one coarse
     assignment pass, one encode pass; the corpus-sized artifacts
     (codes, vectors) write partitioned by ``list_id`` so a probe
-    later reads ``nprobe`` directories, not the corpus.  ``_meta.json``
-    records the build parameters and corpus row count for the cheap
+    later reads ``NPROBE`` directories, not the corpus.  ``_meta.json``
+    records the Lloyd rounds and corpus row count for the cheap
     staleness check in :func:`ensure_ivfpq_index`.
     """
     from .pq import pq_codes, pq_train_codebooks
 
-    trained = pq_train_codebooks(embeddings, dim, m, ks, iters)
-    assign = ivf_assignments(embeddings, n_centroids)
+    trained = pq_train_codebooks(embeddings, iters=iters)
+    assign = ivf_assignments(embeddings)
     # inverted-list membership for both corpus-sized artifacts
     lists = assign.select(
         "vec_id", "label", "nv", F.col("cid").alias("list_id")
     )
-    codes = pq_codes(embeddings, dim, m, ks, codebooks=trained).join(
+    codes = pq_codes(embeddings, codebooks=trained).join(
         lists.select("vec_id", "list_id"), "vec_id"
     )
-    _seed_centroids(assign, n_centroids).write.mode("overwrite").parquet(
+    _seed_centroids(assign, N_CENTROIDS).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
     trained.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
@@ -107,58 +106,32 @@ def write_ivfpq_index(
     ).partitionBy("list_id").parquet(os.path.join(path, "vectors"))
     n = embeddings.count() if n_vectors is None else n_vectors
     with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "n_vectors": n,
-                "n_centroids": n_centroids,
-                "dim": dim,
-                "m": m,
-                "ks": ks,
-                "iters": iters,
-            },
-            fh,
-        )
+        json.dump({"n_vectors": n, "iters": iters}, fh)
 
 
 def ensure_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    iters: int = 2,
+    embeddings: DataFrame, path: str, iters: int = LLOYD_ITERS
 ) -> None:
     """Build the index iff ``path`` doesn't already hold a current
-    one.  Currency check = build params + corpus row count (the
+    one.  Currency check = Lloyd rounds + corpus row count (the
     count(*) is a parquet-footer aggregate under aggregatePushdown —
     metadata IO, not a corpus scan, so repeated queries stay cheap);
     a corpus edit that preserves the row count is NOT caught — a
     production catalog would version the corpus snapshot id into the
     meta instead."""
     meta_path = os.path.join(path, "_meta.json")
-    want = {
-        "n_vectors": embeddings.count(),
-        "n_centroids": n_centroids,
-        "dim": dim,
-        "m": m,
-        "ks": ks,
-        "iters": iters,
-    }
+    want = {"n_vectors": embeddings.count(), "iters": iters}
     try:
         with open(meta_path) as fh:
             if json.load(fh) == want:
                 return
     except (OSError, ValueError):
         pass
-    write_ivfpq_index(embeddings, path, n_centroids, dim, m, ks, iters)
+    write_ivfpq_index(embeddings, path, iters)
 
 
 def add_to_ivfpq_index(
-    new_vectors: DataFrame,
-    path: str,
-    dim: int = 64,
-    n_batch: int | None = None,
+    new_vectors: DataFrame, path: str, n_batch: int | None = None
 ) -> None:
     """The FAISS ``add()`` lifecycle (VERDICT r10 next-round #4 —
     :func:`ensure_ivfpq_index` rebuilt from scratch on any row-count
@@ -184,7 +157,6 @@ def add_to_ivfpq_index(
     spark = new_vectors.sparkSession
     with open(os.path.join(path, "_meta.json")) as fh:
         meta = json.load(fh)
-    m, ks = meta["m"], meta["ks"]
     cent = spark.read.parquet(os.path.join(path, "centroids"))
     cb = spark.read.parquet(os.path.join(path, "codebooks"))
     # routing against the PERSISTED centroids — the nearest-centroid
@@ -194,7 +166,7 @@ def add_to_ivfpq_index(
     lists = _nearest_centroid(_unit_vectors(new_vectors, "label"), cent).select(
         "vec_id", "label", "nv", F.col("cid").alias("list_id")
     )
-    codes = pq_codes(new_vectors, dim, m, ks, codebooks=cb).join(
+    codes = pq_codes(new_vectors, codebooks=cb).join(
         lists.select("vec_id", "list_id"), "vec_id"
     )
     codes.write.mode("append").partitionBy("list_id").parquet(
@@ -216,11 +188,6 @@ def ensure_ivfpq_index_lifecycle(
     index_pred,
     batch_preds,
     path: str,
-    n_centroids: int = 8,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    iters: int = 2,
     compact: bool = False,
 ) -> None:
     """Idempotently materialize the STEADY-STATE index: build over
@@ -255,15 +222,7 @@ def ensure_ivfpq_index_lifecycle(
     n_index = int(counts[1] or 0)
     batch_ns = [int(counts[i + 2] or 0) for i in range(len(preds))]
     meta_path = os.path.join(path, "_meta.json")
-    want = {
-        "n_vectors": total,
-        "n_centroids": n_centroids,
-        "dim": dim,
-        "m": m,
-        "ks": ks,
-        "iters": iters,
-        "adds": len(preds),
-    }
+    want = {"n_vectors": total, "iters": LLOYD_ITERS, "adds": len(preds)}
     try:
         with open(meta_path) as fh:
             if json.load(fh) == want:
@@ -271,18 +230,11 @@ def ensure_ivfpq_index_lifecycle(
     except (OSError, ValueError):
         pass
     write_ivfpq_index(
-        embeddings.filter(index_pred(F.col("vec_id"))),
-        path,
-        n_centroids,
-        dim,
-        m,
-        ks,
-        iters,
-        n_vectors=n_index,
+        embeddings.filter(index_pred(F.col("vec_id"))), path, n_vectors=n_index
     )
     for bp, n_b in zip(preds, batch_ns):
         add_to_ivfpq_index(
-            embeddings.filter(bp(F.col("vec_id"))), path, dim, n_batch=n_b
+            embeddings.filter(bp(F.col("vec_id"))), path, n_batch=n_b
         )
     if compact:
         from ..functions.compaction import compact_ivfpq_index
@@ -290,29 +242,12 @@ def ensure_ivfpq_index_lifecycle(
         compact_ivfpq_index(embeddings.sparkSession, path)
 
 
-def ensure_added_ivfpq_index(
-    embeddings: DataFrame,
-    index_pred,
-    path: str,
-    n_centroids: int = 8,
-    dim: int = 64,
-    m: int = PQ_M,
-    ks: int = PQ_KS,
-    iters: int = 2,
-) -> None:
+def ensure_added_ivfpq_index(embeddings: DataFrame, index_pred, path: str) -> None:
     """Single-add form of :func:`ensure_ivfpq_index_lifecycle` (kept
     for the registered one-add query): build over ``index_pred``
     vectors, then add the rest as one batch."""
     ensure_ivfpq_index_lifecycle(
-        embeddings,
-        index_pred,
-        [lambda c: ~index_pred(c)],
-        path,
-        n_centroids,
-        dim,
-        m,
-        ks,
-        iters,
+        embeddings, index_pred, [lambda c: ~index_pred(c)], path
     )
 
 
@@ -320,32 +255,27 @@ def query_ivfpq_index(
     spark: SparkSession,
     path: str,
     query: DataFrame,
-    nprobe: int = 2,
-    k: int = 10,
-    rerank: int = 50,
-    m: int = PQ_M,
-    dim: int = 64,
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
     """Query-path-only IVF-PQ top-k against a persisted index.
 
     ``query`` is a ONE-row DataFrame with a unit-normalized ``qv``
     (array<double>) column — see :func:`query_row`.  Probe selection
-    scores the ``n_centroids``-row centroid table in Spark (identical
-    JVM arithmetic to the in-plan chain) and collects the ``nprobe``
+    scores the ``N_CENTROIDS``-row centroid table in Spark (identical
+    JVM arithmetic to the in-plan chain) and collects the ``NPROBE``
     winning list ids — a bounded-by-construction driver collect —
     into LITERAL ``isin`` filters, so both corpus-sized reads prune
     statically to the probed partition directories (PartitionFilters
     in the scan, pinned in tests).  The rest is the proven chain:
     broadcast m*ks LUT, exact-integer ADC over 4-byte codes,
-    top-``rerank`` shortlist, exact cosine rerank over the probed
-    lists' full vectors, top ``k``.
+    top-``PQ_RERANK`` shortlist, exact cosine rerank over the probed
+    lists' full vectors, top ``PQ_K``.
     """
     cent = spark.read.parquet(os.path.join(path, "centroids"))
-    probed = [r["cid"] for r in _probe(cent, query, nprobe).collect()]
+    probed = [r["cid"] for r in _probe(cent, query, NPROBE).collect()]
     cb = spark.read.parquet(os.path.join(path, "codebooks"))
     qsub = query.select(
-        F.explode(_subspaces(F.col("qv"), dim, m)).alias("p")
+        F.explode(_subspaces(F.col("qv"))).alias("p")
     ).select(F.col("p.s").alias("s"), F.col("p.sv").alias("qs"))
     codes = spark.read.parquet(os.path.join(path, "codes")).filter(
         F.col("list_id").isin(probed)
@@ -355,7 +285,9 @@ def query_ivfpq_index(
     vectors = spark.read.parquet(os.path.join(path, "vectors")).filter(
         F.col("list_id").isin(probed)
     )
-    return _adc_topk(codes, _query_lut(cb, qsub), vectors, query, k, rerank)
+    return _adc_topk(
+        codes, _query_lut(cb, qsub), vectors, query, PQ_K, PQ_RERANK
+    )
 
 
 def query_row(embeddings: DataFrame, query_vec_id: int) -> DataFrame:

@@ -13,14 +13,12 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions.exact import fround
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    decimals: int = 6,
-) -> DataFrame:
+BM25_K1 = 1.2  # term-frequency saturation
+BM25_B = 0.75  # document-length normalization
+ADD_K = 0.5  # Lidstone smoothing of the bigram LM
+
+
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """BM25 ranked retrieval (Robertson & Zaragoza 2009; the Lucene
     idf variant ``ln(1 + (N - df + 0.5)/(df + 0.5))`` so scores stay
     non-negative) over the corpus for a fixed bag of query terms —
@@ -64,11 +62,11 @@ def bm25_topk(
     )
     term = (
         idf
-        * (F.col("tf") * F.lit(k1 + 1.0))
+        * (F.col("tf") * F.lit(BM25_K1 + 1.0))
         / (
             F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+            + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
         )
     )
     scored = (
@@ -78,7 +76,7 @@ def bm25_topk(
         .groupBy("doc_id")
         .agg(
             fround(
-                F.sum(term.cast(DECIMAL_TYPE)).cast("double"), decimals
+                F.sum(term.cast(DECIMAL_TYPE)).cast("double"), 6
             ).alias("bm25"),
             F.count("*").cast("int").alias("n_matched_terms"),
         )
@@ -93,12 +91,11 @@ def bm25_topk(
     )
 
 
-def bigram_lm_scores(
-    docs: DataFrame, add_k: float = 0.5, decimals: int = 6
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """Per-document bigram-LM score — the perplexity filter shape
     (CCNet / Wenzek et al. 2020 filter quality by LM perplexity; this
-    trains the LM on the corpus itself with Lidstone add-k smoothing,
+    trains the LM on the corpus itself with Lidstone add-``ADD_K``
+    smoothing,
     the classical exactly-replayable choice; a production pipeline
     plugs a pretrained KenLM the same way: a gram-keyed probability
     join).
@@ -130,8 +127,8 @@ def bigram_lm_scores(
         F.explode(T.tokens(F.lower(F.col("text")))).alias("token")
     ).agg(F.countDistinct("token").alias("v"))
     lp = -F.log(
-        (F.col("c2") + F.lit(add_k))
-        / (F.col("c1") + F.lit(add_k) * F.col("v"))
+        (F.col("c2") + F.lit(ADD_K))
+        / (F.col("c1") + F.lit(ADD_K) * F.col("v"))
     )
     per_doc = (
         grams.withColumn("w1", w1_of(F.col("gram")))
@@ -143,7 +140,7 @@ def bigram_lm_scores(
             F.count("*").cast("int").alias("n_bigrams"),
             fround(
                 F.sum(lp.cast(DECIMAL_TYPE)).cast("double") / F.count("*"),
-                decimals,
+                6,
             ).alias("mean_nll"),
         )
     )

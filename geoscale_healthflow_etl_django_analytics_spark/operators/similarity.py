@@ -4,7 +4,7 @@ Baseline: brute-force cosine top-k — a single broadcast of the query
 vector against a full scan; exact, and the right answer up to ~10^8
 vectors per executor-hour. Scale paths: sign-bucket LSH (bit-packed
 hyperplane signs) cuts candidates by ~2^bits; the IVF probe
-(:func:`ivf_topk`) searches the ``nprobe`` inverted lists nearest the
+(:func:`ivf_topk`) searches the ``NPROBE`` inverted lists nearest the
 query; Lloyd-refined quantizers (flat, pruned, probe tiers) feed
 SemDeDup; ``operators/pq.py`` and ``operators/pq_index.py`` compose
 the same probe with product-quantized scoring.
@@ -28,6 +28,23 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import DECIMAL_TYPE, fround
 from ..functions.vectors import as_double, cosine, dot, normalized, sign_bucket
+
+# Settings of the stack, read by the registry's oracle generators too.
+DIM = 64  # embedding width
+QUERY_VEC_ID = 0  # the stored vector the probe queries search for
+SIGN_BITS = 4  # sign-bucket bits of the fixed-width ANN tiers
+ANN_K = 5  # results of a sign-bucket ANN probe
+COSINE_DUP = 0.35  # cosine at which two embeddings are duplicates
+N_CENTROIDS = 8  # seed centroids of the fixed-k quantizers
+LLOYD_ITERS = 2  # Lloyd refinement rounds
+NPROBE = 2  # inverted lists (or supers) a vector or query probes
+ROUTER_ITERS = 2  # Lloyd rounds that train the probe tier's router
+# knn_join_adaptive: KNN_K neighbours per vector; the sign-bit count
+# keeps buckets near TARGET_BUCKET vectors, within [MIN_BITS, MAX_BITS]
+KNN_K = 3
+TARGET_BUCKET = 256
+MIN_BITS = 4
+MAX_BITS = 16
 
 
 def _sim(u: str, v: str) -> Column:
@@ -142,18 +159,17 @@ def cosine_topk(
     return _topk(scored, "cosine_sim", "vec_id", k)
 
 
-def ann_bucketed_topk(
-    embeddings: DataFrame, query_vec_id: int, k: int = 5, n_bits: int = 4
-) -> DataFrame:
-    """LSH-bucketed ANN: only vectors in the query's sign-bucket are
-    scored. At scale the bucket id is a partition/cluster key, so a
-    query touches one partition instead of the corpus."""
+def ann_bucketed_topk(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
+    """LSH-bucketed ANN: only vectors in the query's ``SIGN_BITS``
+    sign-bucket are scored; the top ``ANN_K`` come out. At scale the
+    bucket id is a partition/cluster key, so a query touches one
+    partition instead of the corpus."""
     q = _query_vector(embeddings, query_vec_id)
     bucketed = embeddings.select(
-        "vec_id", "label", "embedding", sign_bucket(F.col("embedding"), n_bits).alias("bucket")
+        "vec_id", "label", "embedding", sign_bucket(F.col("embedding"), SIGN_BITS).alias("bucket")
     )
     q_bucketed = q.select(
-        "q_id", "q_vec", sign_bucket(F.col("q_vec"), n_bits).alias("bucket")
+        "q_id", "q_vec", sign_bucket(F.col("q_vec"), SIGN_BITS).alias("bucket")
     )
     scored = (
         bucketed.join(F.broadcast(q_bucketed), "bucket")
@@ -165,22 +181,21 @@ def ann_bucketed_topk(
             fround(cosine("embedding", "q_vec"), 6).alias("cosine_sim"),
         )
     )
-    return _topk(scored, "cosine_sim", "vec_id", k)
+    return _topk(scored, "cosine_sim", "vec_id", ANN_K)
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.35, n_bits: int = 4
-) -> DataFrame:
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup detection: sign-bucket blocking →
-    per-bucket pairwise cosine → threshold. The blocked self-join is
-    the same shape MinHash-LSH uses for text (operators/dedup.py).
+    per-bucket pairwise cosine → ``COSINE_DUP`` threshold. The blocked
+    self-join is the same shape MinHash-LSH uses for text
+    (operators/dedup.py).
     The exchange width is pinned like knn_join_adaptive's — an
     expansion join must not inherit AQE's input-byte coalescing."""
     from ..sources.catalog import ensure_parallelism
 
     embeddings = ensure_parallelism(embeddings)
     b = embeddings.select(
-        "vec_id", "embedding", sign_bucket(F.col("embedding"), n_bits).alias("bucket")
+        "vec_id", "embedding", sign_bucket(F.col("embedding"), SIGN_BITS).alias("bucket")
     )
     n_part = int(
         embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -201,16 +216,14 @@ def embedding_near_dup_pairs(
             "vec_b",
             fround(cosine("emb_a", "emb_b"), 4).alias("cosine_sim"),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= COSINE_DUP)
     )
 
 
-def ivf_assignments(
-    embeddings: DataFrame, n_centroids: int = 8
-) -> DataFrame:
+def ivf_assignments(embeddings: DataFrame) -> DataFrame:
     """IVF coarse quantization: every vector is assigned to its
     nearest centroid (max cosine), forming the inverted lists a probe
-    searches. Centroids are the first ``n_centroids`` vectors by id —
+    searches. Centroids are the first ``N_CENTROIDS`` vectors by id —
     a deterministic seed choice so both engines (and repeated runs)
     build identical lists; Lloyd refinement iterations improve recall
     but change nothing about the partition/probe mechanics, which are
@@ -219,61 +232,52 @@ def ivf_assignments(
 
     Ranking uses the ROUNDED score (6 dp) with centroid-id tiebreak so
     the argmax is engine-deterministic. Assignment is a broadcast
-    nested-loop against the (tiny) centroid set — n × n_centroids dot
+    nested-loop against the (tiny) centroid set — n × N_CENTROIDS dot
     folds over pre-normalized vectors."""
     b = _unit_vectors(embeddings, "label")
-    return _nearest_centroid(b, _seed_centroids(b, n_centroids)).select(
+    return _nearest_centroid(b, _seed_centroids(b, N_CENTROIDS)).select(
         "vec_id", "label", "nv", "cid"
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    k: int = 10,
-) -> DataFrame:
-    """IVF probe: rank centroids by similarity to the query, search
-    only the ``nprobe`` nearest inverted lists, exact-score the
-    survivors. The approximation/probe-cost trade is nprobe/n_centroids
-    — the standard IVF recall knob. At 100 TB the lists are partition
-    directories (cf. write_bucketed_index) and a probe reads nprobe of
+def ivf_topk(embeddings: DataFrame, k: int = 10) -> DataFrame:
+    """IVF probe for vector ``QUERY_VEC_ID``: rank the ``N_CENTROIDS``
+    centroids by similarity to the query, search only the ``NPROBE``
+    nearest inverted lists, exact-score the survivors. The
+    approximation/probe-cost trade is NPROBE/N_CENTROIDS — the
+    standard IVF recall knob. At 100 TB the lists are partition
+    directories (cf. write_bucketed_index) and a probe reads NPROBE of
     them, not the corpus."""
-    assign = ivf_assignments(embeddings, n_centroids)
-    q = _query_nv(assign, query_vec_id)
-    probed = _probe(_seed_centroids(assign, n_centroids), q, nprobe, "qv")
+    assign = ivf_assignments(embeddings)
+    q = _query_nv(assign, QUERY_VEC_ID)
+    probed = _probe(_seed_centroids(assign, N_CENTROIDS), q, NPROBE, "qv")
     hits = (
         assign.join(F.broadcast(probed), "cid")
-        .filter(F.col("vec_id") != query_vec_id)
+        .filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "label", "cid", _sim("nv", "qv").alias("cosine_sim"))
     )
     return _topk(hits, "cosine_sim", "vec_id", k)
 
 
-def write_bucketed_index(
-    embeddings: DataFrame, path: str, n_bits: int = 4
-) -> None:
+def write_bucketed_index(embeddings: DataFrame, path: str) -> None:
     """Persist the corpus partitioned by sign-bucket: the on-disk form
     of the ANN index. A query then reads exactly ONE partition
     directory (partition pruning — verified in tests via the scan's
     file-listing), which is the property that lets a single probe
-    touch 1/2^n_bits of a 100 TB corpus."""
+    touch 1/2^SIGN_BITS of a 100 TB corpus."""
     (
-        embeddings.withColumn("bucket", sign_bucket(F.col("embedding"), n_bits))
+        embeddings.withColumn("bucket", sign_bucket(F.col("embedding"), SIGN_BITS))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
     )
 
 
-def query_bucketed_index(
-    spark, path: str, query_vec: list[float], k: int = 5, n_bits: int = 4
-) -> DataFrame:
+def query_bucketed_index(spark, path: str, query_vec: list[float]) -> DataFrame:
     """Probe the on-disk index: compute the query's bucket driver-side,
-    read only that partition, score, top-k."""
+    read only that partition, score, top ``ANN_K``."""
     bucket = 0
-    for i in range(n_bits):
+    for i in range(SIGN_BITS):
         if query_vec[i] >= 0:
             bucket |= 1 << i
     q = "array(" + ", ".join(f"{float(x)!r}D" for x in query_vec) + ")"
@@ -281,28 +285,23 @@ def query_bucketed_index(
     scored = part.select(
         "vec_id", fround(cosine("embedding", q), 6).alias("cosine_sim")
     )
-    return _topk(scored, "cosine_sim", "vec_id", k)
+    return _topk(scored, "cosine_sim", "vec_id", ANN_K)
 
 
-def adaptive_sign_bits(
-    embeddings: DataFrame,
-    target_bucket: int = 256,
-    min_bits: int = 4,
-    max_bits: int = 16,
-) -> DataFrame:
+def adaptive_sign_bits(embeddings: DataFrame) -> DataFrame:
     """Single-row frame holding the corpus-adaptive sign-bit count
     ``__n_bits`` = clamp(bitlen(ceil(n/target) - 1), min, max) —
     integer-exact via base-2 string length, no float log2. Exposed so
     tests exercise the PRODUCTION expression rather than re-deriving
     the rule in Python (code-review r5 finding #3)."""
     m = F.floor(
-        (F.col("__n") + F.lit(target_bucket - 1)) / F.lit(target_bucket)
+        (F.col("__n") + F.lit(TARGET_BUCKET - 1)) / F.lit(TARGET_BUCKET)
     ).cast("long")
     return embeddings.agg(F.count("*").alias("__n")).select(
         F.greatest(
-            F.lit(min_bits),
+            F.lit(MIN_BITS),
             F.least(
-                F.lit(max_bits),
+                F.lit(MAX_BITS),
                 F.length(F.conv((m - 1).cast("string"), 10, 2)),
             ),
         )
@@ -311,27 +310,22 @@ def adaptive_sign_bits(
     )
 
 
-def knn_join_adaptive(
-    embeddings: DataFrame,
-    k: int = 3,
-    target_bucket: int = 256,
-    min_bits: int = 4,
-    max_bits: int = 16,
-) -> DataFrame:
-    """Batch kNN self-join with a corpus-ADAPTIVE sign-bucket count.
+def knn_join_adaptive(embeddings: DataFrame) -> DataFrame:
+    """Batch ``KNN_K``-NN self-join with a corpus-ADAPTIVE sign-bucket
+    count.
 
     A fixed bucket count makes any blocked self-join quadratic: with B
     buckets the pair volume is Sigma bucket^2 ~ n^2/B. The round-5
     scale-curve measurement caught exactly that (sim_knn_join 2.3s ->
     38s for 4x data). Fix: the number of sign bits b grows with the
-    corpus so the EXPECTED bucket size stays ~``target_bucket`` and
+    corpus so the EXPECTED bucket size stays ~``TARGET_BUCKET`` and
     pair volume stays ~n * target — linear.
 
     b is derived integer-exactly (no float log2 whose last-ulp could
     differ between engines): b = clamp(bitlen(ceil(n/target) - 1),
-    min_bits, max_bits), where bitlen is the length of the base-2
+    MIN_BITS, MAX_BITS), where bitlen is the length of the base-2
     string. The bucket is the 16-bit sign-pack masked to its low b
-    bits, so at small n (b = min_bits) the assignment is identical to
+    bits, so at small n (b = MIN_BITS) the assignment is identical to
     the historical fixed-4-bit behavior. Normalization happens BEFORE
     the self-join (norms computed n times, not once per pair); ranking
     uses the rounded score with vec_b tiebreak so the top-k cut is
@@ -343,7 +337,7 @@ def knn_join_adaptive(
     lose to the fold's tight interpreted loop), so the scale lever is
     partitioning, not expression form.
     """
-    nbits = adaptive_sign_bits(embeddings, target_bucket, min_bits, max_bits)
+    nbits = adaptive_sign_bits(embeddings)
     from ..sources.catalog import ensure_parallelism
 
     # spread the scan BEFORE the (interpreted) normalize transform —
@@ -353,7 +347,7 @@ def knn_join_adaptive(
         embeddings.select(
             "vec_id",
             normalized("embedding").alias("nemb"),
-            sign_bucket(F.col("embedding"), max_bits).alias("__full"),
+            sign_bucket(F.col("embedding"), MAX_BITS).alias("__full"),
         )
         .crossJoin(F.broadcast(nbits))
         .select(
@@ -384,7 +378,7 @@ def knn_join_adaptive(
     )
     pairs = left.join(right, "bucket").filter(F.col("vec_a") != F.col("vec_b"))
     return _top_sim(
-        pairs, ["vec_a", "vec_b"], "vec_a", "vec_b", "emb_a", "emb_b", "cosine_sim", k
+        pairs, ["vec_a", "vec_b"], "vec_a", "vec_b", "emb_a", "emb_b", "cosine_sim", KNN_K
     )
 
 
@@ -493,7 +487,7 @@ def _probe_argmax(
 
 
 def lloyd_assignments(
-    embeddings: DataFrame, n_centroids: int = 8, iters: int = 2
+    embeddings: DataFrame, n_centroids: int = N_CENTROIDS, iters: int = LLOYD_ITERS
 ) -> DataFrame:
     """Per-vector assignment after ``iters`` Lloyd (k-means)
     refinement rounds: (vec_id, nv, cid, sim) — the final quantizer
@@ -524,10 +518,8 @@ def lloyd_assignments(
 
 def lloyd_assignments_pruned(
     embeddings: DataFrame,
-    n_centroids: int = 8,
-    iters: int = 2,
+    n_centroids: int = N_CENTROIDS,
     n_super: int | None = None,
-    n_probe: int = 2,
 ) -> DataFrame:
     """Two-level (coarse-quantized) Lloyd assignment — the ANN-style
     scale tier of :func:`lloyd_assignments`: instead of scoring every
@@ -541,14 +533,14 @@ def lloyd_assignments_pruned(
        s supers (k*s — tiny); a super centroid is FORCED to its own
        super (sid = cid for cid < s), so every super has at least one
        member and no vector can route to an empty inverted list.
-    2. vector -> super: n*s dot folds, keeping the TOP-``n_probe``
+    2. vector -> super: n*s dot folds, keeping the TOP-``NPROBE``
        supers per vector (rank with sid tiebreak).
     3. exact argmax among the probed supers' member centroids only
-       (expected n_probe*k/s per vector).
+       (expected NPROBE*k/s per vector).
 
-    Per-round cost is ~n*(s + n_probe*k/s)*d — n^1.25*d under the
-    k ~ sqrt(n) rule for any constant n_probe. ``n_probe`` defaults
-    to 2 (the IVF nprobe>1 move): single-probe routing was MEASURED
+    Per-round cost is ~n*(s + NPROBE*k/s)*d — n^1.25*d under the
+    k ~ sqrt(n) rule for any constant NPROBE. ``NPROBE`` is 2 (the
+    IVF nprobe>1 move), over ``LLOYD_ITERS`` rounds: single-probe routing was MEASURED
     inflating cluster widths at x200 — vectors whose true nearest
     centroid lives in the second-best super pile onto few clusters
     (top cluster 17,731 vs the exact tier's 882; total intra-cluster
@@ -576,18 +568,18 @@ def lloyd_assignments_pruned(
             .otherwise(F.col("sid"))
             .alias("sid"),
         )
-        return _probe_argmax(b, sup, members, n_probe)
+        return _probe_argmax(b, sup, members, NPROBE)
 
-    return assign(_lloyd_rounds(_seed_centroids(b, n_centroids), assign, iters))
+    return assign(
+        _lloyd_rounds(_seed_centroids(b, n_centroids), assign, LLOYD_ITERS)
+    )
 
 
 def lloyd_assignments_probe(
     embeddings: DataFrame,
-    n_centroids: int = 8,
-    iters: int = 2,
+    n_centroids: int = N_CENTROIDS,
     n_super: int | None = None,
-    n_probe: int = 2,
-    router_iters: int = 2,
+    n_probe: int = NPROBE,
 ) -> DataFrame:
     """ANN-probe Lloyd assignment — the production tier the r7 x200
     stage split concluded SemDeDup needs (PLANS.md r7: "approximate
@@ -603,7 +595,7 @@ def lloyd_assignments_probe(
     centroids, inflating cluster widths that SemDeDup's pair stage
     pays QUADRATICALLY (measured x200: top cluster 6,228 with
     n_probe=2 vs the exact tier's 882). Here the router itself is
-    k-means-trained: per Lloyd round, ``router_iters`` Lloyd rounds
+    k-means-trained: per Lloyd round, ``ROUTER_ITERS`` Lloyd rounds
     run over the k CENTROIDS (k rows — cost k*s*d per round,
     n^0.75*d under k ~ sqrt(n), negligible) so the s supers become
     balanced cluster centers of the centroid population — the faiss
@@ -641,30 +633,23 @@ def lloyd_assignments_probe(
         # inverted lists over the exact centroid set, and only the
         # non-empty trained supers are probe targets
         sup = _supers(cent, n_super)
-        for _ in range(router_iters):
+        for _ in range(ROUTER_ITERS):
             sup = _centroid_means(_member_argmax(cent, sup), ("sid",), "cv", "sv")
         members = _member_argmax(cent, sup).localCheckpoint()
         used = sup.join(members.select("sid").distinct(), "sid").localCheckpoint()
         return _probe_argmax(b, used, members, n_probe)
 
-    # k rows; checkpointed so the router-training passes (router_iters
+    # k rows; checkpointed so the router-training passes (ROUTER_ITERS
     # + 1 argmax scans per assign) re-read k rows, not the corpus
     cent = _seed_centroids(b, n_centroids).localCheckpoint()
-    return assign(_lloyd_rounds(cent, assign, iters))
+    return assign(_lloyd_rounds(cent, assign, LLOYD_ITERS))
 
 
-def semantic_dedup_probe(
-    embeddings: DataFrame,
-    n_centroids: int | None = None,
-    iters: int = 2,
-    eps: float = 0.35,
-    n_probe: int = 2,
-    router_iters: int = 2,
-) -> DataFrame:
+def semantic_dedup_probe(embeddings: DataFrame) -> DataFrame:
     """:func:`semantic_dedup` with the ANN-PROBE assignment tier
     (:func:`lloyd_assignments_probe`) — the production scale path:
     a k-means-TRAINED coarse quantizer over the exact centroid set,
-    top-``n_probe`` inverted-list probing, exact argmax within the
+    top-``NPROBE`` inverted-list probing, exact argmax within the
     probed lists. Same n^1.25*d assign asymptote as the pruned tier
     with the recall (and therefore the cluster-width balance) of a
     trained router — width balance is what SemDeDup's quadratic pair
@@ -672,23 +657,16 @@ def semantic_dedup_probe(
     duplicate-group, and keep semantics are byte-identical to the
     exact tier (shared tail)."""
     return _semantic_dedup(
-        embeddings,
-        n_centroids,
-        eps,
-        lambda e, k: lloyd_assignments_probe(
-            e, k, iters, n_probe=n_probe, router_iters=router_iters
-        ),
+        embeddings, None, COSINE_DUP, lambda e, k: lloyd_assignments_probe(e, k)
     )
 
 
-def lloyd_refined_clusters(
-    embeddings: DataFrame, n_centroids: int = 8, iters: int = 2
-) -> DataFrame:
+def lloyd_refined_clusters(embeddings: DataFrame) -> DataFrame:
     """Per-cluster summary of :func:`lloyd_assignments` (see there
     for the iterative plan shape and the cross-engine exactness
     discipline). Output: one row per surviving cluster
     (cid, n_vecs, mean_sim)."""
-    final = lloyd_assignments(embeddings, n_centroids, iters)
+    final = lloyd_assignments(embeddings)
     return final.groupBy("cid").agg(
         F.count("*").alias("n_vecs"),
         fround(
@@ -702,8 +680,8 @@ def lloyd_refined_clusters(
 def semantic_dedup(
     embeddings: DataFrame,
     n_centroids: int | None = None,
-    iters: int = 2,
-    eps: float = 0.35,
+    iters: int = LLOYD_ITERS,
+    eps: float = COSINE_DUP,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication of an embedding corpus — k-means-cluster the
@@ -746,13 +724,7 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_pruned(
-    embeddings: DataFrame,
-    n_centroids: int | None = None,
-    iters: int = 2,
-    eps: float = 0.35,
-    n_probe: int = 2,
-) -> DataFrame:
+def semantic_dedup_pruned(embeddings: DataFrame) -> DataFrame:
     """:func:`semantic_dedup` with the TWO-LEVEL assignment tier
     (:func:`lloyd_assignments_pruned`) — built for the measured
     n^1.5 assign bound (PLANS.md x200 probe): per-round assign cost
@@ -769,7 +741,7 @@ def semantic_dedup_pruned(
     cluster width — total intra-cluster pair work inflated 7.2x
     (9.26e8 vs 1.29e8), giving back most of the assign savings in
     the tail (559.6s vs 636.4s like-for-like). Routing to the top-2
-    supers (``n_probe=2`` default — the IVF nprobe move, same
+    supers (``NPROBE`` = 2 — the IVF nprobe move, same
     asymptote) restored width balance: top cluster 6,228, pair work
     2.9e8, assign 62.7s + tail 151.2s = 213.9s — 3x the exact tier,
     with the pair tail now BELOW the exact tier's. The general
@@ -780,10 +752,7 @@ def semantic_dedup_pruned(
     (:func:`_dedup_from_assignments`) carries whatever residual
     skew the router leaves."""
     return _semantic_dedup(
-        embeddings,
-        n_centroids,
-        eps,
-        lambda e, k: lloyd_assignments_pruned(e, k, iters, n_probe=n_probe),
+        embeddings, None, COSINE_DUP, lambda e, k: lloyd_assignments_pruned(e, k)
     )
 
 

@@ -59,26 +59,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def split_of_cluster(
-    expr: str,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split-",
-) -> Column:
+# The cluster -> split bucket: md5_int32(SPLIT_SALT || cluster) % 100,
+# below TRAIN_PCT -> train, below TRAIN_PCT + VAL_PCT -> val, else test.
+TRAIN_PCT = 80
+VAL_PCT = 10
+SPLIT_SALT = "split-"
+
+
+def split_of_cluster(expr: str, salt: str = SPLIT_SALT) -> Column:
     """The deterministic cluster -> split bucket of the cluster id SQL
     text ``expr``, shared by ``subdoc.leakage_safe_split`` and the
     incremental form so the two cannot drift apart:
-    md5_int32(salt || cluster) % 100, below ``train_pct`` -> train,
-    below ``train_pct + val_pct`` -> val, else test."""
-    return F.expr(split_of_cluster_sql(expr, train_pct, val_pct, salt))
+    md5_int32(salt || cluster) % 100, below ``TRAIN_PCT`` -> train,
+    below ``TRAIN_PCT + VAL_PCT`` -> val, else test."""
+    return F.expr(split_of_cluster_sql(expr, salt))
 
 
-def split_of_cluster_sql(
-    expr: str,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split-",
-) -> str:
+def split_of_cluster_sql(expr: str, salt: str = SPLIT_SALT) -> str:
     """SQL text of :func:`split_of_cluster` (one expr() parse; see
     hashing.md5_int32_sql).
 
@@ -97,8 +94,8 @@ def split_of_cluster_sql(
     inner = f"concat('{salt}', CAST({expr} AS STRING))"
     b = f"{md5_int32_sql(inner)} % 100"
     return (
-        f"CASE WHEN {b} < {train_pct} THEN 'train' "
-        f"WHEN {b} < {train_pct + val_pct} THEN 'val' "
+        f"CASE WHEN {b} < {TRAIN_PCT} THEN 'train' "
+        f"WHEN {b} < {TRAIN_PCT + VAL_PCT} THEN 'val' "
         f"ELSE 'test' END"
     )
 
@@ -152,8 +149,6 @@ def incremental_pairs_vs_index(
     docs: DataFrame,
     batch_pred,
     path: str,
-    text_col: str = "text",
-    threshold: float = 0.8,
     batch_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Batch-proportional near-dup pairs against the PERSISTED index:
@@ -187,7 +182,7 @@ def incremental_pairs_vs_index(
         # derivation.  The fold path passes an already-checkpointed
         # frame here.
         batch_bands = minhash_perm_band_hashes(
-            docs.filter(batch_pred(F.col("doc_id"))), text_col
+            docs.filter(batch_pred(F.col("doc_id")))
         ).localCheckpoint()
     batch_bands = batch_bands.select(
         "doc_id", "band", "bh", F.lit(True).alias("__new")
@@ -220,9 +215,7 @@ def incremental_pairs_vs_index(
     # cluster exactly once (the semi-join exchange feeds the
     # repartition directly).
     tagged = index_touched.unionByName(batch_bands)
-    return incremental_minhash_pairs(
-        docs, text_col=text_col, threshold=threshold, tagged=tagged
-    )
+    return incremental_minhash_pairs(docs, tagged=tagged)
 
 
 def ensure_cluster_table(index_docs: DataFrame, path: str) -> None:
@@ -246,10 +239,6 @@ def incremental_leakage_safe_split(
     index_clusters: DataFrame,
     pairs: DataFrame,
     batch_pred,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split-",
-    doc_id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, cluster_id, split) for the WHOLE corpus — index docs
     under their persisted (hence stable) clusters, batch docs via the
@@ -268,7 +257,7 @@ def incremental_leakage_safe_split(
     # sized, the same bound as every other checkpoint in this family);
     # both consumers now read blocks.
     pairs = pairs.localCheckpoint()
-    ids = docs.select(F.col(doc_id_col).alias("doc_id"))
+    ids = docs.select(F.col("doc_id").alias("doc_id"))
     # stored-split support (r11, the fold lifecycle): a clusters table
     # written by write_cluster_table/fold_batch_into_cluster_table
     # carries an explicit ``split`` column — authoritative, because a
@@ -284,7 +273,7 @@ def incremental_leakage_safe_split(
             "__i_split"
         ),
     )
-    split_sql = lambda e: split_of_cluster_sql(e, train_pct, val_pct, salt)  # noqa: E731
+    split_sql = split_of_cluster_sql
 
     # the repetitive bucket trees are composed as SQL strings and the
     # chained selects fused (r12, guide §5 — one expr() parse instead
@@ -373,7 +362,6 @@ def fold_batch_into_cluster_table(
     docs: DataFrame,
     batch_pred,
     path: str,
-    threshold: float = 0.8,
     n_batch: int | None = None,
 ) -> None:
     """Fold an ACCEPTED batch into the persisted cluster + band
@@ -419,8 +407,7 @@ def fold_batch_into_cluster_table(
         docs.filter(batch_pred(F.col("doc_id")))
     ).localCheckpoint()
     pairs = incremental_pairs_vs_index(
-        docs, batch_pred, path, threshold=threshold,
-        batch_bands=batch_bands,
+        docs, batch_pred, path, batch_bands=batch_bands
     )
     assigned = incremental_leakage_safe_split(
         docs, iclu, pairs, batch_pred

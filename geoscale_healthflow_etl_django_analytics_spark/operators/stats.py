@@ -29,7 +29,7 @@ def weighted_stats(
         fround(F.avg(v), 4).alias("mean_value"),
         fround(F.expr(f"percentile({value_col}, 0.5)"), 4).alias("median_value"),
         fround(F.stddev_samp(v), 4).alias("std_value"),
-        exact_wavg(v, w, 6).alias("weighted_mean"),
+        exact_wavg(v, w).alias("weighted_mean"),
     )
 
 

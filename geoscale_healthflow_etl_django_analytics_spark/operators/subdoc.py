@@ -18,7 +18,6 @@ from .splitting import split_of_cluster
 def segment_dedup_apply(
     docs: DataFrame,
     segments: Column,
-    doc_id_col: str = "doc_id",
     joiner: str = " ",
 ) -> DataFrame:
     """Sub-document (line/paragraph) exact dedup with first-occurrence
@@ -48,7 +47,7 @@ def segment_dedup_apply(
     kept_text); a doc whose every segment appeared earlier keeps
     nothing (n_kept = 0, kept_text = '').
     """
-    base = docs.select(F.col(doc_id_col).alias("doc_id"), segments.alias("segs"))
+    base = docs.select(F.col("doc_id").alias("doc_id"), segments.alias("segs"))
     seg = base.select(
         "doc_id", F.posexplode("segs").alias("seg_no", "segment")
     )
@@ -94,10 +93,6 @@ def segment_dedup_apply(
 def leakage_safe_split(
     docs: DataFrame,
     components: DataFrame,
-    train_pct: int = 80,
-    val_pct: int = 10,
-    salt: str = "split-",
-    doc_id_col: str = "doc_id",
 ) -> DataFrame:
     """Cluster-aware train/val/test assignment — the split a training
     pipeline must use so near-duplicate documents NEVER straddle the
@@ -112,8 +107,8 @@ def leakage_safe_split(
     :func:`connected_components` over a near-dup pair graph; docs
     absent from it (singletons — LSH emitted no pair) cluster as
     themselves.  The unit of assignment is the CLUSTER: bucket =
-    md5_int32(salt || cluster_id) % 100, <train_pct -> train,
-    <train_pct+val_pct -> val, else test — deterministic, engine-
+    :func:`splitting.split_of_cluster` of the cluster id (train/val/test
+    by its ``TRAIN_PCT``/``VAL_PCT`` md5 buckets) — deterministic, engine-
     reproducible, and leakage-free BY CONSTRUCTION (every member
     shares the cluster id, hence the bucket).
 
@@ -126,12 +121,12 @@ def leakage_safe_split(
     comp = components.select(
         F.col("doc_id").alias("__cid_doc"), F.col("component")
     )
-    out = docs.select(F.col(doc_id_col).alias("doc_id")).join(
+    out = docs.select(F.col("doc_id").alias("doc_id")).join(
         comp, F.col("doc_id") == F.col("__cid_doc"), "left"
     )
     cluster = "coalesce(component, doc_id)"
     return out.select(
         "doc_id",
         F.expr(cluster).alias("cluster_id"),
-        split_of_cluster(cluster, train_pct, val_pct, salt).alias("split"),
+        split_of_cluster(cluster).alias("split"),
     )

@@ -25,7 +25,7 @@ def doc_profile(docs: DataFrame) -> DataFrame:
         "source",
         T.char_count(t).alias("char_count"),
         T.token_count(t).alias("token_count"),
-        T.avg_token_length(t, 2).alias("avg_token_len"),
+        T.avg_token_length(t).alias("avg_token_len"),
         T.stopword_ratio(t, 4).alias("stopword_ratio"),
         T.non_alpha_ratio(t, 4).alias("non_alpha_ratio"),
         T.quality_score(t, 4).alias("quality_score"),
@@ -33,7 +33,7 @@ def doc_profile(docs: DataFrame) -> DataFrame:
     )
 
 
-def langid(docs: DataFrame, threshold: float = 0.05) -> DataFrame:
+def langid(docs: DataFrame) -> DataFrame:
     """Heuristic language-ID vs the labeled lang column: stopword-hit
     score, predicted tag, agreement flag."""
     t = F.col("text")
@@ -41,23 +41,23 @@ def langid(docs: DataFrame, threshold: float = 0.05) -> DataFrame:
         "doc_id",
         "lang",
         T.langid_en_score(t, 4).alias("en_score"),
-        T.predict_lang(t, threshold).alias("predicted_lang"),
+        T.predict_lang(t).alias("predicted_lang"),
         (F.col("lang") == "en").alias("labeled_en"),
-        (T.predict_lang(t, threshold) == F.when(F.col("lang") == "en", "en").otherwise("unknown")).alias(
+        (T.predict_lang(t) == F.when(F.col("lang") == "en", "en").otherwise("unknown")).alias(
             "prediction_matches_label"
         ),
     )
 
 
-def token_topk(docs: DataFrame, k: int = 25) -> DataFrame:
-    """Corpus-wide token frequency top-k: explode → count → top-k.
+def token_topk(docs: DataFrame) -> DataFrame:
+    """Corpus-wide token frequency top-25: explode → count → top-25.
     The classic one-shuffle wordcount; TakeOrdered caps the result."""
     return (
         docs.select(F.explode(T.tokens(F.lower(F.col("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("token"))
-        .limit(k)
+        .limit(25)
     )
 
 
@@ -80,8 +80,8 @@ def source_quality_summary(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3, decimals: int = 6) -> DataFrame:
-    """Per-document top-k terms by TF-IDF (tf * ln(N/df)). One
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Per-document top-3 terms by TF-IDF (tf * ln(N/df)). One
     explode + two aggregations + a window rank; ranking uses the
     ROUNDED score with a token tiebreak so the cut is engine-
     deterministic."""
@@ -99,12 +99,12 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, decimals: int = 6) -> DataFrame
         "doc_id",
         "token",
         fround(
-            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), decimals
+            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6
         ).alias("tfidf"),
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("doc_id", "token", "tfidf", F.col("rn").cast("int").alias("rank"))
     )

@@ -29,15 +29,14 @@ def resample_interpolate(
     time_col: str,
     value_col: str,
     by_cols: list[str],
-    step_seconds: int = 3600,
 ) -> DataFrame:
-    """Returns one row per (key, bucket) over each key's [min, max]
+    """Returns one row per (key, hourly bucket) over each key's [min, max]
     bucket span: ``v`` = the bucket's decimal-exact mean where
     observed, else the linear interpolation between the nearest
     observed buckets; ``observed`` marks which. Endpoints are always
     observed (the grid spans observed data), so no extrapolation
     branch exists."""
-    step_ms = step_seconds * 1000
+    step_ms = 3600 * 1000
     bucket = F.floor(
         F.unix_millis(F.col(time_col).cast("timestamp")) / F.lit(step_ms)
     )

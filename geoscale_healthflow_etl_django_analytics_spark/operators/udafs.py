@@ -40,18 +40,18 @@ def _trimmed_mean_udf():
     return trimmed_mean_10_90
 
 
-def trimmed_mean_by_type(events: DataFrame, decimals: int = 4) -> DataFrame:
+def trimmed_mean_by_type(events: DataFrame) -> DataFrame:
     from ..functions.exact import fround
 
     udf = _trimmed_mean_udf()
     # GROUPED_AGG pandas UDFs cannot share an agg() with JVM
     # aggregates — two aggregations joined on the (tiny) group key.
     trimmed = events.groupBy("event_type").agg(
-        fround(udf(F.col("value")), decimals).alias("trimmed_mean")
+        fround(udf(F.col("value")), 4).alias("trimmed_mean")
     )
     plain = events.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        fround(F.avg("value"), decimals).alias("plain_mean"),
+        fround(F.avg("value"), 4).alias("plain_mean"),
     )
     return plain.join(trimmed, "event_type").select(
         "event_type", "n", "trimmed_mean", "plain_mean"

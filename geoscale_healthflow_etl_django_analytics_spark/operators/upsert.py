@@ -25,10 +25,10 @@ def merge_upsert(
     existing: DataFrame,
     updates: DataFrame,
     keys: list[str],
-    classify_col: str = "merge_action",
 ) -> DataFrame:
     """S8/J4 — full-outer join on ``keys``; update columns win over
-    existing; every row tagged inserted/updated/kept."""
+    existing; every row tagged inserted/updated/kept in
+    ``merge_action``."""
     value_cols = [c for c in existing.columns if c not in keys]
     upd_value_cols = [c for c in value_cols if c in updates.columns]
     ex = existing.withColumn("__e_present", F.lit(1))
@@ -54,13 +54,13 @@ def merge_upsert(
             )
         else:
             out_cols.append(F.col(c))
-    return joined.select(*out_cols, action.alias(classify_col))
+    return joined.select(*out_cols, action.alias("merge_action"))
 
 
-def merge_counts(merged: DataFrame, classify_col: str = "merge_action") -> DataFrame:
+def merge_counts(merged: DataFrame) -> DataFrame:
     """The inserted/updated counters the reference reports
     (postgresql_service.py:204-216)."""
-    return merged.groupBy(classify_col).agg(F.count("*").alias("n"))
+    return merged.groupBy("merge_action").agg(F.count("*").alias("n"))
 
 
 def dedup_by_id(df: DataFrame, id_col: str = "unique_id") -> DataFrame:

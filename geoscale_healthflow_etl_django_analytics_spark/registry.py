@@ -31,6 +31,17 @@ written ``AS MATERIALIZED``: DuckDB 1.0 inlines every CTE reference,
 so an unmarked one is recomputed per read, and the chained split
 oracles took minutes (tests/test_oracle_parity.py bounds each oracle).
 
+An oracle generator takes no setting the operator it replays fixes:
+it reads the operator module's constant, so the two cannot drift
+apart — MinHash ``dd.NUM_PERM``/``dd.BANDS``, BPE ``bpe.N_MERGES``/
+``bpe.MERGE_PASSES``, Lloyd and SemDeDup ``sim.N_CENTROIDS``/
+``sim.LLOYD_ITERS``/``sim.NPROBE``/``sim.ROUTER_ITERS``/
+``sim.COSINE_DUP``/``sim.DIM``, PQ ``pq.PQ_M``/``pq.PQ_KS``/
+``pq.PQ_K``/``pq.PQ_RERANK``; PageRank's builder and oracle share
+``_PR_DAMPING``/``_PR_NODES``/``_PR_ITERS``.
+tests/test_option_shape.py fails when a defaulted parameter of any
+package function is left at its default by every caller.
+
 The same rule holds for the Spark builders: a step that more than one
 builder runs is a ``_*`` builder helper written once, just above its
 first user — the lab-upload cleaning ``_upload_clean``, the
@@ -278,7 +289,7 @@ LIMIT 20
     tags=("O3", "topk"),
 )
 def hc_o3_top20_villages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ha.top_villages_by_positivity(_lab(spark, sf_dir), k=20)
+    return ha.top_villages_by_positivity(_lab(spark, sf_dir))
 
 
 @register(
@@ -504,7 +515,7 @@ from .operators import joins as oj  # noqa: E402
     oracle=f"""
 SELECT CAST(year(o_orderdate) AS INTEGER) AS year,
        count(*) AS order_count,
-       {exact_sum_sql('o_totalprice', 2)} AS total_value
+       {exact_sum_sql('o_totalprice')} AS total_value
 FROM orders
 WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
 GROUP BY year(o_orderdate)
@@ -522,7 +533,7 @@ def j3_semi_segment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INTEGER) AS year,
-       {exact_sum_sql('l_extendedprice * (1 - l_discount)', 2)} AS revenue,
+       {exact_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue,
        count(*) AS lineitem_count
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
@@ -537,10 +548,10 @@ GROUP BY n_name, year(o_orderdate)
 def j9_revenue_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = {
         n: catalog.load_table(spark, sf_dir, n)
-        for n in ("lineitem", "orders", "customer", "nation", "region")
+        for n in ("lineitem", "orders", "customer", "nation")
     }
     return oj.revenue_by_nation_year(
-        t["lineitem"], t["orders"], t["customer"], t["nation"], t["region"]
+        t["lineitem"], t["orders"], t["customer"], t["nation"]
     )
 
 
@@ -557,9 +568,7 @@ LIMIT 10
     doc="Fuzzy contains-fallback lookup with suggestion cap.",
 )
 def f5_fuzzy_customer_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return oj.fuzzy_name_fallback(
-        catalog.load_table(spark, sf_dir, "customer"), "19", 10
-    )
+    return oj.fuzzy_name_fallback(catalog.load_table(spark, sf_dir, "customer"), "19")
 
 
 @register(
@@ -661,7 +670,7 @@ SELECT
     round(avg(l_quantity), 4) AS mean_value,
     round(quantile_cont(l_quantity, 0.5), 4) AS median_value,
     round(stddev_samp(l_quantity), 4) AS std_value,
-    {exact_wavg_sql('l_quantity', 'l_extendedprice', 6)} AS weighted_mean
+    {exact_wavg_sql('l_quantity', 'l_extendedprice')} AS weighted_mean
 FROM lineitem
 """,
     tags=("A13", "A14", "aggregation", "percentile"),
@@ -679,10 +688,10 @@ def a13_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT
     l_returnflag,
     l_linestatus,
-    {exact_sum_sql('l_quantity', 2)} AS sum_qty,
-    {exact_sum_sql('l_extendedprice', 2)} AS sum_base_price,
-    {exact_sum_sql('l_extendedprice * (1 - l_discount)', 2)} AS sum_disc_price,
-    {exact_sum_sql('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)', 2)} AS sum_charge,
+    {exact_sum_sql('l_quantity')} AS sum_qty,
+    {exact_sum_sql('l_extendedprice')} AS sum_base_price,
+    {exact_sum_sql('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+    {exact_sum_sql('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)')} AS sum_charge,
     round(avg(l_quantity), 4) AS avg_qty,
     round(avg(l_extendedprice), 4) AS avg_price,
     round(avg(l_discount), 4) AS avg_disc,
@@ -809,7 +818,7 @@ LIMIT 25
     doc="Corpus token frequency top-25.",
 )
 def text_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tx.token_topk(catalog.load_table(spark, sf_dir, "documents"), 25)
+    return tx.token_topk(catalog.load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -888,9 +897,7 @@ WHERE jaccard >= 0.2
     doc="Exact 3-gram Jaccard near-dup pairs (lang-blocked).",
 )
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.ngram_jaccard_pairs(
-        catalog.load_table(spark, sf_dir, "documents"), k=3, threshold=0.2
-    )
+    return dd.ngram_jaccard_pairs(catalog.load_table(spark, sf_dir, "documents"))
 
 
 # Full LSH replay in DuckDB: same md5-derived shingle hashes, same
@@ -898,24 +905,28 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join, same exact-Jaccard verify (operators/dedup.py:
 # minhash_lsh_pairs). Factored as a CTE list so the connected-
 # components oracle can build its recursive closure on the same pair
-# set. GENERATED from the SAME affine coefficient table the Spark
-# side uses (functions/hashing.py::affine_perm_coeffs — num_perm=64,
-# bands=16; generated like _lloyd_sql so a parameter change cannot
+# set. GENERATED from the SAME affine coefficient table and settings
+# the Spark side uses (functions/hashing.py::affine_perm_coeffs over
+# dd.NUM_PERM permutations, dd.BANDS bands of dd.NUM_PERM // dd.BANDS
+# rows; generated like _lloyd_sql so a settings change cannot
 # desynchronize 80 hand-written lines, code-review r5 finding #8).
 # r6 tier swap: the previous one-permutation (densified OPH) front
 # half had a measured quadratic candidate floor on short docs — see
 # operators/dedup.py::minhash_perm_band_hashes.
+_ROWS = dd.NUM_PERM // dd.BANDS
 _perm_min_cols = ",\n           ".join(
     f"min(({a} * (h % {hashing.MINHASH_PRIME}) + {b})"
     f" % {hashing.MINHASH_PRIME}) AS m{i}"
-    for i, (a, b) in enumerate(hashing.affine_perm_coeffs(64))
+    for i, (a, b) in enumerate(hashing.affine_perm_coeffs(dd.NUM_PERM))
 )
 _band_cells = ",\n        ".join(
     "{'band': %d, 'bh': md5(%s)}" % (
         b,
-        " || ',' || ".join(f"m{s}" for s in range(b * 4, b * 4 + 4)),
+        " || ',' || ".join(
+            f"m{s}" for s in range(b * _ROWS, (b + 1) * _ROWS)
+        ),
     )
-    for b in range(16)
+    for b in range(dd.BANDS)
 )
 
 # shingle -> band hashes: (doc_id, band, bh) rows in ``band_hashes``
@@ -1239,7 +1250,7 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
     "is quadratic in corpus size regardless of plan quality — "
     "BENCH_scale_r5 measured 1.72M collision-floor pairs (vs ~28.6k "
     "true near-dups) at x50. The DEFAULT SimHash surface is "
-    "dedup_simhash_wide_pairs (dd.simhash_near_dup_pairs), whose "
+    "dedup_simhash_adaptive_pairs (dd.simhash_adaptive_pairs), whose "
     "30-bit bands push the floor to n^2/2^30; this form stays "
     "registered as the oracle-pinned 60-bit reference semantics and "
     "is no longer part of the bench headline set.",
@@ -1315,7 +1326,7 @@ LIMIT 5
     doc="Sign-bucket LSH ANN top-5 (scale path).",
 )
 def sim_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.ann_bucketed_topk(catalog.load_table(spark, sf_dir, "embeddings"), 0, 5)
+    return sim.ann_bucketed_topk(catalog.load_table(spark, sf_dir, "embeddings"), 0)
 
 
 @register(
@@ -1333,9 +1344,7 @@ WHERE cosine_sim >= 0.35
     doc="Embedding-cosine near-dup pairs via sign-bucket blocking.",
 )
 def sim_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.embedding_near_dup_pairs(
-        catalog.load_table(spark, sf_dir, "embeddings"), threshold=0.35
-    )
+    return sim.embedding_near_dup_pairs(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
 # ===========================================================================
@@ -2138,9 +2147,7 @@ WHERE rn <= 3
 )
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return sim.knn_join_adaptive(
-        emb, k=3, target_bucket=256, min_bits=4, max_bits=16
-    )
+    return sim.knn_join_adaptive(emb)
 
 
 @register(
@@ -2599,7 +2606,7 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs, batch_pred, _, iclu = _index_cluster_table(spark, sf_dir)
     pairs = incremental_minhash_pairs(
-        docs, threshold=0.8, new_pred=batch_pred
+        docs, new_pred=batch_pred
     )
     return splitting.incremental_leakage_safe_split(
         docs, iclu, pairs, batch_pred
@@ -2635,7 +2642,7 @@ def curation_incremental_split_indexed(
 
     docs, batch_pred, path, iclu = _index_cluster_table(spark, sf_dir)
     pairs = splitting.incremental_pairs_vs_index(
-        docs, batch_pred, path, threshold=0.8
+        docs, batch_pred, path
     )
     return splitting.incremental_leakage_safe_split(
         docs, iclu, pairs, batch_pred
@@ -2679,7 +2686,7 @@ def curation_cluster_table_update(spark: SparkSession, sf_dir: str) -> DataFrame
     splitting.ensure_folded_cluster_table(docs, idx_pred, b1_pred, path)
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
     pairs = splitting.incremental_pairs_vs_index(
-        docs, b2_pred, path, threshold=0.8
+        docs, b2_pred, path
     )
     return splitting.incremental_leakage_safe_split(
         docs, iclu, pairs, b2_pred
@@ -2732,7 +2739,7 @@ def curation_cluster_table_lifecycle(
     )
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
     pairs = splitting.incremental_pairs_vs_index(
-        docs, b3_pred, path, threshold=0.8
+        docs, b3_pred, path
     )
     return splitting.incremental_leakage_safe_split(
         docs, iclu, pairs, b3_pred
@@ -2765,7 +2772,7 @@ SELECT doc_id, token, tfidf, CAST(rn AS INTEGER) AS rank FROM (
     "windowed rank).",
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tx.tfidf_top_terms(catalog.load_table(spark, sf_dir, "documents"), 3)
+    return tx.tfidf_top_terms(catalog.load_table(spark, sf_dir, "documents"))
 
 
 _BM25_TERMS = ("spark", "merge", "window")
@@ -2970,7 +2977,7 @@ def text_lm_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import lm_pretrained
 
     return lm_pretrained.chargram_lm_scores(
-        catalog.load_table(spark, sf_dir, "documents"), n=4
+        catalog.load_table(spark, sf_dir, "documents")
     )
 
 
@@ -3316,7 +3323,7 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pricing_q6_forecast",
     oracle=f"""
-SELECT {exact_sum_sql('l_extendedprice * l_discount', 2)} AS revenue_delta,
+SELECT {exact_sum_sql('l_extendedprice * l_discount')} AS revenue_delta,
        count(*) AS n_lineitems
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -3618,12 +3625,11 @@ def _s1_csv_bytes(rows, encoding: str, bom: bytes = b"") -> bytes:
 def s1_csv_clean_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     import codecs as _codecs
     import os
-    import tempfile
 
     # Unlike the driver-side xlsx/shapefile parsers, spark.read.csv is
     # LAZY — the fixture file must outlive the returned plan, so write
     # to a stable path (idempotent overwrite) instead of a deleted temp.
-    fix_dir = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
+    fix_dir = catalog.FIXTURE_ROOT
     os.makedirs(fix_dir, exist_ok=True)
     paths = {}
     for fname, data in (
@@ -4224,13 +4230,7 @@ LIMIT 10
     "keys on disk, a probe reads nprobe partitions of the corpus.",
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.ivf_topk(
-        catalog.load_table(spark, sf_dir, "embeddings"),
-        query_vec_id=0,
-        n_centroids=8,
-        nprobe=2,
-        k=10,
-    )
+    return sim.ivf_topk(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -4279,8 +4279,12 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_ctes(n_merges: int = 8, passes: int = 3) -> list[str]:
-    """The shared CTE chain of the BPE oracles — training rounds plus
+from .functions import bpe  # noqa: E402
+
+
+def _bpe_ctes() -> list[str]:
+    """The shared CTE chain of the BPE oracles — ``bpe.N_MERGES``
+    training rounds of ``bpe.MERGE_PASSES`` replaces each, plus
     the per-doc ``agg`` join; callers append their own final SELECT
     (``_bpe_sql`` replays bpe_doc_stats; the vocab32k oracle adds the
     word-count CTE and bound pins)."""
@@ -4301,7 +4305,7 @@ def _bpe_ctes(n_merges: int = 8, passes: int = 3) -> list[str]:
     FROM wd GROUP BY w
 )""",
     ]
-    for r in range(n_merges):
+    for r in range(bpe.N_MERGES):
         ctes.append(f"""p{r} AS MATERIALIZED (
     SELECT u.a AS a, u.b AS b, sum(freq) AS total FROM (
         SELECT freq,
@@ -4319,7 +4323,7 @@ def _bpe_ctes(n_merges: int = 8, passes: int = 3) -> list[str]:
     SELECT a, b FROM p{r} ORDER BY total DESC, a ASC, b ASC LIMIT 1
 )""")
         rep_expr = "s"
-        for _ in range(passes):
+        for _ in range(bpe.MERGE_PASSES):
             rep_expr = (
                 f"replace({rep_expr}, chr(31)||a||chr(31)||b||chr(31), "
                 "chr(31)||a||b||chr(31))"
@@ -4330,7 +4334,7 @@ def _bpe_ctes(n_merges: int = 8, passes: int = 3) -> list[str]:
     ctes.append(f"""pw AS MATERIALIZED (
     SELECT w, len(list_filter(string_split(s, chr(31)), x -> x <> ''))
                AS n_tok
-    FROM v{n_merges}
+    FROM v{bpe.N_MERGES}
 )""")
     ctes.append("""agg AS (
     SELECT doc_id, CAST(sum(n_tok) AS BIGINT) AS bpe_tokens,
@@ -4340,7 +4344,7 @@ def _bpe_ctes(n_merges: int = 8, passes: int = 3) -> list[str]:
     return ctes
 
 
-def _bpe_sql(n_merges: int = 8, passes: int = 3) -> str:
+def _bpe_sql() -> str:
     """DuckDB replay of functions/bpe.py::bpe_doc_stats — the BPE
     TRAINING loop (Sennrich et al. 2016) as chained CTEs: per merge
     round, frequency-weighted adjacent-pair counts over the vocab,
@@ -4348,7 +4352,7 @@ def _bpe_sql(n_merges: int = 8, passes: int = 3) -> str:
     bounded replace sequence. MATERIALIZED throughout — the rounds
     chain, so inlining would re-expand the whole prefix per reference
     (the probe-chain lesson)."""
-    ctes = _bpe_ctes(n_merges, passes)
+    ctes = _bpe_ctes()
     return (
         "WITH " + ",\n".join(ctes) + """
 SELECT doc_id, bpe_tokens, chars,
@@ -4361,7 +4365,7 @@ FROM agg
     )
 
 
-def _bpe_vocab32k_sql(n_merges: int = 8, passes: int = 3) -> str:
+def _bpe_vocab32k_sql() -> str:
     """Oracle for text_bpe_apply_vocab32k: exact replay of chars,
     per-doc word counts and the 8-merge reference token counts (the
     full training-loop CTE chain), with the two 32k-vocab bound pins
@@ -4370,7 +4374,7 @@ def _bpe_vocab32k_sql(n_merges: int = 8, passes: int = 3) -> str:
     its invariants (prefix monotonicity, >= one token per word) are
     theorems of the sequential merge semantics, so a violation means
     the apply tier is broken, not the corpus."""
-    ctes = _bpe_ctes(n_merges, passes)
+    ctes = _bpe_ctes()
     ctes.append("""wc AS (
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words
     FROM wd GROUP BY doc_id
@@ -4388,7 +4392,7 @@ FROM agg JOIN wc ON agg.doc_id = wc.doc_id
 
 @register(
     "text_bpe_tokenize",
-    oracle=_bpe_sql(n_merges=8, passes=3),
+    oracle=_bpe_sql(),
     tags=("text", "tokenization", "bpe", "iterative", "llm-pipeline"),
     bench=True,
     doc="REAL BPE tokenization (Sennrich et al. 2016, arXiv:1508.07909) "
@@ -4415,12 +4419,12 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.bpe import bpe_doc_stats
 
     docs = catalog.load_table(spark, sf_dir, "documents")
-    return bpe_doc_stats(docs, n_merges=8, passes=3)
+    return bpe_doc_stats(docs)
 
 
 @register(
     "text_bpe_apply_pretrained",
-    oracle=_bpe_sql(n_merges=8, passes=3),
+    oracle=_bpe_sql(),
     tags=("text", "tokenization", "bpe", "pretrained", "llm-pipeline"),
     bench=True,
     doc="PRETRAINED-vocabulary BPE apply (functions/bpe.py::"
@@ -4451,13 +4455,13 @@ def text_bpe_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import bpe
 
     docs = catalog.load_table(spark, sf_dir, "documents")
-    merges = bpe.learn_merges(docs, n_merges=8, passes=3)
+    merges = bpe.learn_merges(docs)
     return bpe.bpe_apply_doc_stats(docs, merges)
 
 
 @register(
     "text_bpe_apply_vocab32k",
-    oracle=_bpe_vocab32k_sql(n_merges=8, passes=3),
+    oracle=_bpe_vocab32k_sql(),
     tags=(
         "text",
         "tokenization",
@@ -4490,7 +4494,7 @@ def text_bpe_apply_vocab32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import bpe
 
     docs = catalog.load_table(spark, sf_dir, "documents")
-    merges8 = bpe.learn_merges(docs, n_merges=8, passes=3)
+    merges8 = bpe.learn_merges(docs)
     table = merges8 + bpe.generate_pretrained_merges(32768)
     big = bpe.bpe_apply_doc_stats(docs, table).select(
         "doc_id", F.col("bpe_tokens").alias("tokens_32k")
@@ -4499,7 +4503,7 @@ def text_bpe_apply_vocab32k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("bpe_tokens").alias("tokens_ref8"), "chars"
     )
     n_words = (
-        bpe._corpus_words(docs, "doc_id", "text")
+        bpe._corpus_words(docs)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_words"))
     )
@@ -4623,9 +4627,7 @@ def asof_attribution_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def geo_j6_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = catalog.load_table(spark, sf_dir, "nation")
     one = nation.limit(1).select(F.lit(1).alias("one"))
-    return geo.binned_zonal_stats(
-        geo.synth_polygons(nation), geo.pixel_grid(one), cell=16.0
-    )
+    return geo.binned_zonal_stats(geo.synth_polygons(nation), geo.pixel_grid(one))
 
 
 @register(
@@ -4668,7 +4670,7 @@ GROUP BY poly_id, name
 def geo_j6_raster_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = catalog.load_table(spark, sf_dir, "nation")
     joined = geo.binned_zonal_join(
-        geo.synth_polygons_many(nation, per_nation=10),
+        geo.synth_polygons_many(nation),
         geo.pixel_grid_par(spark, nx=1000, ny=600),
         cell=32.0,
     )
@@ -5041,7 +5043,7 @@ def mm_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     ids = docs.select(F.col("doc_id").alias("media_id"))
     media = mm.media_bmp_corpus(ids)
-    return mm.bmp_decode_resize_stats(media, max_side=8)
+    return mm.bmp_decode_resize_stats(media)
 
 
 @register(
@@ -5075,7 +5077,7 @@ def mm_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
     ids = docs.select(F.col("doc_id").alias("media_id"))
     media = mm.media_png_corpus(ids)
-    return mm.png_decode_resize_stats(media, max_side=8)
+    return mm.png_decode_resize_stats(media)
 
 
 @register(
@@ -5199,7 +5201,7 @@ def layout_export_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.layout import export_shuffle_assignment
 
     docs = catalog.load_table(spark, sf_dir, "documents")
-    return export_shuffle_assignment(docs, "doc_id", num_shards=16, seed="epoch0")
+    return export_shuffle_assignment(docs)
 
 
 
@@ -5256,8 +5258,7 @@ def ts_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = catalog.load_table(spark, sf_dir, "events")
     return resample_interpolate(
-        ev, time_col="ts", value_col="value", by_cols=["user_id"],
-        step_seconds=3600,
+        ev, time_col="ts", value_col="value", by_cols=["user_id"]
     )
 
 
@@ -6739,10 +6740,9 @@ def _roundtrip_path(kind: str, sf_dir: str) -> str:
     import os
     import re
     import shutil
-    import tempfile
 
     global _ROUNDTRIP_SWEPT
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
+    root = catalog.FIXTURE_ROOT
     if not _ROUNDTRIP_SWEPT:
         _ROUNDTRIP_SWEPT = True
         try:
@@ -6821,7 +6821,7 @@ def _lloyd_seed(k: int | str) -> list[str]:
     ]
 
 
-def _lloyd_update(i: int, dim: int) -> list[str]:
+def _lloyd_update(i: int) -> list[str]:
     """Round ``i``'s centroid update: exact-decimal per-position means
     (8 dp) of the assignment ``a{i}``, giving ``c{i+1}``."""
     return [
@@ -6829,7 +6829,7 @@ def _lloyd_update(i: int, dim: int) -> list[str]:
     SELECT cid, gs.i AS pos,
            round(CAST(sum(CAST(nv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
                  / count(*), 8) AS m
-    FROM a{i}, generate_series(1, {dim}) gs(i)
+    FROM a{i}, generate_series(1, {sim.DIM}) gs(i)
     GROUP BY cid, gs.i
 )""",
         f"""c{i + 1} AS MATERIALIZED (
@@ -6870,16 +6870,15 @@ def _probed_assign(
     ]
 
 
-def _lloyd_ctes(
-    iters: int = 2, k: int | str = 8, dim: int = 64
-) -> list[str]:
+def _lloyd_ctes(k: int | str) -> list[str]:
     """The DuckDB replay of similarity.lloyd_assignments as a chain of
-    CTEs — the same fixed number of refinement rounds, ending in
+    CTEs — the same ``sim.LLOYD_ITERS`` refinement rounds, ending in
     ``af`` = the final per-vector assignment (vec_id, nv, cid, sim).
     Shared by the sim_ivf_lloyd and sim_semantic_dedup oracles.
     ``k`` may be an int or a SQL scalar expression (the adaptive
     count-derived centroid count); it only ever appears in the seed
     CTE's vec_id bound."""
+    iters = sim.LLOYD_ITERS
     ctes = _lloyd_seed(k)
     for i in range(iters):
         ctes.append(f"""a{i} AS MATERIALIZED (
@@ -6892,7 +6891,7 @@ def _lloyd_ctes(
         FROM b CROSS JOIN c{i} c
     ) t WHERE rn = 1
 )""")
-        ctes.extend(_lloyd_update(i, dim))
+        ctes.extend(_lloyd_update(i))
     ctes.append(f"""af AS MATERIALIZED (
     SELECT vec_id, nv, cid, sim FROM (
         SELECT b.vec_id, b.nv, c.cid,
@@ -6907,12 +6906,13 @@ def _lloyd_ctes(
     return ctes
 
 
-def _lloyd_sql(iters: int = 2, k: int = 8, dim: int = 64) -> str:
+def _lloyd_sql() -> str:
     """Generate the DuckDB replay of lloyd_refined_clusters: the same
-    fixed number of refinement rounds as chained CTEs."""
+    fixed number of refinement rounds over ``sim.N_CENTROIDS`` seeds
+    as chained CTEs."""
     return (
         f"WITH {_EMB_CTE.strip()},\n"
-        + ",\n".join(_lloyd_ctes(iters, k, dim))
+        + ",\n".join(_lloyd_ctes(sim.N_CENTROIDS))
         + """
 SELECT cid, count(*) AS n_vecs,
        round(CAST(sum(CAST(sim AS DECIMAL(30,8))) AS DOUBLE) / count(*), 6)
@@ -6922,17 +6922,16 @@ FROM af GROUP BY cid
     )
 
 
-def _lloyd_pruned_ctes(
-    iters: int, k: str, s: str, dim: int = 64, n_probe: int = 2
-) -> list[str]:
+def _lloyd_pruned_ctes(k: str, s: str) -> list[str]:
     """The DuckDB replay of similarity.lloyd_assignments_pruned — the
     two-level (coarse-quantized) assignment chain: per round,
     centroid->super routing with the self-pin (a super centroid
-    always belongs to its own super), vector->super TOP-``n_probe``
+    always belongs to its own super), vector->super TOP-``sim.NPROBE``
     routing (the IVF nprobe move — single-probe routing measurably
     inflated cluster widths, PLANS.md r7), then the exact argmax
     among the probed supers' member centroids only. ``k`` and ``s``
     are SQL scalar expressions (the adaptive counts)."""
+    iters = sim.LLOYD_ITERS
     ctes = _lloyd_seed(k)
 
     def round_ctes(i: int, final: bool) -> list[str]:
@@ -6955,11 +6954,11 @@ def _lloyd_pruned_ctes(
     ) t WHERE rn = 1
 )""",
         ]
-        return out + _probed_assign(tag, f"sup{tag}", f"cs{tag}", n_probe)
+        return out + _probed_assign(tag, f"sup{tag}", f"cs{tag}", sim.NPROBE)
 
     for i in range(iters):
         ctes.extend(round_ctes(i, final=False))
-        ctes.extend(_lloyd_update(i, dim))
+        ctes.extend(_lloyd_update(i))
     # the final-round chain's tag is "f", so its assignment CTE is
     # literally named ``af`` — the same terminal name the flat chain
     # ends in, which is what lets _semdedup_sql share its tail.
@@ -6967,22 +6966,16 @@ def _lloyd_pruned_ctes(
     return ctes
 
 
-def _lloyd_probe_ctes(
-    iters: int,
-    k: str,
-    s: str,
-    dim: int = 64,
-    n_probe: int = 2,
-    router_iters: int = 2,
-) -> list[str]:
+def _lloyd_probe_ctes(k: str, s: str) -> list[str]:
     """The DuckDB replay of similarity.lloyd_assignments_probe — the
     ANN-probe assignment chain: per round, the router is TRAINED
-    (``router_iters`` Lloyd rounds over the k centroids themselves,
+    (``sim.ROUTER_ITERS`` Lloyd rounds over the k centroids themselves,
     seeded from the first s, exact-decimal means at 8 dp), inverted
     lists are the centroid->trained-super argmax, vectors route to
-    their top-``n_probe`` NON-EMPTY lists, and the exact argmax runs
+    their top-``sim.NPROBE`` NON-EMPTY lists, and the exact argmax runs
     over the probed lists' member centroids only. ``k``/``s`` are SQL
     scalar expressions (the adaptive counts)."""
+    iters, router_iters = sim.LLOYD_ITERS, sim.ROUTER_ITERS
     ctes = _lloyd_seed(k)
 
     def _member_argmax(name: str, src: str, sup: str) -> str:
@@ -7011,7 +7004,7 @@ def _lloyd_probe_ctes(
     SELECT sid, gs.i AS pos,
            round(CAST(sum(CAST(cv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
                  / count(*), 8) AS m
-    FROM rm{tag}{j}, generate_series(1, {dim}) gs(i)
+    FROM rm{tag}{j}, generate_series(1, {sim.DIM}) gs(i)
     GROUP BY sid, gs.i
 )""")
             out.append(f"""rsup{tag}{j + 1} AS MATERIALIZED (
@@ -7024,51 +7017,38 @@ def _lloyd_probe_ctes(
     SELECT u.sid, u.sv FROM rsup{tag}{router_iters} u
     WHERE u.sid IN (SELECT sid FROM mem{tag})
 )""")
-        return out + _probed_assign(tag, f"used{tag}", f"mem{tag}", n_probe)
+        return out + _probed_assign(tag, f"used{tag}", f"mem{tag}", sim.NPROBE)
 
     for i in range(iters):
         ctes.extend(round_ctes(i, final=False))
-        ctes.extend(_lloyd_update(i, dim))
+        ctes.extend(_lloyd_update(i))
     # terminal tag "f" -> the chain ends in ``af``, the shared tail name
     ctes.extend(round_ctes(iters, final=True))
     return ctes
 
 
-def _semdedup_sql(
-    iters: int = 2,
-    k: int | None = None,
-    dim: int = 64,
-    eps: float = 0.35,
-    pruned: bool = False,
-    probe: bool = False,
-) -> str:
+def _semdedup_sql(pruned: bool = False, probe: bool = False) -> str:
     """Generate the DuckDB replay of similarity.semantic_dedup: the
-    Lloyd assignment chain, within-cluster eps-pairs, duplicate
-    groups as a recursive-CTE transitive closure (the same fixpoint
-    as dedup_connected_components' oracle), and the keep-the-outlier
-    representative rule. ``k=None`` replays the ADAPTIVE centroid
-    count — max(8, ceil(sqrt(n))) from the corpus count, the same
-    integer the Spark side derives. ``pruned=True`` replays the
-    TWO-LEVEL assignment chain (semantic_dedup_pruned) with
-    s = max(2, ceil(sqrt(k))) supers."""
-    k_sql: int | str = (
-        "SELECT GREATEST(8, CAST(CEIL(SQRT(count(*))) AS BIGINT)) FROM emb"
-        if k is None
-        else k
+    Lloyd assignment chain, within-cluster ``sim.COSINE_DUP`` pairs,
+    duplicate groups as a recursive-CTE transitive closure (the same
+    fixpoint as dedup_connected_components' oracle), and the
+    keep-the-outlier representative rule. The centroid count is the
+    ADAPTIVE one — max(8, ceil(sqrt(n))) from the corpus count, the
+    same integer the Spark side derives. ``pruned=True`` replays the
+    TWO-LEVEL assignment chain (semantic_dedup_pruned) and
+    ``probe=True`` the trained-router chain (semantic_dedup_probe),
+    both with s = max(2, ceil(sqrt(k))) supers."""
+    k_sql = "SELECT GREATEST(8, CAST(CEIL(SQRT(count(*))) AS BIGINT)) FROM emb"
+    s_sql = (
+        "SELECT GREATEST(2, CAST(CEIL(SQRT(GREATEST(8, "
+        "CEIL(SQRT(count(*)))))) AS BIGINT)) FROM emb"
     )
-    if pruned or probe:
-        s_sql = (
-            "SELECT GREATEST(2, CAST(CEIL(SQRT(GREATEST(8, "
-            "CEIL(SQRT(count(*)))))) AS BIGINT)) FROM emb"
-            if k is None
-            else f"SELECT GREATEST(2, CAST(CEIL(SQRT({k})) AS BIGINT))"
-        )
-        if probe:
-            chain = _lloyd_probe_ctes(iters, f"{k_sql}", f"{s_sql}", dim)
-        else:
-            chain = _lloyd_pruned_ctes(iters, f"{k_sql}", f"{s_sql}", dim)
+    if probe:
+        chain = _lloyd_probe_ctes(k_sql, s_sql)
+    elif pruned:
+        chain = _lloyd_pruned_ctes(k_sql, s_sql)
     else:
-        chain = _lloyd_ctes(iters, k_sql, dim)
+        chain = _lloyd_ctes(k_sql)
     return (
         f"WITH RECURSIVE {_EMB_CTE.strip()},\n"
         + ",\n".join(chain)
@@ -7076,7 +7056,7 @@ def _semdedup_sql(
 p AS MATERIALIZED (
     SELECT x.vec_id AS a, y.vec_id AS b
     FROM af x JOIN af y ON x.cid = y.cid AND x.vec_id < y.vec_id
-    WHERE round(list_inner_product(x.nv, y.nv), 6) >= {eps}
+    WHERE round(list_inner_product(x.nv, y.nv), 6) >= {sim.COSINE_DUP}
 ),
 e AS (SELECT a, b FROM p UNION SELECT b AS a, a AS b FROM p),
 cc(node, label) AS (
@@ -7101,7 +7081,7 @@ FROM lab
 
 @register(
     "sim_ivf_lloyd",
-    oracle=_lloyd_sql(iters=2, k=8, dim=64),
+    oracle=_lloyd_sql(),
     tags=("similarity", "ivf", "kmeans", "iterative", "scale-shape"),
     doc="Lloyd-refined IVF coarse quantizer — the ITERATIVE-algorithm "
     "entry: two k-means rounds over the seed centroids "
@@ -7118,12 +7098,12 @@ FROM lab
 )
 def sim_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return sim.lloyd_refined_clusters(emb, n_centroids=8, iters=2)
+    return sim.lloyd_refined_clusters(emb)
 
 
 @register(
     "sim_semantic_dedup",
-    oracle=_semdedup_sql(iters=2, k=None, dim=64, eps=0.35),
+    oracle=_semdedup_sql(),
     tags=("similarity", "dedup", "kmeans", "llm-pipeline", "scale-shape"),
     doc="SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic "
     "dedup of the embedding corpus: Lloyd-refined k-means clusters "
@@ -7143,12 +7123,12 @@ def sim_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return sim.semantic_dedup(emb, n_centroids=None, iters=2, eps=0.35)
+    return sim.semantic_dedup(emb)
 
 
 @register(
     "sim_semantic_dedup_pruned",
-    oracle=_semdedup_sql(iters=2, k=None, dim=64, eps=0.35, pruned=True),
+    oracle=_semdedup_sql(pruned=True),
     tags=("similarity", "dedup", "kmeans", "llm-pipeline", "scale-shape"),
     doc="sim_semantic_dedup with the TWO-LEVEL (coarse-quantized) "
     "assignment tier — the scale path for the n^1.5 exact-assign "
@@ -7182,12 +7162,12 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_semantic_dedup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return sim.semantic_dedup_pruned(emb, n_centroids=None, iters=2, eps=0.35)
+    return sim.semantic_dedup_pruned(emb)
 
 
 @register(
     "sim_semantic_dedup_probe",
-    oracle=_semdedup_sql(iters=2, k=None, dim=64, eps=0.35, probe=True),
+    oracle=_semdedup_sql(probe=True),
     tags=("similarity", "dedup", "kmeans", "llm-pipeline", "scale-shape"),
     doc="sim_semantic_dedup with the ANN-PROBE assignment tier — the "
     "production plan the r7 x200 stage split concluded SemDeDup "
@@ -7218,9 +7198,7 @@ def sim_semantic_dedup_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    return sim.semantic_dedup_probe(
-        emb, n_centroids=None, iters=2, eps=0.35, n_probe=2, router_iters=2
-    )
+    return sim.semantic_dedup_probe(emb)
 
 
 _SIMHASH_WIDE_ORACLE = rf"""WITH tok AS MATERIALIZED (
@@ -7273,7 +7251,7 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3
 )
 def dedup_simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
-    return dd.simhash_pairs_wide(docs, max_hamming=3)
+    return dd.simhash_pairs_wide(docs)
 
 
 # The 3-of-6-block banding branch, generated from the SAME combo table
@@ -7358,7 +7336,7 @@ WHERE round(i.ni * 1.0 / (na.n + nb.n - i.ni), 4) >= 0.7
 )
 def dedup_simhash_adaptive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog.load_table(spark, sf_dir, "documents")
-    return dd.simhash_adaptive_pairs(docs, max_hamming=3, jaccard_threshold=0.7)
+    return dd.simhash_adaptive_pairs(docs)
 
 
 def _molodensky_oracle(p: dict) -> str:
@@ -7539,11 +7517,18 @@ def mm_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.jpeg_decode_stats(mm.media_jpeg_corpus(ids))
 
 
-def _pagerank_sql(iters: int = 3, n_nodes: int = 25) -> str:
+# PageRank over the 25-nation trade graph: damping, nodes, iterations
+# (graph_pagerank_nations and its oracle read the same three values)
+_PR_DAMPING = 0.85
+_PR_NODES = 25
+_PR_ITERS = 3
+
+
+def _pagerank_sql() -> str:
     """DuckDB replay of graph_pagerank_nations: the trade-graph edge
-    derivation plus ``iters`` chained rank iterations (same generated-
-    CTE discipline as _lloyd_sql)."""
-    d = 0.85
+    derivation plus ``_PR_ITERS`` chained rank iterations (same
+    generated-CTE discipline as _lloyd_sql)."""
+    d, n_nodes, iters = _PR_DAMPING, _PR_NODES, _PR_ITERS
     base = (1.0 - d) / n_nodes
     ctes = [
         """edges AS (
@@ -7587,7 +7572,7 @@ FROM r{iters} r JOIN nation n ON r.node = n.n_nationkey
 
 @register(
     "graph_pagerank_nations",
-    oracle=_pagerank_sql(iters=3, n_nodes=25),
+    oracle=_pagerank_sql(),
     tags=("graph", "pagerank", "iterative", "scale-shape"),
     bench=True,
     doc="Weighted PageRank over the nation-level trade graph — the "
@@ -7611,8 +7596,7 @@ FROM r{iters} r JOIN nation n ON r.node = n.n_nationkey
 def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.exact import fround
 
-    d = 0.85
-    n_nodes = 25
+    d, n_nodes = _PR_DAMPING, _PR_NODES
     base = (1.0 - d) / n_nodes
     li = catalog.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -7644,7 +7628,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank = nation.select(
         F.col("n_nationkey").alias("node"), F.lit(1.0 / n_nodes).alias("rank")
     )
-    for _ in range(3):
+    for _ in range(_PR_ITERS):
         contrib = (
             edges.join(F.broadcast(rank), edges.src == F.col("node"))
             .select(
@@ -7849,7 +7833,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted-index form re-derives the index signatures and the
     # x500 stage split measured that double scan dominating the cell)
     return incremental_minhash_pairs(
-        docs, threshold=0.8, new_pred=lambda c: c % 10 >= 8
+        docs, new_pred=lambda c: c % 10 >= 8
     )
 
 
@@ -8055,6 +8039,13 @@ def text_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+from .operators import pq  # noqa: E402
+
+# the PQ oracles' subvector width and subspace list, from pq's settings
+_SUBD = sim.DIM // pq.PQ_M
+_SUBSPACES = ", ".join(str(i) for i in range(pq.PQ_M))
+
+
 @register(
     "sim_pq_topk",
     oracle=f"""WITH {_EMB_CTE.strip()},
@@ -8065,10 +8056,10 @@ b AS (
 ),
 sub AS (
     SELECT vec_id, label, s.s,
-           nv[s.s * 16 + 1 : s.s * 16 + 16] AS sv
-    FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS s) s(s)
+           nv[s.s * {_SUBD} + 1 : s.s * {_SUBD} + {_SUBD}] AS sv
+    FROM b CROSS JOIN (SELECT unnest([{_SUBSPACES}]) AS s) s(s)
 ),
-cb AS (SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < 16),
+cb AS (SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < {pq.PQ_KS}),
 enc AS (
     SELECT vec_id, s, cid AS code FROM (
         SELECT sub.vec_id, sub.s, cb.cid,
@@ -8097,14 +8088,14 @@ approx AS (
 ),
 short AS (
     SELECT vec_id, approx_score FROM approx
-    ORDER BY approx_score DESC, vec_id ASC LIMIT 50
+    ORDER BY approx_score DESC, vec_id ASC LIMIT {pq.PQ_RERANK}
 ),
 qf AS (SELECT nv AS qv FROM b WHERE vec_id = 0)
 SELECT s.vec_id, b.label, s.approx_score,
        round(list_inner_product(b.nv, qf.qv), 6) AS cosine_sim
 FROM short s JOIN b USING (vec_id), qf
 ORDER BY cosine_sim DESC, s.vec_id ASC
-LIMIT 10
+LIMIT {pq.PQ_K}
 """,
     tags=("similarity", "ann", "pq", "topk"),
     bench=True,
@@ -8126,21 +8117,19 @@ LIMIT 10
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import pq_topk
 
-    return pq_topk(
-        catalog.load_table(spark, sf_dir, "embeddings"), query_vec_id=0
-    )
+    return pq_topk(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
     "sim_ivfpq_topk",
     oracle=f"""WITH {_EMB_CTE.strip()},
-{_ivf_assign_ctes(" WHERE vec_id < 8")},
-{_ivf_members_ctes(2)},
+{_ivf_assign_ctes(f" WHERE vec_id < {sim.N_CENTROIDS}")},
+{_ivf_members_ctes(sim.NPROBE)},
 sub AS (
-    SELECT vec_id, s.s, nv[s.s * 16 + 1 : s.s * 16 + 16] AS sv
-    FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS s) s(s)
+    SELECT vec_id, s.s, nv[s.s * {_SUBD} + 1 : s.s * {_SUBD} + {_SUBD}] AS sv
+    FROM b CROSS JOIN (SELECT unnest([{_SUBSPACES}]) AS s) s(s)
 ),
-cb AS (SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < 16),
+cb AS (SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < {pq.PQ_KS}),
 enc AS (
     SELECT vec_id, s, cid AS code FROM (
         SELECT sub.vec_id, sub.s, cb.cid,
@@ -8161,7 +8150,7 @@ lut AS (
                 AS BIGINT) AS ip_u
     FROM cb JOIN qs USING (s)
 ),
-{_ivfpq_rerank(50, 10)}""",
+{_ivfpq_rerank(pq.PQ_RERANK, pq.PQ_K)}""",
     tags=("similarity", "ann", "ivf", "pq", "topk"),
     bench=True,
     doc="IVF-PQ composition (operators/pq.py::ivfpq_topk) — the "
@@ -8182,9 +8171,7 @@ lut AS (
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import ivfpq_topk
 
-    return ivfpq_topk(
-        catalog.load_table(spark, sf_dir, "embeddings"), query_vec_id=0
-    )
+    return ivfpq_topk(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -8257,7 +8244,7 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars")
     )
     pairs = incremental_minhash_pairs(
-        docs, threshold=0.8, new_pred=lambda c: c % 10 >= 8
+        docs, new_pred=lambda c: c % 10 >= 8
     )
     new_a = F.col("doc_a") % 10 >= 8
     new_b = F.col("doc_b") % 10 >= 8
@@ -8272,10 +8259,9 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_train_chain(
-    iters: int, ks: int, subd: int
-) -> tuple[list[str], str]:
-    """The per-subspace Lloyd training rounds as CTE fragments —
+def _pq_train_chain() -> tuple[list[str], str]:
+    """The per-subspace Lloyd training rounds (``sim.LLOYD_ITERS`` of
+    them, from the first ``pq.PQ_KS`` vectors' subvectors) as CTE fragments —
     assumes a ``sub(vec_id, s, sv)`` CTE exists.  Returns (ctes,
     final_codebook_name); shared by the sim_pq_lloyd oracle and the
     trained-codebook IVF-PQ oracle so the training replay has one
@@ -8285,9 +8271,10 @@ def _pq_train_chain(
         " - 2 * list_inner_product({v}.sv, c.cv)"
         " + list_inner_product(c.cv, c.cv), 6)"
     )
+    iters = sim.LLOYD_ITERS
     ctes = [
         f"""p0 AS (
-    SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < {ks}
+    SELECT s, vec_id AS cid, sv AS cv FROM sub WHERE vec_id < {pq.PQ_KS}
 )"""
     ]
     d = d_expr.format(v="sub")
@@ -8305,7 +8292,7 @@ def _pq_train_chain(
     SELECT s, cid, gs.i AS pos,
            round(CAST(sum(CAST(sv[gs.i] AS DECIMAL(30,8))) AS DOUBLE)
                  / count(*), 8) AS mv
-    FROM pa{i}, generate_series(1, {subd}) gs(i)
+    FROM pa{i}, generate_series(1, {_SUBD}) gs(i)
     GROUP BY s, cid, gs.i
 )""")
         ctes.append(f"""p{i + 1} AS MATERIALIZED (
@@ -8314,11 +8301,10 @@ def _pq_train_chain(
     return ctes, f"p{iters}"
 
 
-def _pq_lloyd_sql(iters: int = 2, m: int = 4, ks: int = 16, dim: int = 64) -> str:
+def _pq_lloyd_sql() -> str:
     """DuckDB replay of pq.pq_lloyd_codebooks — per-subspace Lloyd
     rounds as chained CTEs (the _lloyd_ctes pattern with (s, cid)
     keys and subvector slices)."""
-    subd = dim // m
     d_expr = (
         "round(list_inner_product({v}.sv, {v}.sv)"
         " - 2 * list_inner_product({v}.sv, c.cv)"
@@ -8331,12 +8317,12 @@ def _pq_lloyd_sql(iters: int = 2, m: int = 4, ks: int = 16, dim: int = 64) -> st
     FROM emb
 )""",
         f"""sub AS MATERIALIZED (
-    SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
+    SELECT vec_id, s.s, nv[s.s * {_SUBD} + 1 : s.s * {_SUBD} + {_SUBD}] AS sv
     FROM b CROSS JOIN (
-        SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
+        SELECT unnest([{_SUBSPACES}]) AS s) s(s)
 )""",
     ]
-    train, _final = _pq_train_chain(iters, ks, subd)
+    train, final = _pq_train_chain()
     ctes.extend(train)
     d = d_expr.format(v="sub")
     ctes.append(f"""paf AS (
@@ -8345,7 +8331,7 @@ def _pq_lloyd_sql(iters: int = 2, m: int = 4, ks: int = 16, dim: int = 64) -> st
                row_number() OVER (
                    PARTITION BY sub.vec_id, sub.s
                    ORDER BY {d} ASC, c.cid ASC) AS rn
-        FROM sub JOIN p{iters} c USING (s)
+        FROM sub JOIN {final} c USING (s)
     ) t WHERE rn = 1
 )""")
     return (
@@ -8362,7 +8348,7 @@ FROM paf GROUP BY s, cid
 
 @register(
     "sim_pq_lloyd",
-    oracle=_pq_lloyd_sql(iters=2, m=4, ks=16, dim=64),
+    oracle=_pq_lloyd_sql(),
     tags=("similarity", "ann", "pq", "kmeans", "iterative", "scale-shape"),
     doc="Per-subspace Lloyd-TRAINED PQ codebooks (operators/pq.py::"
     "pq_lloyd_codebooks; Jegou et al. SIII train each subspace "
@@ -8382,39 +8368,27 @@ FROM paf GROUP BY s, cid
 def sim_pq_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import pq_lloyd_codebooks
 
-    return pq_lloyd_codebooks(
-        catalog.load_table(spark, sf_dir, "embeddings"), iters=2
-    )
+    return pq_lloyd_codebooks(catalog.load_table(spark, sf_dir, "embeddings"))
 
 
-def _ivfpq_trained_sql(
-    iters: int = 2,
-    m: int = 4,
-    ks: int = 16,
-    dim: int = 64,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    rerank: int = 50,
-    k: int = 10,
-) -> str:
+def _ivfpq_trained_sql() -> str:
     """Oracle for the TRAINED-quantizer IVF-PQ: the sim_ivfpq_topk
     composition with the seed ``cb`` CTE replaced by the full
     _pq_train_chain Lloyd replay — routing, encode, LUT and ADC all
     run against the trained table, value-exact in both engines."""
-    subd = dim // m
-    train, final = _pq_train_chain(iters, ks, subd)
+    train, final = _pq_train_chain()
     train_sql = ",\n".join(train)
     return f"""WITH {_EMB_CTE.strip()},
-{_ivf_assign_ctes(f" WHERE vec_id < {n_centroids}")},
-{_ivf_members_ctes(nprobe)},
+{_ivf_assign_ctes(f" WHERE vec_id < {sim.N_CENTROIDS}")},
+{_ivf_members_ctes(sim.NPROBE)},
 sub AS MATERIALIZED (
-    SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
+    SELECT vec_id, s.s, nv[s.s * {_SUBD} + 1 : s.s * {_SUBD} + {_SUBD}] AS sv
     FROM b CROSS JOIN (
-        SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
+        SELECT unnest([{_SUBSPACES}]) AS s) s(s)
 ),
 {train_sql},
 {_pq_encode_ctes("sub", final)},
-{_ivfpq_rerank(rerank, k)}"""
+{_ivfpq_rerank(pq.PQ_RERANK, pq.PQ_K)}"""
 
 
 @register(
@@ -8439,8 +8413,8 @@ def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pq import ivfpq_topk, pq_train_codebooks
 
     emb = catalog.load_table(spark, sf_dir, "embeddings")
-    trained = pq_train_codebooks(emb, iters=2)
-    return ivfpq_topk(emb, query_vec_id=0, codebooks=trained)
+    trained = pq_train_codebooks(emb)
+    return ivfpq_topk(emb, codebooks=trained)
 
 
 @register(
@@ -8475,23 +8449,13 @@ def sim_ivfpq_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     path = _roundtrip_path("ivfpq_index", sf_dir)
-    pq_index.ensure_ivfpq_index(emb, path, iters=2)
+    pq_index.ensure_ivfpq_index(emb, path)
     return pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     )
 
 
-def _ivfpq_add_sql(
-    index_where: str = "vec_id % 10 < 8",
-    iters: int = 2,
-    m: int = 4,
-    ks: int = 16,
-    dim: int = 64,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    rerank: int = 50,
-    k: int = 10,
-) -> str:
+def _ivfpq_add_sql(index_where: str = "vec_id % 10 < 8") -> str:
     """Oracle for the ADD-path index (_ivfpq_trained_sql with a frozen
     quantizer): Lloyd training and centroid seeding see ONLY the
     ``index_where`` subset — the state the index was built in — while
@@ -8499,24 +8463,23 @@ def _ivfpq_add_sql(
     what add_to_ivfpq_index's freeze-then-append produces.  The train
     chain's ``sub`` CTE is the index subset; ``sub_all`` carries every
     vector through encode."""
-    subd = dim // m
-    train, final = _pq_train_chain(iters, ks, subd)
+    train, final = _pq_train_chain()
     train_sql = ",\n".join(train)
-    cent_where = f"\n         WHERE vec_id < {n_centroids} AND {index_where}"
+    cent_where = f"\n         WHERE vec_id < {sim.N_CENTROIDS} AND {index_where}"
     return f"""WITH {_EMB_CTE.strip()},
 {_ivf_assign_ctes(cent_where)},
-{_ivf_members_ctes(nprobe)},
+{_ivf_members_ctes(sim.NPROBE)},
 sub_all AS MATERIALIZED (
-    SELECT vec_id, s.s, nv[s.s * {subd} + 1 : s.s * {subd} + {subd}] AS sv
+    SELECT vec_id, s.s, nv[s.s * {_SUBD} + 1 : s.s * {_SUBD} + {_SUBD}] AS sv
     FROM b CROSS JOIN (
-        SELECT unnest([{", ".join(str(i) for i in range(m))}]) AS s) s(s)
+        SELECT unnest([{_SUBSPACES}]) AS s) s(s)
 ),
 sub AS MATERIALIZED (
     SELECT sub_all.* FROM sub_all JOIN b USING (vec_id) WHERE {index_where}
 ),
 {train_sql},
 {_pq_encode_ctes("sub_all", final)},
-{_ivfpq_rerank(rerank, k)}"""
+{_ivfpq_rerank(pq.PQ_RERANK, pq.PQ_K)}"""
 
 
 @register(
@@ -8548,9 +8511,7 @@ def sim_ivfpq_index_add_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     path = _roundtrip_path("ivfpq_index_add", sf_dir)
-    pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path, iters=2
-    )
+    pq_index.ensure_added_ivfpq_index(emb, lambda c: c % 10 < 8, path)
     return pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     )
@@ -8594,7 +8555,6 @@ def sim_ivfpq_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda c: c % 10 >= 8,
         ],
         path,
-        iters=2,
         compact=True,
     )
     return pq_index.query_ivfpq_index(

@@ -56,14 +56,13 @@ def _h(*cols: Column | int, seed: int) -> Column:
     return F.abs(F.xxhash64(F.lit(seed), *parts))
 
 
-def gen_documents(
-    spark: SparkSession, n_docs: int, n_sources: int = 20, seed: int = 5
-) -> DataFrame:
+def gen_documents(spark: SparkSession, n_docs: int) -> DataFrame:
     """Documents with the dedup structure the sf corpora have: ids in
     the first 80% are originals (15-60 vocab words, a pure function of
     the id), the last 20% point at an earlier original — half verbatim
     (exact-dup tier), half with a trailing perturbation (near-dup tier,
-    high-but-not-1.0 Jaccard)."""
+    high-but-not-1.0 Jaccard); 20 sources."""
+    n_sources, seed = 20, 5
     n_orig = max(1, int(n_docs * 0.8))
     vocab = F.array(*[F.lit(w) for w in _VOCAB])
     base = spark.range(n_docs).select(F.col("id").alias("doc_id"))
@@ -95,22 +94,16 @@ def gen_documents(
     )
 
 
-def gen_embeddings(
-    spark: SparkSession,
-    n_vecs: int,
-    dim: int = 64,
-    n_labels: int | None = None,
-    seed: int = 7,
-) -> DataFrame:
-    """Label-clustered float vectors: v[i] = centroid(label)[i] + small
+def gen_embeddings(spark: SparkSession, n_vecs: int) -> DataFrame:
+    """Label-clustered 64-dim float vectors: v[i] = centroid(label)[i] + small
     per-row noise, so kNN/IVF bucketing sees real cluster structure
     (same-label vectors are mutual near-neighbors). The cluster COUNT
     scales with the corpus (~40 vectors per cluster, min 50 clusters)
     — a fixed cluster count at growing n would mean clusters of size
     n/k, which no bucketing scheme can block into sub-quadratic work
     and which no real corpus exhibits."""
-    if n_labels is None:
-        n_labels = max(50, n_vecs // 40)
+    dim, seed = 64, 7
+    n_labels = max(50, n_vecs // 40)
     base = spark.range(n_vecs).select(F.col("id").alias("vec_id"))
     label = (_h(F.col("vec_id"), 1, seed=seed) % n_labels).cast("int")
     tagged = base.select("vec_id", label.alias("label"))
@@ -124,19 +117,14 @@ def gen_embeddings(
     return tagged.select("vec_id", emb.alias("embedding"), "label")
 
 
-def gen_events(
-    spark: SparkSession,
-    n_events: int,
-    n_users: int | None = None,
-    seed: int = 11,
-) -> DataFrame:
+def gen_events(spark: SparkSession, n_events: int) -> DataFrame:
     """Event stream over a 30-day window; ``ts`` is int64 NANOSECONDS
     (the TESTDATA feed's parquet physical type) so the catalog's
     nanos-as-long conversion path runs unchanged. User count scales
     with the corpus (sf0.1 ratio: 1.5%), keeping per-user timeline
     density constant — the as-of join's cost driver."""
-    if n_users is None:
-        n_users = max(1, int(n_events * SF01_USERS / SF01_EVENTS))
+    seed = 11
+    n_users = max(1, int(n_events * SF01_USERS / SF01_EVENTS))
     start_us = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z in micros
     span_us = 30 * 86_400 * 1_000_000
     base = spark.range(n_events).select(F.col("id").alias("event_id"))
@@ -156,9 +144,7 @@ def gen_events(
     )
 
 
-def gen_trade_tables(
-    spark: SparkSession, multiplier: int, seed: int = 13
-) -> dict[str, DataFrame]:
+def gen_trade_tables(spark: SparkSession, multiplier: int) -> dict[str, DataFrame]:
     """The trade-graph slice of the star schema at ``multiplier`` x
     sf0.1 — exactly the columns graph_pagerank_nations's join chain
     reads (a real scan would column-prune to these regardless of how
@@ -168,6 +154,7 @@ def gen_trade_tables(
     looks like at any corpus size, so scaling stresses the edge
     DERIVATION joins and per-iteration edge shuffle, not the rank
     vector."""
+    seed = 13
     n_li = SF01_LINEITEM * multiplier
     n_ord = SF01_ORDERS * multiplier
     n_cust = SF01_CUSTOMER * multiplier

@@ -9,12 +9,19 @@ this removes the single largest cost of the lineitem⋈orders class of
 joins.
 
 (Local caveat: bucketing requires ``saveAsTable`` — files carry the
-bucket spec through the catalog, not the path.)
+bucket spec through the catalog, not the path. Each table is saved
+with an explicit location under the fixture root, so neither the data
+nor the plan depends on the working directory.)
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .catalog import FIXTURE_ROOT
 
 
 def write_bucketed(
@@ -22,22 +29,20 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 16,
-    sort_col: str | None = None,
 ) -> None:
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a dropped managed table can leave its location behind after a
-    # failed write; clear it so saveAsTable doesn't refuse.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[len("file:") :]
-    if warehouse:
-        import shutil
-
-        shutil.rmtree(f"{warehouse}/{table.lower()}", ignore_errors=True)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    writer = writer.sortBy(sort_col or bucket_col)
-    writer.format("parquet").saveAsTable(table)
+    """Save ``df`` as ``table`` at ``FIXTURE_ROOT/<table>``, bucketed
+    and sorted by ``bucket_col``; the location is cleared first."""
+    path = os.path.join(FIXTURE_ROOT, table.lower())
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(path, ignore_errors=True)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .option("path", path)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def cobucketed_join(

@@ -17,8 +17,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Where builders write the files and tables their plans read back
+# (CSV fixtures, roundtrip sinks, bucketed tables, persisted indexes).
+FIXTURE_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_fixtures")
 
 TABLES = (
     "region",

@@ -36,12 +36,12 @@ _BOM_TO_ENCODING = (
 )
 
 
-def sniff_encoding(path: str, sample_bytes: int = 64 * 1024) -> str:
-    """S1 — bounded-prefix encoding detection. Uses chardet when
+def sniff_encoding(path: str) -> str:
+    """S1 — bounded-prefix (64 KiB) encoding detection. Uses chardet when
     available (the reference's exact dependency); falls back to
     BOM + utf-8-vs-latin-1 probing."""
     with open(path, "rb") as f:
-        head = f.read(sample_bytes)
+        head = f.read(64 * 1024)
     for bom, enc in _BOM_TO_ENCODING:
         if head.startswith(bom):
             return enc
@@ -60,23 +60,16 @@ def sniff_encoding(path: str, sample_bytes: int = 64 * 1024) -> str:
         return "ISO-8859-1"
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    encoding: str | None = None,
-    header: bool = True,
-    infer_schema: bool = True,
-) -> DataFrame:
-    """S1 — CSV scan with encoding sniff
-    (health_center_lab__data_upload_views.py:55-70 and two siblings).
-    Schema-on-read like the reference: whatever columns arrive are
-    kept; the tolerant alias resolution happens downstream
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """S1 — CSV scan with a header row, inferred types and a sniffed
+    encoding (health_center_lab__data_upload_views.py:55-70 and two
+    siblings). Schema-on-read like the reference: whatever columns
+    arrive are kept; the tolerant alias resolution happens downstream
     (sources/semantic.py-style coalesce chains)."""
-    enc = encoding or sniff_encoding(path)
     return (
-        spark.read.option("header", str(header).lower())
-        .option("inferSchema", str(infer_schema).lower())
-        .option("encoding", enc)
+        spark.read.option("header", "true")
+        .option("inferSchema", "true")
+        .option("encoding", sniff_encoding(path))
         .csv(path)
     )
 
@@ -201,9 +194,10 @@ def read_geotiff_polygons(spark: SparkSession, path: str) -> DataFrame:
     return px_rows.select(wkt.alias("geometry"), F.col("pixel_value").alias("value"))
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S11 — JSON/GeoJSON-lines export (batch_processor.py:497-556)."""
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    """S11 — JSON/GeoJSON-lines export (batch_processor.py:497-556),
+    overwriting ``path``."""
+    df.write.mode("overwrite").json(path)
 
 
 def write_mongo(df: DataFrame, uri: str, collection: str) -> None:

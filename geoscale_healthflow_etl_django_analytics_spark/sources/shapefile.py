@@ -217,15 +217,14 @@ def write_shp_bytes(shapes: list[list[list[tuple[float, float]]]]) -> bytes:
     return struct.pack(">i", 9994) + b"\x00" * 96 + records
 
 
-def write_dbf_bytes(
-    field_names: list[str], rows: list[list[str] | None], field_len: int = 20
-) -> bytes:
+def write_dbf_bytes(field_names: list[str], rows: list[list[str] | None]) -> bytes:
     """Inverse of :func:`parse_dbf_bytes` for character fields; a None
     row is written as a deleted record ('*' flag, blank body).
 
-    Values must fit ``field_len`` ASCII bytes — an over-long or
+    Values must fit the 20-byte ASCII fields — an over-long or
     non-ASCII value raises up front instead of silently misaligning
     every subsequent fixed-width record on parse-back."""
+    field_len = 20
     for row in rows:
         for v in row or ():
             try:

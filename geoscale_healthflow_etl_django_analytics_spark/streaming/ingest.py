@@ -55,11 +55,7 @@ def _store_read(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
         return spark.createDataFrame([], like.schema)
 
 
-def accept_batch(
-    batch: DataFrame,
-    index_docs: DataFrame,
-    threshold: float = 0.8,
-) -> DataFrame:
+def accept_batch(batch: DataFrame, index_docs: DataFrame) -> DataFrame:
     """The per-micro-batch ACCEPT decision — the batch-query gate with
     ``index_docs`` standing in for (original index ∪ previously seen
     stream docs).  Returns accepted (doc_id, n_chars) rows."""
@@ -83,9 +79,7 @@ def accept_batch(
             batch.select(*_DOC_COLS).withColumn("is_new", F.lit(True))
         )
     )
-    pairs = incremental_minhash_pairs(
-        tagged, new_col="is_new", threshold=threshold
-    )
+    pairs = incremental_minhash_pairs(tagged)
     # victim rule, identical to dedup_incremental_ingest: both-new →
     # larger id loses (batch_batch pairs have doc_a < doc_b, so doc_b
     # drops); new×index → the new doc loses.  A batch_index pair
@@ -111,10 +105,9 @@ def drain_parquet_stream(
     source_dir: str,
     checkpoint: str,
     per_batch,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Drain a parquet file source with an AvailableNow trigger
-    (``max_files_per_trigger`` files per micro-batch; drains everything
+    (one file per micro-batch; drains everything
     then stops, the ev_* replay pattern), calling
     ``per_batch(batch_df, batch_id)`` in ``foreachBatch``.  Blocks until
     the drain ends."""
@@ -125,7 +118,7 @@ def drain_parquet_stream(
     )
     q = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(source_dir)
         .writeStream.foreachBatch(per_batch)
@@ -141,8 +134,6 @@ def run_streaming_ingest(
     batch_source_dir: str,
     index_docs: DataFrame,
     work_dir: str,
-    threshold: float = 0.8,
-    max_files_per_trigger: int = 1,
 ) -> str:
     """Run the ACCEPT gate as a Structured Streaming query over a
     parquet file source (:func:`drain_parquet_stream`).  Returns the
@@ -162,7 +153,7 @@ def run_streaming_ingest(
             b.sparkSession, seen_dir, index_docs.select(*_DOC_COLS)
         )
         index = index_docs.select(*_DOC_COLS).unionByName(prior)
-        acc = accept_batch(b, index, threshold=threshold)
+        acc = accept_batch(b, index)
         acc.write.mode("overwrite").parquet(
             os.path.join(accepted_dir, f"batch_id={batch_id}")
         )
@@ -172,10 +163,6 @@ def run_streaming_ingest(
         )
 
     drain_parquet_stream(
-        spark,
-        batch_source_dir,
-        os.path.join(work_dir, "checkpoint"),
-        _gate,
-        max_files_per_trigger,
+        spark, batch_source_dir, os.path.join(work_dir, "checkpoint"), _gate
     )
     return accepted_dir

@@ -103,11 +103,12 @@ class ProgressTrackerListener(StreamingQueryListener):
             d = self.docs.get(str(qid))
             return dict(d) if d else None
 
-    def wait_for(self, qid: str, predicate, timeout_s: float = 30.0) -> dict:
-        """Poll until predicate(doc) holds (listener bus is async)."""
+    def wait_for(self, qid: str, predicate) -> dict:
+        """Poll up to 30 s until predicate(doc) holds (listener bus is
+        async)."""
         import time
 
-        deadline = time.time() + timeout_s
+        deadline = time.time() + 30.0
         while time.time() < deadline:
             d = self.doc(qid)
             if d is not None and predicate(d):

@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cms_exact import CMS_DEPTH, CMS_WIDTH, cms_sketch
+from ..functions.cms_exact import cms_sketch
 from ..functions.hll import hll_registers
 from ..functions.text import tokens
 from .ingest import drain_parquet_stream
@@ -62,56 +62,35 @@ def _drain_token_state(
     work_dir: str,
     store: str,
     checkpoint: str,
-    text_col: str,
     state,
-    max_files_per_trigger: int,
 ) -> str:
     """Drain a parquet document stream; per micro-batch, lower-case
-    tokenize ``text_col``, reduce the tokens with ``state`` and
+    tokenize ``text``, reduce the tokens with ``state`` and
     overwrite the result under ``work_dir/store/batch_id=N``.  Returns
     the store path."""
     store_dir = os.path.join(work_dir, store)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+            F.explode(tokens(F.lower(F.col("text")))).alias("token")
         )
         state(toks).write.mode("overwrite").parquet(
             os.path.join(store_dir, f"batch_id={batch_id}")
         )
 
     drain_parquet_stream(
-        spark,
-        source_dir,
-        os.path.join(work_dir, checkpoint),
-        _write,
-        max_files_per_trigger,
+        spark, source_dir, os.path.join(work_dir, checkpoint), _write
     )
     return store_dir
 
 
-def run_streaming_cms(
-    spark: SparkSession,
-    source_dir: str,
-    work_dir: str,
-    text_col: str = "text",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    max_files_per_trigger: int = 1,
-) -> str:
+def run_streaming_cms(spark: SparkSession, source_dir: str, work_dir: str) -> str:
     """Drain a parquet document stream, appending one constant-size
     sketch row per micro-batch under ``work_dir/sketches``.  Returns
     the sketch-store path; ``merge_sketches(spark.read.parquet(path))``
     is the corpus sketch."""
     return _drain_token_state(
-        spark,
-        source_dir,
-        work_dir,
-        "sketches",
-        "checkpoint",
-        text_col,
-        lambda toks: cms_sketch(toks, depth=depth, width=width),
-        max_files_per_trigger,
+        spark, source_dir, work_dir, "sketches", "checkpoint", cms_sketch
     )
 
 
@@ -124,13 +103,7 @@ def merge_hll_registers(per_batch: DataFrame) -> DataFrame:
     return per_batch.groupBy("j").agg(F.max("mj").alias("mj"))
 
 
-def run_streaming_hll(
-    spark: SparkSession,
-    source_dir: str,
-    work_dir: str,
-    text_col: str = "text",
-    max_files_per_trigger: int = 1,
-) -> str:
+def run_streaming_hll(spark: SparkSession, source_dir: str, work_dir: str) -> str:
     """Drain a parquet document stream, appending one <= HLL_M-row
     register table per micro-batch under ``work_dir/hll`` — the
     streaming distinct-token count: a year of micro-batches is still
@@ -138,12 +111,5 @@ def run_streaming_hll(
     ``hll_summary(merge_hll_registers(read(path)))`` at any moment,
     with no distinct-token state anywhere."""
     return _drain_token_state(
-        spark,
-        source_dir,
-        work_dir,
-        "hll",
-        "hll_checkpoint",
-        text_col,
-        hll_registers,
-        max_files_per_trigger,
+        spark, source_dir, work_dir, "hll", "hll_checkpoint", hll_registers
     )

@@ -59,20 +59,17 @@ def read_event_stream(
     return reader.parquet(path).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling event-time window per event_type: count + value sum.
-    Watermark bounds state so late data beyond it is dropped —
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window per event_type: count + value
+    sum. A 2-hour watermark bounds state so late data beyond it is
+    dropped —
     the correctness/retention trade the reference's timeout+partial-
     results hack (§2.10) approximated without semantics."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+        src = events.withWatermark("ts", "2 hours")
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             exact_sum(F.col("value"), 2).alias("value_sum"),
@@ -86,30 +83,25 @@ def tumbling_counts(
     )
 
 
-def sliding_value_avg(
-    events: DataFrame,
-    window: str = "30 minutes",
-    slide: str = "15 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding window global value average (each event contributes to
-    window/slide overlapping windows)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def sliding_value_avg(events: DataFrame) -> DataFrame:
+    """Sliding window global value average over 30-minute windows every
+    15 minutes (each event contributes to two overlapping windows),
+    1-hour watermark."""
+    src = events.withWatermark("ts", "1 hour") if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window, slide).alias("w"))
+        src.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"), exact_sum(F.col("value"), 2).alias("value_sum"))
         .select(F.col("w.start").alias("w_start"), "n_events", "value_sum")
     )
 
 
-def user_sessions(
-    events: DataFrame, gap: str = "5 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Gap-based session windows per user: a session closes after
-    ``gap`` of inactivity; end = last event + gap."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def user_sessions(events: DataFrame) -> DataFrame:
+    """Gap-based session windows per user: a session closes after 5
+    minutes of inactivity; end = last event + 5 minutes (1-hour
+    watermark)."""
+    src = events.withWatermark("ts", "1 hour") if events.isStreaming else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        src.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), exact_sum(F.col("value"), 2).alias("value_sum"))
         .select(
             "user_id",
@@ -273,12 +265,10 @@ def dedup_by_id(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 def purchase_signup_interval_join(
     purchases: DataFrame,
     signups: DataFrame,
-    watermark: str = "2 hours",
-    max_gap: str = "30 days",
 ) -> DataFrame:
     """Stream-stream INTERVAL join: every purchase paired with every
-    signup of the same user in [purchase_ts - max_gap, purchase_ts].
-    Both sides carry watermarks and the join condition bounds event
+    signup of the same user in [purchase_ts - 30 days, purchase_ts].
+    Both sides carry 2-hour watermarks and the join condition bounds event
     time in both directions — exactly what Structured Streaming needs
     to evict join state (an unbounded-time condition would hold every
     row forever). Batch inputs run the identical join, which is what
@@ -290,13 +280,13 @@ def purchase_signup_interval_join(
         F.col("value").alias("signup_value"),
     )
     if purchases.isStreaming:
-        p = p.withWatermark("ts", watermark)
+        p = p.withWatermark("ts", "2 hours")
     if signups.isStreaming:
-        s = s.withWatermark("signup_ts", watermark)
+        s = s.withWatermark("signup_ts", "2 hours")
     return p.join(
         s,
         (F.col("user_id") == F.col("s_user"))
         & (F.col("signup_ts") <= F.col("ts"))
-        & (F.col("ts") <= F.col("signup_ts") + F.expr(f"INTERVAL {max_gap}")),
+        & (F.col("ts") <= F.col("signup_ts") + F.expr("INTERVAL 30 days")),
         "inner",
     ).drop("s_user")

@@ -28,7 +28,7 @@ def _separable_corpus(spark):
 def test_classifier_learns_separable_labels(spark):
     docs = _separable_corpus(spark)
     row = cls.classifier_summary(
-        docs, F.col("doc_id") < 100, iters=8, lr=4.0
+        docs, F.col("doc_id") < 100, iters=8
     ).collect()[0]
     assert row["train_accuracy"] == 1.0
     assert row["n_selected"] == row["n_positive"] == 20
@@ -57,7 +57,7 @@ def test_fround_py_matches_engine_fround(spark):
         fround(F.col("x"), 6).alias("r")
     )
     engine = [r["r"] for r in df.collect()]
-    driver = [cls._fround_py(v, 6) for v in vals]
+    driver = [cls._fround_py(v) for v in vals]
     assert engine == driver
 
 

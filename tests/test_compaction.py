@@ -25,7 +25,7 @@ def test_ivfpq_compaction_preserves_queries(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "idx")
     pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path, iters=2
+        emb, lambda c: c % 10 < 8, path
     )
     q = lambda: [  # noqa: E731
         tuple(r)
@@ -114,21 +114,21 @@ def test_ivfpq_lifecycle_multi_add_compaction_bit_identity(spark, tmp_path):
     # uncompacted two-add reference
     ref = str(tmp_path / "ref")
     pq_index.ensure_ivfpq_index_lifecycle(
-        emb, idx, [b1, b2], ref, iters=2, compact=False
+        emb, idx, [b1, b2], ref, compact=False
     )
     ref_rows = q(ref)
 
     # single combined add (batching independence)
     one = str(tmp_path / "one")
     pq_index.ensure_ivfpq_index_lifecycle(
-        emb, idx, [lambda c: c % 10 >= 6], one, iters=2, compact=False
+        emb, idx, [lambda c: c % 10 >= 6], one, compact=False
     )
     assert q(one) == ref_rows
 
     # the registered form: two adds + compaction
     path = str(tmp_path / "life")
     pq_index.ensure_ivfpq_index_lifecycle(
-        emb, idx, [b1, b2], path, iters=2, compact=True
+        emb, idx, [b1, b2], path, compact=True
     )
     assert q(path) == ref_rows
     for sub in ("codes", "vectors"):
@@ -145,7 +145,7 @@ def test_ivfpq_lifecycle_multi_add_compaction_bit_identity(spark, tmp_path):
         for r in spark.read.parquet(os.path.join(path, "codes")).collect()
     }
     pq_index.ensure_ivfpq_index_lifecycle(
-        emb, idx, [b1, b2], path, iters=2, compact=True
+        emb, idx, [b1, b2], path, compact=True
     )
     assert {
         tuple(r)

@@ -106,11 +106,11 @@ def test_ivf_assignment_and_probe(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n = emb.count()
-    assign = sm.ivf_assignments(emb, n_centroids=8)
+    assign = sm.ivf_assignments(emb)
     assert assign.count() == n  # total, one list each
     assert assign.select("cid").distinct().count() <= 8
 
-    top = sm.ivf_topk(emb, query_vec_id=0, n_centroids=8, nprobe=2, k=5).collect()
+    top = sm.ivf_topk(emb, k=5).collect()
     assert len(top) == 5
     # scores descend, and every hit's list is one of the probed lists
     sims = [r.cosine_sim for r in top]
@@ -182,7 +182,7 @@ def test_ann_bucket_is_subset_of_bruteforce_ranking(spark):
     emb = load_table(spark, SF, "embeddings")
     brute = dd  # noqa: F841  (clarity)
     top_all = sim.cosine_topk(emb, 0, 50).collect()
-    top_bucket = sim.ann_bucketed_topk(emb, 0, 5).collect()
+    top_bucket = sim.ann_bucketed_topk(emb, 0).collect()
     all_scores = {r.vec_id: r.cosine_sim for r in top_all}
     for r in top_bucket:
         if r.vec_id in all_scores:
@@ -202,7 +202,7 @@ def test_bucketed_index_partition_pruning(spark):
     try:
         sim.write_bucketed_index(emb, f"{d}/idx")
         qvec = [float(x) for x in emb.first().embedding]
-        res = sim.query_bucketed_index(spark, f"{d}/idx", qvec, k=5)
+        res = sim.query_bucketed_index(spark, f"{d}/idx", qvec)
         rows = res.collect()
         assert 0 < len(rows) <= 5
         plan = pa.formatted_plan(res)
@@ -242,7 +242,7 @@ def test_knn_adaptive_bucket_count_scales(spark):
     # semantics stay fixed at gate scale: adaptive result == historical
     # fixed-4-bit result on a small corpus
     docs = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    got = sim.knn_join_adaptive(docs, k=3)
+    got = sim.knn_join_adaptive(docs)
     legacy_bucketed = docs.select(
         "vec_id", F.col("embedding"), sign_bucket(F.col("embedding"), 4).alias("bucket")
     )
@@ -327,7 +327,7 @@ def test_substring_spans_merge_and_positions(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: (r.span_start, r.span_end, r.dup_windows)
-        for r in dd.repeated_substring_spans(df, w=10).collect()
+        for r in dd.repeated_substring_spans(df).collect()
     }
     assert out == {1: (3, 14, 3), 2: (1, 12, 3)}
 
@@ -349,7 +349,7 @@ def test_remove_repeated_spans_cuts_exact_ranges(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: (r.n_spans, r.n_tokens, r.removed_tokens, r.clean_text)
-        for r in dd.remove_repeated_spans(df, w=10).collect()
+        for r in dd.remove_repeated_spans(df).collect()
     }
     assert out[1] == (1, 17, 12, "a b tail1 tail2 tail3")
     assert out[2] == (1, 16, 12, "other trailing words here")
@@ -571,7 +571,7 @@ def test_pruned_assignment_vacuous_super_equals_flat(spark):
     flat = {(r.vec_id, r.cid, r.sim)
             for r in lloyd_assignments(emb, 8, 2).collect()}
     vac = {(r.vec_id, r.cid, r.sim)
-           for r in lloyd_assignments_pruned(emb, 8, 2, n_super=8).collect()}
+           for r in lloyd_assignments_pruned(emb, 8, n_super=8).collect()}
     assert flat == vac and len(flat) == 500
 
 
@@ -609,7 +609,7 @@ def test_probe_assignment_vacuous_equals_flat(spark):
             for r in lloyd_assignments(emb, 8, 2).collect()}
     vac = {(r.vec_id, r.cid, r.sim)
            for r in lloyd_assignments_probe(
-               emb, 8, 2, n_super=8, n_probe=8).collect()}
+               emb, 8, n_super=8, n_probe=8).collect()}
     assert flat == vac and len(flat) == 500
 
 

@@ -120,19 +120,19 @@ def test_dbf_roundtrip_property(fields, n_rows, data):
 
 
 def test_dbf_overlong_value_raises():
-    """A value longer than field_len would silently misalign every
+    """A value longer than the 20-byte field would silently misalign every
     subsequent fixed-width record — must raise up front."""
     import pytest
 
     with pytest.raises(ValueError, match="exceeds field length"):
-        shp.write_dbf_bytes(["NAME"], [["x" * 21]], field_len=20)
+        shp.write_dbf_bytes(["NAME"], [["x" * 21]])
 
 
 def test_dbf_non_ascii_value_raises():
     import pytest
 
     with pytest.raises(ValueError, match="not ASCII"):
-        shp.write_dbf_bytes(["NAME"], [["café"]], field_len=20)
+        shp.write_dbf_bytes(["NAME"], [["café"]])
 
 
 @settings(max_examples=25, deadline=None)

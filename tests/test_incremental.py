@@ -136,7 +136,7 @@ def test_ingest_accept_invariants(spark):
     assert not (set(accepted_fps) & index_fps)
     assert len(accepted_fps) == len(set(accepted_fps))
 
-    for r in incremental_minhash_pairs(docs, threshold=0.8).collect():
+    for r in incremental_minhash_pairs(docs).collect():
         a, b = r["doc_a"], r["doc_b"]
         loser = (
             b
@@ -236,7 +236,7 @@ def test_incremental_split_index_docs_never_change(spark, tmp_path):
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
 
     def index_rows(corpus, pred):
-        pairs = incremental_minhash_pairs(corpus, threshold=0.8, new_pred=pred)
+        pairs = incremental_minhash_pairs(corpus, new_pred=pred)
         out = splitting.incremental_leakage_safe_split(
             corpus, iclu, pairs, pred
         )
@@ -280,7 +280,7 @@ def test_indexed_split_tier_equals_stateless_tier(spark, tmp_path):
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
     stateless = splitting.incremental_leakage_safe_split(
         docs, iclu,
-        incremental_minhash_pairs(docs, threshold=0.8, new_pred=batch_pred),
+        incremental_minhash_pairs(docs, new_pred=batch_pred),
         batch_pred,
     )
     indexed = splitting.incremental_leakage_safe_split(
@@ -334,14 +334,14 @@ def test_fold_then_assign_equals_stateless_equivalent(spark, tmp_path):
     b1_assign = splitting.incremental_leakage_safe_split(
         visible,
         icomp,
-        incremental_minhash_pairs(visible, threshold=0.8, new_pred=b1_pred),
+        incremental_minhash_pairs(visible, new_pred=b1_pred),
         b1_pred,
     ).filter(b1_pred(F.col("doc_id")))
     equiv = icomp.unionByName(b1_assign)
     via_equiv = splitting.incremental_leakage_safe_split(
         docs,
         equiv,
-        incremental_minhash_pairs(docs, threshold=0.8, new_pred=b2_pred),
+        incremental_minhash_pairs(docs, new_pred=b2_pred),
         b2_pred,
     )
     assert {tuple(r) for r in via_fold.collect()} == {
@@ -552,13 +552,13 @@ def test_screened_and_unscreened_tagged_pairs_identical(spark, tmp_path):
     screened = {
         tuple(r)
         for r in incremental_minhash_pairs(
-            docs, threshold=0.8, tagged=screened_tagged
+            docs, tagged=screened_tagged
         ).collect()
     }
     unscreened = {
         tuple(r)
         for r in incremental_minhash_pairs(
-            docs, threshold=0.8, tagged=index_bands.unionByName(batch_bands)
+            docs, tagged=index_bands.unionByName(batch_bands)
         ).collect()
     }
     assert screened

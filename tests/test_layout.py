@@ -174,7 +174,7 @@ def test_export_shuffle_assignment_is_a_deterministic_permutation(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(400)], "doc_id long, text string"
     )
-    a = export_shuffle_assignment(docs, "doc_id", num_shards=8, seed="epoch0")
+    a = export_shuffle_assignment(docs, num_shards=8)
     rows = a.collect()
     assert len(rows) == 400
     # every input key exactly once — it IS a permutation
@@ -190,11 +190,11 @@ def test_export_shuffle_assignment_is_a_deterministic_permutation(spark):
         assert [r.pos for r in members] == list(range(1, len(members) + 1))
     # deterministic: a re-run is byte-identical
     again = {(r.doc_id, r.shard, r.pos) for r in
-             export_shuffle_assignment(docs, "doc_id", 8, "epoch0").collect()}
+             export_shuffle_assignment(docs, 8).collect()}
     assert again == {(r.doc_id, r.shard, r.pos) for r in rows}
     # a new seed is a genuinely different permutation of the same keys
     other = {(r.doc_id, r.shard, r.pos) for r in
-             export_shuffle_assignment(docs, "doc_id", 8, "epoch1").collect()}
+             export_shuffle_assignment(docs, 8, "epoch1").collect()}
     assert {t[0] for t in other} == set(range(400))
     assert other != again
 
@@ -209,7 +209,7 @@ def test_export_shuffle_single_exchange_plan(spark):
     docs = spark.createDataFrame(
         [(i, "x") for i in range(100)], "doc_id long, text string"
     )
-    plan = export_shuffle_assignment(docs, "doc_id")._jdf.queryExecution().executedPlan().toString()
+    plan = export_shuffle_assignment(docs)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert "hashpartitioning(shard" in plan, plan
     assert "rangepartitioning" not in plan, plan
@@ -226,7 +226,7 @@ def test_write_shuffled_shards_files_in_permutation_order(spark, tmp_path):
         [(i, f"text {i}") for i in range(300)], "doc_id long, text string"
     )
     path = str(tmp_path / "shards")
-    write_shuffled_shards(docs, path, "doc_id", num_shards=4, seed="epoch0")
+    write_shuffled_shards(docs, path, num_shards=4)
 
     import glob
 
@@ -234,7 +234,7 @@ def test_write_shuffled_shards_files_in_permutation_order(spark, tmp_path):
     assert len(shard_dirs) == 4
     expect = {
         (r.doc_id, r.shard): (r.h, r.pos)
-        for r in export_shuffle_assignment(docs, "doc_id", 4, "epoch0").collect()
+        for r in export_shuffle_assignment(docs, 4).collect()
     }
     seen = 0
     for d in shard_dirs:

@@ -54,8 +54,8 @@ def _build_jobs(spark, build) -> int:
     "name, build, jobs",
     [
         ("flat", lambda e: lloyd_assignments(e, 4, iters=2), 10),
-        ("pruned", lambda e: lloyd_assignments_pruned(e, 4, iters=2), 14),
-        ("probe", lambda e: lloyd_assignments_probe(e, 4, iters=2), 79),
+        ("pruned", lambda e: lloyd_assignments_pruned(e, 4), 14),
+        ("probe", lambda e: lloyd_assignments_probe(e, 4), 79),
         (
             "pq_train",
             lambda e: pq_train_codebooks(e, dim=DIM, m=2, ks=4, iters=2),

@@ -104,7 +104,7 @@ def test_chargram_closed_vocabulary_scores_every_token(spark):
     docs = spark.createDataFrame(
         [(1, "Hello, w0rld!"), (2, "a")], "doc_id long, text string"
     )
-    out = {r["doc_id"]: r for r in lm.chargram_lm_scores(docs, n=4).collect()}
+    out = {r["doc_id"]: r for r in lm.chargram_lm_scores(docs).collect()}
     # "hello," -> 6 chars -> 7 grams; "w0rld!" -> 6 chars -> 7 grams
     assert out[1]["n_chargrams"] == 14
     assert out[2]["n_chargrams"] == 2

@@ -179,9 +179,7 @@ def test_png_decode_stats_matches_pixel_function(spark):
     )
     out = {
         r["media_id"]: r
-        for r in mm.png_decode_resize_stats(
-            mm.media_png_corpus(ids), max_side=8
-        ).collect()
+        for r in mm.png_decode_resize_stats(mm.media_png_corpus(ids)).collect()
     }
     for mid in (0, 1, 7, 23, 100):
         w, h = mid % 12 + 2, mid % 9 + 2

@@ -44,7 +44,7 @@ def test_seed_vectors_reconstruct_exactly(spark):
     """For a seed vector the PQ reconstruction IS the vector, so its
     ADC score must equal its true cosine to micro-unit precision —
     pins the whole LUT/ADC arithmetic without tolerance fudging."""
-    hits = pq_topk(_emb(spark), query_vec_id=0, k=10).collect()
+    hits = pq_topk(_emb(spark)).collect()
     seed_hits = [r for r in hits if r["vec_id"] < PQ_KS]
     assert seed_hits, "expected at least one seed among top-10"
     for r in seed_hits:
@@ -56,7 +56,7 @@ def test_rerank_recall_against_brute_force(spark):
     of the true top-10 at the gate corpus (measured 0.6 with the
     deterministic seed codebooks; the bound is deliberately below
     the measurement, the pin is the mechanism working at all)."""
-    pq = {r["vec_id"] for r in pq_topk(_emb(spark), query_vec_id=0).collect()}
+    pq = {r["vec_id"] for r in pq_topk(_emb(spark)).collect()}
     ex = {
         r["vec_id"]
         for r in cosine_topk(_emb(spark), query_vec_id=0, k=10).collect()
@@ -81,7 +81,7 @@ def test_encode_plan_contract(spark):
 def test_shortlist_plan_is_take_ordered(spark):
     """The top-rerank cut must plan as TakeOrderedAndProject — never
     a full corpus sort."""
-    plan = pa.formatted_plan(pq_topk(_emb(spark), query_vec_id=0))
+    plan = pa.formatted_plan(pq_topk(_emb(spark)))
     assert "TakeOrderedAndProject" in plan, plan
 
 
@@ -109,9 +109,9 @@ def test_ivfpq_hits_come_from_probed_lists(spark):
 
     emb = _emb(spark)
     assign = {
-        r["vec_id"]: r["cid"] for r in ivf_assignments(emb, 8).collect()
+        r["vec_id"]: r["cid"] for r in ivf_assignments(emb).collect()
     }
-    hits = ivfpq_topk(emb, query_vec_id=0, nprobe=2).collect()
+    hits = ivfpq_topk(emb, nprobe=2).collect()
     probed_lists = {assign[r["vec_id"]] for r in hits}
     assert len(probed_lists) <= 2, probed_lists
 
@@ -209,9 +209,7 @@ def test_ivfpq_index_query_matches_inplan_chain(spark, tmp_path):
     got = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     ).collect()
-    want = ivfpq_topk(
-        emb, query_vec_id=0, codebooks=pq_train_codebooks(emb, iters=2)
-    ).collect()
+    want = ivfpq_topk(emb, codebooks=pq_train_codebooks(emb, iters=2)).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
@@ -300,14 +298,13 @@ def test_ivfpq_add_matches_frozen_inplan_chain(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "idx")
     pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path, iters=2
+        emb, lambda c: c % 10 < 8, path
     )
     got = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     ).collect()
     want = ivfpq_topk(
         emb,
-        query_vec_id=0,
         codebooks=pq_train_codebooks(
             emb.filter(F.col("vec_id") % 10 < 8), iters=2
         ),
@@ -324,7 +321,7 @@ def test_ivfpq_add_recall_over_grown_corpus(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "idx")
     pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path, iters=2
+        emb, lambda c: c % 10 < 8, path
     )
     got = {
         r["vec_id"]
@@ -348,7 +345,7 @@ def test_ivfpq_add_query_prunes_partitions(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "idx")
     pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path, iters=2
+        emb, lambda c: c % 10 < 8, path
     )
     df = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0

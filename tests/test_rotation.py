@@ -227,6 +227,20 @@ def test_dep_walk_resolves_package_init_relative_imports():
     assert f"{pkg}.sources.catalog" in deps, deps
 
 
+def test_functions_package_adds_no_siblings_to_closure():
+    """``from ..functions import text`` walks ``functions/__init__.py``;
+    that file re-exports nothing, so a query importing only
+    ``functions.text`` does not hash the other function modules."""
+    import __spark_entry__ as e
+    from geoscale_healthflow_etl_django_analytics_spark.registry import REGISTRY
+
+    pkg = "geoscale_healthflow_etl_django_analytics_spark"
+    deps = e.query_dep_modules(REGISTRY["text_lm_apply_pretrained"])
+    assert f"{pkg}.functions.text" in deps, deps
+    assert f"{pkg}.functions.cleaning" not in deps, deps
+    assert f"{pkg}.functions.vectors" not in deps, deps
+
+
 def test_never_checked_queries_outrank_expired_ones():
     """A query with NO row in any artifact sorts before one whose past
     green credit merely expired — new queries must reach the driver's

@@ -78,11 +78,7 @@ def test_streaming_equals_batch_multi_microbatch(spark, tmp_path):
     one-shot gate's accept set exactly."""
     index_docs, src = _setup(spark, tmp_path, n_files=4)
     out = run_streaming_ingest(
-        spark,
-        src,
-        index_docs,
-        os.path.join(str(tmp_path), "work"),
-        max_files_per_trigger=1,
+        spark, src, index_docs, os.path.join(str(tmp_path), "work")
     )
     got = {
         (r.doc_id, r.n_chars)

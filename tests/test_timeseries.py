@@ -22,9 +22,7 @@ def test_resample_interpolate_hand_case(spark):
     ).selectExpr("user_id", "cast(ts as timestamp_ntz) ts", "value")
     out = {
         (r.user_id, r.b): (r.v, r.observed)
-        for r in resample_interpolate(
-            df, "ts", "value", ["user_id"], 3600
-        ).collect()
+        for r in resample_interpolate(df, "ts", "value", ["user_id"]).collect()
     }
     base = [b for (u, b) in out if u == 1][0] // 1  # smallest bucket for key 1
     b0 = min(b for (u, b) in out if u == 1)

@@ -82,7 +82,7 @@ def main() -> None:
 
     def pairs_df():
         return splitting.incremental_pairs_vs_index(
-            docs, batch_pred, path, threshold=0.8
+            docs, batch_pred, path
         )
 
     a = _timed(pairs_df)
