@@ -266,6 +266,11 @@ def query_hash(spec: QuerySpec) -> str:
     return hashlib.md5("\n".join(parts).encode()).hexdigest()
 
 
+def _artifact_round(path: str) -> int:
+    m = re.search(r"_r(\d+)\.json$", path)
+    return int(m.group(1)) if m else -1
+
+
 def _correctness_artifacts() -> list[str]:
     """Correctness artifact paths sorted by PARSED round number.
 
@@ -274,12 +279,9 @@ def _correctness_artifacts() -> list[str]:
     would silently make every newest-artifact consumer treat r99 as
     newest forever after (ADVICE r7 #3).
     """
-    def _round(p: str) -> int:
-        m = re.search(r"_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
     return sorted(
-        glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json")), key=_round
+        glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json")),
+        key=_artifact_round,
     )
 
 
@@ -295,15 +297,10 @@ def _row_satisfactory(row: object) -> bool:
     return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
 
 
-def _artifact_green() -> set[str]:
-    """Query names with a satisfactory row in ANY past driver artifact.
-
-    "Satisfactory" means: a green oracle row (``err is None`` and
-    ``hash_match``), or — for queries registered without an oracle by
-    design — a recorded row count (``err == 'no_oracle'``), which is the
-    strongest check those can ever receive.
-    """
-    seen: set[str] = set()
+def _newest_green_round() -> dict[str, int]:
+    """Query name -> round of its newest satisfactory row
+    (:func:`_row_satisfactory`) in any past driver artifact."""
+    rounds: dict[str, int] = {}
     for path in _correctness_artifacts():
         try:
             with open(path) as fh:
@@ -312,8 +309,19 @@ def _artifact_green() -> set[str]:
             continue
         for name, row in rows.items():
             if _row_satisfactory(row):
-                seen.add(name)
-    return seen
+                rounds[name] = _artifact_round(path)
+    return rounds
+
+
+def _artifact_green() -> set[str]:
+    """Query names with a satisfactory row in ANY past driver artifact.
+
+    "Satisfactory" means: a green oracle row (``err is None`` and
+    ``hash_match``), or — for queries registered without an oracle by
+    design — a recorded row count (``err == 'no_oracle'``), which is the
+    strongest check those can ever receive.
+    """
+    return set(_newest_green_round())
 
 
 # Bump when query_hash()'s COVERAGE widens (what it hashes, not what the
@@ -535,14 +543,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     new, most urgent, since they have never seen the driver at all;
     (2) queries with a past green row whose credit expired under code
     edits — still covered by the local parity mirror, re-check when a
-    slot frees; (3) current-credit-valid queries. Within each tier the
-    registry's insertion order is preserved, so the listing stays
-    stable while unchecked queries rotate into the driver's 50-entry
-    snapshot window.
+    slot frees; (3) current-credit-valid queries. Within tiers (2) and
+    (3) the query whose newest satisfactory row is OLDEST comes first,
+    so every expired query rotates through the driver's 50-entry
+    snapshot window instead of the first 50 registered ones holding it
+    while edits keep expiring them; ties and tier (1) keep registry
+    order.
     """
     checked = _driver_checked()
-    ever = _artifact_green()
-    ordered = sorted(REGISTRY, key=lambda n: (n in checked, n in ever))
+    last = _newest_green_round()
+    ordered = sorted(
+        REGISTRY, key=lambda n: (n in checked, n in last, last.get(n, -1))
+    )
     return {name: REGISTRY[name].builder for name in ordered}
 
 

@@ -13,21 +13,24 @@ arXiv:1508.07909 — the subword-nmt training algorithm):
    (subword-nmt trains on a word-frequency dict for the same reason).
 2. Represent each word as a separator-joined symbol string seeded
    from its characters.
-3. ``n_merges`` (default ``N_MERGES``) rounds: count adjacent symbol
-   pairs weighted by word
-   frequency (one map-side-combinable groupBy over the vocab), take
-   the argmax pair with a deterministic (total DESC, a ASC, b ASC)
-   rank — the merge stays IN-PLAN as a one-row broadcast, no driver
-   collect — and apply it to every vocab word as ``MERGE_PASSES``
-   chained ``replace`` calls (JVM codegen; see MERGE SEMANTICS below).
+3. Up to ``n_merges`` (default ``N_MERGES``) rounds: count adjacent
+   symbol pairs weighted by word frequency (one groupBy over the
+   vocab), collect the argmax pair with a deterministic (total DESC,
+   a ASC, b ASC) rank — one 1-row ``first()``; the loop stops early
+   when no word has two symbols left — and apply it to every vocab
+   word as ``MERGE_PASSES`` chained ``replace`` calls (JVM codegen;
+   see MERGE SEMANTICS below).
 4. Per-doc stats come from joining the corpus words back to the
-   tokenized vocab — the vocab side is small, so AQE broadcasts it.
+   final vocab — the vocab side is small, so AQE broadcasts it.
 
-The driver loop builds plan DEPTH (one pair-count + one replace
-stage per merge, vocab frame localCheckpointed per round exactly
-like operators/similarity.py::lloyd_assignments' centroid frame),
-never shuffle width — the same iterative-algorithm shape as Lloyd,
-and value-oracle-able the same way: every stage is deterministic, so
+One loop (:func:`_train`) yields both the merge table
+(:func:`learn_merges`, the pretrained-vocab artifact) and the merged
+vocabulary (:func:`bpe_doc_stats`), so the two can never disagree.
+The vocab frame is one partition, localCheckpointed per round exactly
+like operators/similarity.py::lloyd_assignments' centroid frame, so a
+round's pair count is satisfied by SinglePartition and plans no
+Exchange — the same iterative-algorithm shape as Lloyd, and
+value-oracle-able the same way: every stage is deterministic, so
 DuckDB replays the identical merge table and the identical bounded
 replace sequence.
 
@@ -62,35 +65,6 @@ N_MERGES = 8
 MERGE_PASSES = 3
 
 
-class _vocab_loop_mode:
-    """Round-12 optimization (guide §1.2/§2.4) for the 8-round merge
-    loop: the loop runs on the WORD VOCABULARY, which is orders of
-    magnitude smaller than the corpus (61 rows at sf0.1; bounded by
-    the language's word inventory — ~10M rows ≈ a few hundred MB even
-    at 100 TB of text).  At that size every per-round exchange and
-    AQE replan is pure fixed overhead: measured 1.97 s -> 1.47 s for
-    the 8-round loop by (a) coalescing the vocab to ONE partition so
-    the pair-count aggregate's ClusteredDistribution is satisfied by
-    SinglePartition and no Exchange is inserted, and (b) turning AQE
-    off around the loop so each round is one single-stage job instead
-    of a replanned multi-stage query (either alone is neutral-to-
-    worse: coalesce(1) under AQE still replans, AQE-off at 32 shuffle
-    partitions spreads 61 rows over 32 tasks).  AQE is restored on
-    exit — the corpus-sized join AFTER the loop wants it.  The
-    single-partition bound is the standard BPE-trainer shape
-    (subword-nmt trains from a word-frequency dict on one node)."""
-
-    def __init__(self, df: DataFrame):
-        self._conf = df.sparkSession.conf
-
-    def __enter__(self):
-        self._prev = self._conf.get("spark.sql.adaptive.enabled")
-        self._conf.set("spark.sql.adaptive.enabled", "false")
-
-    def __exit__(self, *exc):
-        self._conf.set("spark.sql.adaptive.enabled", self._prev)
-
-
 def _sym_array(s: Column) -> Column:
     """Symbol string -> array of symbols (drops the sentinel empties)."""
     return F.filter(F.split(s, SEP), lambda x: x != "")
@@ -112,11 +86,15 @@ def _word_vocab(words: DataFrame) -> DataFrame:
 
 def _seed_vocab(docs: DataFrame) -> DataFrame:
     """(w, freq, s): the vocabulary with its characters as the seed
-    symbols — vocab-sized, ONE partition (see _vocab_loop_mode),
-    checkpointed: each round consumes it twice (pair count + apply)
-    and rounds chain, so unchecked lineage would re-execute the
+    symbols — checkpointed: each round consumes it twice (pair count +
+    apply) and rounds chain, so unchecked lineage would re-execute the
     corpus word extraction per consumer per round (the Lloyd lesson,
-    operators/similarity.py).  Call inside ``_vocab_loop_mode``."""
+    operators/similarity.py).  ONE partition: the vocabulary is orders
+    of magnitude smaller than the corpus (61 rows at sf0.1; ~10M rows
+    even at 100 TB of text), so a round is one single-stage job whose
+    pair-count aggregate inserts no Exchange (see _top_pair) — the
+    standard BPE-trainer shape (subword-nmt trains from a
+    word-frequency dict on one node)."""
     vocab = _word_vocab(_corpus_words(docs))
     # seed symbols = characters (filter guards the empty tail Java's
     # limit=-1 split appends; DuckDB mirrors with list_filter)
@@ -139,8 +117,12 @@ def _top_pair(v: DataFrame) -> DataFrame:
         F.slice(arr, 2, n - 1),
         lambda a, b: F.struct(a.alias("a"), b.alias("b")),
     )
+    # coalesce(1) states the vocab's one partition to the planner: a
+    # localCheckpoint taken under AQE reports unknown partitioning, and
+    # the aggregate would plan an Exchange over it
     return (
-        v.select("freq", F.explode(pairs).alias("p"))
+        v.coalesce(1)
+        .select("freq", F.explode(pairs).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.sum("freq").alias("total"))
         .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
@@ -159,46 +141,35 @@ def _merged(a: Column, b: Column) -> Column:
     return s_new
 
 
-def learn_merged_vocab(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
-    """(w, freq, s): the word vocabulary after ``n_merges`` learned
-    merges, ``s`` the separator-joined symbol string.  Each round's
-    winner stays in-plan as a one-row broadcast."""
-    with _vocab_loop_mode(docs):
-        v = _seed_vocab(docs)
-        for _ in range(n_merges):
-            v = (
-                v.crossJoin(F.broadcast(_top_pair(v)))
-                .select("w", "freq", _merged(F.col("a"), F.col("b")).alias("s"))
-                .localCheckpoint()
-            )
-    return v
+def _train(
+    docs: DataFrame, n_merges: int
+) -> tuple[list[tuple[str, str]], DataFrame]:
+    """The training loop: the learned merge table and the (w, freq, s)
+    vocabulary after it, ``s`` the separator-joined symbol string.
+    Each round's winner is collected (ONE 1-row ``first()`` per round
+    — a merge table is a driver artifact by definition: production
+    persists merges.txt and ships it to every worker, so the
+    n_merges-row collect is the contract, not a scale hazard)."""
+    merges: list[tuple[str, str]] = []
+    v = _seed_vocab(docs)
+    for _ in range(n_merges):
+        top = _top_pair(v).first()
+        if top is None:  # vocabulary fully merged — no pairs left
+            break
+        a, b = top["a"], top["b"]
+        merges.append((a, b))
+        v = v.select(
+            "w", "freq", _merged(F.lit(a), F.lit(b)).alias("s")
+        ).localCheckpoint()
+    return merges, v
 
 
 def learn_merges(
     docs: DataFrame, n_merges: int = N_MERGES
 ) -> list[tuple[str, str]]:
     """The learned merge TABLE as a driver-side list — the pretrained-
-    vocab extraction path.  Identical training loop to
-    :func:`learn_merged_vocab` (same pair counts, same deterministic
-    (total DESC, a, b) argmax, same bounded replace application), but
-    each round's winner is collected (ONE 1-row ``first()`` per round
-    — a pretrained vocabulary is a driver artifact by definition:
-    production persists merges.txt and ships it to every worker, so
-    the n_merges-row collect is the contract, not a scale hazard).
-    """
-    merges: list[tuple[str, str]] = []
-    with _vocab_loop_mode(docs):
-        v = _seed_vocab(docs)
-        for _ in range(n_merges):
-            top = _top_pair(v).first()
-            if top is None:  # vocabulary fully merged — no pairs left
-                break
-            a, b = top["a"], top["b"]
-            merges.append((a, b))
-            v = v.select(
-                "w", "freq", _merged(F.lit(a), F.lit(b)).alias("s")
-            ).localCheckpoint()
-    return merges
+    vocab extraction path (:func:`_train`)."""
+    return _train(docs, n_merges)[0]
 
 
 def generate_pretrained_merges(n_merges: int) -> list[tuple[str, str]]:
@@ -362,6 +333,6 @@ def bpe_doc_stats(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     pre-tokenizes to zero words carry no token budget and are absent
     (inner join), mirrored by the oracle."""
     words = _corpus_words(docs)
-    v = learn_merged_vocab(docs, n_merges)
+    v = _train(docs, n_merges)[1]
     per_word = v.select("w", F.size(_sym_array(F.col("s"))).alias("n_tok"))
     return _doc_stats(words, per_word)

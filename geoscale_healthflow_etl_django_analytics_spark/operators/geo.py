@@ -98,8 +98,8 @@ def synth_polygons(nation: DataFrame) -> DataFrame:
     )
 
 
-def synth_polygons_many(nation: DataFrame, per_nation: int = 10) -> DataFrame:
-    """Raster-bench polygon corpus: ``per_nation`` deterministic
+def synth_polygons_many(nation: DataFrame) -> DataFrame:
+    """Raster-bench polygon corpus: 10 deterministic
     rectangles per nation spread over a ~1000x600 model-space domain
     (every box fits inside pixel_grid(nx=1000, ny=600)). Used by the
     at-scale form of J6 so the binned range join is measured against a
@@ -107,9 +107,9 @@ def synth_polygons_many(nation: DataFrame, per_nation: int = 10) -> DataFrame:
     df = nation.select(
         "n_nationkey",
         "n_name",
-        F.explode(F.sequence(F.lit(0), F.lit(per_nation - 1))).alias("s"),
+        F.explode(F.sequence(F.lit(0), F.lit(9))).alias("s"),
     )
-    pid = F.col("n_nationkey") * per_nation + F.col("s")
+    pid = F.col("n_nationkey") * 10 + F.col("s")
     x0 = (pid * 37 % 960).cast("double")
     y0 = (pid * 53 % 560).cast("double")
     x1 = x0 + 8.0 + (pid % 25).cast("double")
@@ -677,10 +677,10 @@ def diagnose_crs_overlap(
     return None
 
 
-def binned_zonal_stats(polys: DataFrame, pixels: DataFrame) -> DataFrame:
+def binned_zonal_join(polys: DataFrame, pixels: DataFrame) -> DataFrame:
     """J6 at raster scale — the grid-binned RANGE JOIN: both sides are
-    keyed by grid cell so the pixel-in-bbox theta join becomes an
-    EQUI-join on (cx, cy) plus a residual predicate.
+    keyed by a 32-unit grid cell so the pixel-in-bbox theta join
+    becomes an EQUI-join on (cx, cy) plus a residual predicate.
 
     The broadcast form (:func:`zonal_stats`) is right when polygons
     are dimension-sized; at 100 TB neither side broadcasts and a
@@ -689,28 +689,13 @@ def binned_zonal_stats(polys: DataFrame, pixels: DataFrame) -> DataFrame:
     bounded by bbox_area/cell²), each pixel computes its single cell,
     and the join shuffles both sides by cell: data moves once, pair
     expansion is per-cell, and skewed cells split under AQE like any
-    hash join. Each pixel lives in exactly one cell, so no
-    post-join dedup is needed. Result-identical to zonal_stats
-    (asserted by the shared oracle); plan shape asserted in
-    tests/test_plans.py.
+    hash join. Each pixel lives in exactly one cell, so no post-join
+    dedup is needed. Emits one row per (pixel, containing-polygon)
+    pair with every pixel column plus poly_id/name; callers aggregate
+    (the raster bench sums the exact integer pixel numerator). Plan
+    shape asserted in tests/test_plans.py.
     """
-    joined = binned_zonal_join(polys, pixels)
-    return joined.groupBy("poly_id", "name").agg(
-        fround(F.avg("pixel_value"), 4).alias("mean_value"),
-        F.max("pixel_value").alias("max_value"),
-        F.min("pixel_value").alias("min_value"),
-        F.count("*").alias("pixel_count"),
-    )
-
-
-def binned_zonal_join(
-    polys: DataFrame, pixels: DataFrame, cell: float = 16.0
-) -> DataFrame:
-    """The join half of :func:`binned_zonal_stats`, exposed so callers
-    can aggregate differently (the raster bench sums the exact integer
-    pixel numerator instead of averaging doubles). Emits one row per
-    (pixel, containing-polygon) pair with every pixel column plus
-    poly_id/name."""
+    cell = 32.0
     cx0 = F.floor(F.col("x0") / cell).cast("int")
     cx1 = F.floor(F.col("x1") / cell).cast("int")
     cy0 = F.floor(F.col("y0") / cell).cast("int")

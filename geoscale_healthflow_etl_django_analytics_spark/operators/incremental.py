@@ -86,8 +86,9 @@ def incremental_minhash_pairs(
     #
     # * ``new_pred`` given (a doc_id Column -> boolean Column
     #   callable): ONE band pass over the whole corpus, flag derived
-    #   in-plan from the id.  This is the form the gate registers —
-    #   the r8 x500 stage split measured the two-pass form's double
+    #   in-plan from the id.  The form dedup_minhash_incremental and
+    #   dedup_incremental_ingest register — the r8 x500 stage split
+    #   measured the two-pass form's double
     #   signature derivation at 267.9s of a 282.4s cell (two parquet
     #   scans + two groupBys over the 20/80 splits), pushing the
     #   stateless-gate cell ABOVE the whole-corpus tier that the

@@ -1,11 +1,11 @@
 """Persisted IVF-PQ index: build ONCE on disk, query many times.
 
 The missing production half of ``operators/pq.py`` (VERDICT r9
-next-round #1): ``sim_ivfpq_trained_topk`` proves the trained
-routing + compact-code + integer-ADC chain value-exactly, but every
-invocation re-pays Lloyd training and corpus encoding in-plan — at
-bench x200 the cell is build-dominated (336 s), and at 100 TB nobody
-trains a quantizer per query.  A real ANN deployment (FAISS
+next-round #1): ``pq.ivfpq_topk`` with ``pq_train_codebooks`` runs the
+trained routing + compact-code + integer-ADC chain value-exactly, but
+every invocation re-pays Lloyd training and corpus encoding in-plan —
+at bench x200 that form was build-dominated (336 s), and at 100 TB
+nobody trains a quantizer per query.  A real ANN deployment (FAISS
 ``IVFx,PQy`` on disk, DiskANN, ScaNN serving trees) separates the
 lifecycle:
 

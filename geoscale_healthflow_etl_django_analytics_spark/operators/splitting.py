@@ -155,10 +155,10 @@ def incremental_pairs_vs_index(
     only the arriving batch is band-hashed fresh; the index side's
     (doc_id, band, bh) table is read back from ``path``/bands — the
     form ``operators/incremental.py`` has always documented as the
-    production shape (its stateless-gate forms re-derive corpus
-    signatures, over-stating the cost; the r8 x500 stage split
-    measured that derivation dominating).  Values are identical to
-    the in-plan forms: parquet round-trips the band table exactly,
+    production shape (its ``new_pred`` form re-derives corpus
+    signatures; the r8 x500 stage split measured that derivation
+    dominating).  Values are identical to the in-plan forms: parquet
+    round-trips the band table exactly,
     and the pair logic is incremental_minhash_pairs' own via its
     ``tagged`` injection point."""
     from .dedup import minhash_perm_band_hashes

@@ -2574,66 +2574,33 @@ def _index_cluster_table(spark: SparkSession, sf_dir: str):
 
 
 @register(
-    "curation_incremental_split",
-    oracle=_split_oracle(8),
-    tags=("curation", "split", "dedup", "leakage", "incremental",
-          "persisted", "llm-pipeline"),
-    bench=True,
-    doc="INCREMENTAL leakage-safe split over a PERSISTED cluster "
-    "table (operators/splitting.py; VERDICT r9 next-round #3 — "
-    "closing curation_leakage_safe_split's recompute shape): the "
-    "index corpus's (doc_id, cluster_id) artifact is built once "
-    "(ensured per process, row-count staleness check) and the "
-    "arriving batch (doc_id %% 10 >= 8, the dedup_minhash_incremental "
-    "convention) is assigned using ONLY that table plus the batch-"
-    "proportional incremental pair set (old x old never expands). "
-    "Labels are CLUSTER-STABLE: index docs' splits depend on the "
-    "persisted table alone and NEVER change under ingest (pinned in "
-    "tests/test_incremental.py); a batch component anchored to index "
-    "clusters adopts min(anchor cluster) and, when every anchor lies "
-    "in one split, that split; split-conflicted components (near-dups "
-    "of both train and eval content) are QUARANTINED rather than "
-    "leaked; unanchored components self-cluster and bucket fresh. "
-    "Full value oracle: one set of band-hash fragments feeds both "
-    "the index LSH+CC replay (census/salting over index docs only) "
-    "and the batch-restricted candidates, then both recursive-CTE "
-    "fixpoints, anchor resolution and bucket arithmetic replay the "
-    "label rules verbatim.",
-)
-def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import splitting
-    from .operators.incremental import incremental_minhash_pairs
-
-    docs, batch_pred, _, iclu = _index_cluster_table(spark, sf_dir)
-    pairs = incremental_minhash_pairs(
-        docs, new_pred=batch_pred
-    )
-    return splitting.incremental_leakage_safe_split(
-        docs, iclu, pairs, batch_pred
-    )
-
-
-@register(
     "curation_incremental_split_indexed",
     oracle=_split_oracle(8),
     tags=("curation", "split", "dedup", "leakage", "incremental",
           "persisted", "llm-pipeline"),
     bench=True,
-    doc="curation_incremental_split's PERSISTED-SIGNATURE tier — the "
-    "batch-proportional production shape: write_cluster_table "
-    "persists the index band-hash table next to the clusters, and "
-    "the query band-hashes ONLY the arriving batch (20%% of the "
-    "corpus), reading the index side back from parquet "
-    "(operators/splitting.py::incremental_pairs_vs_index via "
-    "incremental_minhash_pairs' tagged injection point). Signature "
-    "derivation — the term the r8 x500 stage split measured "
-    "dominating every stateless-gate incremental cell — becomes "
-    "batch-sized; bucket selection, pair expansion, batch CC and "
-    "label resolution are unchanged. Values are identical to the "
-    "stateless tier (parquet round-trips the band table exactly), so "
-    "the SAME full value oracle checks both; the bench contrast "
-    "between the two cells isolates exactly the persisted-index "
-    "savings.",
+    doc="INCREMENTAL leakage-safe split over a PERSISTED cluster "
+    "table (operators/splitting.py; closing "
+    "curation_leakage_safe_split's recompute shape): the index "
+    "corpus's (doc_id, cluster_id) artifact and its band-hash table "
+    "are built once (ensured per process, row-count staleness check) "
+    "and the arriving batch (doc_id %% 10 >= 8, the "
+    "dedup_minhash_incremental convention) is band-hashed ALONE "
+    "(20%% of the corpus), its candidates read against the index "
+    "side from parquet (operators/splitting.py::"
+    "incremental_pairs_vs_index via incremental_minhash_pairs' "
+    "tagged injection point), so signature derivation is batch-"
+    "sized. Labels are CLUSTER-STABLE: index docs' splits depend on "
+    "the persisted table alone and NEVER change under ingest (pinned "
+    "in tests/test_incremental.py); a batch component anchored to "
+    "index clusters adopts min(anchor cluster) and, when every "
+    "anchor lies in one split, that split; split-conflicted "
+    "components are QUARANTINED rather than leaked; unanchored "
+    "components self-cluster and bucket fresh. Full value oracle: "
+    "one set of band-hash fragments feeds both the index LSH+CC "
+    "replay and the batch-restricted candidates, then both "
+    "recursive-CTE fixpoints, anchor resolution and bucket "
+    "arithmetic replay the label rules verbatim.",
 )
 def curation_incremental_split_indexed(
     spark: SparkSession, sf_dir: str
@@ -4402,10 +4369,11 @@ FROM agg JOIN wc ON agg.doc_id = wc.doc_id
     "counts over the word VOCABULARY — the subword-nmt training "
     "reduction: all rounds run on the vocab, not the corpus) and "
     "applied as chained JVM replace() passes; the winning pair per "
-    "round stays IN-PLAN as a one-row broadcast (no driver collect). "
-    "Iterative-plan shape of sim_ivf_lloyd: rounds add plan depth "
-    "(pair-count + apply per merge, vocab localCheckpointed per "
-    "round), never shuffle width; per-doc stats join corpus words "
+    "round is collected (one row) by the same loop that yields the "
+    "pretrained merge table (functions/bpe.py::learn_merges). "
+    "Iterative shape of sim_ivf_lloyd: each round is one single-"
+    "partition pair-count + apply over the vocab, localCheckpointed "
+    "per round, never shuffle width; per-doc stats join corpus words "
     "back to the tokenized vocab (AQE broadcasts the small side). "
     "Merge semantics pinned cross-engine: 3 non-overlapping "
     "left-to-right replace passes per merge — both engines run the "
@@ -4420,43 +4388,6 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = catalog.load_table(spark, sf_dir, "documents")
     return bpe_doc_stats(docs)
-
-
-@register(
-    "text_bpe_apply_pretrained",
-    oracle=_bpe_sql(),
-    tags=("text", "tokenization", "bpe", "pretrained", "llm-pipeline"),
-    bench=True,
-    doc="PRETRAINED-vocabulary BPE apply (functions/bpe.py::"
-    "bpe_apply_doc_stats; VERDICT r8 weak #1) — the operator a "
-    "production pipeline actually runs: a fixed merge table applied "
-    "to the corpus, where text_bpe_tokenize's in-plan chained-replace "
-    "design is O(n_merges) plan stages and cannot reach a real 32k-"
-    "50k-merge vocabulary. The corpus reduces to its word VOCABULARY "
-    "(one map-side-combinable groupBy), the merge table ships as a "
-    "SparkContext broadcast (the merges.txt distribution model), and "
-    "an Arrow-batched mapInPandas applies merges per DISTINCT word "
-    "with per-word cost bounded by word length — INDEPENDENT of "
-    "table size (each step jumps to the smallest-rank applicable "
-    "merge via dict lookup; skipped merges are no-op replaces). "
-    "Sequential merge semantics are byte-identical to the in-plan "
-    "tier (Python str.replace == JVM replace == DuckDB replace: "
-    "non-overlapping left-to-right), so THIS query runs the Python "
-    "apply tier under the 8-merge table learned by the same "
-    "deterministic training loop and the oracle — the FULL "
-    "training+apply replay of text_bpe_tokenize — value-checks the "
-    "Python path end-to-end. Production note (the JPEG-codec "
-    "pattern): a JVM/Rust tokenizer UDF (e.g. HuggingFace "
-    "tokenizers) would slot behind the same vocab-level join; the "
-    "Spark-side plumbing here is the real design. Bounded Python: "
-    "vocab-sized, Arrow batches, never per-occurrence.",
-)
-def text_bpe_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import bpe
-
-    docs = catalog.load_table(spark, sf_dir, "documents")
-    merges = bpe.learn_merges(docs)
-    return bpe.bpe_apply_doc_stats(docs, merges)
 
 
 @register(
@@ -4476,7 +4407,8 @@ def text_bpe_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "n-gram merges (functions/bpe.py::generate_pretrained_merges — "
     "every generated merge genuinely fires on English-like text; a "
     "real deployment loads merges.txt) applied through the same "
-    "vocab-level mapInPandas tier as text_bpe_apply_pretrained. "
+    "vocab-level mapInPandas tier (functions/bpe.py::"
+    "bpe_apply_doc_stats) under the 8-merge table too. "
     "The 32k-table token counts are engine-specific (outside the "
     "SQL replay, the Bloom/CMS precedent); what the oracle pins "
     "exactly: per-doc chars, word counts and the 8-merge reference "
@@ -4488,7 +4420,7 @@ def text_bpe_apply_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "apply tier is broken. The bench row doubles as the vocab-size-"
     "independence measurement: this query applies BOTH the 8-merge "
     "and 32,776-merge tables to the same corpus, and its cost "
-    "tracks text_bpe_apply_pretrained's, not the 4096x table ratio.",
+    "does not track the 4096x table ratio.",
 )
 def text_bpe_apply_vocab32k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import bpe
@@ -4595,42 +4527,6 @@ def asof_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "asof_attribution_chunked",
-    oracle=REGISTRY["asof_purchase_attribution"].oracle,
-    tags=("asof-join", "events", "custom-operator", "scale-shape"),
-    doc="The hot-key-safe form of the backward as-of join: identical "
-    "semantics via segmented (key, time-bucket) windows + boundary "
-    "carry, checked against DuckDB's native ASOF — same oracle as "
-    "asof_purchase_attribution; what changes is the partitioning "
-    "contract (a key owning half the corpus spreads across its time "
-    "buckets instead of sorting in one task).",
-)
-def asof_attribution_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = catalog.load_table(spark, sf_dir, "events")
-    return _attribute_purchases(
-        ev, _signups(ev), oj.asof_join_backward_chunked, bucket_span=7 * 86_400.0
-    )
-
-
-@register(
-    "geo_j6_binned_range_join",
-    oracle=REGISTRY["geo_j6_zonal_stats"].oracle,
-    tags=("J6", "range-join", "geo", "scale-shape"),
-    doc="The raster-scale form of zonal stats: grid-binned RANGE JOIN "
-    "— polygons explode to overlapped cells, pixels key to their "
-    "cell, equi-join on (cx, cy) + residual bbox predicate. Same "
-    "oracle as geo_j6_zonal_stats (results identical); what changes "
-    "is the PLAN: a shuffled equi-join instead of a broadcast "
-    "nested-loop, which is the shape that survives when neither side "
-    "broadcasts.",
-)
-def geo_j6_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = catalog.load_table(spark, sf_dir, "nation")
-    one = nation.limit(1).select(F.lit(1).alias("one"))
-    return geo.binned_zonal_stats(geo.synth_polygons(nation), geo.pixel_grid(one))
-
-
-@register(
     "geo_j6_raster_bench",
     oracle="""WITH px AS (
   SELECT (i.i + 0.5) AS px, (j.j + 0.5) AS py,
@@ -4672,7 +4568,6 @@ def geo_j6_raster_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = geo.binned_zonal_join(
         geo.synth_polygons_many(nation),
         geo.pixel_grid_par(spark, nx=1000, ny=600),
-        cell=32.0,
     )
     from .functions.exact import fround
 
@@ -8392,39 +8287,13 @@ sub AS MATERIALIZED (
 
 
 @register(
-    "sim_ivfpq_trained_topk",
-    oracle=_ivfpq_trained_sql(),
-    tags=("similarity", "ann", "ivf", "pq", "kmeans", "topk"),
-    doc="The PRODUCTION ANN index: IVF routing + Lloyd-TRAINED PQ "
-    "codebooks + integer-exact ADC (VERDICT r8 next-round #6) — "
-    "sim_ivfpq_topk's composition with the quantizer sim_pq_lloyd "
-    "trains plugged into encode and LUT via the codebooks override "
-    "(operators/pq.py::ivfpq_topk). Pure composition of three "
-    "verified parts (the Arc-1950 registry-composition pattern): "
-    "routing CTEs from sim_ivf_topk, the _pq_train_chain Lloyd "
-    "replay from sim_pq_lloyd, code/LUT/ADC from sim_pq_topk — the "
-    "composed value oracle replays the ENTIRE chain including "
-    "training. At scale the trained table is a one-time persisted "
-    "artifact (m*ks rows) broadcast at query time; training cost "
-    "amortizes across every query the index ever serves. Recall "
-    "vs the seed-codebook tier is recorded in PLANS.md.",
-)
-def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.pq import ivfpq_topk, pq_train_codebooks
-
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    trained = pq_train_codebooks(emb)
-    return ivfpq_topk(emb, codebooks=trained)
-
-
-@register(
     "sim_ivfpq_index_query",
     oracle=_ivfpq_trained_sql(),
     tags=("similarity", "ann", "ivf", "pq", "index", "persisted", "topk"),
     bench=True,
     doc="PERSISTED IVF-PQ index, query path only (operators/"
     "pq_index.py; VERDICT r9 next-round #1 — the production "
-    "lifecycle split sim_ivfpq_trained_topk lacks): the trained "
+    "lifecycle split: train once, query many): the trained "
     "codebooks, coarse centroids, 4-byte codes and full vectors are "
     "built ONCE to disk — codes and vectors partitioned by inverted-"
     "list id, the write_bucketed_index layout — and the query reads "
@@ -8437,12 +8306,13 @@ def sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "builder ensures the index (params+rowcount staleness check — a "
     "parquet-footer count, not a corpus scan) and then runs ONLY "
     "the query path, so the bench cell measures query latency "
-    "decoupled from the build that dominates "
-    "sim_ivfpq_trained_topk's; in production the build amortizes "
+    "decoupled from the build (per-query training is build-"
+    "dominated, pq_index.py); in production the build amortizes "
     "over every query the index serves. Value contract: parquet "
     "round-trips the deterministic fragments exactly, so the result "
-    "is BIT-IDENTICAL to the in-plan trained chain and the oracle "
-    "is the SAME full Lloyd+routing+ADC replay.",
+    "is BIT-IDENTICAL to the in-plan trained chain (operators/pq.py::"
+    "ivfpq_topk with trained codebooks, pinned in tests/test_pq.py) "
+    "and the oracle is the full Lloyd+routing+ADC replay.",
 )
 def sim_ivfpq_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import pq_index

@@ -8,7 +8,7 @@ sizes so growth is OBSERVED, not argued from plan shape:
   ``dedup_simhash_wide_pairs`` / ``dedup_connected_components`` /
   ``dedup_decontaminate`` — documents at Nx sf0.1
 - ``sim_knn_join`` — embeddings at Nx sf0.1
-- ``asof_attribution_chunked`` — events at Nx sf0.1
+- ``asof_purchase_attribution`` — events at Nx sf0.1
 - ``graph_pagerank_nations`` — the scaled trade tables (facts/dims
   scale, the 25-nation node set is fixed) at Nx sf0.1
 - ``mm_jpeg_decode_stats`` — one synthetic JPEG per document row at
@@ -74,7 +74,7 @@ REGISTRY_QUERIES = (
     "dedup_simhash_adaptive_pairs",
     "dedup_connected_components",
     "sim_knn_join",
-    "asof_attribution_chunked",
+    "asof_purchase_attribution",
     # round-6 additions (VERDICT r5 "Next round" #4) — the three
     # newest heavy bench entries with no measured growth shape:
     # iterative edge-shuffle growth, 8-gram explode width, and the
@@ -97,11 +97,10 @@ def _geo_raster(spark, multiplier: int):
     side = math.sqrt(multiplier)
     nation = catalog.load_table(spark, SF01, "nation")
     joined = geo.binned_zonal_join(
-        geo.synth_polygons_many(nation, per_nation=10),
+        geo.synth_polygons_many(nation),
         geo.pixel_grid_par(
             spark, nx=int(round(1000 * side)), ny=int(round(600 * side))
         ),
-        cell=32.0,
     )
     return joined.groupBy("poly_id", "name").agg(
         fround(
@@ -134,7 +133,6 @@ _SHUFFLE_FACTOR = {
     "sim_pq_lloyd": 0.25,
     "sim_pq_topk": 0.25,
     "sim_ivfpq_topk": 0.25,
-    "sim_ivfpq_trained_topk": 0.25,
     "sim_ivfpq_index_query": 0.0,
     "sim_ivfpq_index_add_query": 0.0,
     "dedup_line_level_apply": 0.25,
@@ -143,7 +141,6 @@ _SHUFFLE_FACTOR = {
     # RECOMPUTE form at p50 — the dominant cost was the batch-graph CC
     # (tiny edge set, but each large/small-star round pays per-partition
     # fixed costs x200); at 0.25 the incremental form wins as designed
-    "curation_incremental_split": 0.25,
     "curation_incremental_split_indexed": 0.25,
     "curation_cluster_table_update": 0.25,
     "curation_cluster_table_lifecycle": 0.25,
@@ -152,7 +149,6 @@ _SHUFFLE_FACTOR = {
     "text_hll_distinct": 0.0,
     "text_cms_heavy_hitters": 0.25,
     "text_bm25_topk": 0.25,
-    "text_bpe_apply_pretrained": 0.25,
     "text_bpe_apply_vocab32k": 0.25,
     "text_lm_apply_pretrained": 0.25,
     "text_lm_apply_backoff": 0.25,
@@ -198,10 +194,8 @@ _QUERY_TABLES = {
     "sim_pq_topk": ("embeddings",),
     "sim_ivfpq_topk": ("embeddings",),
     "sim_pq_lloyd": ("embeddings",),
-    "sim_ivfpq_trained_topk": ("embeddings",),
     "sim_ivfpq_index_query": ("embeddings",),
     "sim_ivfpq_index_add_query": ("embeddings",),
-    "curation_incremental_split": ("documents",),
     "curation_incremental_split_indexed": ("documents",),
     "curation_cluster_table_update": ("documents",),
     "curation_cluster_table_lifecycle": ("documents",),
@@ -209,7 +203,6 @@ _QUERY_TABLES = {
     "text_lm_apply_backoff_vocab": ("documents",),
     "text_lm_apply_pretrained": ("documents",),
     "text_lm_apply_backoff": ("documents",),
-    "text_bpe_apply_pretrained": ("documents",),
     "text_bpe_apply_vocab32k": ("documents",),
     "text_hll_distinct": ("documents",),
     "dedup_line_level_apply": ("documents",),
@@ -219,7 +212,7 @@ _QUERY_TABLES = {
     "curation_leakage_safe_split": ("documents",),
     "ts_ewma_anomaly": ("events",),
     "mm_png_decode_stats": ("documents",),
-    "asof_attribution_chunked": ("events",),
+    "asof_purchase_attribution": ("events",),
     "graph_pagerank_nations": (
         "lineitem", "orders", "customer", "supplier", "nation",
     ),

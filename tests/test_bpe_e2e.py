@@ -3,6 +3,7 @@ composition (curation_end_to_end) — round-8 additions."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from geoscale_healthflow_etl_django_analytics_spark.plans import audit as pa
@@ -27,6 +28,36 @@ def test_bpe_hand_checked_merges(spark):
     assert row.bpe_tokens == 5
     assert row.chars == 9
     assert row.chars_per_token == 1.8
+
+
+@pytest.mark.parametrize(
+    "texts, n_merges",
+    [
+        (["aaaa bbbb"], 2),
+        # runs out of pairs after 2 merges: (a, b), then (' ', ab)
+        (["ab ab ab", "ab"], 4),
+    ],
+)
+def test_bpe_doc_stats_equals_apply_of_learned_merges(spark, texts, n_merges):
+    """The in-plan tier and the Python apply tier under the merge table
+    the same loop learns give one row per doc with equal counts — also
+    when the vocabulary runs out of pairs before ``n_merges``."""
+    from geoscale_healthflow_etl_django_analytics_spark.functions import bpe
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    inplan = sorted(map(tuple, bpe.bpe_doc_stats(docs, n_merges).collect()))
+    applied = sorted(
+        map(
+            tuple,
+            bpe.bpe_apply_doc_stats(
+                docs, bpe.learn_merges(docs, n_merges)
+            ).collect(),
+        )
+    )
+    assert len(inplan) == len(texts)
+    assert inplan == applied
 
 
 def test_bpe_merges_reduce_tokens(spark):

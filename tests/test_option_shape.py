@@ -46,11 +46,6 @@ EXEMPT = {
         "request filters: they mirror the reference endpoint's HTTP query "
         "parameters, which its clients set per request",
     ),
-    ("geo.py", "synth_polygons_many"): (
-        {"per_nation"},
-        "scale_bench.py passes it by keyword; that script stays byte-stable "
-        "so its recorded raster cells remain comparable",
-    ),
 }
 
 

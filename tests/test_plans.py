@@ -58,13 +58,11 @@ def test_health_aggs_partial(spark):
 
 
 def test_binned_range_join_is_equi_join(spark):
-    """The raster-scale zonal-stats form must plan as an EQUI-join on
-    the grid cell key (hash or sort-merge; broadcast-hash at test SF),
-    never a nested-loop over the raw range predicate — that is the
-    entire point of the binning."""
-    plan = pa.formatted_plan(
-        REGISTRY["geo_j6_binned_range_join"].builder(spark, SF)
-    )
+    """The raster-scale zonal-stats form (geo.binned_zonal_join under
+    geo_j6_raster_bench) must plan as an EQUI-join on the grid cell
+    key (hash or sort-merge), never a nested-loop over the raw range
+    predicate — that is the entire point of the binning."""
+    plan = pa.formatted_plan(REGISTRY["geo_j6_raster_bench"].builder(spark, SF))
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("HashJoin" in plan) or ("SortMergeJoin" in plan)
     # and the dimension-sized form DOES use the nested-loop (the right

@@ -1,7 +1,9 @@
 """registry.py keeps one home per builder contract: no 6-line code
-window of one top-level function body repeats in another.
+window of one top-level function body repeats in another; and one
+registered query per answer: no two queries check the same oracle text
+unless their group is allow-listed with its reason.
 
-Static only (``ast`` + ``tokenize``, no Spark). Lines inside
+Static only (``ast`` + ``tokenize`` and a registry import, no Spark). Lines inside
 multi-line strings (oracle SQL, docstrings), string-only lines,
 comments and blank lines are not code lines; the rest are compared
 with their indentation stripped. A window repeated in a later
@@ -78,3 +80,49 @@ def test_scan_sees_a_repeat():
         f"def f{n}():\n" + "".join(f"    x{i} = {i}\n" for i in range(WINDOW)) for n in (1, 2)
     )
     assert repeated_windows(src) == {("f1", "f2"): 1}
+
+
+# Queries that share one oracle text, each group with the reason it is
+# not a second path to the same answer.
+SHARED_ORACLE_ALLOWED = {
+    frozenset({
+        "s3_shapefile_zonal_stats",
+        "s4_geotiff_zonal_stats",
+        "s4_geotiff_deflate_zonal_stats",
+        "s4_geotiff_lzw_zonal_stats",
+    }): "one answer read from four input encodings: different inputs, not different paths",
+    frozenset({"s11_json_export_roundtrip", "orc_roundtrip_priority_revenue"}): (
+        "one answer round-tripped through two file formats"
+    ),
+    frozenset({"dedup_connected_components", "dedup_cc_distributed"}): (
+        "local_threshold=0 is the only checked way into the distributed "
+        "connected-components loop"
+    ),
+    frozenset({
+        "dedup_decontaminate",
+        "dedup_decontaminate_semijoin",
+        "dedup_decontaminate_bloom",
+    }): (
+        "broadcast, semijoin and Bloom tiers differ in speed by scale and in "
+        "driver-memory bound; choosing one by size is a change of its own"
+    ),
+}
+
+
+def shared_oracle_groups(registry) -> set[frozenset[str]]:
+    """Groups of two or more registered queries with the same oracle text."""
+    by_oracle: dict[str, set[str]] = {}
+    for name, spec in registry.items():
+        if spec.oracle is not None:
+            by_oracle.setdefault(spec.oracle, set()).add(name)
+    return {frozenset(g) for g in by_oracle.values() if len(g) > 1}
+
+
+def test_one_query_per_oracle():
+    from geoscale_healthflow_etl_django_analytics_spark.registry import REGISTRY
+
+    groups = shared_oracle_groups(REGISTRY)
+    extra = sorted(sorted(g) for g in groups - set(SHARED_ORACLE_ALLOWED))
+    stale = sorted(sorted(g) for g in set(SHARED_ORACLE_ALLOWED) - groups)
+    assert not extra, f"{len(extra)} groups of queries check one oracle: {extra}"
+    assert not stale, f"allow-listed groups no longer registered as such: {stale}"

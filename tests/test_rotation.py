@@ -255,6 +255,36 @@ def test_never_checked_queries_outrank_expired_ones():
         assert last_fresh == len(fresh) - 1
 
 
+def test_expired_queries_rotate_oldest_green_first(entry_mod, tmp_path, monkeypatch):
+    """Within a tier, the query whose newest satisfactory row is oldest
+    comes first, whatever its registry position; never-green queries
+    stay ahead of all of them. Round numbers are parsed, not compared
+    as text (r10 is newer than r9)."""
+    late, early, refuted, fresh = (
+        "hc_a1_yearly_slide_status",
+        "hc_a5_total_summary",
+        "hc_a2_gender_positivity",
+        "hc_a4_daily_positivity",
+    )
+    green = {"err": None, "hash_match": True, "spark_rows": 3}
+    (tmp_path / "CORRECTNESS_r9.json").write_text(
+        json.dumps({late: green, early: green, refuted: green})
+    )
+    (tmp_path / "CORRECTNESS_r10.json").write_text(
+        json.dumps({late: green, refuted: {"err": "boom", "hash_match": False}})
+    )
+    monkeypatch.setattr(entry_mod, "_REPO_DIR", str(tmp_path))
+    monkeypatch.setattr(entry_mod, "_HASH_SIDECAR", str(tmp_path / "none.json"))
+    monkeypatch.setattr(entry_mod, "_newest_artifact_tested_names", lambda: set())
+
+    assert entry_mod._newest_green_round() == {late: 10, early: 9, refuted: 9}
+    order = list(entry_mod.queries())
+    # the three expired names close the listing, the r10 one last
+    assert set(order[-3:]) == {early, refuted, late}
+    assert order[-1] == late
+    assert order.index(fresh) < order.index(early)
+
+
 def _git(repo, *args):
     import subprocess
 
