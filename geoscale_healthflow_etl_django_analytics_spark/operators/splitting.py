@@ -8,11 +8,16 @@ assignment is a persisted artifact maintained incrementally, and a
 split query must never re-cluster the corpus to assign a batch.  This
 module supplies the production lifecycle:
 
-- :func:`write_cluster_table` / :func:`ensure_cluster_table` — the
-  one-time (then incrementally maintained) ``(doc_id, cluster_id)``
-  artifact: LSH pairs over the INDEX corpus -> connected components
-  -> parquet (docs in no pair are absent and self-cluster on read,
-  the ``leakage_safe_split`` convention).
+- :func:`ensure_cluster_table` — the one entry point to the persisted
+  ``(doc_id, cluster_id, split)`` artifact: :func:`write_cluster_table`
+  builds it over the INDEX corpus (LSH pairs -> connected components
+  -> parquet; docs in no pair are absent and self-cluster on read,
+  the ``leakage_safe_split`` convention), then
+  :func:`fold_batch_into_cluster_table` appends each accepted batch in
+  order, optionally followed by compaction.  Both steps write data
+  only; the re-run ledger that makes the chain safe to re-run is
+  ``functions.compaction.ensure_artifact``, shared with the IVF-PQ
+  index.
 - :func:`incremental_leakage_safe_split` — assigns a NEW batch using
   only the persisted clusters plus the batch-proportional pair set
   ``operators/incremental.incremental_minhash_pairs`` emits (old×old
@@ -52,11 +57,12 @@ carries a full value oracle.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.compaction import compact_cluster_table, ensure_artifact
 
 
 # The cluster -> split bucket: md5_int32(SPLIT_SALT || cluster) % 100,
@@ -106,9 +112,7 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
     ``path``/clusters AND the index band-hash table under
     ``path``/bands — the stored signature index that makes later
     ingests batch-proportional (``incremental_pairs_vs_index`` reads
-    it back instead of re-deriving corpus signatures).  ``_meta.json``
-    records the index row count for :func:`ensure_cluster_table`'s
-    staleness check.
+    it back instead of re-deriving corpus signatures).
 
     Since r11 the clusters table also stores ``split`` explicitly.
     For a freshly built index it is exactly
@@ -141,8 +145,6 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
     index_bands.write.mode("overwrite").parquet(
         os.path.join(path, "bands")
     )
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        json.dump({"n_index_docs": index_docs.count()}, fh)
 
 
 def incremental_pairs_vs_index(
@@ -216,22 +218,6 @@ def incremental_pairs_vs_index(
     # repartition directly).
     tagged = index_touched.unionByName(batch_bands)
     return incremental_minhash_pairs(docs, tagged=tagged)
-
-
-def ensure_cluster_table(index_docs: DataFrame, path: str) -> None:
-    """Build the cluster table iff ``path`` doesn't hold a current one
-    (row-count staleness check — a parquet-footer aggregate; a real
-    deployment versions the corpus snapshot id instead, and MAINTAINS
-    the table via the incremental pair stream rather than rebuilding)."""
-    meta_path = os.path.join(path, "_meta.json")
-    want = {"n_index_docs": index_docs.count()}
-    try:
-        with open(meta_path) as fh:
-            if json.load(fh) == want:
-                return
-    except (OSError, ValueError):
-        pass
-    write_cluster_table(index_docs, path)
 
 
 def incremental_leakage_safe_split(
@@ -362,16 +348,14 @@ def fold_batch_into_cluster_table(
     docs: DataFrame,
     batch_pred,
     path: str,
-    n_batch: int | None = None,
 ) -> None:
     """Fold an ACCEPTED batch into the persisted cluster + band
-    artifacts (VERDICT r10 "What's missing" #2 / "Next round" #3 —
-    the maintenance rung above :func:`ensure_cluster_table`'s
-    rebuild-on-staleness): consecutive ingests never rebuild.
+    artifacts (data only; the append step of
+    :func:`ensure_cluster_table`): consecutive ingests never rebuild.
 
     ``docs`` is the corpus VISIBLE at fold time (index ∪ this batch —
     later batches don't exist yet); ``batch_pred`` marks the arriving
-    rows.  Three appends, no rewrite of any existing row (index docs'
+    rows.  Two appends, no rewrite of any existing row (index docs'
     labels are cluster-stable by construction, so their stored rows
     are immutable):
 
@@ -387,8 +371,7 @@ def fold_batch_into_cluster_table(
        are pruned, matching the read convention (absent docs
        self-cluster and bucket by derivation);
     3. the batch's band hashes are APPENDED to ``path``/bands, so the
-       NEXT ingest's candidate generation sees this batch as index;
-    4. ``_meta.json``'s row count is bumped (+ a fold counter).
+       NEXT ingest's candidate generation sees this batch as index.
 
     The appended rows are materialized (localCheckpoint) BEFORE the
     write because their plan READS the same parquet directories the
@@ -422,95 +405,36 @@ def fold_batch_into_cluster_table(
     )
     batch_rows.write.mode("append").parquet(os.path.join(path, "clusters"))
     batch_bands.write.mode("append").parquet(os.path.join(path, "bands"))
-    meta_path = os.path.join(path, "_meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    if n_batch is None:
-        n_batch = docs.filter(batch_pred(F.col("doc_id"))).count()
-    meta["n_index_docs"] += n_batch
-    meta["folds"] = meta.get("folds", 0) + 1
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
 
 
-def ensure_cluster_table_lifecycle(
+def ensure_cluster_table(
     docs: DataFrame,
     index_pred,
     batch_preds,
     path: str,
     compact: bool = False,
 ) -> None:
-    """Idempotently materialize the STEADY-STATE artifact: index table
-    built over ``index_pred`` docs, then each of ``batch_preds`` folded
-    in ORDER (each fold sees exactly the corpus visible at its ingest
+    """Make ``path`` hold the cluster table built over the
+    ``index_pred`` docs with each of ``batch_preds`` then folded in
+    ORDER (each fold sees exactly the corpus visible at its ingest
     time — the index plus every earlier batch), optionally followed by
     a small-file compaction (``functions.compaction.
-    compact_cluster_table`` — bit-identical rewrite, ledger-neutral).
+    compact_cluster_table``, a bit-identical rewrite).  An empty
+    ``batch_preds`` is a plain build.
 
-    This is the week-2-onward state of a production split pipeline
-    (VERDICT r11 "What's missing" #2: the r11 ledger hard-coded
-    ``folds == 1``, so no registered query ever exercised a CHAIN of
-    folds — where quarantine propagation across generations and
-    post-compaction identity actually matter).  The meta ledger keys
-    on the post-fold row count AND the fold counter, so a completed
-    lifecycle is reused across processes and a re-run can never
-    double-append any batch (each fold is append-only and therefore
-    NOT idempotent — idempotency lives here, exactly like a real
-    ingest ledger gating replayed batches).  Compaction does not
-    touch the ledger: a crash after the folds but before the compact
-    leaves a valid, merely fragmented, artifact."""
-    preds = list(batch_preds)
-    # ONE aggregation job for every ledger count (the membership
-    # predicates are disjoint projections of the same scan): the
-    # previous per-predicate .count() chain paid 1 + len(preds)
-    # scan jobs on EVERY invocation, including ledger-hit re-runs.
-    counts = docs.agg(
-        *[
-            F.sum(p(F.col("doc_id")).cast("long")).alias(f"c{i}")
-            for i, p in enumerate([index_pred, *preds])
-        ]
-    ).collect()[0]
-    batch_ns = [int(counts[i + 1] or 0) for i in range(len(preds))]
-    want_n = int(counts[0] or 0) + sum(batch_ns)
-    meta_path = os.path.join(path, "_meta.json")
-    try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if meta.get("n_index_docs") == want_n and meta.get("folds") == len(
-            preds
-        ):
-            return
-    except (OSError, ValueError):
-        pass
-    write_cluster_table(docs.filter(index_pred(F.col("doc_id"))), path)
-    seen = [index_pred]
-    for bp, n_b in zip(preds, batch_ns):
-        visible_preds = seen + [bp]
-        visible = docs.filter(
-            _any_pred(visible_preds, F.col("doc_id"))
-        )
-        fold_batch_into_cluster_table(visible, bp, path, n_batch=n_b)
-        seen.append(bp)
-    if compact:
-        from ..functions.compaction import compact_cluster_table
-
-        compact_cluster_table(docs.sparkSession, path)
-
-
-def _any_pred(preds, col: Column) -> Column:
-    out = preds[0](col)
-    for p in preds[1:]:
-        out = out | p(col)
-    return out
-
-
-def ensure_folded_cluster_table(
-    docs: DataFrame,
-    index_pred,
-    batch_pred,
-    path: str,
-) -> None:
-    """Single-fold form of :func:`ensure_cluster_table_lifecycle`
-    (kept for the registered one-fold query): index table built over
-    ``index_pred`` docs, then ``batch_pred`` docs folded in."""
-    ensure_cluster_table_lifecycle(docs, index_pred, [batch_pred], path)
+    With batches this is the week-2-onward state of a production split
+    pipeline, where quarantine propagation across generations and
+    post-compaction identity matter.  Each fold is append-only and
+    therefore NOT idempotent; idempotency lives in the shared ledger
+    (``functions.compaction.ensure_artifact``), exactly like a real
+    ingest ledger gating replayed batches."""
+    ensure_artifact(
+        docs,
+        "doc_id",
+        index_pred,
+        batch_preds,
+        path,
+        build=write_cluster_table,
+        append=fold_batch_into_cluster_table,
+        compact=compact_cluster_table if compact else None,
+    )

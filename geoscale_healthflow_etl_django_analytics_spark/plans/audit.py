@@ -11,15 +11,22 @@ tests/test_plans.py:
   phases around the exchange),
 - no CartesianProduct sneaks in,
 - whole-stage codegen spans exist.
+
+:func:`normalized_plan` is the plan-identity form: the formatted plan
+with the text that differs between processes building identical code
+rewritten to stable tokens.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
+
+from ..sources.catalog import FIXTURE_ROOT
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -27,6 +34,46 @@ def formatted_plan(df: DataFrame) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# Process-global counters, renumbered by first appearance so two plans
+# of the same shape compare equal while distinct ids stay distinct:
+# expression ids (``doc_id#892L``), exchange plan ids, RDD ids and the
+# lambda-variable counter (``lambda x_153``).
+_COUNTERS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+    re.compile(r"(lambda x_)(\d+)"),
+)
+# the pid suffix of a per-process fixture directory (registry
+# ``_roundtrip_path``: ``json_orders_root_testdata_sf0.01_13205``)
+_FIXTURE_PID = re.compile(
+    rf"({re.escape(os.path.basename(FIXTURE_ROOT))}/[\w.]+?)_\d+(?=[/\],\s]|$)"
+)
+# the Python call site Spark records for an RDD made from Python
+# (``localCheckpoint``, ``applySchemaToPythonRDD``): ``<unknown>:0`` or
+# ``NativeMethodAccessorImpl.java:0`` depending on the JVM's state
+_CALL_SITE = re.compile(r"( at \w+ at )(?:<unknown>|NativeMethodAccessorImpl\.java):0")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` text with the process-dependent parts (above) made
+    stable."""
+    for pat in _COUNTERS:
+        seen: dict[str, int] = {}
+        plan = pat.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+            plan,
+        )
+    plan = _FIXTURE_PID.sub(r"\1_<pid>", plan)
+    return _CALL_SITE.sub(r"\1<call site>", plan)
+
+
+def normalized_plan(df: DataFrame) -> str:
+    """The formatted plan of ``df`` in :func:`normalize_plan` form: equal
+    for byte-identical code built in two processes."""
+    return normalize_plan(formatted_plan(df))
 
 
 def simple_plan(df: DataFrame) -> str:

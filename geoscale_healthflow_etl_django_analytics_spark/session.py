@@ -16,6 +16,9 @@ so the *same* code scales without edits:
   exactly what DuckDB's TIMESTAMP does).
 - Session timezone pinned to UTC so calendar functions over
   timestamps are engine-independent.
+- The SQL warehouse lives under ``catalog.FIXTURE_ROOT`` with every
+  other file a builder writes, so touching the catalog never leaves a
+  ``spark-warehouse/`` in the caller's working directory.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .sources.catalog import FIXTURE_ROOT
 
 
 def default_parallelism() -> int:
@@ -115,6 +120,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
+        .config("spark.sql.warehouse.dir", os.path.join(FIXTURE_ROOT, "warehouse"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -19,7 +19,6 @@ def spark():
         app_name="healthflow-tests",
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={"spark.sql.warehouse.dir": "/tmp/hf-warehouse"},
     )
     yield s
     s.stop()

@@ -71,3 +71,10 @@ def test_registry_bucketed_tables_live_under_fixture_root(spark):
     for table in ("bq_gate_cust", "bq_gate_ord"):
         assert _location(spark, table) == os.path.join(FIXTURE_ROOT, table)
     _assert_no_exchange(spark, "bq_gate_cust", "bq_gate_ord", "c_custkey")
+
+
+def test_session_warehouse_lives_under_fixture_root(spark):
+    """get_spark puts the SQL warehouse under FIXTURE_ROOT, so a catalog
+    touch never leaves spark-warehouse/ in the working directory."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert os.path.commonpath([wh, FIXTURE_ROOT]) == FIXTURE_ROOT, wh

@@ -230,7 +230,7 @@ def test_incremental_split_index_docs_never_change(spark, tmp_path):
     batch_pred = lambda c: c % 10 >= 8  # noqa: E731
     index_docs = docs.filter(~batch_pred(F.col("doc_id")))
     path = str(tmp_path / "clusters")
-    splitting.ensure_cluster_table(index_docs, path)
+    splitting.ensure_cluster_table(docs, lambda c: ~batch_pred(c), [], path)
     import os
 
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
@@ -274,9 +274,7 @@ def test_indexed_split_tier_equals_stateless_tier(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     batch_pred = lambda c: c % 10 >= 8  # noqa: E731
     path = str(tmp_path / "idx")
-    splitting.ensure_cluster_table(
-        docs.filter(~batch_pred(F.col("doc_id"))), path
-    )
+    splitting.ensure_cluster_table(docs, lambda c: ~batch_pred(c), [], path)
     iclu = spark.read.parquet(os.path.join(path, "clusters"))
     stateless = splitting.incremental_leakage_safe_split(
         docs, iclu,
@@ -309,7 +307,7 @@ def test_fold_then_assign_equals_stateless_equivalent(spark, tmp_path):
     b1_pred = lambda c: (c % 10 >= 6) & (c % 10 < 8)  # noqa: E731
     b2_pred = lambda c: c % 10 >= 8  # noqa: E731
     path = str(tmp_path / "fold")
-    splitting.ensure_folded_cluster_table(docs, idx_pred, b1_pred, path)
+    splitting.ensure_cluster_table(docs, idx_pred, [b1_pred], path)
 
     folded = spark.read.parquet(os.path.join(path, "clusters"))
     via_fold = splitting.incremental_leakage_safe_split(
@@ -351,9 +349,9 @@ def test_fold_then_assign_equals_stateless_equivalent(spark, tmp_path):
 
 def test_fold_is_append_only_and_stable(spark, tmp_path):
     """Folding batch1 never rewrites an index row (labels of the
-    pre-fold corpus are unchanged by the fold), and the meta ledger
-    makes ensure_folded_cluster_table idempotent — a re-run cannot
-    double-append the batch."""
+    pre-fold corpus are unchanged by the fold) and writes data only:
+    replay refusal is the shared ledger's
+    (test_lifecycle_ledger_refuses_replay_and_matches_fold_chain)."""
     import os
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import splitting
@@ -363,30 +361,23 @@ def test_fold_is_append_only_and_stable(spark, tmp_path):
     b1_pred = lambda c: (c % 10 >= 6) & (c % 10 < 8)  # noqa: E731
     path = str(tmp_path / "fold")
 
+    def stored():
+        return {
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(path, "clusters")).collect()
+        }
+
     index_docs = docs.filter(idx_pred(F.col("doc_id")))
     splitting.write_cluster_table(index_docs, path)
-    pre = {
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(path, "clusters")).collect()
-    }
+    pre = stored()
     visible = docs.filter(idx_pred(F.col("doc_id")) | b1_pred(F.col("doc_id")))
     splitting.fold_batch_into_cluster_table(visible, b1_pred, path)
-    post = {
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(path, "clusters")).collect()
-    }
+    post = stored()
     assert pre <= post  # every index row survives byte-identical
     # appended rows are batch docs only
     for doc_id, cluster_id, split in post - pre:
         assert 6 <= doc_id % 10 < 8
-    # idempotency: the ensure ledger sees the post-fold state and
-    # re-running changes nothing
-    splitting.ensure_folded_cluster_table(docs, idx_pred, b1_pred, path)
-    again = {
-        tuple(r)
-        for r in spark.read.parquet(os.path.join(path, "clusters")).collect()
-    }
-    assert again == post
+    assert not os.path.exists(os.path.join(path, "_meta.json"))
 
 
 def test_stored_quarantine_split_is_authoritative(spark, tmp_path):
@@ -450,7 +441,7 @@ def test_quarantine_propagates_across_fold_chain(spark, tmp_path):
     b1 = lambda c: (c >= 100) & (c < 200)  # noqa: E731
     b2 = lambda c: c >= 200  # noqa: E731
 
-    splitting.ensure_cluster_table_lifecycle(docs, idx, [b1], path)
+    splitting.ensure_cluster_table(docs, idx, [b1], path)
     stored = {
         tuple(r)
         for r in spark.read.parquet(os.path.join(path, "clusters")).collect()
@@ -481,10 +472,10 @@ def test_quarantine_propagates_across_fold_chain(spark, tmp_path):
 def test_lifecycle_ledger_refuses_replay_and_matches_fold_chain(
     spark, tmp_path
 ):
-    """ensure_cluster_table_lifecycle with two batches equals a manual
-    build + fold(b1) + fold(b2) chain row-for-row, its ledger counts
-    folds == 2, and a re-run (replay) changes nothing."""
-    import json as _json
+    """ensure_cluster_table with two batches equals a manual build +
+    fold(b1) + fold(b2) chain row-for-row, and a re-run (replay)
+    changes nothing (the ledger's content is pinned in
+    tests/test_compaction.py)."""
     import os
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import splitting
@@ -495,7 +486,7 @@ def test_lifecycle_ledger_refuses_replay_and_matches_fold_chain(
     b2 = lambda c: (c % 10 >= 6) & (c % 10 < 8)  # noqa: E731
 
     auto = str(tmp_path / "auto")
-    splitting.ensure_cluster_table_lifecycle(docs, idx, [b1, b2], auto)
+    splitting.ensure_cluster_table(docs, idx, [b1, b2], auto)
 
     manual = str(tmp_path / "manual")
     splitting.write_cluster_table(docs.filter(idx(F.col("doc_id"))), manual)
@@ -506,18 +497,16 @@ def test_lifecycle_ledger_refuses_replay_and_matches_fold_chain(
     )
     splitting.fold_batch_into_cluster_table(vis2, b2, manual)
 
-    read = lambda p: {  # noqa: E731
+    read = lambda p: sorted(  # noqa: E731
         tuple(r)
         for r in spark.read.parquet(os.path.join(p, "clusters")).collect()
-    }
+    )
     assert read(auto) == read(manual)
-    meta = _json.load(open(os.path.join(auto, "_meta.json")))
-    assert meta["folds"] == 2
 
     # replay: the ledger sees the completed lifecycle and must not
     # double-append either batch
     before = read(auto)
-    splitting.ensure_cluster_table_lifecycle(docs, idx, [b1, b2], auto)
+    splitting.ensure_cluster_table(docs, idx, [b1, b2], auto)
     assert read(auto) == before
 
 
@@ -534,9 +523,7 @@ def test_screened_and_unscreened_tagged_pairs_identical(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     batch_pred = lambda c: c % 10 >= 8  # noqa: E731
     path = str(tmp_path / "idx")
-    splitting.ensure_cluster_table(
-        docs.filter(~batch_pred(F.col("doc_id"))), path
-    )
+    splitting.ensure_cluster_table(docs, lambda c: ~batch_pred(c), [], path)
     index_bands = spark.read.parquet(os.path.join(path, "bands")).select(
         "doc_id", "band", "bh", F.lit(False).alias("__new")
     )

@@ -406,3 +406,64 @@ def test_classifier_final_pass_is_one_aggregation(spark):
     )
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan
+
+
+# Two dumps of the same plan from two processes (shapes taken from
+# formatted plans of the split family, a JSON round trip and the GeoTIFF
+# zonal query): only process-global counters, the fixture dir's pid and
+# the Python call site differ.
+_PLAN_A = r"""(3) Scan ExistingRDD
+Arguments: [doc_a#24768L, doc_b#24770L, link_type#24780], MapPartitionsRDD[4904] at localCheckpoint at <unknown>:0, ExistingRDD, UnknownPartitioning(0)
+(7) Generate
+Arguments: explode(filter(split(trim(lower(text#893), None), \s+, -1), lambdafunction(NOT (lambda x_153#14957 = ), lambda x_153#14957, false))), [doc_id#892L], false, [token#14958]
+(8) Generate
+Arguments: transform(g#14962, lambdafunction(substr(lambda x_154#14960, lambda x_155#14961, 4), lambda x_155#14961, false))
+(9) Exchange
+Arguments: hashpartitioning(doc_a#24768L, 32), ENSURE_REQUIREMENTS, [plan_id=78570]
+(10) BroadcastExchange
+Arguments: HashedRelationBroadcastMode(List(input[0, string, true]),false), [plan_id=78576]
+(11) Scan json
+Location: InMemoryFileIndex [file:/tmp/spark_graft_fixtures/json_orders_root_testdata_sf0.01_13205]
+(12) Scan parquet
+Location: InMemoryFileIndex [file:/tmp/spark_graft_fixtures/cluster_fold_root_testdata_sf0.01_13205/clusters]
+(13) Scan ExistingRDD
+Arguments: [a#4680L, component#4681L], MapPartitionsRDD[1064] at applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)
+"""
+_PLAN_B = r"""(3) Scan ExistingRDD
+Arguments: [doc_a#31L, doc_b#33L, link_type#40], MapPartitionsRDD[17] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)
+(7) Generate
+Arguments: explode(filter(split(trim(lower(text#5), None), \s+, -1), lambdafunction(NOT (lambda x_128#70 = ), lambda x_128#70, false))), [doc_id#4L], false, [token#71]
+(8) Generate
+Arguments: transform(g#75, lambdafunction(substr(lambda x_129#73, lambda x_130#74, 4), lambda x_130#74, false))
+(9) Exchange
+Arguments: hashpartitioning(doc_a#31L, 32), ENSURE_REQUIREMENTS, [plan_id=102]
+(10) BroadcastExchange
+Arguments: HashedRelationBroadcastMode(List(input[0, string, true]),false), [plan_id=108]
+(11) Scan json
+Location: InMemoryFileIndex [file:/tmp/spark_graft_fixtures/json_orders_root_testdata_sf0.01_977]
+(12) Scan parquet
+Location: InMemoryFileIndex [file:/tmp/spark_graft_fixtures/cluster_fold_root_testdata_sf0.01_977/clusters]
+(13) Scan ExistingRDD
+Arguments: [a#3L, component#9L], MapPartitionsRDD[2] at applySchemaToPythonRDD at <unknown>:0, ExistingRDD, UnknownPartitioning(0)
+"""
+
+
+def test_normalize_plan_equates_process_dependent_text():
+    """Two processes' dumps of one plan normalize to the same text, and
+    every process-dependent token is gone from it."""
+    a, b = pa.normalize_plan(_PLAN_A), pa.normalize_plan(_PLAN_B)
+    assert a == b
+    for token in ("#24768", "x_153", "plan_id=78570", "RDD[4904]", "13205",
+                  "<unknown>:0", "NativeMethodAccessorImpl"):
+        assert token not in a, token
+    assert "sf0.01_<pid>/clusters" in a and "sf0.01_<pid>]" in a
+
+
+def test_normalize_plan_keeps_real_differences():
+    """Renumbering keeps the identity structure: merging two distinct
+    ids, changing a partition count or a fixture kind still differs."""
+    norm = pa.normalize_plan
+    assert norm(_PLAN_A) != norm(_PLAN_A.replace("doc_b#24770L", "doc_b#24768L"))
+    assert norm(_PLAN_A) != norm(_PLAN_A.replace("x_155", "x_154"))
+    assert norm(_PLAN_A) != norm(_PLAN_A.replace(" 32)", " 16)"))
+    assert norm(_PLAN_A) != norm(_PLAN_A.replace("cluster_fold_", "cluster_lifecycle_"))

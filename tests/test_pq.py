@@ -205,7 +205,7 @@ def test_ivfpq_index_query_matches_inplan_chain(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.write_ivfpq_index(emb, path, iters=2)
+    pq_index.write_ivfpq_index(emb, path)
     got = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     ).collect()
@@ -221,7 +221,7 @@ def test_ivfpq_index_query_prunes_partitions(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.write_ivfpq_index(emb, path, iters=2)
+    pq_index.write_ivfpq_index(emb, path)
     df = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
     )
@@ -231,29 +231,31 @@ def test_ivfpq_index_query_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters" in plan and "list_id" in plan
 
 
-def test_ivfpq_index_ensure_skips_current_build(spark, tmp_path):
-    """ensure_ivfpq_index is a no-op when params + row count match
-    the persisted meta, and rebuilds when they don't."""
+def test_ivfpq_index_ensure_skips_current_build(spark, tmp_path, monkeypatch):
+    """ensure_ivfpq_index is a no-op when the Lloyd rounds + row count
+    match the ledger, and rebuilds when the build setting changes."""
     import os
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import pq_index
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.ensure_ivfpq_index(emb, path, iters=2)
-    mtime = os.path.getmtime(os.path.join(path, "_meta.json"))
-    pq_index.ensure_ivfpq_index(emb, path, iters=2)  # current -> skip
-    assert os.path.getmtime(os.path.join(path, "_meta.json")) == mtime
-    pq_index.ensure_ivfpq_index(emb, path, iters=1)  # param change -> rebuild
-    assert os.path.getmtime(os.path.join(path, "_meta.json")) > mtime
+    every = lambda c: F.lit(True)  # noqa: E731
+    codes = os.path.join(path, "codes")
+    pq_index.ensure_ivfpq_index(emb, every, [], path)
+    mtime = os.path.getmtime(codes)
+    pq_index.ensure_ivfpq_index(emb, every, [], path)  # current -> skip
+    assert os.path.getmtime(codes) == mtime
+    monkeypatch.setattr(pq_index, "LLOYD_ITERS", 1)
+    pq_index.ensure_ivfpq_index(emb, every, [], path)  # setting -> rebuild
+    assert os.path.getmtime(codes) > mtime
 
 
 def test_ivfpq_add_is_append_only(spark, tmp_path):
     """add_to_ivfpq_index (the FAISS add() lifecycle, r11): every
     stored code/vector row survives the add byte-identical — queries
-    over unchanged vectors cannot drift — and the meta ledger records
-    the grown count + add counter."""
-    import json
+    over unchanged vectors cannot drift — and it writes data only (the
+    ledger is ensure_ivfpq_index's, tests/test_compaction.py)."""
     import os
 
     from geoscale_healthflow_etl_django_analytics_spark.operators import pq_index
@@ -267,7 +269,7 @@ def test_ivfpq_add_is_append_only(spark, tmp_path):
     emb = _emb(spark)
     idx = emb.filter(F.col("vec_id") % 10 < 8)
     path = str(tmp_path / "idx")
-    pq_index.write_ivfpq_index(idx, path, iters=2)
+    pq_index.write_ivfpq_index(idx, path)
     pre_codes = rowset(spark.read.parquet(os.path.join(path, "codes")))
     pre_vecs = rowset(spark.read.parquet(os.path.join(path, "vectors")))
     pq_index.add_to_ivfpq_index(
@@ -278,8 +280,7 @@ def test_ivfpq_add_is_append_only(spark, tmp_path):
     assert pre_codes <= post_codes and pre_vecs <= post_vecs
     for row in post_vecs - pre_vecs:
         assert row[0] % 10 >= 8  # vec_id: appended rows are batch only
-    meta = json.load(open(os.path.join(path, "_meta.json")))
-    assert meta["n_vectors"] == emb.count() and meta["adds"] == 1
+    assert not os.path.exists(os.path.join(path, "_meta.json"))
 
 
 def test_ivfpq_add_matches_frozen_inplan_chain(spark, tmp_path):
@@ -297,8 +298,8 @@ def test_ivfpq_add_matches_frozen_inplan_chain(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path
+    pq_index.ensure_ivfpq_index(
+        emb, lambda c: c % 10 < 8, [lambda c: c % 10 >= 8], path
     )
     got = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
@@ -320,8 +321,8 @@ def test_ivfpq_add_recall_over_grown_corpus(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path
+    pq_index.ensure_ivfpq_index(
+        emb, lambda c: c % 10 < 8, [lambda c: c % 10 >= 8], path
     )
     got = {
         r["vec_id"]
@@ -344,8 +345,8 @@ def test_ivfpq_add_query_prunes_partitions(spark, tmp_path):
 
     emb = _emb(spark)
     path = str(tmp_path / "idx")
-    pq_index.ensure_added_ivfpq_index(
-        emb, lambda c: c % 10 < 8, path
+    pq_index.ensure_ivfpq_index(
+        emb, lambda c: c % 10 < 8, [lambda c: c % 10 >= 8], path
     )
     df = pq_index.query_ivfpq_index(
         spark, path, pq_index.query_row(emb, 0), exclude_vec_id=0
